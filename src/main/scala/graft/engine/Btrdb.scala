@@ -280,8 +280,8 @@ class Btrdb(val spark: SparkSession, val root: String,
 
   /** True iff the directory holds at least one parquet data file — an
     * existing-but-drained directory (e.g. staging after every stream
-    * flushed: only _SUCCESS and empty partition dirs remain) must read
-    * as empty, not fail schema inference. Driver-side short-circuiting
+    * flushed: only _SUCCESS and empty partition dirs remain) counts as
+    * empty. Driver-side short-circuiting
     * walk; these are metadata-scale directories at any data volume. */
   private def hasParquet(part: String): Boolean =
     store.containsFile(part, ".parquet")
@@ -291,8 +291,16 @@ class Btrdb(val spark: SparkSession, val root: String,
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType.fromDDL(schema))
 
+  /** An engine-owned Parquet area, or one partition directory inside
+    * it, read with its declared schema (see [[Btrdb.PointsSchema]]).
+    * Inferring the schema from footers would cost a Spark job per read.
+    * Partition columns of a directory read below the area root are
+    * absent from its files and read as null. */
+  private def readArea(part: String, schema: String): DataFrame =
+    spark.read.schema(schema).parquet(path(part))
+
   private def readOr(part: String, schema: String): DataFrame =
-    if (exists(part)) spark.read.parquet(path(part))
+    if (exists(part)) readArea(part, schema)
     else emptyDf(schema)
 
   // ---- catalog (mprovider equivalent) --------------------------------
@@ -695,11 +703,16 @@ class Btrdb(val spark: SparkSession, val root: String,
     c
   }
 
-  /** In-memory per-stream commit state (major version + delete debt),
+  /** In-memory per-stream commit state (major version + delete lists),
     * seeded from the commit log once and maintained on every commit so
-    * the ingest and stat hot paths never re-scan commit metadata. */
+    * the ingest, read and stat hot paths never re-scan commit metadata. */
   private val majorCounts = scala.collection.mutable.Map.empty[Long, Long]
-  private val deleteDebt = scala.collection.mutable.Set.empty[Long]
+  /** Live delete commits per stream as (version, tmin, tmax): the
+    * anti-filters every read folds in. A stream is present iff it has
+    * delete debt. Mirrors the commit reader's supersede rule: a
+    * compacted record at V drops the stream's deletes at or below V. */
+  private val deletes =
+    scala.collection.mutable.Map.empty[Long, Vector[(Long, Long, Long)]]
   /** Committed time envelope per stream (inserts only) — an
     * over-approximation of where points can exist, used to bound
     * `nearest` probes. */
@@ -734,7 +747,8 @@ class Btrdb(val spark: SparkSession, val root: String,
     if (!commitStateSeeded) {
       commits.groupBy("sid")
         .agg(max("version").as("maj"),
-          max(when(col("kind") === "delete", 1L).otherwise(0L)).as("del"),
+          collect_list(when(col("kind") === "delete",
+            struct("version", "tmin", "tmax"))).as("del"),
           min(when(col("kind") === "insert", col("tmin"))).as("emin"),
           max(when(col("kind") === "insert", col("tmax"))).as("emax"),
           max(when(col("compacted"), col("version"))).as("floor"),
@@ -743,7 +757,9 @@ class Btrdb(val spark: SparkSession, val root: String,
             .as("grid"))
         .collect().foreach { r =>
           majorCounts(r.getLong(0)) = r.getLong(1)
-          if (r.getLong(2) == 1L) deleteDebt += r.getLong(0)
+          val del = r.getSeq[org.apache.spark.sql.Row](2)
+          if (del.nonEmpty) deletes(r.getLong(0)) =
+            del.map(d => (d.getLong(0), d.getLong(1), d.getLong(2))).toVector
           if (!r.isNullAt(3)) envelopes(r.getLong(0)) = (r.getLong(3), r.getLong(4))
           // column 5 is the compacted-version floor — reading the
           // envelope max (column 4) here made every FRESH engine
@@ -759,8 +775,8 @@ class Btrdb(val spark: SparkSession, val root: String,
   }
   /** The PQM write buffer, partitioned by `sid` (each stream's buffer is
     * independent, /root/reference/pqm.go:510-625) and a writer-private
-    * `batch` subkey (streaming replay idempotence). Reads normalize the
-    * inferred partition-column types and drop the physical subkey.
+    * `batch` subkey (streaming replay idempotence). Reads declare both
+    * partition columns BIGINT and drop the physical subkey.
     *
     * Presence is resolved from the in-memory staged counts once seeded —
     * the emptiness walk runs ONCE per (re)seed, never per query. */
@@ -768,11 +784,8 @@ class Btrdb(val spark: SparkSession, val root: String,
     val nonEmpty =
       if (minorSeeded) minorCounts.exists(_._2 > 0)
       else hasParquet("staging")
-    if (nonEmpty)
-      spark.read.parquet(path("staging"))
-        .select(col("sid").cast("long").as("sid"),
-          col("time").cast("long").as("time"), col("value"))
-    else emptyDf(StagingSchema)
+    (if (nonEmpty) readArea("staging", StagingSchema) else emptyDf(StagingSchema))
+      .select("sid", "time", "value")
   }
 
   private def seedMinors(): Unit = synchronized {
@@ -830,7 +843,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     * touched the commit log (recovery tooling, tests). */
   def refreshCommits(): Unit = synchronized {
     invalidateCommits()
-    majorCounts.clear(); deleteDebt.clear(); envelopes.clear()
+    majorCounts.clear(); deletes.clear(); envelopes.clear()
     compactedFloor.clear(); gridOk.clear()
     commitStateSeeded = false
     invalidatePyramidPresence()
@@ -941,7 +954,13 @@ class Btrdb(val spark: SparkSession, val root: String,
 
   private def hasDeleteDebt(sid: Long): Boolean = {
     seedCommitState()
-    deleteDebt.contains(sid)
+    synchronized(deletes.contains(sid))
+  }
+
+  /** The stream's live delete commits (see [[deletes]]). */
+  private def deletesOf(sid: Long): Vector[(Long, Long, Long)] = {
+    seedCommitState()
+    synchronized(deletes.getOrElse(sid, Vector.empty))
   }
 
   /** True iff the stream's committed values all lie on the cents grid
@@ -1285,7 +1304,7 @@ class Btrdb(val spark: SparkSession, val root: String,
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     touched.foreach { case (tb, _) =>
       val dir = s"points/sbucket=$bucket/tbucket=$tb"
-      val part = spark.read.parquet(path(dir))
+      val part = readArea(dir, PointsSchema)
       val kept = part.agg(count(when(!orphan, 1))).head().getLong(0)
       if (kept == 0) deleteDir(dir)
       else {
@@ -1408,13 +1427,9 @@ class Btrdb(val spark: SparkSession, val root: String,
     if (missedPreCompact.nonEmpty)
       maintainPyramidInner(sid, missedPreCompact, None)
     val bucket = sid % sBuckets
-    val deletes = commits
-      .filter(col("sid") === sid && col("kind") === "delete")
-      .select("version", "tmin", "tmax").collect()
     // rows of THIS stream erased by a delete commit (merge-on-read debt)
-    val delCond = deletes.map(d =>
-        col("time") >= d.getLong(1) && col("time") < d.getLong(2) &&
-          col("version") < d.getLong(0))
+    val delCond = deletesOf(sid).map { case (dv, lo, hi) =>
+        col("time") >= lo && col("time") < hi && col("version") < dv }
       .foldLeft(lit(false))(_ || _)
     val isOwn = col("sid") === sid
     val env = envelopes.get(sid)
@@ -1425,7 +1440,7 @@ class Btrdb(val spark: SparkSession, val root: String,
          (emin, emax) <- env
          if (emin >> tBucketPw) <= tb && tb <= (emax >> tBucketPw)) {
       val dir = s"points/sbucket=$bucket/tbucket=$tb"
-      val part = spark.read.parquet(path(dir))
+      val part = readArea(dir, PointsSchema)
       // one agg pass decides the tbucket's fate AND accumulates stats
       val r = part.agg(
         count(when(!isOwn, 1)),                                  // other streams
@@ -1472,7 +1487,7 @@ class Btrdb(val spark: SparkSession, val root: String,
         grid = gridOf(sid)))
     gcCommitFiles(sid, maj)
     invalidateCommits()
-    deleteDebt -= sid // history collapsed; merge-on-read debt cleared
+    synchronized { deletes -= sid } // history collapsed; debt cleared
     compactedFloor(sid) = maj
     if (n > 0) envelopes(sid) = (tmin, tmax) else envelopes -= sid
     // crash-unfolded ranges were healed before the collapse; only the
@@ -1523,7 +1538,7 @@ class Btrdb(val spark: SparkSession, val root: String,
          tb <- store.listNames(s"points/sbucket=$sb")
            .flatMap(_.stripPrefix("tbucket=").toLongOption).sorted) {
       val dir = s"points/sbucket=$sb/tbucket=$tb"
-      val part = spark.read.parquet(path(dir))
+      val part = readArea(dir, PointsSchema)
       val r = part.agg(count(when(isDead, 1)), count(lit(1))).head()
       val (dead, total) = (r.getLong(0), r.getLong(1))
       if (dead == total && dead > 0) deleteDir(dir)
@@ -1547,8 +1562,7 @@ class Btrdb(val spark: SparkSession, val root: String,
       // a whole touched-sbucket slice is metadata-scale, so the simple
       // one-pass rewrite is fine where it was not for the point log
       val (pyrDf, releasePyr) = checkpointReleasable(
-        spark.read.parquet(path("pyramid"))
-          .filter(col("sbucket").isin(buckets: _*)))
+        pyramidRead("pyramid").filter(col("sbucket").isin(buckets: _*)))
       val keptP = pyrDf.filter(!col("sid").isin(active: _*))
       keptP.repartition(col("pw"), col("sbucket"), col("wbucket"))
         .sortWithinPartitions("sid", "wstart")
@@ -1571,8 +1585,7 @@ class Btrdb(val spark: SparkSession, val root: String,
       // log and the stat rollup
       ensureQhistLayout()
       val (qDf, releaseQ) = checkpointReleasable(
-        spark.read.parquet(path("qhist"))
-          .filter(col("sbucket").isin(buckets: _*)))
+        readArea("qhist", QhistSchema).filter(col("sbucket").isin(buckets: _*)))
       val keptQ = qDf.filter(!col("sid").isin(active: _*))
       keptQ.repartition(col("sbucket"), col("wbucket"))
         .sortWithinPartitions("sid", "wstart", "c")
@@ -1592,7 +1605,7 @@ class Btrdb(val spark: SparkSession, val root: String,
       deleteDir(s"staging/sid=$sid")
       store.delete(s"pyramid/_wm-$sid")
       synchronized {
-        majorCounts -= sid; envelopes -= sid; deleteDebt -= sid
+        majorCounts -= sid; envelopes -= sid; deletes -= sid
         minorCounts -= sid; compactedFloor -= sid; gridOk -= sid
         pyramidWmCache -= sid
       }
@@ -1700,27 +1713,35 @@ class Btrdb(val spark: SparkSession, val root: String,
       commitJson(sid, v, kind, tmin, tmax, n, ranges, compacted = compacted,
         batches = batches, grid = grid))
     seedCommitState()
-    majorCounts(sid) = math.max(majorCounts.getOrElse(sid, 0L), v)
-    if (kind == "delete") deleteDebt += sid
-    else if (n > 0) {
-      envelopes(sid) = envelopes.get(sid) match {
-        case Some((a, b)) => (math.min(a, tmin), math.max(b, tmax))
-        case None => (tmin, tmax)
+    synchronized {
+      majorCounts(sid) = math.max(majorCounts.getOrElse(sid, 0L), v)
+      if (kind == "delete")
+        deletes(sid) = deletes.getOrElse(sid, Vector.empty) :+ ((v, tmin, tmax))
+      else if (n > 0) {
+        envelopes(sid) = envelopes.get(sid) match {
+          case Some((a, b)) => (math.min(a, tmin), math.max(b, tmax))
+          case None => (tmin, tmax)
+        }
+        gridOk(sid) = gridOk.getOrElse(sid, true) && grid
       }
-      gridOk(sid) = gridOk.getOrElse(sid, true) && grid
+      // n == 0 insert (a replayed zero-survivor compacted generation):
+      // nothing exists to cover — envelope and grid flag stay untouched
+      // a compacted record collapses everything at or below it — pins
+      // below the floor read empty (migration replay of a compacted
+      // source record reproduces the floor at the target), and its
+      // deletes at or below it are superseded like the commit reader's
+      if (compacted) {
+        compactedFloor(sid) = v
+        deletes.get(sid).map(_.filter(_._1 > v)).foreach { kept =>
+          if (kept.isEmpty) deletes -= sid else deletes(sid) = kept }
+      }
     }
-    // n == 0 insert (a replayed zero-survivor compacted generation):
-    // nothing exists to cover — envelope and grid flag stay untouched
-    // a compacted record collapses everything at or below it — pins
-    // below the floor read empty (migration replay of a compacted
-    // source record reproduces the floor at the target)
-    if (compacted) compactedFloor(sid) = v
     invalidateCommits()
   }
 
   /** Snapshot of one stream's committed points at `version`: version pin
-    * + delete anti-filters, both derived from the (tiny, broadcast)
-    * commit log — the point log itself is only scanned, never joined. */
+    * + delete anti-filters, both from the in-memory commit state — the
+    * point log itself is only scanned, never joined. */
   def pointsAt(uuid: String, version: Long = TimeConsts.LatestGeneration,
                start: Long = TimeConsts.MinimumTime,
                end: Long = TimeConsts.MaximumTime): DataFrame = {
@@ -1732,17 +1753,14 @@ class Btrdb(val spark: SparkSession, val root: String,
     // surviving rows would silently ignore the deletes)
     if (v < compactedFloor.getOrElse(sid, 0L))
       return emptyDf("sid BIGINT, time BIGINT, value DOUBLE, version BIGINT")
-    val deletes = commits
-      .filter(col("sid") === sid && col("kind") === "delete" && col("version") <= v)
-      .select("version", "tmin", "tmax").collect()
     val committed = readOr("points", PointsSchema)
       .filter(col("sbucket") === (sid % sBuckets) &&
         col("tbucket") >= (start >> tBucketPw) && col("tbucket") <= ((end - 1) >> tBucketPw) &&
         col("sid") === sid && col("version") <= v &&
         col("time") >= start && col("time") < end)
-    deletes.foldLeft(committed) { (df, d) =>
-      df.filter(!(col("time") >= d.getLong(1) && col("time") < d.getLong(2) &&
-        col("version") < d.getLong(0)))
+    deletesOf(sid).filter(_._1 <= v).foldLeft(committed) {
+      case (df, (dv, lo, hi)) =>
+        df.filter(!(col("time") >= lo && col("time") < hi && col("version") < dv))
     }.select("sid", "time", "value", "version")
   }
 
@@ -1857,24 +1875,17 @@ class Btrdb(val spark: SparkSession, val root: String,
       },
       if (rawSids.isEmpty) None else Some {
         // ONE point-log scan for every raw-path stream: `sid isin` +
-        // pruned sbucket/tbucket filters, with each stream's delete
-        // anti-filters folded in conjunctively (each is sid-scoped, so
-        // other streams pass through) — N streams, N subplans would
-        // re-scan the log N times; this is one scan regardless of N
-        val deletes = commits
-          .filter(col("sid").isin(rawSids: _*) && col("kind") === "delete")
-          .select("sid", "version", "tmin", "tmax").collect()
+        // pruned sbucket/tbucket filters + every stream's anti-filters
+        // — N streams, N subplans would re-scan the log N times; this
+        // is one scan regardless of N
         val committed = readOr("points", PointsSchema)
           .filter(col("sbucket").isin(rawSids.map(_ % sBuckets).distinct: _*) &&
             col("tbucket") >= (s >> tBucketPw) &&
             col("tbucket") <= ((e - 1) >> tBucketPw) &&
             col("sid").isin(rawSids: _*) &&
             col("time") >= s && col("time") < e)
-        val antiFiltered = deletes.foldLeft(committed) { (df, d) =>
-          df.filter(!(col("sid") === d.getLong(0) &&
-            col("time") >= d.getLong(2) && col("time") < d.getLong(3) &&
-            col("version") < d.getLong(1)))
-        }.select("sid", "time", "value")
+        val antiFiltered = antiFilter(committed,
+          rawSids.map(sid => sid -> deletesOf(sid)))
         val stagedSids = rawSids.filter(minorOf(_) > 0)
         val all =
           if (stagedSids.isEmpty) antiFiltered
@@ -1929,7 +1940,7 @@ class Btrdb(val spark: SparkSession, val root: String,
         pyramidCurrent(sid))
     val parts = Seq(
       if (pyrSids.isEmpty) None else Some {
-        spark.read.parquet(path("qhist"))
+        readArea("qhist", QhistSchema)
           .filter(col("sid").isin(pyrSids: _*) &&
             col("sbucket").isin(pyrSids.map(_ % sBuckets).distinct: _*) &&
             col("wbucket") >= (s >> pyramidWBucketPw) &&
@@ -1968,14 +1979,8 @@ class Btrdb(val spark: SparkSession, val root: String,
     * `<prefix>_points` SQL view [[registerViews]] creates. */
   def pointsView(): DataFrame = {
     seedCommitState(); seedMinors()
-    val deletes = commits.filter(col("kind") === "delete")
-      .select("sid", "version", "tmin", "tmax").collect()
-    val committed = readOr("points", PointsSchema)
-    val anti = deletes.foldLeft(committed) { (df, d) =>
-      df.filter(!(col("sid") === d.getLong(0) &&
-        col("time") >= d.getLong(2) && col("time") < d.getLong(3) &&
-        col("version") < d.getLong(1)))
-    }.select("sid", "time", "value")
+    val anti = antiFilter(readOr("points", PointsSchema),
+      synchronized(deletes.toSeq))
     val all =
       if (minorCounts.exists(_._2 > 0))
         anti.unionByName(stagingDf.select("sid", "time", "value"))
@@ -1984,6 +1989,18 @@ class Btrdb(val spark: SparkSession, val root: String,
     if (hidden.isEmpty) all
     else all.filter(!col("sid").isin(hidden.toSeq: _*))
   }
+
+  /** Multi-stream point rows with each stream's delete anti-filters
+    * folded in conjunctively (each is sid-scoped, so other streams pass
+    * through); columns (sid, time, value). */
+  private def antiFilter(points: DataFrame,
+      dels: Seq[(Long, Vector[(Long, Long, Long)])]): DataFrame =
+    dels.foldLeft(points) { case (df, (sid, ds)) =>
+      ds.foldLeft(df) { case (d, (dv, lo, hi)) =>
+        d.filter(!(col("sid") === sid && col("time") >= lo &&
+          col("time") < hi && col("version") < dv))
+      }
+    }.select("sid", "time", "value")
 
   /** Register the engine as plain SQL: temp views `<prefix>_points`
     * (latest merged points — see [[pointsView]]), `<prefix>_catalog`
@@ -2046,7 +2063,7 @@ class Btrdb(val spark: SparkSession, val root: String,
       (majorCounts.keys ++ minorCounts.keys).toSeq.distinct)
       .filterNot(tomb.contains)
     val clean = affected.forall(s =>
-      !deleteDebt.contains(s) && minorCounts.getOrElse(s, 0L) == 0L &&
+      !hasDeleteDebt(s) && minorCounts.getOrElse(s, 0L) == 0L &&
         pyramidCurrent(s))
     val exactOk = !needExactSum || affected.forall(gridOf)
     if (level.isEmpty || !clean || !exactOk) None
@@ -2707,7 +2724,7 @@ class Btrdb(val spark: SparkSession, val root: String,
         .select(qcols.map(col): _*)
       val qExisting =
         if (!hasParquet("qhist")) qFresh.limit(0)
-        else spark.read.parquet(path("qhist"))
+        else readArea("qhist", QhistSchema)
           .filter(col("sbucket") === sb && col("wbucket").isin(wbuckets: _*))
           .select(qcols.map(col): _*)
       val qFold = foldQhist.isDefined
@@ -2781,8 +2798,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     * stamp is written. A mixed-generation rollup table can therefore
     * never exist: legacy files are gone before the first new file
     * lands. Pure-legacy roots opened READ-ONLY never migrate — the
-    * inference-normalizing [[pyramidRead]] is sufficient for a
-    * same-generation table. */
+    * normalizing [[pyramidRead]] is sufficient for them. */
   private def ensurePyramidLayout(): Unit = {
     if (store.readString("pyramid/_layout").contains(PyramidLayoutVersion))
       return
@@ -2830,24 +2846,18 @@ class Btrdb(val spark: SparkSession, val root: String,
     }
   }
 
-  /** Pyramid reader normalizing rollup rows written before the `ccnt`
-    * column existed: absent (or per-file null) ccnt reads as cnt, which
-    * is correct for legacy rows — the pre-ccnt build rejected any value
-    * without a representable cents integer with a loud cast error, so a
-    * legacy bucket can only hold in-domain values. A mixed legacy/new
-    * table (the case single-footer schema inference cannot represent)
-    * is prevented at the source: [[ensurePyramidLayout]] migrates an
-    * unstamped table wholesale before the first current-layout write. */
-  private def pyramidRead(sub: String): DataFrame = {
-    val df0 = spark.read.parquet(path(sub))
-    val df = if (df0.columns.contains("ccnt"))
-      df0.withColumn("ccnt", coalesce(col("ccnt"), col("cnt")))
-    else df0.withColumn("ccnt", col("cnt"))
-    // vsc is summed as DECIMAL(38,0) (see StatOps.centsSum); legacy
-    // buckets stored it as LONG — widen so unions and folds line up
-    df.withColumn("vsc",
-      col("vsc").cast(org.apache.spark.sql.types.DecimalType(38, 0)))
-  }
+  /** Pyramid reader (declared [[Btrdb.PyramidSchema]]) normalizing
+    * rollup rows written before the `ccnt` column existed: absent (or
+    * per-file null) ccnt reads as cnt, which is correct for legacy rows
+    * — the pre-ccnt build rejected any value without a representable
+    * cents integer with a loud cast error, so a legacy bucket can only
+    * hold in-domain values. Their INT64 `vsc` is widened to the declared
+    * DECIMAL(38,0) by the Parquet reader. [[ensurePyramidLayout]] still
+    * migrates an unstamped table wholesale before the first
+    * current-layout write. */
+  private def pyramidRead(sub: String): DataFrame =
+    readArea(sub, PyramidSchema)
+      .withColumn("ccnt", coalesce(col("ccnt"), col("cnt")))
 
   /** Partition-pruned pyramid slice: sbucket + wbucket filters reach the
     * directory listing, so a stat query reads only the partitions its
@@ -3088,7 +3098,19 @@ object Btrdb {
     "sid BIGINT, version BIGINT, kind STRING, tmin BIGINT, tmax BIGINT, " +
       "npoints BIGINT, ranges ARRAY<STRUCT<s: BIGINT, e: BIGINT>>, " +
       "compacted BOOLEAN, batches ARRAY<BIGINT>, grid BOOLEAN"
-  val StagingSchema = "sid BIGINT, time BIGINT, value DOUBLE"
+  // Declared layouts of the engine-owned Parquet areas: data columns in
+  // file order, then the partition columns. Every read passes one of
+  // these, so planning a read never runs a footer-inference job.
+  // SchemaConformanceSpec checks each against what the writers produce.
+  val StagingSchema = "time BIGINT, value DOUBLE, sid BIGINT, batch BIGINT"
   val PointsSchema =
     "sid BIGINT, time BIGINT, value DOUBLE, version BIGINT, sbucket INT, tbucket BIGINT"
+  /** `vsc` is DECIMAL(38,0); pre-ccnt files stored it as INT64, which the
+    * Parquet reader widens to the declared type. */
+  val PyramidSchema =
+    "sid BIGINT, wstart BIGINT, cnt BIGINT, ccnt BIGINT, vmin DOUBLE, " +
+      "vmax DOUBLE, vsum DOUBLE, vsc DECIMAL(38,0), pw INT, sbucket INT, " +
+      "wbucket BIGINT"
+  val QhistSchema =
+    "sid BIGINT, wstart BIGINT, c BIGINT, cnt BIGINT, sbucket INT, wbucket BIGINT"
 }

@@ -454,7 +454,9 @@ object BtrdbWire {
       // Scala rows through the reflective encoder on EVERY job, and
       // insert's validate+stage makes two passes — paying the
       // conversion once measured 5.5 s → 1.5 s at a 250k-point batch
-      // (InsertWireBench). Unpersist after the synchronous insert so a
+      // (servebench's ingest-mixed workload measures this path:
+      // `python3 servebench/run.py --workload ingest-mixed --trace 1`).
+      // Unpersist after the synchronous insert so a
       // long-lived server doesn't accumulate blocks.
       val df = spark.createDataFrame(pts.result()).toDF("time", "value")
         .localCheckpoint()

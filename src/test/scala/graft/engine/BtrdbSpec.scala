@@ -156,6 +156,14 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(db.rawValues(uuid, 0, 1000).count() == 20)
     // pinned at v1 still sees everything (time travel)
     assert(db.rawValues(uuid, 0, 1000, version = 1).count() == 1000)
+    // a fresh handle seeds its delete lists from the commit log and
+    // answers both reads identically
+    val fresh = Btrdb.attach(spark, db.root, lockRoot = false)
+    try for (v <- Seq(1L, TimeConsts.LatestGeneration)) {
+      def rows(e: Btrdb) = e.rawValues(uuid, 0, 1000, version = v).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+      assert(rows(fresh) == rows(db), s"fresh attach differs at version $v")
+    } finally fresh.close()
     // a later insert INTO the deleted range survives (delete only applies
     // to points with version < delete version)
     insertPoints(uuid, Seq((500L, 42.0)))
