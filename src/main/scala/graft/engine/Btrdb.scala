@@ -1,6 +1,8 @@
 package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -303,6 +305,44 @@ class Btrdb(val spark: SparkSession, val root: String,
     if (exists(part)) readArea(part, schema)
     else emptyDf(schema)
 
+  /** One stream's directory `dir` inside the area `base` (for example
+    * `points/sbucket=S`), read with the area's declared schema; its
+    * partition columns come from the paths below `base`. Also returns
+    * the bytes of the files whose own directory name passes `keep`:
+    * the files the request's partition filters leave. Those bytes come
+    * from the file listing Spark makes for this scan, so the engine
+    * issues no listing of its own and never lists the whole area. An
+    * absent directory reads empty. */
+  private def scanDir(base: String, dir: String, schema: String)(
+      keep: String => Boolean): (DataFrame, Long) =
+    if (!exists(dir)) (emptyDf(schema), 0L)
+    else {
+      val df = spark.read.schema(schema).option("basePath", path(base))
+        .parquet(path(dir))
+      val listed = df.queryExecution.analyzed
+        .collectFirst { case l: LogicalRelation => l.relation }
+        .collect { case h: HadoopFsRelation => h.location }
+        .collect { case idx: PartitioningAwareFileIndex => idx.allFiles() }
+      // a listing this reader does not expose keeps the parallel plan
+      (df, listed.fold(Long.MaxValue)(
+        _.filter(f => keep(f.getPath.getParent.getName)).map(_.getLen).sum))
+    }
+
+  /** Keeps the partition directories `key=N` with N in [lo, hi]; signed
+    * names such as `tbucket=-3` included. */
+  private def within(key: String, lo: Long, hi: Long)(dirName: String): Boolean =
+    dirName.startsWith(s"$key=") &&
+      dirName.stripPrefix(s"$key=").toLongOption.exists(v => v >= lo && v <= hi)
+
+  /** The small-read rule: a per-stream read whose listed files total at
+    * most `spark.sql.files.openCostInBytes` — Spark's own cost of
+    * opening one file — runs as one partition. Its aggregate and global
+    * sort then plan no exchange, so the request runs one job with one
+    * task. Larger reads keep the parallel plan. */
+  private def fit(df: DataFrame, bytes: Long): DataFrame =
+    if (bytes <= spark.sessionState.conf.filesOpenCostInBytes) df.coalesce(1)
+    else df
+
   // ---- catalog (mprovider equivalent) --------------------------------
 
   @volatile private var catalogCache: DataFrame = null
@@ -311,6 +351,10 @@ class Btrdb(val spark: SparkSession, val root: String,
     * lazily from the staging dir, maintained on insert/flush so the hot
     * path never re-counts parquet. */
   private val minorCounts = scala.collection.mutable.Map.empty[Long, Long]
+  /** Staged time envelope per stream, kept beside [[minorCounts]]: an
+    * over-approximation (widened on insert, dropped on flush) that
+    * bounds `nearest` probes without a job. */
+  private val stagedEnvelopes = scala.collection.mutable.Map.empty[Long, (Long, Long)]
   @volatile private var minorSeeded = false
   /** Staging batch-id generator: ms epoch << 20 + counter — unique
     * across restarts, disjoint from Spark streaming batch ids. */
@@ -791,8 +835,12 @@ class Btrdb(val spark: SparkSession, val root: String,
   private def seedMinors(): Unit = synchronized {
     if (!minorSeeded) {
       recoverFlushedStaging()
-      stagingDf.groupBy("sid").count().collect()
-        .foreach(r => minorCounts(r.getLong(0)) = r.getLong(1))
+      stagingDf.groupBy("sid")
+        .agg(count(lit(1)), min("time"), max("time")).collect()
+        .foreach { r =>
+          minorCounts(r.getLong(0)) = r.getLong(1)
+          stagedEnvelopes(r.getLong(0)) = (r.getLong(2), r.getLong(3))
+        }
       minorSeeded = true
     }
   }
@@ -831,7 +879,7 @@ class Btrdb(val spark: SparkSession, val root: String,
   /** Re-seed staged counts from disk — call after an external writer
     * (e.g. StreamingIngest) appended to this root's staging area. */
   def refreshStaging(): Unit = synchronized {
-    minorCounts.clear(); minorSeeded = false
+    minorCounts.clear(); stagedEnvelopes.clear(); minorSeeded = false
   }
 
   /** Re-read the catalog from disk — call after an external process
@@ -1004,6 +1052,7 @@ class Btrdb(val spark: SparkSession, val root: String,
           .write.mode(SaveMode.Append).partitionBy("sid", "batch")
           .parquet(path("staging"))
         minorCounts(sid) = minorOf(sid) + st.n
+        widenStaged(sid, st.tmin, st.tmax)
         if (minorOf(sid) >= bufferCommitThreshold) flushImpl(uuid)
         version(uuid)
       }
@@ -1026,7 +1075,8 @@ class Btrdb(val spark: SparkSession, val root: String,
       val counts = batch.groupBy("sid")
         .agg(count(lit(1)).as("n"),
           coalesce(sum(when(!TimeOps.validPoint(col("time"), col("value")), 1L)),
-            lit(0L)).as("bad"))
+            lit(0L)).as("bad"),
+          min("time").as("tmin"), max("time").as("tmax"))
         .collect()
       val bad = counts.map(_.getLong(2)).sum
       require(bad == 0,
@@ -1042,10 +1092,18 @@ class Btrdb(val spark: SparkSession, val root: String,
         .write.mode(SaveMode.Append).partitionBy("sid", "batch")
         .parquet(path("staging"))
       synchronized {
-        counts.foreach(r => minorCounts(r.getLong(0)) =
-          minorCounts.getOrElse(r.getLong(0), 0L) + r.getLong(1))
+        counts.foreach { r =>
+          minorCounts(r.getLong(0)) =
+            minorCounts.getOrElse(r.getLong(0), 0L) + r.getLong(1)
+          widenStaged(r.getLong(0), r.getLong(3), r.getLong(4))
+        }
       }
     }
+
+  private def widenStaged(sid: Long, tmin: Long, tmax: Long): Unit = synchronized {
+    stagedEnvelopes(sid) = stagedEnvelopes.get(sid).fold((tmin, tmax)) {
+      case (a, b) => (math.min(a, tmin), math.max(b, tmax)) }
+  }
 
   /** Granularity of the one-pass batch partials: the finest pyramid
     * level (so the fold needs no re-aggregation) but never coarser than
@@ -1208,14 +1266,14 @@ class Btrdb(val spark: SparkSession, val root: String,
     val st = batchStats(partials)
     if (st.n == 0) {
       partials.unpersist(); staged.unpersist()
-      minorCounts(sid) = 0
+      minorCounts(sid) = 0; stagedEnvelopes -= sid
       return version(uuid)
     }
     commitBatch(sid, staged, st, partials, consumedBatches = stagedBatches(sid))
     partials.unpersist()
     staged.unpersist()
     deleteDir(s"staging/sid=$sid")
-    minorCounts(sid) = 0
+    minorCounts(sid) = 0; stagedEnvelopes -= sid
     version(uuid)
   }
 
@@ -1606,7 +1664,8 @@ class Btrdb(val spark: SparkSession, val root: String,
       store.delete(s"pyramid/_wm-$sid")
       synchronized {
         majorCounts -= sid; envelopes -= sid; deletes -= sid
-        minorCounts -= sid; compactedFloor -= sid; gridOk -= sid
+        minorCounts -= sid; stagedEnvelopes -= sid
+        compactedFloor -= sid; gridOk -= sid
         pyramidWmCache -= sid
       }
     }
@@ -1744,43 +1803,58 @@ class Btrdb(val spark: SparkSession, val root: String,
     * point log itself is only scanned, never joined. */
   def pointsAt(uuid: String, version: Long = TimeConsts.LatestGeneration,
                start: Long = TimeConsts.MinimumTime,
-               end: Long = TimeConsts.MaximumTime): DataFrame = {
-    val sid = sidOf(uuid)
-    val v = version
+               end: Long = TimeConsts.MaximumTime): DataFrame =
+    committedAt(sidOf(uuid), version, start, end)._1
+
+  /** [[pointsAt]] by sid, and the bytes of the files it reads: the
+    * scan lists the stream's `points/sbucket=S` directory, never the
+    * whole point log, and its partition filters keep the `tbucket`
+    * directories inside [start, end). */
+  private def committedAt(sid: Long, v: Long,
+                          start: Long, end: Long): (DataFrame, Long) = {
     seedCommitState()
     // pins below a compacted stream's floor read as EMPTY: that history
     // is collapsed (its delete anti-filters no longer exist, so serving
     // surviving rows would silently ignore the deletes)
     if (v < compactedFloor.getOrElse(sid, 0L))
-      return emptyDf("sid BIGINT, time BIGINT, value DOUBLE, version BIGINT")
-    val committed = readOr("points", PointsSchema)
-      .filter(col("sbucket") === (sid % sBuckets) &&
-        col("tbucket") >= (start >> tBucketPw) && col("tbucket") <= ((end - 1) >> tBucketPw) &&
+      return (emptyDf("sid BIGINT, time BIGINT, value DOUBLE, version BIGINT"), 0L)
+    val (tlo, thi) = (start >> tBucketPw, (end - 1) >> tBucketPw)
+    val (scan, bytes) = scanDir("points", s"points/sbucket=${sbucketOf(sid)}",
+      PointsSchema)(within("tbucket", tlo, thi))
+    val committed = scan
+      .filter(col("sbucket") === sbucketOf(sid) &&
+        col("tbucket") >= tlo && col("tbucket") <= thi &&
         col("sid") === sid && col("version") <= v &&
         col("time") >= start && col("time") < end)
-    deletesOf(sid).filter(_._1 <= v).foldLeft(committed) {
+    (deletesOf(sid).filter(_._1 <= v).foldLeft(committed) {
       case (df, (dv, lo, hi)) =>
         df.filter(!(col("time") >= lo && col("time") < hi && col("version") < dv))
-    }.select("sid", "time", "value", "version")
+    }.select("sid", "time", "value", "version"), bytes)
+  }
+
+  /** One stream's write buffer (sid, time, value) read from its own
+    * `staging/sid=S` directory, and that directory's bytes. */
+  private def stagedOf(sid: Long): (DataFrame, Long) = {
+    val (scan, bytes) = scanDir("staging", s"staging/sid=$sid", StagingSchema)(_ => true)
+    (scan.select("sid", "time", "value"), bytes)
   }
 
   /** Latest-version read merges the staging buffer — read-your-writes
     * (J3, /root/reference/pqm.go:428-470). */
-  private def readable(uuid: String, version: Long,
+  private def readable(sid: Long, version: Long,
                        start: Long, end: Long): DataFrame = {
-    val committed = pointsAt(uuid, version, start, end)
-    if (version != TimeConsts.LatestGeneration) committed
+    val (committed, bytes) = committedAt(sid, version, start, end)
+    // empty buffer (the steady state) or a pinned read: no staging
+    // subplan at all — the committed scan IS the plan. A small read
+    // (see fit) is one partition, the buffer included.
+    if (version != TimeConsts.LatestGeneration || minorOf(sid) == 0)
+      fit(committed, bytes)
     else {
-      val sid = sidOf(uuid)
-      // empty buffer (the steady state): no staging subplan at all — the
-      // committed scan IS the plan, with no union or extra listing
-      if (minorOf(sid) == 0) committed
-      else {
-        val staged = stagingDf
-          .filter(col("sid") === sid && col("time") >= start && col("time") < end)
-          .withColumn("version", lit(Long.MaxValue))
-        committed.unionByName(staged)
-      }
+      val (staging, stagedBytes) = stagedOf(sid)
+      val staged = staging
+        .filter(col("time") >= start && col("time") < end)
+        .withColumn("version", lit(Long.MaxValue))
+      fit(committed.unionByName(staged), bytes + stagedBytes)
     }
   }
 
@@ -1789,7 +1863,7 @@ class Btrdb(val spark: SparkSession, val root: String,
   /** RawValues: time-ordered scan of [start, end) at a version. */
   def rawValues(uuid: String, start: Long, end: Long,
                 version: Long = TimeConsts.LatestGeneration): DataFrame =
-    readable(uuid, version, start, end)
+    readable(sidOf(uuid), version, start, end)
       .select("time", "value").orderBy("time", "value")
 
   /** AlignedWindows at 2^pw; uses the rollup pyramid when the query is
@@ -1809,23 +1883,25 @@ class Btrdb(val spark: SparkSession, val root: String,
       version == TimeConsts.LatestGeneration && !hasDeleteDebt(sid) &&
       pyramidCurrent(sid)
     if (usable) {
-      val l = level.get
-      val committed = pyramidRead(s"pyramid/pw=$l")
-        .filter(pyramidSlice(sid, s, e) &&
-          col("wstart") >= s && col("wstart") < e)
+      val (rollup, bytes) = pyramidScan(sid, level.get, s, e)
+      val committed = rollup
         .select(TimeOps.clampTime(col("wstart"), pw).as("wstart"),
           col("cnt"), col("ccnt"), col("vmin"), col("vsc"), col("vsum"),
           col("vmax"))
-      val partials = if (minorOf(sid) == 0) committed else {
-        val staged = stagingDf
-          .filter(col("sid") === sid && col("time") >= s && col("time") < e)
+      val partials = if (minorOf(sid) == 0) fit(committed, bytes) else {
+        val (staging, stagedBytes) = stagedOf(sid)
+        // the buffer's own aggregate sits below the union, so a small
+        // read coalesces its scan too
+        val total = bytes + stagedBytes
+        val staged = fit(staging, total)
+          .filter(col("time") >= s && col("time") < e)
           .groupBy(TimeOps.clampTime(col("time"), pw).as("wstart"))
           .agg(count(lit(1)).as("cnt"),
             count(StatOps.cents(col("value"))).as("ccnt"),
             min("value").as("vmin"),
             sum(StatOps.centsSum(col("value"))).as("vsc"),
             sum("value").as("vsum"), max("value").as("vmax"))
-        committed.unionByName(staged)
+        fit(committed.unionByName(staged), total)
       }
       partials.groupBy("wstart")
         .agg(sum("cnt").as("cnt"), min("vmin").as("vmin"),
@@ -1833,7 +1909,7 @@ class Btrdb(val spark: SparkSession, val root: String,
           max("vmax").as("vmax"))
         .orderBy("wstart")
     } else
-      readable(uuid, version, s, e)
+      readable(sid, version, s, e)
         .groupBy(TimeOps.clampTime(col("time"), pw).as("wstart"))
         .agg(count(lit(1)).as("cnt"), min("value").as("vmin"),
           StatOps.rawMean(col("value")).as("vmean"),
@@ -1953,7 +2029,7 @@ class Btrdb(val spark: SparkSession, val root: String,
       if (rawSids.isEmpty) None else Some {
         // one live-view scan for every raw-path stream (see
         // alignedWindowsBulk) aggregated to the same histogram shape
-        rawSids.map(sid => readable(uuidBySid(sid), TimeConsts.LatestGeneration, s, e)
+        rawSids.map(sid => readable(sid, TimeConsts.LatestGeneration, s, e)
             .withColumn("sid", lit(sid)))
           .reduce(_ unionByName _)
           .groupBy(col("sid"), TimeOps.clampTime(col("time"), pw).as("wstart"),
@@ -2120,7 +2196,7 @@ class Btrdb(val spark: SparkSession, val root: String,
             // tree's extent, not just the query range)
             val (plo, phi) =
               if (depth <= 0) (b, TimeConsts.MaximumTime) else (b - u, b)
-            !readable(uuid, version, plo, phi).isEmpty
+            !readable(sid, version, plo, phi).isEmpty
           }))
         n0 - 1
       else n0
@@ -2138,16 +2214,15 @@ class Btrdb(val spark: SparkSession, val root: String,
         !hasDeleteDebt(sid) && pyramidCurrent(sid))
     val agg0 = level match {
       case Some(l) =>
-        pyramidRead(s"pyramid/pw=$l")
-          .filter(pyramidSlice(sid, lo, hi) &&
-            col("wstart") >= lo && col("wstart") < hi)
+        val (rollup, bytes) = pyramidScan(sid, l, lo, hi)
+        fit(rollup, bytes)
           .groupBy(TimeOps.windowIndex(bucketStart(col("wstart")),
             start, width).as("i"))
           .agg(sum("cnt").as("cnt"), min("vmin").as("vmin"),
             StatOps.rollupMean.as("vmean"),
             max("vmax").as("vmax"))
       case None =>
-        readable(uuid, version, lo, hi)
+        readable(sid, version, lo, hi)
           .groupBy(TimeOps.windowIndex(bucketStart(col("time")),
             start, width).as("i"))
           .agg(count(lit(1)).as("cnt"), min("value").as("vmin"),
@@ -2185,14 +2260,11 @@ class Btrdb(val spark: SparkSession, val root: String,
       version: Long): (Option[(Long, Double)], Int) = {
     val sid = sidOf(uuid)
     seedCommitState()
-    // probe bound = committed envelope ∪ staging envelope (one tiny
-    // sid-partition-pruned job, only while a write buffer exists)
+    // probe bound = committed envelope ∪ staged envelope, both in memory
     val stagedEnv =
-      if (version == TimeConsts.LatestGeneration && minorOf(sid) > 0) {
-        val r = stagingDf.filter(col("sid") === sid)
-          .agg(min("time"), max("time")).head()
-        if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
-      } else None
+      if (version == TimeConsts.LatestGeneration && minorOf(sid) > 0)
+        synchronized(stagedEnvelopes.get(sid))
+      else None
     val env = (envelopes.get(sid), stagedEnv) match {
       case (Some((a, b)), Some((c, d))) => Some((math.min(a, c), math.max(b, d)))
       case (x, y) => x.orElse(y)
@@ -2203,7 +2275,7 @@ class Btrdb(val spark: SparkSession, val root: String,
         var probes = 0
         def probe(lo: Long, hi: Long): Option[(Long, Double)] = {
           probes += 1
-          val df = readable(uuid, version, lo, hi)
+          val df = readable(sid, version, lo, hi)
           val ordered =
             if (backward) df.orderBy(col("time").desc, col("value").desc)
             else df.orderBy(col("time").asc, col("value").asc)
@@ -2252,7 +2324,9 @@ class Btrdb(val spark: SparkSession, val root: String,
   def changes(uuid: String, fromVersion: Long, toVersion: Long,
               resolution: Int): DataFrame = {
     val sid = sidOf(uuid)
-    val perRange = commits.filter(col("sid") === sid)
+    // commit metadata is small (seedCommitState collects it whole): one
+    // partition plans the interval merge and sort with no exchange
+    val perRange = commits.coalesce(1).filter(col("sid") === sid)
       .select(col("sid"), col("version"),
         explode(coalesce(col("ranges"),
           array(struct(col("tmin").as("s"), (col("tmax") + 1).as("e"))))).as("r"))
@@ -2281,7 +2355,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     // orderBy would put one range exchange per stream under the union —
     // the one sort that matters is the final orderBy("time")
     alignFrames(uuids.zip(names).map { case (u, n) =>
-      n -> readable(u, TimeConsts.LatestGeneration, start, end)
+      n -> readable(sidOf(u), TimeConsts.LatestGeneration, start, end)
         .select("time", "value")
     }).orderBy("time")
   }
@@ -2856,16 +2930,27 @@ class Btrdb(val spark: SparkSession, val root: String,
     * migrates an unstamped table wholesale before the first
     * current-layout write. */
   private def pyramidRead(sub: String): DataFrame =
-    readArea(sub, PyramidSchema)
-      .withColumn("ccnt", coalesce(col("ccnt"), col("cnt")))
+    withLegacyCcnt(readArea(sub, PyramidSchema))
 
-  /** Partition-pruned pyramid slice: sbucket + wbucket filters reach the
-    * directory listing, so a stat query reads only the partitions its
-    * window range intersects. */
-  private def pyramidSlice(sid: Long, s: Long, e: Long): Column =
-    col("sid") === sid && col("sbucket") === (sid % sBuckets) &&
-      col("wbucket") >= (s >> pyramidWBucketPw) &&
-      col("wbucket") <= ((e - 1) >> pyramidWBucketPw)
+  private def withLegacyCcnt(rollup: DataFrame): DataFrame =
+    rollup.withColumn("ccnt", coalesce(col("ccnt"), col("cnt")))
+
+  /** One stream's rollup rows at `level` for windows in [s, e), and the
+    * bytes of the files read: the scan lists the stream's
+    * `pyramid/pw=L/sbucket=S` directory, and its partition filters keep
+    * the `wbucket` directories the range intersects. */
+  private def pyramidScan(sid: Long, level: Int, s: Long, e: Long): (DataFrame, Long) = {
+    val (wlo, whi) = (s >> pyramidWBucketPw, (e - 1) >> pyramidWBucketPw)
+    val (scan, bytes) = scanDir("pyramid", s"pyramid/pw=$level/sbucket=${sbucketOf(sid)}",
+      PyramidSchema)(within("wbucket", wlo, whi))
+    (withLegacyCcnt(scan)
+      .filter(col("sid") === sid && col("sbucket") === sbucketOf(sid) &&
+        col("wbucket") >= wlo && col("wbucket") <= whi &&
+        col("wstart") >= s && col("wstart") < e),
+      bytes)
+  }
+
+  private def sbucketOf(sid: Long): Long = math.floorMod(sid, sBuckets.toLong)
 
   private def uuidBySid(sid: Long): String =
     catalog.filter(col("sid") === sid).select("uuid").head().getString(0)

@@ -139,10 +139,15 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(db.version(uuid) == (1L, 0L))
     insertPoints(uuid, Seq((105L, 105.0))) // staged, not flushed
     assert(db.version(uuid) == (1L, 1L))
-    val latest = db.rawValues(uuid, 0, 1000).collect().map(_.getLong(0)).toSeq
+    val latest = BothSides(spark)(
+      db.rawValues(uuid, 0, 1000).collect().map(_.getLong(0)).toSeq)
     assert(latest == Seq(100L, 105L)) // read-your-writes
-    val pinned = db.rawValues(uuid, 0, 1000, version = 1).collect().map(_.getLong(0)).toSeq
+    val pinned = BothSides(spark)(
+      db.rawValues(uuid, 0, 1000, version = 1).collect().map(_.getLong(0)).toSeq)
     assert(pinned == Seq(100L)) // pinned excludes staging
+    // the aggregate merges the buffer on both sides of the small-read rule
+    assert(BothSides(spark)(db.alignedWindows(uuid, 0, 1024, 6).collect().toSeq)
+      .map(_.getLong(1)) == Seq(2L))
     db.flush(uuid)
     assert(db.version(uuid) == (2L, 0L))
   }
@@ -162,7 +167,8 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
     try for (v <- Seq(1L, TimeConsts.LatestGeneration)) {
       def rows(e: Btrdb) = e.rawValues(uuid, 0, 1000, version = v).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(rows(fresh) == rows(db), s"fresh attach differs at version $v")
+      assert(rows(fresh) == BothSides(spark)(rows(db)),
+        s"fresh attach differs at version $v")
     } finally fresh.close()
     // a later insert INTO the deleted range survives (delete only applies
     // to points with version < delete version)
@@ -325,6 +331,19 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.contains("PartitionFilters:"), s"plan:\n$plan")
     assert(plan.contains("tbucket"), "tbucket must appear in partition filters")
     assert(narrow.count() == 1)
+    // a range with no tbucket directory at all reads empty
+    assert(BothSides(spark)(
+      db.rawValues(uuid, 1L << 52, 3L << 52).collect().toSeq).isEmpty)
+    // and so does every read of a root with no points/ yet
+    val empty = new Btrdb(spark, Files.createTempDirectory("btrdbempty").toString,
+      sBuckets = 4, tBucketPw = 52, pyramidLevels = Seq(6, 10))
+    try {
+      empty.createStream(uuid, "test/prune", Map("t" -> "p"))
+      assert(BothSides(spark)(empty.rawValues(uuid, 0, 100).collect().toSeq).isEmpty)
+      assert(BothSides(spark)(
+        empty.alignedWindows(uuid, 0, 1024, 6).collect().toSeq).isEmpty)
+      assert(empty.nearest(uuid, 0, backward = false).isEmpty)
+    } finally empty.close()
   }
 
   test("pyramid + staging combine: stat results merge the write buffer exactly") {
@@ -336,7 +355,7 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(db.version(uuid)._2 == 512L)
     // pyramid path (level 6 <= pw 8) must merge the buffer: each pw=8
     // window gets 256 committed (v=1.0) + 64 staged (v=3.0) points
-    val merged = db.alignedWindows(uuid, 0, 2048, 8).collect()
+    val merged = BothSides(spark)(db.alignedWindows(uuid, 0, 2048, 8).collect().toSeq)
     assert(merged.length == 8)
     merged.foreach { r =>
       assert(r.getLong(1) == 320, s"cnt ${r.getLong(1)}")

@@ -188,11 +188,13 @@ class PyramidSpec extends AnyFunSuite with BeforeAndAfterAll {
     // straddle zero: [-4096, 4096) — negative tbuckets, wbuckets, ranges
     insertPts(db, uuid, (-4096L until 4096L).map(t => (t, 1.0)))
     db.flush(uuid)
-    assert(db.rawValues(uuid, -4096, 4096).count() == 8192)
-    val pyr = db.alignedWindows(uuid, -4096, 4096, 8).collect()
+    // the range spans tbuckets -1 and 0 (tBucketPw = 12)
+    assert(BothSides(spark)(
+      db.rawValues(uuid, -4096, 4096).collect().toSeq).length == 8192)
+    val pyr = BothSides(spark)(db.alignedWindows(uuid, -4096, 4096, 8).collect().toSeq)
     assert(pyr.length == 32 && pyr.forall(_.getLong(1) == 256))
     assert(pyr.head.getLong(0) == -4096)
-    assert(db.nearest(uuid, 0, backward = true).contains((-1L, 1.0)))
+    assert(BothSides(spark)(db.nearest(uuid, 0, backward = true)).contains((-1L, 1.0)))
     val ch = db.changes(uuid, 0, 1, resolution = 0).collect()
     assert(ch.length == 1 && ch.head.getLong(0) == -4096 && ch.head.getLong(1) == 4096)
   }
