@@ -56,8 +56,11 @@ object TimeOps {
     end - ((end - start) % width)
 
   /** Insert-time validation predicate (reference /root/reference/quasar.go:83-95):
-    * time in [MinimumTime, MaximumTime-1) and value finite. */
+    * time in [MinimumTime, MaximumTime-1) and value finite. False, never
+    * NULL, on a null time or value (a string that fails its cast is
+    * null too), so `!validPoint` counts such a row as bad. */
   def validPoint(t: Column, v: Column): Column =
-    t >= lit(TimeConsts.MinimumTime) && t < lit(TimeConsts.MaximumTime - 1) &&
-      !isnan(v) && v > Double.NegativeInfinity && v < Double.PositiveInfinity
+    coalesce(t >= lit(TimeConsts.MinimumTime) && t < lit(TimeConsts.MaximumTime - 1) &&
+      !isnan(v) && v > Double.NegativeInfinity && v < Double.PositiveInfinity,
+      lit(false))
 }

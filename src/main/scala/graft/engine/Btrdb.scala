@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
   PartitioningAwareFileIndex}
 import org.apache.spark.sql.expressions.Window
@@ -305,20 +305,21 @@ class Btrdb(val spark: SparkSession, val root: String,
     if (exists(part)) readArea(part, schema)
     else emptyDf(schema)
 
-  /** One stream's directory `dir` inside the area `base` (for example
-    * `points/sbucket=S`), read with the area's declared schema; its
-    * partition columns come from the paths below `base`. Also returns
-    * the bytes of the files whose own directory name passes `keep`:
-    * the files the request's partition filters leave. Those bytes come
-    * from the file listing Spark makes for this scan, so the engine
-    * issues no listing of its own and never lists the whole area. An
-    * absent directory reads empty. */
-  private def scanDir(base: String, dir: String, schema: String)(
-      keep: String => Boolean): (DataFrame, Long) =
-    if (!exists(dir)) (emptyDf(schema), 0L)
+  /** Directories `dirs` inside the area `base` (for example
+    * `points/sbucket=S`), read as one relation with the area's declared
+    * schema; its partition columns come from the paths below `base`.
+    * Also returns the bytes of the files whose own directory name
+    * passes `keep`: the files the request's partition filters leave.
+    * Those bytes come from the file listing Spark makes for this scan,
+    * so the engine issues no listing of its own and never lists the
+    * whole area. Absent directories read empty. */
+  private def scanDirs(base: String, dirs: Seq[String], schema: String)(
+      keep: String => Boolean): (DataFrame, Long) = {
+    val present = dirs.filter(exists)
+    if (present.isEmpty) (emptyDf(schema), 0L)
     else {
       val df = spark.read.schema(schema).option("basePath", path(base))
-        .parquet(path(dir))
+        .parquet(present.map(path): _*)
       val listed = df.queryExecution.analyzed
         .collectFirst { case l: LogicalRelation => l.relation }
         .collect { case h: HadoopFsRelation => h.location }
@@ -327,6 +328,7 @@ class Btrdb(val spark: SparkSession, val root: String,
       (df, listed.fold(Long.MaxValue)(
         _.filter(f => keep(f.getPath.getParent.getName)).map(_.getLen).sum))
     }
+  }
 
   /** Keeps the partition directories `key=N` with N in [lo, hi]; signed
     * names such as `tbucket=-3` included. */
@@ -990,10 +992,9 @@ class Btrdb(val spark: SparkSession, val root: String,
   /** (major, minor) version of a stream: major = last committed
     * generation, minor = staged (unflushed) point count
     * (/root/reference/pqm.go:337-355). */
-  def version(uuid: String): (Long, Long) = {
-    val sid = sidOf(uuid)
-    (majorOf(sid), minorOf(sid))
-  }
+  def version(uuid: String): (Long, Long) = versionOf(sidOf(uuid))
+
+  private def versionOf(sid: Long): (Long, Long) = (majorOf(sid), minorOf(sid))
 
   private def majorOf(sid: Long): Long = {
     seedCommitState()
@@ -1053,7 +1054,7 @@ class Btrdb(val spark: SparkSession, val root: String,
           .parquet(path("staging"))
         minorCounts(sid) = minorOf(sid) + st.n
         widenStaged(sid, st.tmin, st.tmax)
-        if (minorOf(sid) >= bufferCommitThreshold) flushImpl(uuid)
+        if (minorOf(sid) >= bufferCommitThreshold) flushImpl(sid)
         version(uuid)
       }
     partials.unpersist()
@@ -1158,19 +1159,24 @@ class Btrdb(val spark: SparkSession, val root: String,
     val MaxRanges = 64
     var pw = partialPw
     // (b, n, bad, s, e, og)
-    var buckets: Array[(Long, Long, Long, Long, Long, Long)] = null
-    while (buckets == null) {
+    var rows: Array[Row] = null
+    while (rows == null) {
       val got = partials
         .groupBy(TimeOps.clampTime(col("wstart"), pw).as("b"))
         .agg(sum("cnt").as("n"), sum("bad").as("bad"),
           min("ts").as("s"), max("te").as("e"), sum("og").as("og"))
         .orderBy("b").limit(MaxBuckets + 1).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4), r.getLong(5)))
       // an overflowed collect is truncated — its stats are unusable
-      if (got.length <= MaxBuckets || pw >= 60) buckets = got else pw += 8
+      if (got.length <= MaxBuckets || pw >= 60) rows = got else pw += 8
     }
-    if (buckets.isEmpty) return BatchStats(0, 0, 0, 0, Nil)
+    if (rows.isEmpty) return BatchStats(0, 0, 0, 0, Nil)
+    // every caller rejects a batch holding invalid points, whose null
+    // times have no bucket: it gets its counts and no ranges (null
+    // buckets sort first, so a truncated collect still holds them)
+    val bad = rows.map(_.getLong(2)).sum
+    if (bad > 0) return BatchStats(rows.map(_.getLong(1)).sum, bad, 0, 0, Nil)
+    val buckets = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+      r.getLong(3), r.getLong(4), r.getLong(5)))
     // merge clusters of adjacent buckets (driver-side; ≤256 entries)
     val merged = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     val width = 1L << pw
@@ -1208,7 +1214,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     // version stamps (they are ≤ v and carried in the batch) and lands
     // as a compacted record, reproducing the source's collapsed floor.
     val v = atVersion.getOrElse(majorOf(sid) + 1)
-    (if (batch.columns.contains("version")) batch
+    writePoints((if (batch.columns.contains("version")) batch
      else batch.withColumn("version", lit(v)))
       .withColumn("sbucket", pmod(col("sid"), lit(sBuckets)))
       .withColumn("tbucket", shiftright(col("time"), tBucketPw))
@@ -1217,18 +1223,7 @@ class Btrdb(val spark: SparkSession, val root: String,
       // touched tbuckets per batch (time-contiguous batches touch few),
       // and sortWithinPartitions keeps per-file row-group time stats
       // tight for pushdown
-      .sortWithinPartitions("sid", "time")
-      .write.mode(SaveMode.Append)
-      // columnar analog of the reference's delta-delta+varint encoder
-      // (FAST'16): zstd over parquet V2 data pages, whose
-      // DELTA_BINARY_PACKED int64 encoding is the delta-delta itself —
-      // measured 3.76 -> ~1.0 B/point on the time column at 120 Hz
-      // cadence (CompressionBench); Spark's vectorized reader decodes
-      // v2 natively
-      .option("compression", "zstd")
-      .option("parquet.writer.version", "v2")
-      .partitionBy("sbucket", "tbucket")
-      .parquet(path("points"))
+      .sortWithinPartitions("sid", "time"), SaveMode.Append)
     appendCommit(sid, v, "insert", st.tmin, st.tmax, st.n, st.ranges,
       consumedBatches, grid = st.offGrid == 0L, compacted = asCompacted)
     // INSERT path: the batch's partial aggregates fold into the existing
@@ -1256,25 +1251,24 @@ class Btrdb(val spark: SparkSession, val root: String,
     * committed (see recoverFlushedStaging) — an interrupted flush never
     * duplicates points. */
   def flush(uuid: String): (Long, Long) =
-    admission.run(Admission.Write)(flushImpl(uuid))
+    admission.run(Admission.Write)(flushImpl(sidOf(uuid)))
 
-  private def flushImpl(uuid: String): (Long, Long) = {
-    val sid = sidOf(uuid)
-    if (minorOf(sid) == 0) return version(uuid)
+  private def flushImpl(sid: Long): (Long, Long) = {
+    if (minorOf(sid) == 0) return versionOf(sid)
     val staged = stagingDf.filter(col("sid") === sid).cache()
     val partials = batchPartials(staged).cache()
     val st = batchStats(partials)
     if (st.n == 0) {
       partials.unpersist(); staged.unpersist()
       minorCounts(sid) = 0; stagedEnvelopes -= sid
-      return version(uuid)
+      return versionOf(sid)
     }
     commitBatch(sid, staged, st, partials, consumedBatches = stagedBatches(sid))
     partials.unpersist()
     staged.unpersist()
     deleteDir(s"staging/sid=$sid")
     minorCounts(sid) = 0; stagedEnvelopes -= sid
-    version(uuid)
+    versionOf(sid)
   }
 
   /** The PQM scanner analog (/root/reference/pqm.go:33-35,207-235: the
@@ -1288,20 +1282,30 @@ class Btrdb(val spark: SparkSession, val root: String,
     seedMinors()
     val now = System.currentTimeMillis()
     val staged = minorCounts.filter(_._2 > 0).keys.toSeq.sorted
-    val flushed = staged.flatMap { sid =>
+    val flushed = staged.filter { sid =>
       val oldest: Long =
         store.oldestFileMtime(s"staging/sid=$sid").getOrElse(Long.MaxValue)
-      if (minorCounts(sid) >= bufferCommitThreshold ||
-          (oldest != Long.MaxValue && now - oldest >= maxAgeMillis)) {
-        val uuid = uuidBySid(sid)
-        flush(uuid)
-        Some(uuid)
-      } else None
+      minorCounts(sid) >= bufferCommitThreshold ||
+        (oldest != Long.MaxValue && now - oldest >= maxAgeMillis)
     }
+    flushed.foreach(sid => admission.run(Admission.Write)(flushImpl(sid)))
     // the scanner is also the natural cadence for bounding the commit
     // directory — roll per-commit files into one archive once they pile up
     archiveCommitLog()
-    flushed
+    uuidsOf(flushed)
+  }
+
+  /** The uuids of `sids`, from the uuid→sid memo ([[sidOf]]); only the
+    * streams this handle never looked up (staged by insertAll or
+    * StreamingIngest) cost a catalog query, one for all of them. */
+  private def uuidsOf(sids: Seq[Long]): Seq[String] = {
+    val known = synchronized(sidCache.map(_.swap).toMap)
+    val missing = sids.filterNot(known.contains)
+    val found =
+      if (missing.isEmpty) Map.empty[Long, String]
+      else catalog.filter(col("sid").isin(missing: _*)).select("sid", "uuid")
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    sids.map(sid => known.getOrElse(sid, found(sid)))
   }
 
   /** DeleteRange [start, end): pure commit-log operation — readers apply
@@ -1312,7 +1316,7 @@ class Btrdb(val spark: SparkSession, val root: String,
   private def deleteRangeImpl(uuid: String, start: Long, end: Long): (Long, Long) = {
     val sid = sidOf(uuid)
     requireNotMigratingOut(sid, "deleteRange")
-    flushImpl(uuid) // deletes apply to committed data, like the reference
+    flushImpl(sid) // deletes apply to committed data, like the reference
     val v = majorOf(sid) + 1
     appendCommit(sid, v, "delete", start, end, 0, Seq((start, end)))
     maintainPyramid(sid, Seq((start, end)), foldPartials = None, v)
@@ -1327,13 +1331,13 @@ class Btrdb(val spark: SparkSession, val root: String,
     * version numbers); otherwise exactly version v. */
   private[engine] def generationRows(uuid: String, v: Long,
                                      upTo: Boolean): DataFrame = {
-    val sid = sidOf(uuid)
     // version is carried so a compacted snapshot's rows keep their
     // ORIGINAL stamps at the target (a plain generation's rows all
-    // carry exactly v, so the column is equivalent to re-stamping)
-    readOr("points", PointsSchema)
-      .filter(col("sbucket") === (sid % sBuckets) && col("sid") === sid &&
-        (if (upTo) col("version") <= v else col("version") === v))
+    // carry exactly v, so the column is equivalent to re-stamping). A
+    // delete hides only rows written below it, so the pin at v hides
+    // none of generation v's rows
+    val rows = pointLog(Some(Seq(sidOf(uuid))), v, buffered = false)._1
+    (if (upTo) rows else rows.filter(col("version") === v))
       .select("time", "value", "version")
   }
 
@@ -1353,34 +1357,15 @@ class Btrdb(val spark: SparkSession, val root: String,
   private[engine] def dropUncommittedReplay(uuid: String): Long = {
     val sid = sidOf(uuid)
     val maj = majorOf(sid)
-    val bucket = sid % sBuckets
     val orphan = col("sid") === sid && col("version") > maj
-    val touched = readOr("points", PointsSchema)
-      .filter(col("sbucket") === bucket && orphan)
-      .groupBy(col("tbucket").cast("long").as("tb"))
+    // the latest read without the write buffer reads every written row
+    val touched = pointLog(Some(Seq(sid)), buffered = false)._1
+      .filter(orphan)
+      .groupBy(shiftright(col("time"), tBucketPw).as("tb"))
       .agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    touched.foreach { case (tb, _) =>
-      val dir = s"points/sbucket=$bucket/tbucket=$tb"
-      val part = readArea(dir, PointsSchema)
-      val kept = part.agg(count(when(!orphan, 1))).head().getLong(0)
-      if (kept == 0) deleteDir(dir)
-      else {
-        val (merged, release) = checkpointReleasable(
-          part.filter(!orphan)
-            .withColumn("sbucket", lit(bucket))
-            .withColumn("tbucket", lit(tb)))
-        merged.repartition(col("sbucket"), col("tbucket"))
-          .sortWithinPartitions("sid", "time")
-          .write.mode(SaveMode.Overwrite)
-          .option("compression", "zstd")
-          .option("parquet.writer.version", "v2")
-          .partitionBy("sbucket", "tbucket")
-          .parquet(path("points"))
-        release()
-      }
-    }
-    touched.map(_._2).sum
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    if (touched.nonEmpty) rewritePoints(sid % sBuckets, touched.contains, orphan)
+    touched.values.sum
   }
 
   /** Replay one insert generation at a PINNED version — the migration
@@ -1468,7 +1453,7 @@ class Btrdb(val spark: SparkSession, val root: String,
 
   private def compactImpl(uuid: String): Long = {
     val sid = sidOf(uuid)
-    flushImpl(uuid)
+    flushImpl(sid)
     val maj = majorOf(sid)
     if (maj == 0) return 0
     // Heal any crash-unfolded ranges NOW, while the per-commit records
@@ -1484,54 +1469,24 @@ class Btrdb(val spark: SparkSession, val root: String,
     val missedPreCompact = missedFoldRanges(sid, maj + 1)
     if (missedPreCompact.nonEmpty)
       maintainPyramidInner(sid, missedPreCompact, None)
-    val bucket = sid % sBuckets
     // rows of THIS stream erased by a delete commit (merge-on-read debt)
-    val delCond = deletesOf(sid).map { case (dv, lo, hi) =>
-        col("time") >= lo && col("time") < hi && col("version") < dv }
-      .foldLeft(lit(false))(_ || _)
-    val isOwn = col("sid") === sid
+    val dirty = hides(Seq(sid), maj).foldLeft(lit(false))(_ || _)
+    val keptOwn = col("sid") === sid && !dirty
     val env = envelopes.get(sid)
-    var n = 0L; var tmin = Long.MaxValue; var tmax = Long.MinValue
-    val tbuckets = store.listNames(s"points/sbucket=$bucket")
-      .flatMap(_.stripPrefix("tbucket=").toLongOption).sorted
-    for (tb <- tbuckets;
-         (emin, emax) <- env
-         if (emin >> tBucketPw) <= tb && tb <= (emax >> tBucketPw)) {
-      val dir = s"points/sbucket=$bucket/tbucket=$tb"
-      val part = readArea(dir, PointsSchema)
-      // one agg pass decides the tbucket's fate AND accumulates stats
-      val r = part.agg(
-        count(when(!isOwn, 1)),                                  // other streams
-        count(when(isOwn && !delCond, 1)),                       // kept own
-        min(when(isOwn && !delCond, col("time"))),
-        max(when(isOwn && !delCond, col("time"))),
-        count(when(isOwn && delCond, 1))).head()
-      val (others, kept, dirty) = (r.getLong(0), r.getLong(1), r.getLong(4))
-      if (kept > 0) {
-        n += kept
-        tmin = math.min(tmin, r.getLong(2)); tmax = math.max(tmax, r.getLong(3))
-      }
-      if (dirty > 0) {
-        if (others + kept == 0) deleteDir(dir) // fully drained
-        else {
-          // materialize BEFORE the overwrite replaces the source files
-          val (merged, release) = checkpointReleasable(
-            part.filter(!isOwn || !delCond)
-              .withColumn("sbucket", lit(bucket))
-              .withColumn("tbucket", lit(tb)))
-          merged
-            .repartition(col("sbucket"), col("tbucket"))
-            .sortWithinPartitions("sid", "time")
-            .write.mode(SaveMode.Overwrite)
-            .option("compression", "zstd")
-            .option("parquet.writer.version", "v2")
-            .partitionBy("sbucket", "tbucket")
-            .parquet(path("points"))
-          release()
-        }
-      }
-    }
-    if (n == 0) { tmin = 0L; tmax = 0L }
+    // the rewriter's one agg pass per tbucket also accumulates the
+    // surviving envelope
+    val kept = rewritePoints(sid % sBuckets,
+      tb => env.exists { case (emin, emax) =>
+        (emin >> tBucketPw) <= tb && tb <= (emax >> tBucketPw) },
+      dirty,
+      count(when(keptOwn, 1)).as("kept"),
+      min(when(keptOwn, col("time"))).as("tmin"),
+      max(when(keptOwn, col("time"))).as("tmax"))
+      .filter(_.getAs[Long]("kept") > 0)
+    val n = kept.map(_.getAs[Long]("kept")).sum
+    val (tmin, tmax) =
+      if (n == 0) (0L, 0L)
+      else (kept.map(_.getAs[Long]("tmin")).min, kept.map(_.getAs[Long]("tmax")).max)
     // collapse this stream's commit history ONLY after the points
     // rewrite completed: write one superseding compacted record (atomic
     // file move), then garbage-collect the superseded per-commit files.
@@ -1591,30 +1546,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     // untouched partitions are detected by one agg and never rewritten;
     // a crash mid-stream leaves already-purged partitions purged and
     // the rest pending — re-running purge is idempotent
-    val isDead = col("sid").isin(active: _*)
-    for (sb <- buckets;
-         tb <- store.listNames(s"points/sbucket=$sb")
-           .flatMap(_.stripPrefix("tbucket=").toLongOption).sorted) {
-      val dir = s"points/sbucket=$sb/tbucket=$tb"
-      val part = readArea(dir, PointsSchema)
-      val r = part.agg(count(when(isDead, 1)), count(lit(1))).head()
-      val (dead, total) = (r.getLong(0), r.getLong(1))
-      if (dead == total && dead > 0) deleteDir(dir)
-      else if (dead > 0) {
-        val (keptP, release) = checkpointReleasable(
-          part.filter(!isDead)
-            .withColumn("sbucket", lit(sb))
-            .withColumn("tbucket", lit(tb)))
-        keptP.repartition(col("sbucket"), col("tbucket"))
-          .sortWithinPartitions("sid", "time")
-          .write.mode(SaveMode.Overwrite)
-          .option("compression", "zstd")
-          .option("parquet.writer.version", "v2")
-          .partitionBy("sbucket", "tbucket")
-          .parquet(path("points"))
-        release()
-      }
-    }
+    buckets.foreach(rewritePoints(_, _ => true, col("sid").isin(active: _*)))
     if (hasParquet("pyramid")) {
       // rollup rows are ~data/2^minLevel (≥2^30 at production geometry):
       // a whole touched-sbucket slice is metadata-scale, so the simple
@@ -1672,6 +1604,54 @@ class Btrdb(val spark: SparkSession, val root: String,
     invalidateCommits()
     active
   }
+
+  /** The point-log writer: Parquet partitioned by (sbucket, tbucket),
+    * zstd over v2 data pages — the columnar analog of the reference's
+    * delta-delta+varint encoder (FAST'16): v2's DELTA_BINARY_PACKED
+    * int64 encoding is the delta-delta itself, measured 3.76 -> ~1.0
+    * B/point on the time column at 120 Hz cadence (CompressionBench);
+    * Spark's vectorized reader decodes v2 natively. */
+  private def writePoints(rows: DataFrame, mode: SaveMode): Unit =
+    rows.write.mode(mode)
+      .option("compression", "zstd")
+      .option("parquet.writer.version", "v2")
+      .partitionBy("sbucket", "tbucket")
+      .parquet(path("points"))
+
+  /** The tbucket rewriter: removes the rows `drop` selects from the
+    * point-log directories `points/sbucket=sb/tbucket=T` whose T passes
+    * `tbuckets`, one directory at a time — the working set is one
+    * tbucket, never the sbucket. One aggregate pass per directory counts
+    * its rows and the rows to drop, and evaluates `stats` beside them. A
+    * directory with nothing to drop is not rewritten, a drained one is
+    * deleted, and otherwise its kept rows are materialized and written
+    * back over it. Callers drop only rows no committed state needs
+    * (delete-hidden, tombstoned, or above the committed major), so each
+    * directory's rewrite is independently crash-safe and a re-run is
+    * idempotent. Returns each directory's aggregate row. */
+  private def rewritePoints(sb: Long, tbuckets: Long => Boolean, drop: Column,
+                            stats: Column*): Seq[Row] =
+    store.listNames(s"points/sbucket=$sb")
+      .flatMap(_.stripPrefix("tbucket=").toLongOption).sorted
+      .filter(tbuckets).map { tb =>
+        val dir = s"points/sbucket=$sb/tbucket=$tb"
+        val part = readArea(dir, PointsSchema)
+        val r = part.agg(count(lit(1)).as("total"),
+          (count(when(drop, 1)).as("dropped") +: stats): _*).head()
+        val dropped = r.getAs[Long]("dropped")
+        if (dropped == r.getAs[Long]("total") && dropped > 0) deleteDir(dir)
+        else if (dropped > 0) {
+          // materialize BEFORE the overwrite replaces the source files
+          val (kept, release) = checkpointReleasable(
+            part.filter(!drop)
+              .withColumn("sbucket", lit(sb))
+              .withColumn("tbucket", lit(tb)))
+          writePoints(kept.repartition(col("sbucket"), col("tbucket"))
+            .sortWithinPartitions("sid", "time"), SaveMode.Overwrite)
+          release()
+        }
+        r
+      }
 
   private def deleteDir(part: String): Unit = store.deleteRecursive(part)
 
@@ -1804,58 +1784,96 @@ class Btrdb(val spark: SparkSession, val root: String,
   def pointsAt(uuid: String, version: Long = TimeConsts.LatestGeneration,
                start: Long = TimeConsts.MinimumTime,
                end: Long = TimeConsts.MaximumTime): DataFrame =
-    committedAt(sidOf(uuid), version, start, end)._1
+    pointLog(Some(Seq(sidOf(uuid))), version, start, end, buffered = false)._1
 
-  /** [[pointsAt]] by sid, and the bytes of the files it reads: the
-    * scan lists the stream's `points/sbucket=S` directory, never the
-    * whole point log, and its partition filters keep the `tbucket`
-    * directories inside [start, end). */
-  private def committedAt(sid: Long, v: Long,
-                          start: Long, end: Long): (DataFrame, Long) = {
+  /** The point-log reader, and the one visibility rule every read of
+    * committed points gets: the version pin, the delete anti-filters
+    * ([[hides]]) and, on a latest read unless `buffered = false`, the
+    * write buffer (read-your-writes, J3, reference pqm.go:428-470), whose
+    * rows carry version Long.MaxValue. Columns (sid, time, value,
+    * version). `Some(sids)` reads one relation over only those streams'
+    * `points/sbucket=S` directories, kept to the tbuckets inside
+    * [start, end) (and one over their `staging/sid=S`), and returns the
+    * kept bytes for the caller's [[fit]]; a pin below a compacted
+    * stream's floor reads it as empty, since its history and deletes are
+    * collapsed. `None` reads every stream, latest and whole-domain, from
+    * the area roots (the SQL view's plan). */
+  private def pointLog(sids: Option[Seq[Long]],
+                       version: Long = TimeConsts.LatestGeneration,
+                       start: Long = TimeConsts.MinimumTime,
+                       end: Long = TimeConsts.MaximumTime,
+                       buffered: Boolean = true): (DataFrame, Long) = {
     seedCommitState()
-    // pins below a compacted stream's floor read as EMPTY: that history
-    // is collapsed (its delete anti-filters no longer exist, so serving
-    // surviving rows would silently ignore the deletes)
-    if (v < compactedFloor.getOrElse(sid, 0L))
-      return (emptyDf("sid BIGINT, time BIGINT, value DOUBLE, version BIGINT"), 0L)
-    val (tlo, thi) = (start >> tBucketPw, (end - 1) >> tBucketPw)
-    val (scan, bytes) = scanDir("points", s"points/sbucket=${sbucketOf(sid)}",
-      PointsSchema)(within("tbucket", tlo, thi))
-    val committed = scan
-      .filter(col("sbucket") === sbucketOf(sid) &&
-        col("tbucket") >= tlo && col("tbucket") <= thi &&
-        col("sid") === sid && col("version") <= v &&
-        col("time") >= start && col("time") < end)
-    (deletesOf(sid).filter(_._1 <= v).foldLeft(committed) {
-      case (df, (dv, lo, hi)) =>
-        df.filter(!(col("time") >= lo && col("time") < hi && col("version") < dv))
-    }.select("sid", "time", "value", "version"), bytes)
+    val latest = version == TimeConsts.LatestGeneration
+    sids match {
+      case None =>
+        require(latest && start == TimeConsts.MinimumTime &&
+          end == TimeConsts.MaximumTime,
+          "a read of every stream is a latest read of the whole time domain")
+        seedMinors()
+        val committed = antiFiltered(readOr("points", PointsSchema),
+          synchronized(deletes.keys.toSeq), version)
+          .select("sid", "time", "value", "version")
+        (if (buffered && minorCounts.exists(_._2 > 0))
+          committed.unionByName(stagingDf.withColumn("version", lit(Long.MaxValue)))
+        else committed, Long.MaxValue)
+      case Some(all) =>
+        val live = all.filter(sid => version >= compactedFloor.getOrElse(sid, 0L))
+        val buckets = live.map(sbucketOf).distinct
+        val (tlo, thi) = (start >> tBucketPw, (end - 1) >> tBucketPw)
+        val (scan, bytes) = scanDirs("points", buckets.map(b => s"points/sbucket=$b"),
+          PointsSchema)(within("tbucket", tlo, thi))
+        val committed = antiFiltered(scan
+          .filter(col("sbucket").isin(buckets: _*) &&
+            col("tbucket") >= tlo && col("tbucket") <= thi &&
+            col("sid").isin(live: _*) && col("version") <= version &&
+            col("time") >= start && col("time") < end),
+          live, version, scoped = live.size > 1)
+          .select("sid", "time", "value", "version")
+        val staged = if (buffered && latest) live.filter(minorOf(_) > 0) else Nil
+        if (staged.isEmpty) (committed, bytes)
+        else {
+          val (buffer, bufferBytes) = stagedOf(staged)
+          (committed.unionByName(buffer
+            .filter(col("time") >= start && col("time") < end)
+            .withColumn("version", lit(Long.MaxValue))), bytes + bufferBytes)
+        }
+    }
   }
 
-  /** One stream's write buffer (sid, time, value) read from its own
-    * `staging/sid=S` directory, and that directory's bytes. */
-  private def stagedOf(sid: Long): (DataFrame, Long) = {
-    val (scan, bytes) = scanDir("staging", s"staging/sid=$sid", StagingSchema)(_ => true)
+  /** The one delete predicate: the rows of `sids` that their streams'
+    * delete lists hide from a read pinned at `version` — a row in the
+    * range of a delete commit at or below the pin, written below that
+    * commit — as one condition per delete commit; a row is hidden iff
+    * any holds. Each stream's rows are scoped by `sid`, unless the frame
+    * holds that one stream only (`scoped = false`). */
+  private def hides(sids: Seq[Long], version: Long,
+                    scoped: Boolean = true): Seq[Column] =
+    sids.flatMap(sid => deletesOf(sid).filter(_._1 <= version).map {
+      case (dv, lo, hi) =>
+        (if (scoped) col("sid") === sid else lit(true)) &&
+          col("time") >= lo && col("time") < hi && col("version") < dv
+    })
+
+  /** Drops the rows [[hides]] selects, one filter per delete commit. */
+  private def antiFiltered(df: DataFrame, sids: Seq[Long], version: Long,
+                           scoped: Boolean = true): DataFrame =
+    hides(sids, version, scoped).foldLeft(df)((d, hidden) => d.filter(!hidden))
+
+  /** The write buffer of `sids` (sid, time, value), read from their
+    * `staging/sid=S` directories as one relation, and those
+    * directories' bytes. */
+  private def stagedOf(sids: Seq[Long]): (DataFrame, Long) = {
+    val (scan, bytes) = scanDirs("staging", sids.map(sid => s"staging/sid=$sid"),
+      StagingSchema)(_ => true)
     (scan.select("sid", "time", "value"), bytes)
   }
 
-  /** Latest-version read merges the staging buffer — read-your-writes
-    * (J3, /root/reference/pqm.go:428-470). */
+  /** One stream's visible points under the small-read rule. */
   private def readable(sid: Long, version: Long,
                        start: Long, end: Long): DataFrame = {
-    val (committed, bytes) = committedAt(sid, version, start, end)
-    // empty buffer (the steady state) or a pinned read: no staging
-    // subplan at all — the committed scan IS the plan. A small read
-    // (see fit) is one partition, the buffer included.
-    if (version != TimeConsts.LatestGeneration || minorOf(sid) == 0)
-      fit(committed, bytes)
-    else {
-      val (staging, stagedBytes) = stagedOf(sid)
-      val staged = staging
-        .filter(col("time") >= start && col("time") < end)
-        .withColumn("version", lit(Long.MaxValue))
-      fit(committed.unionByName(staged), bytes + stagedBytes)
-    }
+    val (df, bytes) = pointLog(Some(Seq(sid)), version, start, end)
+    fit(df, bytes)
   }
 
   // ---- queries --------------------------------------------------------
@@ -1873,23 +1891,20 @@ class Btrdb(val spark: SparkSession, val root: String,
     val s = TimeOps.alignDown(start, pw)
     val e = TimeOps.alignDown(end, pw)
     val sid = sidOf(uuid)
-    val level = pyramidLevels.filter(_ <= pw).sorted.lastOption
+    val level = rollupLevel(pw)
     // pyramid serves the committed part whenever the stream has no
     // delete debt; a non-empty staging buffer is handled the way the
     // reference merges its write buffer into stat results — aggregate
     // the buffer alone and COMBINE partials (Σcnt, min, Σsum, max;
     // mean = Σ(mean·count)/Σcount, /root/reference/merger.go:126-208)
-    val usable = level.exists(pyramidHas) &&
-      version == TimeConsts.LatestGeneration && !hasDeleteDebt(sid) &&
-      pyramidCurrent(sid)
-    if (usable) {
+    if (rollupServes(level.isDefined, sid, version, mergesBuffer = true)) {
       val (rollup, bytes) = pyramidScan(sid, level.get, s, e)
       val committed = rollup
         .select(TimeOps.clampTime(col("wstart"), pw).as("wstart"),
           col("cnt"), col("ccnt"), col("vmin"), col("vsc"), col("vsum"),
           col("vmax"))
       val partials = if (minorOf(sid) == 0) fit(committed, bytes) else {
-        val (staging, stagedBytes) = stagedOf(sid)
+        val (staging, stagedBytes) = stagedOf(Seq(sid))
         // the buffer's own aggregate sits below the union, so a small
         // read coalesces its scan too
         val total = bytes + stagedBytes
@@ -1904,16 +1919,12 @@ class Btrdb(val spark: SparkSession, val root: String,
         fit(committed.unionByName(staged), total)
       }
       partials.groupBy("wstart")
-        .agg(sum("cnt").as("cnt"), min("vmin").as("vmin"),
-          StatOps.rollupMean.as("vmean"),
-          max("vmax").as("vmax"))
+        .agg(RollupStats.head, RollupStats.tail: _*)
         .orderBy("wstart")
     } else
       readable(sid, version, s, e)
         .groupBy(TimeOps.clampTime(col("time"), pw).as("wstart"))
-        .agg(count(lit(1)).as("cnt"), min("value").as("vmin"),
-          StatOps.rawMean(col("value")).as("vmean"),
-          max("value").as("vmax"))
+        .agg(RawStats.head, RawStats.tail: _*)
         .orderBy("wstart")
   }
 
@@ -1931,11 +1942,8 @@ class Btrdb(val spark: SparkSession, val root: String,
     val e = TimeOps.alignDown(end, pw)
     val sids = uuids.map(sidOf)
     seedCommitState()
-    val level = pyramidLevels.filter(_ <= pw).sorted.lastOption
-      .filter(pyramidHas)
-    val (pyrSids, rawSids) = sids.partition(sid =>
-      level.isDefined && !hasDeleteDebt(sid) && minorOf(sid) == 0 &&
-        pyramidCurrent(sid))
+    val level = rollupLevel(pw)
+    val (pyrSids, rawSids) = sids.partition(rollupServes(level.isDefined, _))
     val parts = Seq(
       if (pyrSids.isEmpty) None else Some {
         pyramidRead(s"pyramid/pw=${level.get}")
@@ -1945,34 +1953,15 @@ class Btrdb(val spark: SparkSession, val root: String,
             col("wbucket") <= ((e - 1) >> pyramidWBucketPw) &&
             col("wstart") >= s && col("wstart") < e)
           .groupBy(col("sid"), TimeOps.clampTime(col("wstart"), pw).as("wstart"))
-          .agg(sum("cnt").as("cnt"), min("vmin").as("vmin"),
-            StatOps.rollupMean.as("vmean"),
-            max("vmax").as("vmax"))
+          .agg(RollupStats.head, RollupStats.tail: _*)
       },
       if (rawSids.isEmpty) None else Some {
-        // ONE point-log scan for every raw-path stream: `sid isin` +
-        // pruned sbucket/tbucket filters + every stream's anti-filters
-        // — N streams, N subplans would re-scan the log N times; this
-        // is one scan regardless of N
-        val committed = readOr("points", PointsSchema)
-          .filter(col("sbucket").isin(rawSids.map(_ % sBuckets).distinct: _*) &&
-            col("tbucket") >= (s >> tBucketPw) &&
-            col("tbucket") <= ((e - 1) >> tBucketPw) &&
-            col("sid").isin(rawSids: _*) &&
-            col("time") >= s && col("time") < e)
-        val antiFiltered = antiFilter(committed,
-          rawSids.map(sid => sid -> deletesOf(sid)))
-        val stagedSids = rawSids.filter(minorOf(_) > 0)
-        val all =
-          if (stagedSids.isEmpty) antiFiltered
-          else antiFiltered.unionByName(stagingDf
-            .filter(col("sid").isin(stagedSids: _*) &&
-              col("time") >= s && col("time") < e)
-            .select("sid", "time", "value"))
-        all.groupBy(col("sid"), TimeOps.clampTime(col("time"), pw).as("wstart"))
-          .agg(count(lit(1)).as("cnt"), min("value").as("vmin"),
-            StatOps.rawMean(col("value")).as("vmean"),
-            max("value").as("vmax"))
+        // ONE point-log scan for every raw-path stream — N streams, N
+        // subplans would re-scan the log N times; this is one scan of
+        // their sbucket directories regardless of N
+        pointLog(Some(rawSids), start = s, end = e)._1
+          .groupBy(col("sid"), TimeOps.clampTime(col("time"), pw).as("wstart"))
+          .agg(RawStats.head, RawStats.tail: _*)
       }).flatten
     parts.reduce(_ unionByName _).orderBy("sid", "wstart")
   }
@@ -2011,9 +2000,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     val e = TimeOps.alignDown(end, pw)
     val sids = uuids.map(sidOf)
     seedCommitState()
-    val (pyrSids, rawSids) = sids.partition(sid =>
-      qhistHas && !hasDeleteDebt(sid) && minorOf(sid) == 0 &&
-        pyramidCurrent(sid))
+    val (pyrSids, rawSids) = sids.partition(rollupServes(qhistHas, _))
     val parts = Seq(
       if (pyrSids.isEmpty) None else Some {
         readArea("qhist", QhistSchema)
@@ -2029,9 +2016,8 @@ class Btrdb(val spark: SparkSession, val root: String,
       if (rawSids.isEmpty) None else Some {
         // one live-view scan for every raw-path stream (see
         // alignedWindowsBulk) aggregated to the same histogram shape
-        rawSids.map(sid => readable(sid, TimeConsts.LatestGeneration, s, e)
-            .withColumn("sid", lit(sid)))
-          .reduce(_ unionByName _)
+        val (raw, bytes) = pointLog(Some(rawSids), start = s, end = e)
+        fit(raw, bytes)
           .groupBy(col("sid"), TimeOps.clampTime(col("time"), pw).as("wstart"),
             StatOps.cents(col("value")).as("c"))
           .agg(count(lit(1)).as("hc"))
@@ -2054,29 +2040,11 @@ class Btrdb(val spark: SparkSession, val root: String,
     * shape, not N per-stream subplans). This is the DataFrame behind the
     * `<prefix>_points` SQL view [[registerViews]] creates. */
   def pointsView(): DataFrame = {
-    seedCommitState(); seedMinors()
-    val anti = antiFilter(readOr("points", PointsSchema),
-      synchronized(deletes.toSeq))
-    val all =
-      if (minorCounts.exists(_._2 > 0))
-        anti.unionByName(stagingDf.select("sid", "time", "value"))
-      else anti
+    val all = pointLog(None)._1.select("sid", "time", "value")
     val hidden = tombstonedSids ++ migratingInSids
     if (hidden.isEmpty) all
     else all.filter(!col("sid").isin(hidden.toSeq: _*))
   }
-
-  /** Multi-stream point rows with each stream's delete anti-filters
-    * folded in conjunctively (each is sid-scoped, so other streams pass
-    * through); columns (sid, time, value). */
-  private def antiFilter(points: DataFrame,
-      dels: Seq[(Long, Vector[(Long, Long, Long)])]): DataFrame =
-    dels.foldLeft(points) { case (df, (sid, ds)) =>
-      ds.foldLeft(df) { case (d, (dv, lo, hi)) =>
-        d.filter(!(col("sid") === sid && col("time") >= lo &&
-          col("time") < hi && col("version") < dv))
-      }
-    }.select("sid", "time", "value")
 
   /** Register the engine as plain SQL: temp views `<prefix>_points`
     * (latest merged points — see [[pointsView]]), `<prefix>_catalog`
@@ -2130,17 +2098,14 @@ class Btrdb(val spark: SparkSession, val root: String,
       lo: Option[Long], hi: Option[Long], pw: Int,
       needExactSum: Boolean): Option[DataFrame] = {
     seedCommitState(); seedMinors()
-    val level = pyramidLevels.filter(_ <= pw).sorted.lastOption
-      .filter(pyramidHas)
+    val level = rollupLevel(pw)
     // hidden = tombstoned + migrating-in: both are excluded from the
     // point views, so the substituted frame must exclude them too
     val tomb = tombstonedSids ++ migratingInSids
     val affected = sids.getOrElse(
       (majorCounts.keys ++ minorCounts.keys).toSeq.distinct)
       .filterNot(tomb.contains)
-    val clean = affected.forall(s =>
-      !hasDeleteDebt(s) && minorCounts.getOrElse(s, 0L) == 0L &&
-        pyramidCurrent(s))
+    val clean = affected.forall(rollupServes(level.isDefined, _))
     val exactOk = !needExactSum || affected.forall(gridOf)
     if (level.isEmpty || !clean || !exactOk) None
     else {
@@ -2207,27 +2172,20 @@ class Btrdb(val spark: SparkSession, val root: String,
       else (TimeOps.alignDown(start, c) + u, TimeOps.alignDown(e - 1, c) + u)
     val bucketStart: Column => Column =
       t => if (depth <= 0) t else TimeOps.clampTime(t, c)
-    val level = pyramidLevels.filter(l => depth > 0 && l <= c)
-      .sorted.lastOption
-      .filter(l => pyramidHas(l) &&
-        version == TimeConsts.LatestGeneration && minorOf(sid) == 0 &&
-        !hasDeleteDebt(sid) && pyramidCurrent(sid))
+    val level = (if (depth > 0) rollupLevel(c) else None)
+      .filter(_ => rollupServes(true, sid, version))
     val agg0 = level match {
       case Some(l) =>
         val (rollup, bytes) = pyramidScan(sid, l, lo, hi)
         fit(rollup, bytes)
           .groupBy(TimeOps.windowIndex(bucketStart(col("wstart")),
             start, width).as("i"))
-          .agg(sum("cnt").as("cnt"), min("vmin").as("vmin"),
-            StatOps.rollupMean.as("vmean"),
-            max("vmax").as("vmax"))
+          .agg(RollupStats.head, RollupStats.tail: _*)
       case None =>
         readable(sid, version, lo, hi)
           .groupBy(TimeOps.windowIndex(bucketStart(col("time")),
             start, width).as("i"))
-          .agg(count(lit(1)).as("cnt"), min("value").as("vmin"),
-            StatOps.rawMean(col("value")).as("vmean"),
-            max("value").as("vmax"))
+          .agg(RawStats.head, RawStats.tail: _*)
     }
     spark.range(n).toDF("i").join(agg0, Seq("i"), "left_outer")
       .select(col("i"), (col("i") * width + start).as("wstart"),
@@ -2563,6 +2521,23 @@ class Btrdb(val spark: SparkSession, val root: String,
   private[graft] def pyramidCurrent(sid: Long): Boolean =
     pyramidLevels.isEmpty || effectiveWatermark(sid).forall(_ >= majorOf(sid))
 
+  /** The deepest maintained rollup level at or below 2^pw, if it holds
+    * rows. */
+  private def rollupLevel(pw: Int): Option[Int] =
+    pyramidLevels.filter(_ <= pw).sorted.lastOption.filter(pyramidHas)
+
+  /** The one pyramid-serving gate: true iff a rollup table that holds
+    * rows (`table`: a level from [[rollupLevel]], or the quantile
+    * histogram) answers stream `sid` at `version` exactly — a latest
+    * read of a stream with no delete debt whose rollup includes every
+    * commit, and an empty write buffer unless the path merges the
+    * buffer itself (`mergesBuffer`). */
+  private def rollupServes(table: Boolean, sid: Long,
+                           version: Long = TimeConsts.LatestGeneration,
+                           mergesBuffer: Boolean = false): Boolean =
+    table && version == TimeConsts.LatestGeneration && !hasDeleteDebt(sid) &&
+      pyramidCurrent(sid) && (mergesBuffer || minorOf(sid) == 0)
+
   /** Ranges of commits whose fold a crash discarded: version in
     * (wm, below). Empty in steady state. Bounded: past `MaxHealRanges`
     * the ranges coalesce to their overall envelope — one recompute of
@@ -2648,21 +2623,20 @@ class Btrdb(val spark: SparkSession, val root: String,
     // the dirtied ranges from the (anti-filtered) point log, one
     // tbucket-pruned scan per range.
     val fold = foldPartials.isDefined
+    // DELETE/heal recompute input: the stream's committed points in the
+    // dirtied ranges, one tbucket-pruned scan per range
+    lazy val recomputed = ranges.map { case (lo, hi) =>
+      pointLog(Some(Seq(sid)), recomputeAt, lo, hi, buffered = false)._1
+    }.reduce(_ unionByName _)
     val baseFresh = (foldPartials match {
         case Some(p) if partialPw == base =>
           p.select(col("wstart"), col("cnt"), col("ccnt"), col("vmin"),
             col("vmax"), col("vsum"), col("vsc"))
         case Some(p) =>
           p.groupBy(TimeOps.clampTime(col("wstart"), base).as("wstart"))
-            .agg(sum("cnt").as("cnt"), sum("ccnt").as("ccnt"),
-              min("vmin").as("vmin"),
-              max("vmax").as("vmax"), sum("vsum").as("vsum"),
-              sum("vsc").as("vsc"))
+            .agg(RollupMerge.head, RollupMerge.tail: _*)
         case None =>
-          val uuid = uuidBySid(sid)
-          ranges.map { case (lo, hi) =>
-            pointsAt(uuid, recomputeAt, lo, hi)
-          }.reduce(_ unionByName _)
+          recomputed
             .groupBy(TimeOps.clampTime(col("time"), base).as("wstart"))
             .agg(count(lit(1)).as("cnt"),
               count(StatOps.cents(col("value"))).as("ccnt"),
@@ -2687,10 +2661,7 @@ class Btrdb(val spark: SparkSession, val root: String,
       case ((_, finer), pw) =>
         pw -> finer
           .groupBy(TimeOps.clampTime(col("wstart"), pw).as("wstart"))
-          .agg(sum("cnt").as("cnt"), sum("ccnt").as("ccnt"),
-            min("vmin").as("vmin"),
-            max("vmax").as("vmax"), sum("vsum").as("vsum"),
-            sum("vsc").as("vsc"))
+          .agg(RollupMerge.head, RollupMerge.tail: _*)
           .withColumn("sid", lit(sid))
     }
     val freshAll = freshByLevel.map { case (pw, df) =>
@@ -2712,10 +2683,7 @@ class Btrdb(val spark: SparkSession, val root: String,
         // pass through as single-row groups
         existing.unionByName(freshAll.select(pcols.map(col): _*))
           .groupBy("pw", "sid", "wstart")
-          .agg(sum("cnt").as("cnt"), sum("ccnt").as("ccnt"),
-            min("vmin").as("vmin"),
-            max("vmax").as("vmax"), sum("vsum").as("vsum"),
-            sum("vsc").as("vsc"))
+          .agg(RollupMerge.head, RollupMerge.tail: _*)
           .select(pcols.map(col): _*)
       else
         // recompute: this stream's in-range rows are REPLACED by fresh
@@ -2786,10 +2754,7 @@ class Btrdb(val spark: SparkSession, val root: String,
       val qFresh = (foldQhist match {
           case Some(p) => p
           case None =>
-            val uuid = uuidBySid(sid)
-            ranges.map { case (lo, hi) =>
-              pointsAt(uuid, recomputeAt, lo, hi)
-            }.reduce(_ unionByName _)
+            recomputed
               .groupBy(TimeOps.clampTime(col("time"), q).as("wstart"),
                 StatOps.cents(col("value")).as("c"))
               .agg(count(lit(1)).as("cnt"))
@@ -2941,7 +2906,8 @@ class Btrdb(val spark: SparkSession, val root: String,
     * the `wbucket` directories the range intersects. */
   private def pyramidScan(sid: Long, level: Int, s: Long, e: Long): (DataFrame, Long) = {
     val (wlo, whi) = (s >> pyramidWBucketPw, (e - 1) >> pyramidWBucketPw)
-    val (scan, bytes) = scanDir("pyramid", s"pyramid/pw=$level/sbucket=${sbucketOf(sid)}",
+    val (scan, bytes) = scanDirs("pyramid",
+      Seq(s"pyramid/pw=$level/sbucket=${sbucketOf(sid)}"),
       PyramidSchema)(within("wbucket", wlo, whi))
     (withLegacyCcnt(scan)
       .filter(col("sid") === sid && col("sbucket") === sbucketOf(sid) &&
@@ -2951,9 +2917,6 @@ class Btrdb(val spark: SparkSession, val root: String,
   }
 
   private def sbucketOf(sid: Long): Long = math.floorMod(sid, sBuckets.toLong)
-
-  private def uuidBySid(sid: Long): String =
-    catalog.filter(col("sid") === sid).select("uuid").head().getString(0)
 }
 
 /** One-pass batch statistics (see Btrdb.batchStats). `offGrid` counts
@@ -3140,6 +3103,19 @@ object Btrdb {
         max("vmax").as("vmax"),
         (sum("vsc") / lit(100.0)).as("vsum"))
   }
+
+  /** Window stats (cnt, vmin, vmean, vmax) over raw point rows. */
+  private val RawStats: Seq[Column] = Seq(count(lit(1)).as("cnt"),
+    min("value").as("vmin"), StatOps.rawMean(col("value")).as("vmean"),
+    max("value").as("vmax"))
+  /** The same window stats combined from rollup rows. */
+  private val RollupStats: Seq[Column] = Seq(sum("cnt").as("cnt"),
+    min("vmin").as("vmin"), StatOps.rollupMean.as("vmean"),
+    max("vmax").as("vmax"))
+  /** Rollup rows merged into coarser or combined rollup rows. */
+  private val RollupMerge: Seq[Column] = Seq(sum("cnt").as("cnt"),
+    sum("ccnt").as("ccnt"), min("vmin").as("vmin"), max("vmax").as("vmax"),
+    sum("vsum").as("vsum"), sum("vsc").as("vsc"))
 
   /** Above this stream count, multiAlign/generateCsv switch from the
     * k−1-join chain to the single-shuffle union+pivot plan. */

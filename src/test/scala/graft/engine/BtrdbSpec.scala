@@ -416,16 +416,28 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the stream with staging merged its buffer (513 points, max 42)
     val s2 = bySid(db.sidOf(us(2))).sortBy(_.getLong(1))
     assert(s2.map(_.getLong(2)).sum == 513 && s2.head.getDouble(5) == 42.0)
-    // plan: ONE point-log scan serves every raw-path stream — N raw
-    // streams must not become N subplans re-scanning the log
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val pointScans = df.queryExecution.optimizedPlan.collect {
-      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] &&
-        l.relation.asInstanceOf[HadoopFsRelation].location.rootPaths
-          .exists(_.toString.contains("/points")) => l
+    // each stream's bulk rows are its per-stream alignedWindows rows:
+    // stream 0 from the pyramid, stream 1 (delete debt) and stream 2
+    // (staged) from the point log
+    us.foreach { u =>
+      val bulk = bySid(db.sidOf(u)).sortBy(_.getLong(1)).map(_.toSeq.tail).toSeq
+      assert(bulk == db.alignedWindows(u, 0, 512, 8).collect().map(_.toSeq).toSeq, u)
     }
+    // plan: ONE point-log scan serves every raw-path stream — N raw
+    // streams must not become N subplans re-scanning the log — and it
+    // reads only those streams' sbucket directories
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val roots = df.queryExecution.optimizedPlan.collect {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+        l.relation.asInstanceOf[HadoopFsRelation].location.rootPaths.map(_.toString)
+    }
+    assert(roots.exists(_.exists(_.contains("/pyramid/pw="))))
+    val pointScans = roots.filter(_.exists(_.contains("/points")))
     assert(pointScans.size == 1,
       s"expected exactly one point-log scan, got ${pointScans.size}")
+    assert(pointScans.head.map(p => p.substring(p.indexOf("/points"))).toSet ==
+      Seq(us(1), us(2)).map(u => s"/points/sbucket=${db.sidOf(u) % 4}").toSet,
+      s"the point-log scan reads ${pointScans.head}")
     db.flush(us(2))
   }
 
@@ -505,6 +517,19 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalArgumentException] {
       insertPoints(uuid, Seq((TimeConsts.MaximumTime, 1.0)))
     }
+    // a null time or value is invalid too, through insert and insertAll
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+    val sid = db.sidOf(uuid)
+    for (bad <- Seq(Row(sid, 2L, null), Row(sid, null, 3.0))) {
+      val rows = spark.createDataFrame(
+        spark.sparkContext.parallelize(Seq(Row(sid, 1L, 1.0), bad)),
+        StructType(Seq(StructField("sid", LongType), StructField("time", LongType),
+          StructField("value", DoubleType))))
+      intercept[IllegalArgumentException](db.insert(uuid, rows.drop("sid")))
+      intercept[IllegalArgumentException](db.insertAll(rows))
+    }
+    assert(db.version(uuid) == (0L, 0L), "nothing staged or committed")
   }
 
   test("purgeObliterated reclaims data but keeps the tombstone") {
@@ -674,6 +699,36 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(flushed.toSet == Set(ua, ub))
     assert(db.version(ua)._2 == 0 && db.version(ub)._2 == 0)
     assert(db.rawValues(ua, 0, 10).count() == 1)
+  }
+
+  test("a warm deleteRange and flushAll run no query over the catalog") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val uuid = "u-nocat"
+    db.createStream(uuid, "test/nocat", Map("s" -> "n"))
+    insertPoints(uuid, (0L until 256L).map(t => (t, 1.0)))
+    db.flushAll(maxAgeMillis = 0)
+    // a delete recomputes the stream's rollup from the point log
+    assert(db.alignedWindows(uuid, 0, 256, 6).queryExecution.executedPlan
+      .toString.contains("/pyramid"), "the stream is pyramid-served")
+    db.deleteRange(uuid, 10, 20) // warm-up
+    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def watched[T](body: => T): T = {
+      spark.listenerManager.register(listener)
+      try org.apache.spark.JobCount(spark.sparkContext)(body)._1
+      finally spark.listenerManager.unregister(listener)
+    }
+    watched(db.deleteRange(uuid, 30, 40))
+    insertPoints(uuid, Seq((300L, 2.0)))
+    assert(watched(db.flushAll(maxAgeMillis = 0)) == Seq(uuid))
+    assert(plans.nonEmpty)
+    assert(!plans.exists(_.contains(s"${db.root}/catalog")),
+      plans.filter(_.contains("/catalog")).mkString("\n"))
   }
 
   test("multiAlign beyond the join threshold: pivot plan with bounded shuffles") {

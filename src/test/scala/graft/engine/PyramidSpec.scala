@@ -549,6 +549,36 @@ class PyramidSpec extends AnyFunSuite with BeforeAndAfterAll {
     db.close()
   }
 
+  test("quantile rollup: raw-path streams share one point-log relation") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val db = mkQDb()
+    val us = Seq("u-qr0", "u-qr1", "u-qr2")
+    us.foreach { u =>
+      db.createStream(u, "pyr/qr", Map("t" -> u))
+      insertPts(db, u, (0L until 256L).map(t => (t, (t % 8).toDouble)))
+      db.flush(u)
+    }
+    // delete debt and a staged point both take the raw path
+    db.deleteRange(us(0), 16L, 32L)
+    insertPts(db, us(1), Seq((40L, 5.5)))
+    val bulk = db.quantileWindowsBulk(us, 0L, 512L, 8)
+    val pointRoots = bulk.queryExecution.optimizedPlan.collect {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+        l.relation.asInstanceOf[HadoopFsRelation].location.rootPaths.map(_.toString)
+    }.filter(_.exists(_.contains("/points")))
+    assert(pointRoots.size == 1, s"point-log relations: $pointRoots")
+    assert(pointRoots.head.size == 2, "the two raw-path streams' sbuckets")
+    val rows = bulk.collect()
+    us.foreach { u =>
+      val sid = db.sidOf(u)
+      assert(rows.filter(_.getLong(0) == sid).map(_.toSeq.tail).toSeq ==
+        db.quantileWindows(u, 0L, 512L, 8).collect().map(_.toSeq).toSeq, u)
+    }
+    assert(rows.find(_.getLong(0) == db.sidOf(us(0))).get.getLong(2) == 240L)
+    assert(rows.find(_.getLong(0) == db.sidOf(us(1))).get.getLong(2) == 257L)
+    db.close()
+  }
+
   test("quantile rollup: delete recomputes dirtied windows; off-grid serves NULL") {
     import org.apache.spark.sql.functions.col
     val db = mkQDb()

@@ -54,6 +54,18 @@ class StreamingIngestSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(nMarkers >= 2)
   }
 
+  test("a row with a null time or value goes to rejects, not staging") {
+    val ss = spark
+    import ss.implicits._
+    val root = Files.createTempDirectory("stream-nulls").toString
+    val pts = Seq[(Long, java.lang.Long, java.lang.Double)](
+      (1L, 100L, 1.0), (1L, 200L, null), (1L, null, 3.0))
+      .toDF("sid", "time", "value")
+    StreamingIngest.ingestBatch(pts, 3L, root)
+    assert(spark.read.parquet(s"$root/staging").count() == 1)
+    assert(spark.read.parquet(s"$root/rejects").count() == 2)
+  }
+
   test("batch replay is idempotent: marker short-circuits, partial batch overwrites") {
     val ss = spark
     import ss.implicits._
