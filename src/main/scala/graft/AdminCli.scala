@@ -264,10 +264,15 @@ object AdminCli {
           val geom = db.store.readString(Btrdb.GeometryFile)
             .map(_.trim).getOrElse("")
           val warns = i.warnings.map(jstr).mkString("[", ",", "]")
+          // serving-path reads of this handle, per kind: on the driver
+          // under the small-read rule, or by a Spark plan
+          val reads = i.reads.toSeq.sortBy(_._1).map { case (k, c) =>
+            s"""${jstr(k)}:{"driver":${c.driver},"spark":${c.spark}}"""
+          }.mkString("{", ",", "}")
           s"""{"op":"info","build":${jstr(i.build)},""" +
             s""""healthy":${i.healthy},"streams":${i.streamCount},""" +
             s""""points":${i.pointCount},"geometry":${jstr(geom)},""" +
-            s""""warnings":$warns,""" +
+            s""""warnings":$warns,"reads":$reads,""" +
             s""""collections":$cols,""" +
             s""""stream_list":$streams$nextCursor}"""
         }

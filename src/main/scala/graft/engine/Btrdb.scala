@@ -1,10 +1,17 @@
 package graft.engine
 
+import java.io.FileNotFoundException
+import java.util.concurrent.atomic.LongAdder
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
-  PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.{TimeConsts, TimeOps}
 import graft.operators.StatOps
@@ -305,28 +312,38 @@ class Btrdb(val spark: SparkSession, val root: String,
     if (exists(part)) readArea(part, schema)
     else emptyDf(schema)
 
+  /** One listing of directories inside an engine area: the files whose
+    * own directory name passes the request's partition filters, their
+    * bytes, and the area's relation over the whole listing, built on
+    * first use. */
+  private final class Scan(val files: Seq[FileStatus], relation: => DataFrame) {
+    val bytes: Long = files.iterator.map(_.getLen).sum
+    lazy val frame: DataFrame = relation
+  }
+
   /** Directories `dirs` inside the area `base` (for example
-    * `points/sbucket=S`), read as one relation with the area's declared
-    * schema; its partition columns come from the paths below `base`.
-    * Also returns the bytes of the files whose own directory name
-    * passes `keep`: the files the request's partition filters leave.
-    * Those bytes come from the file listing Spark makes for this scan,
-    * so the engine issues no listing of its own and never lists the
-    * whole area. Absent directories read empty. */
+    * `points/sbucket=S`), listed once by Spark's own file index — the
+    * engine issues no listing of its own and never lists the whole area.
+    * `keep` picks the files the request's partition filters leave. The
+    * relation reads the listing with the area's declared schema; its
+    * partition columns come from the paths below `base`, the same
+    * relation `spark.read.parquet` builds. Absent directories read
+    * empty. */
   private def scanDirs(base: String, dirs: Seq[String], schema: String)(
-      keep: String => Boolean): (DataFrame, Long) = {
+      keep: String => Boolean): Scan = {
     val present = dirs.filter(exists)
-    if (present.isEmpty) (emptyDf(schema), 0L)
+    if (present.isEmpty) new Scan(Nil, emptyDf(schema))
     else {
-      val df = spark.read.schema(schema).option("basePath", path(base))
-        .parquet(present.map(path): _*)
-      val listed = df.queryExecution.analyzed
-        .collectFirst { case l: LogicalRelation => l.relation }
-        .collect { case h: HadoopFsRelation => h.location }
-        .collect { case idx: PartitioningAwareFileIndex => idx.allFiles() }
-      // a listing this reader does not expose keeps the parallel plan
-      (df, listed.fold(Long.MaxValue)(
-        _.filter(f => keep(f.getPath.getParent.getName)).map(_.getLen).sum))
+      val declared = StructType.fromDDL(schema)
+      val options = Map("basePath" -> path(base))
+      val index = new InMemoryFileIndex(spark,
+        present.map(d => store.fs.makeQualified(store.resolve(d))), options, Some(declared))
+      new Scan(index.allFiles().filter(f => keep(f.getPath.getParent.getName)), {
+        val partitions = index.partitionSchema
+        spark.baseRelationToDataFrame(HadoopFsRelation(index, partitions,
+          StructType(declared.filterNot(f => partitions.fieldNames.contains(f.name))),
+          None, new ParquetFileFormat, options)(spark))
+      })
     }
   }
 
@@ -338,12 +355,68 @@ class Btrdb(val spark: SparkSession, val root: String,
 
   /** The small-read rule: a per-stream read whose listed files total at
     * most `spark.sql.files.openCostInBytes` — Spark's own cost of
-    * opening one file — runs as one partition. Its aggregate and global
-    * sort then plan no exchange, so the request runs one job with one
-    * task. Larger reads keep the parallel plan. */
+    * opening one file. The serving path ([[served]]) answers such a read
+    * on the calling thread with no Spark job; its DataFrame runs as one
+    * partition, so its aggregate and global sort plan no exchange and
+    * it runs one job with one task. Larger reads keep the parallel
+    * plan. */
+  private def small(bytes: Long): Boolean =
+    bytes <= spark.sessionState.conf.filesOpenCostInBytes
+
   private def fit(df: DataFrame, bytes: Long): DataFrame =
-    if (bytes <= spark.sessionState.conf.filesOpenCostInBytes) df.coalesce(1)
-    else df
+    if (small(bytes)) df.coalesce(1) else df
+
+  /** Decoder of the files a small read keeps. */
+  private val localParquet = new LocalParquet(spark)
+
+  /** A per-stream read, listed but not yet run: the bytes of the files it
+    * keeps, its Spark plan over that listing (built on first use), and
+    * its answer computed on the calling thread. */
+  private final class Read[R](val bytes: Long, plan: => DataFrame, local: () => Seq[R]) {
+    lazy val frame: DataFrame = plan
+    def rows(): Seq[R] = local()
+  }
+
+  /** Reads answered per kind on the serving path: (on the driver, by a
+    * Spark plan). */
+  private val servedCounts: Map[String, (LongAdder, LongAdder)] =
+    Seq("raw", "aligned", "changes", "nearest")
+      .map(_ -> ((new LongAdder, new LongAdder))).toMap
+
+  /** The serving path's choice for one read of stream `sid`: under the
+    * small-read rule its answer, computed on the calling thread
+    * (`Right`), else the read itself for its Spark plan (`Left`);
+    * counted under `kind`. A driver read that races a commit of the
+    * stream runs once more from fresh state: when a listed file vanished
+    * (a flush deletes the staged files it committed, after the commit),
+    * or when the major version moved while it ran, since the rollup and
+    * the write buffer may then hold the same rows. */
+  private def served[R](kind: String, sid: Long)(read: => Read[R]): Either[Read[R], Seq[R]] = {
+    def attempt(): Option[Either[Read[R], Seq[R]]] = {
+      val major = majorOf(sid)
+      try {
+        val r = read
+        if (!small(r.bytes)) Some(Left(r))
+        else Some(Right(r.rows())).filter(_ => majorOf(sid) == major)
+      } catch { case e: Exception if vanished(e) => None }
+    }
+    val out = attempt().orElse(attempt()).getOrElse(throw new IllegalStateException(
+      s"a read of stream $sid raced two commits of that stream; retry it"))
+    val (driver, plan) = servedCounts(kind)
+    (if (out.isRight) driver else plan).increment()
+    out
+  }
+
+  private def vanished(e: Throwable): Boolean =
+    e != null && (e.isInstanceOf[FileNotFoundException] || vanished(e.getCause))
+
+  /** The rows of a served read: the driver's answer, or the Spark plan's
+    * rows pulled one partition at a time. */
+  private def drained[R](out: Either[Read[R], Seq[R]])(fromRow: Row => R): Iterator[R] =
+    out match {
+      case Right(rows) => rows.iterator
+      case Left(read) => read.frame.toLocalIterator().asScala.map(fromRow)
+    }
 
   // ---- catalog (mprovider equivalent) --------------------------------
 
@@ -759,6 +832,11 @@ class Btrdb(val spark: SparkSession, val root: String,
     * compacted record at V drops the stream's deletes at or below V. */
   private val deletes =
     scala.collection.mutable.Map.empty[Long, Vector[(Long, Long, Long)]]
+  /** Touched ranges [s, e) of every live commit per stream, as
+    * (version, s, e): the input of `changes`. Superseded by a compacted
+    * record the same way as [[deletes]]. */
+  private val commitRanges =
+    scala.collection.mutable.Map.empty[Long, Vector[(Long, Long, Long)]]
   /** Committed time envelope per stream (inserts only) — an
     * over-approximation of where points can exist, used to bound
     * `nearest` probes. */
@@ -800,7 +878,10 @@ class Btrdb(val spark: SparkSession, val root: String,
           max(when(col("compacted"), col("version"))).as("floor"),
           min(when(col("kind") === "insert",
             when(coalesce(col("grid"), lit(false)), 1L).otherwise(0L)))
-            .as("grid"))
+            .as("grid"),
+          collect_list(struct(col("version"), coalesce(col("ranges"),
+            array(struct(col("tmin").as("s"), (col("tmax") + 1).as("e"))))))
+            .as("ranges"))
         .collect().foreach { r =>
           majorCounts(r.getLong(0)) = r.getLong(1)
           val del = r.getSeq[org.apache.spark.sql.Row](2)
@@ -815,6 +896,8 @@ class Btrdb(val spark: SparkSession, val root: String,
           if (!r.isNullAt(5)) compactedFloor(r.getLong(0)) = r.getLong(5)
           // column 6: 1 iff every insert commit was cents-grid exact
           if (!r.isNullAt(6)) gridOk(r.getLong(0)) = r.getLong(6) == 1L
+          commitRanges(r.getLong(0)) = r.getSeq[Row](7).toVector.flatMap { c =>
+            c.getSeq[Row](1).map(x => (c.getLong(0), x.getLong(0), x.getLong(1))) }
         }
       commitStateSeeded = true
     }
@@ -894,7 +977,7 @@ class Btrdb(val spark: SparkSession, val root: String,
   def refreshCommits(): Unit = synchronized {
     invalidateCommits()
     majorCounts.clear(); deletes.clear(); envelopes.clear()
-    compactedFloor.clear(); gridOk.clear()
+    compactedFloor.clear(); gridOk.clear(); commitRanges.clear()
     commitStateSeeded = false
     invalidatePyramidPresence()
     pyramidWmCache.clear()
@@ -986,8 +1069,14 @@ class Btrdb(val spark: SparkSession, val root: String,
     EngineInfo(majorVersion = 4, minorVersion = 15,
       build = "graft-spark (btrdb-surface 4.15)", healthy = true,
       streamCount = live, pointCount = pts,
-      pools = admission.gauges, warnings = warns)
+      pools = admission.gauges, warnings = warns, reads = readCounts)
   }
+
+  /** Reads answered so far on the serving path, per kind: on the driver
+    * or by a Spark plan (see [[served]]). Nearest counts its probes. */
+  private[graft] def readCounts: Map[String, ReadCounts] =
+    servedCounts.map { case (kind, (driver, plan)) =>
+      kind -> ReadCounts(driver.sum, plan.sum) }
 
   /** (major, minor) version of a stream: major = last committed
     * generation, minor = staged (unflushed) point count
@@ -1052,8 +1141,10 @@ class Btrdb(val spark: SparkSession, val root: String,
           .sortWithinPartitions("time")
           .write.mode(SaveMode.Append).partitionBy("sid", "batch")
           .parquet(path("staging"))
-        minorCounts(sid) = minorOf(sid) + st.n
-        widenStaged(sid, st.tmin, st.tmax)
+        synchronized {
+          minorCounts(sid) = minorOf(sid) + st.n
+          widenStaged(sid, st.tmin, st.tmax)
+        }
         if (minorOf(sid) >= bufferCommitThreshold) flushImpl(sid)
         version(uuid)
       }
@@ -1260,14 +1351,14 @@ class Btrdb(val spark: SparkSession, val root: String,
     val st = batchStats(partials)
     if (st.n == 0) {
       partials.unpersist(); staged.unpersist()
-      minorCounts(sid) = 0; stagedEnvelopes -= sid
+      synchronized { minorCounts(sid) = 0; stagedEnvelopes -= sid }
       return versionOf(sid)
     }
     commitBatch(sid, staged, st, partials, consumedBatches = stagedBatches(sid))
     partials.unpersist()
     staged.unpersist()
     deleteDir(s"staging/sid=$sid")
-    minorCounts(sid) = 0; stagedEnvelopes -= sid
+    synchronized { minorCounts(sid) = 0; stagedEnvelopes -= sid }
     versionOf(sid)
   }
 
@@ -1336,7 +1427,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     // carry exactly v, so the column is equivalent to re-stamping). A
     // delete hides only rows written below it, so the pin at v hides
     // none of generation v's rows
-    val rows = pointLog(Some(Seq(sidOf(uuid))), v, buffered = false)._1
+    val rows = pointLog(Some(Seq(sidOf(uuid))), v, buffered = false).frame
     (if (upTo) rows else rows.filter(col("version") === v))
       .select("time", "value", "version")
   }
@@ -1359,7 +1450,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     val maj = majorOf(sid)
     val orphan = col("sid") === sid && col("version") > maj
     // the latest read without the write buffer reads every written row
-    val touched = pointLog(Some(Seq(sid)), buffered = false)._1
+    val touched = pointLog(Some(Seq(sid)), buffered = false).frame
       .filter(orphan)
       .groupBy(shiftright(col("time"), tBucketPw).as("tb"))
       .agg(count(lit(1)).as("n"))
@@ -1500,7 +1591,11 @@ class Btrdb(val spark: SparkSession, val root: String,
         grid = gridOf(sid)))
     gcCommitFiles(sid, maj)
     invalidateCommits()
-    synchronized { deletes -= sid } // history collapsed; debt cleared
+    synchronized { // history collapsed; debt cleared
+      deletes -= sid
+      commitRanges(sid) = commitRanges.getOrElse(sid, Vector.empty)
+        .filter(_._1 > maj) :+ ((maj, tmin, tmax + 1))
+    }
     compactedFloor(sid) = maj
     if (n > 0) envelopes(sid) = (tmin, tmax) else envelopes -= sid
     // crash-unfolded ranges were healed before the collapse; only the
@@ -1596,7 +1691,7 @@ class Btrdb(val spark: SparkSession, val root: String,
       store.delete(s"pyramid/_wm-$sid")
       synchronized {
         majorCounts -= sid; envelopes -= sid; deletes -= sid
-        minorCounts -= sid; stagedEnvelopes -= sid
+        commitRanges -= sid; minorCounts -= sid; stagedEnvelopes -= sid
         compactedFloor -= sid; gridOk -= sid
         pyramidWmCache -= sid
       }
@@ -1754,6 +1849,10 @@ class Btrdb(val spark: SparkSession, val root: String,
     seedCommitState()
     synchronized {
       majorCounts(sid) = math.max(majorCounts.getOrElse(sid, 0L), v)
+      // a flush commit empties the write buffer in the same step as it
+      // raises the major version, so no reader sees its rows both
+      // committed and staged (the staged files are deleted later)
+      if (batches.nonEmpty) { minorCounts(sid) = 0; stagedEnvelopes -= sid }
       if (kind == "delete")
         deletes(sid) = deletes.getOrElse(sid, Vector.empty) :+ ((v, tmin, tmax))
       else if (n > 0) {
@@ -1774,6 +1873,8 @@ class Btrdb(val spark: SparkSession, val root: String,
         deletes.get(sid).map(_.filter(_._1 > v)).foreach { kept =>
           if (kept.isEmpty) deletes -= sid else deletes(sid) = kept }
       }
+      commitRanges(sid) = commitRanges.getOrElse(sid, Vector.empty)
+        .filter(r => !compacted || r._1 > v) ++ ranges.map { case (s, e) => (v, s, e) }
     }
     invalidateCommits()
   }
@@ -1784,7 +1885,16 @@ class Btrdb(val spark: SparkSession, val root: String,
   def pointsAt(uuid: String, version: Long = TimeConsts.LatestGeneration,
                start: Long = TimeConsts.MinimumTime,
                end: Long = TimeConsts.MaximumTime): DataFrame =
-    pointLog(Some(Seq(sidOf(uuid))), version, start, end, buffered = false)._1
+    pointLog(Some(Seq(sidOf(uuid))), version, start, end, buffered = false).frame
+
+  /** A listed read of the point log (see [[pointLog]]): the bytes of the
+    * files it keeps, its plan over that listing (built on first use),
+    * and its visible (time, value) rows decoded on the calling thread. */
+  private final class PointLog(val bytes: Long, plan: => DataFrame,
+                               decode: ((Long, Double) => Unit) => Unit) {
+    lazy val frame: DataFrame = plan
+    def foreach(f: (Long, Double) => Unit): Unit = decode(f)
+  }
 
   /** The point-log reader, and the one visibility rule every read of
     * committed points gets: the version pin, the delete anti-filters
@@ -1797,47 +1907,80 @@ class Btrdb(val spark: SparkSession, val root: String,
     * kept bytes for the caller's [[fit]]; a pin below a compacted
     * stream's floor reads it as empty, since its history and deletes are
     * collapsed. `None` reads every stream, latest and whole-domain, from
-    * the area roots (the SQL view's plan). */
+    * the area roots (the SQL view's plan).
+    *
+    * The decode on the calling thread (one stream only) applies the same
+    * rule in Scala. It takes the stream's major version, delete list and
+    * staged flag in one step and pins the committed rows to that major,
+    * so the rows of a flush that commits meanwhile are never read from
+    * both the log and the buffer. */
   private def pointLog(sids: Option[Seq[Long]],
                        version: Long = TimeConsts.LatestGeneration,
                        start: Long = TimeConsts.MinimumTime,
                        end: Long = TimeConsts.MaximumTime,
-                       buffered: Boolean = true): (DataFrame, Long) = {
-    seedCommitState()
+                       buffered: Boolean = true): PointLog = {
+    seedCommitState(); seedMinors()
     val latest = version == TimeConsts.LatestGeneration
     sids match {
       case None =>
         require(latest && start == TimeConsts.MinimumTime &&
           end == TimeConsts.MaximumTime,
           "a read of every stream is a latest read of the whole time domain")
-        seedMinors()
         val committed = antiFiltered(readOr("points", PointsSchema),
           synchronized(deletes.keys.toSeq), version)
           .select("sid", "time", "value", "version")
-        (if (buffered && minorCounts.exists(_._2 > 0))
-          committed.unionByName(stagingDf.withColumn("version", lit(Long.MaxValue)))
-        else committed, Long.MaxValue)
+        new PointLog(Long.MaxValue,
+          if (buffered && minorCounts.exists(_._2 > 0))
+            committed.unionByName(stagingDf.withColumn("version", lit(Long.MaxValue)))
+          else committed,
+          _ => throw new UnsupportedOperationException("a whole-area read has no local decode"))
       case Some(all) =>
-        val live = all.filter(sid => version >= compactedFloor.getOrElse(sid, 0L))
+        val (live, state) = synchronized {
+          (all.filter(sid => version >= compactedFloor.getOrElse(sid, 0L)),
+            all.map(sid => sid -> ((majorCounts.getOrElse(sid, 0L),
+              minorCounts.getOrElse(sid, 0L) > 0, deletes.getOrElse(sid, Vector.empty)))).toMap)
+        }
         val buckets = live.map(sbucketOf).distinct
         val (tlo, thi) = (start >> tBucketPw, (end - 1) >> tBucketPw)
-        val (scan, bytes) = scanDirs("points", buckets.map(b => s"points/sbucket=$b"),
+        val scan = scanDirs("points", buckets.map(b => s"points/sbucket=$b"),
           PointsSchema)(within("tbucket", tlo, thi))
-        val committed = antiFiltered(scan
-          .filter(col("sbucket").isin(buckets: _*) &&
-            col("tbucket") >= tlo && col("tbucket") <= thi &&
-            col("sid").isin(live: _*) && col("version") <= version &&
-            col("time") >= start && col("time") < end),
-          live, version, scoped = live.size > 1)
-          .select("sid", "time", "value", "version")
-        val staged = if (buffered && latest) live.filter(minorOf(_) > 0) else Nil
-        if (staged.isEmpty) (committed, bytes)
-        else {
-          val (buffer, bufferBytes) = stagedOf(staged)
-          (committed.unionByName(buffer
+        val staged = if (buffered && latest) live.filter(state(_)._2) else Nil
+        val buffer = if (staged.isEmpty) None else Some(stagedOf(staged))
+        new PointLog(scan.bytes + buffer.fold(0L)(_.bytes), {
+          val committed = antiFiltered(scan.frame
+            .filter(col("sbucket").isin(buckets: _*) &&
+              col("tbucket") >= tlo && col("tbucket") <= thi &&
+              col("sid").isin(live: _*) && col("version") <= version &&
+              col("time") >= start && col("time") < end),
+            live, version, scoped = live.size > 1)
+            .select("sid", "time", "value", "version")
+          buffer.fold(committed)(b => committed.unionByName(b.frame
+            .select("sid", "time", "value")
             .filter(col("time") >= start && col("time") < end)
-            .withColumn("version", lit(Long.MaxValue))), bytes + bufferBytes)
-        }
+            .withColumn("version", lit(Long.MaxValue))))
+        }, f => {
+          require(all.size == 1, "the local decode reads one stream")
+          live.foreach { sid =>
+            val (major, _, dels) = state(sid)
+            val pin = math.min(version, major)
+            val hidden = dels.filter(_._1 <= pin)
+            localParquet.foreach(scan.files, LocalPointColumns,
+                LocalParquet.inRange(sid, "time", start, end)) { b =>
+              val (sids, times, values, versions) =
+                (b.column(0), b.column(1), b.column(2), b.column(3))
+              var i = 0
+              while (i < b.numRows) {
+                val t = times.getLong(i)
+                val v = versions.getLong(i)
+                if (sids.getLong(i) == sid && t >= start && t < end && v <= pin &&
+                    !hidden.exists { case (dv, lo, hi) => t >= lo && t < hi && v < dv })
+                  f(t, values.getDouble(i))
+                i += 1
+              }
+            }
+          }
+          buffer.foreach(localStaged(_, start, end)(f))
+        })
     }
   }
 
@@ -1860,20 +2003,31 @@ class Btrdb(val spark: SparkSession, val root: String,
                            scoped: Boolean = true): DataFrame =
     hides(sids, version, scoped).foldLeft(df)((d, hidden) => d.filter(!hidden))
 
-  /** The write buffer of `sids` (sid, time, value), read from their
-    * `staging/sid=S` directories as one relation, and those
-    * directories' bytes. */
-  private def stagedOf(sids: Seq[Long]): (DataFrame, Long) = {
-    val (scan, bytes) = scanDirs("staging", sids.map(sid => s"staging/sid=$sid"),
-      StagingSchema)(_ => true)
-    (scan.select("sid", "time", "value"), bytes)
-  }
+  /** The write buffer of `sids`, listed from their `staging/sid=S`
+    * directories as one relation. */
+  private def stagedOf(sids: Seq[Long]): Scan =
+    scanDirs("staging", sids.map(sid => s"staging/sid=$sid"), StagingSchema)(_ => true)
+
+  /** Calls `f` with the (time, value) rows in [start, end) of a listed
+    * write buffer, decoded on the calling thread. */
+  private def localStaged(buffer: Scan, start: Long, end: Long)(
+      f: (Long, Double) => Unit): Unit =
+    localParquet.foreach(buffer.files, LocalStagedColumns,
+        LocalParquet.inRange("time", start, end)) { b =>
+      val (times, values) = (b.column(0), b.column(1))
+      var i = 0
+      while (i < b.numRows) {
+        val t = times.getLong(i)
+        if (t >= start && t < end) f(t, values.getDouble(i))
+        i += 1
+      }
+    }
 
   /** One stream's visible points under the small-read rule. */
   private def readable(sid: Long, version: Long,
                        start: Long, end: Long): DataFrame = {
-    val (df, bytes) = pointLog(Some(Seq(sid)), version, start, end)
-    fit(df, bytes)
+    val log = pointLog(Some(Seq(sid)), version, start, end)
+    fit(log.frame, log.bytes)
   }
 
   // ---- queries --------------------------------------------------------
@@ -1881,16 +2035,55 @@ class Btrdb(val spark: SparkSession, val root: String,
   /** RawValues: time-ordered scan of [start, end) at a version. */
   def rawValues(uuid: String, start: Long, end: Long,
                 version: Long = TimeConsts.LatestGeneration): DataFrame =
-    readable(sidOf(uuid), version, start, end)
-      .select("time", "value").orderBy("time", "value")
+    rawRead(sidOf(uuid), version, start, end).frame
+
+  /** [[rawValues]] on the serving path: (time, value) rows, answered on
+    * the calling thread under the small-read rule (see [[served]]). */
+  def serveRawValues(uuid: String, start: Long, end: Long,
+                     version: Long = TimeConsts.LatestGeneration): Iterator[(Long, Double)] = {
+    val sid = sidOf(uuid)
+    drained(admission.run(Admission.PointOp)(
+      served("raw", sid)(rawRead(sid, version, start, end))))(r => (r.getLong(0), r.getDouble(1)))
+  }
+
+  private def rawRead(sid: Long, version: Long, start: Long,
+                      end: Long): Read[(Long, Double)] = {
+    val log = pointLog(Some(Seq(sid)), version, start, end)
+    new Read(log.bytes,
+      fit(log.frame, log.bytes).select("time", "value").orderBy("time", "value"),
+      () => {
+        val rows = Array.newBuilder[(Long, Double)]
+        log.foreach((t, v) => rows += ((t, v)))
+        // files hold time-sorted runs, which this merge sort exploits
+        val sorted = rows.result()
+        java.util.Arrays.sort(sorted, TimeValueOrder)
+        sorted.toSeq
+      })
+  }
 
   /** AlignedWindows at 2^pw; uses the rollup pyramid when the query is
     * at-or-above a maintained level and pinned to the committed state. */
   def alignedWindows(uuid: String, start: Long, end: Long, pw: Int,
-                     version: Long = TimeConsts.LatestGeneration): DataFrame = {
+                     version: Long = TimeConsts.LatestGeneration): DataFrame =
+    alignedRead(sidOf(uuid), start, end, pw, version).frame
+
+  /** [[alignedWindows]] on the serving path: (wstart, vmin, vmean, vmax,
+    * cnt) rows, answered on the calling thread under the small-read rule
+    * (see [[served]]). */
+  def serveAlignedWindows(uuid: String, start: Long, end: Long, pw: Int,
+                          version: Long = TimeConsts.LatestGeneration)
+      : Iterator[(Long, Double, Double, Double, Long)] = {
+    val sid = sidOf(uuid)
+    drained(admission.run(Admission.PointOp)(
+      served("aligned", sid)(alignedRead(sid, start, end, pw, version))))(r =>
+      (r.getAs[Long]("wstart"), r.getAs[Double]("vmin"), r.getAs[Double]("vmean"),
+        r.getAs[Double]("vmax"), r.getAs[Long]("cnt")))
+  }
+
+  private def alignedRead(sid: Long, start: Long, end: Long, pw: Int, version: Long)
+      : Read[(Long, Double, Double, Double, Long)] = {
     val s = TimeOps.alignDown(start, pw)
     val e = TimeOps.alignDown(end, pw)
-    val sid = sidOf(uuid)
     val level = rollupLevel(pw)
     // pyramid serves the committed part whenever the stream has no
     // delete debt; a non-empty staging buffer is handled the way the
@@ -1898,34 +2091,49 @@ class Btrdb(val spark: SparkSession, val root: String,
     // the buffer alone and COMBINE partials (Σcnt, min, Σsum, max;
     // mean = Σ(mean·count)/Σcount, /root/reference/merger.go:126-208)
     if (rollupServes(level.isDefined, sid, version, mergesBuffer = true)) {
-      val (rollup, bytes) = pyramidScan(sid, level.get, s, e)
-      val committed = rollup
-        .select(TimeOps.clampTime(col("wstart"), pw).as("wstart"),
-          col("cnt"), col("ccnt"), col("vmin"), col("vsc"), col("vsum"),
-          col("vmax"))
-      val partials = if (minorOf(sid) == 0) fit(committed, bytes) else {
-        val (staging, stagedBytes) = stagedOf(Seq(sid))
-        // the buffer's own aggregate sits below the union, so a small
-        // read coalesces its scan too
-        val total = bytes + stagedBytes
-        val staged = fit(staging, total)
-          .filter(col("time") >= s && col("time") < e)
+      val rollup = pyramidScan(sid, level.get, s, e)
+      val buffer = if (minorOf(sid) == 0) None else Some(stagedOf(Seq(sid)))
+      val total = rollup.bytes + buffer.fold(0L)(_.bytes)
+      new Read(total, {
+        val committed = rollup.frame
+          .select(TimeOps.clampTime(col("wstart"), pw).as("wstart"),
+            col("cnt"), col("ccnt"), col("vmin"), col("vsc"), col("vsum"),
+            col("vmax"))
+        val partials = buffer.fold(fit(committed, rollup.bytes)) { staging =>
+          // the buffer's own aggregate sits below the union, so a small
+          // read coalesces its scan too
+          val staged = fit(staging.frame.select("sid", "time", "value"), total)
+            .filter(col("time") >= s && col("time") < e)
+            .groupBy(TimeOps.clampTime(col("time"), pw).as("wstart"))
+            .agg(count(lit(1)).as("cnt"),
+              count(StatOps.cents(col("value"))).as("ccnt"),
+              min("value").as("vmin"),
+              sum(StatOps.centsSum(col("value"))).as("vsc"),
+              sum("value").as("vsum"), max("value").as("vmax"))
+          fit(committed.unionByName(staged), total)
+        }
+        partials.groupBy("wstart")
+          .agg(RollupStats.head, RollupStats.tail: _*)
+          .orderBy("wstart")
+      }, () => {
+        val fold = new WindowFold(pw)
+        localRollup(rollup, sid, s, e, fold)
+        buffer.foreach(localStaged(_, s, e)(fold.point))
+        fold.rows
+      })
+    } else {
+      val log = pointLog(Some(Seq(sid)), version, s, e)
+      new Read(log.bytes,
+        fit(log.frame, log.bytes)
           .groupBy(TimeOps.clampTime(col("time"), pw).as("wstart"))
-          .agg(count(lit(1)).as("cnt"),
-            count(StatOps.cents(col("value"))).as("ccnt"),
-            min("value").as("vmin"),
-            sum(StatOps.centsSum(col("value"))).as("vsc"),
-            sum("value").as("vsum"), max("value").as("vmax"))
-        fit(committed.unionByName(staged), total)
-      }
-      partials.groupBy("wstart")
-        .agg(RollupStats.head, RollupStats.tail: _*)
-        .orderBy("wstart")
-    } else
-      readable(sid, version, s, e)
-        .groupBy(TimeOps.clampTime(col("time"), pw).as("wstart"))
-        .agg(RawStats.head, RawStats.tail: _*)
-        .orderBy("wstart")
+          .agg(RawStats.head, RawStats.tail: _*)
+          .orderBy("wstart"),
+        () => {
+          val fold = new WindowFold(pw)
+          log.foreach(fold.point)
+          fold.rows
+        })
+    }
   }
 
   /** AlignedWindows across MANY streams in one scan — the bulk shape a
@@ -1959,7 +2167,7 @@ class Btrdb(val spark: SparkSession, val root: String,
         // ONE point-log scan for every raw-path stream — N streams, N
         // subplans would re-scan the log N times; this is one scan of
         // their sbucket directories regardless of N
-        pointLog(Some(rawSids), start = s, end = e)._1
+        pointLog(Some(rawSids), start = s, end = e).frame
           .groupBy(col("sid"), TimeOps.clampTime(col("time"), pw).as("wstart"))
           .agg(RawStats.head, RawStats.tail: _*)
       }).flatten
@@ -2016,8 +2224,8 @@ class Btrdb(val spark: SparkSession, val root: String,
       if (rawSids.isEmpty) None else Some {
         // one live-view scan for every raw-path stream (see
         // alignedWindowsBulk) aggregated to the same histogram shape
-        val (raw, bytes) = pointLog(Some(rawSids), start = s, end = e)
-        fit(raw, bytes)
+        val raw = pointLog(Some(rawSids), start = s, end = e)
+        fit(raw.frame, raw.bytes)
           .groupBy(col("sid"), TimeOps.clampTime(col("time"), pw).as("wstart"),
             StatOps.cents(col("value")).as("c"))
           .agg(count(lit(1)).as("hc"))
@@ -2040,7 +2248,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     * shape, not N per-stream subplans). This is the DataFrame behind the
     * `<prefix>_points` SQL view [[registerViews]] creates. */
   def pointsView(): DataFrame = {
-    val all = pointLog(None)._1.select("sid", "time", "value")
+    val all = pointLog(None).frame.select("sid", "time", "value")
     val hidden = tombstonedSids ++ migratingInSids
     if (hidden.isEmpty) all
     else all.filter(!col("sid").isin(hidden.toSeq: _*))
@@ -2176,8 +2384,8 @@ class Btrdb(val spark: SparkSession, val root: String,
       .filter(_ => rollupServes(true, sid, version))
     val agg0 = level match {
       case Some(l) =>
-        val (rollup, bytes) = pyramidScan(sid, l, lo, hi)
-        fit(rollup, bytes)
+        val rollup = pyramidScan(sid, l, lo, hi)
+        fit(rollup.frame, rollup.bytes)
           .groupBy(TimeOps.windowIndex(bucketStart(col("wstart")),
             start, width).as("i"))
           .agg(RollupStats.head, RollupStats.tail: _*)
@@ -2233,12 +2441,11 @@ class Btrdb(val spark: SparkSession, val root: String,
         var probes = 0
         def probe(lo: Long, hi: Long): Option[(Long, Double)] = {
           probes += 1
-          val df = readable(sid, version, lo, hi)
-          val ordered =
-            if (backward) df.orderBy(col("time").desc, col("value").desc)
-            else df.orderBy(col("time").asc, col("value").asc)
-          ordered.select("time", "value").limit(1).collect()
-            .headOption.map(r => (r.getLong(0), r.getDouble(1)))
+          served("nearest", sid)(nearestRead(sid, version, lo, hi, backward)) match {
+            case Right(hit) => hit.headOption
+            case Left(read) =>
+              read.frame.collect().headOption.map(r => (r.getLong(0), r.getDouble(1)))
+          }
         }
         var res: Option[(Long, Double)] = None
         var width = 1L << math.min(tBucketPw, 60)
@@ -2269,6 +2476,26 @@ class Btrdb(val spark: SparkSession, val root: String,
     }
   }
 
+  /** One nearest probe: the first point of [lo, hi) in (time, value)
+    * order, or the last one `backward`. */
+  private def nearestRead(sid: Long, version: Long, lo: Long, hi: Long,
+                          backward: Boolean): Read[(Long, Double)] = {
+    val log = pointLog(Some(Seq(sid)), version, lo, hi)
+    val df = fit(log.frame, log.bytes)
+    new Read(log.bytes,
+      (if (backward) df.orderBy(col("time").desc, col("value").desc)
+       else df.orderBy(col("time").asc, col("value").asc))
+        .select("time", "value").limit(1),
+      () => {
+        var best: (Long, Double) = null
+        log.foreach { (t, v) =>
+          val c = if (best == null) 0 else TimeValueOrder.compare((t, v), best)
+          if (best == null || (if (backward) c > 0 else c < 0)) best = (t, v)
+        }
+        Option(best).toSeq
+      })
+  }
+
   /** Changes(fromV, toV, resolution): per-commit TOUCHED RANGES (not the
     * commit envelope — a backfill hitting two distant instants yields
     * two ranges, the reference's tree-diff fidelity,
@@ -2280,18 +2507,35 @@ class Btrdb(val spark: SparkSession, val root: String,
     * own record. Each range's bounds are always the exact point
     * envelope of its cluster. */
   def changes(uuid: String, fromVersion: Long, toVersion: Long,
-              resolution: Int): DataFrame = {
+              resolution: Int): DataFrame =
+    changesRead(sidOf(uuid), fromVersion, toVersion, resolution).frame
+
+  /** [[changes]] on the serving path: (s, e) rows folded on the calling
+    * thread from the in-memory commit ranges ([[commitRanges]]). The
+    * read lists no file, so the small-read rule always serves it there. */
+  def serveChanges(uuid: String, fromVersion: Long, toVersion: Long,
+                   resolution: Int): Iterator[(Long, Long)] = {
     val sid = sidOf(uuid)
-    // commit metadata is small (seedCommitState collects it whole): one
-    // partition plans the interval merge and sort with no exchange
-    val perRange = commits.coalesce(1).filter(col("sid") === sid)
-      .select(col("sid"), col("version"),
-        explode(coalesce(col("ranges"),
-          array(struct(col("tmin").as("s"), (col("tmax") + 1).as("e"))))).as("r"))
-      .select(col("sid"), col("version"),
-        col("r.s").as("tmin"), (col("r.e") - 1).as("tmax"))
-    StatOps.changes(perRange, fromVersion, toVersion, resolution)
-      .orderBy("s").select("s", "e")
+    drained(admission.run(Admission.PointOp)(served("changes", sid)(
+      changesRead(sid, fromVersion, toVersion, resolution))))(r => (r.getLong(0), r.getLong(1)))
+  }
+
+  private def changesRead(sid: Long, fromVersion: Long, toVersion: Long,
+                          resolution: Int): Read[(Long, Long)] = {
+    seedCommitState()
+    val ranges = synchronized(commitRanges.getOrElse(sid, Vector.empty))
+    new Read(0L, {
+      // commit metadata is small (seedCommitState collects it whole): one
+      // partition plans the interval merge and sort with no exchange
+      val perRange = commits.coalesce(1).filter(col("sid") === sid)
+        .select(col("sid"), col("version"),
+          explode(coalesce(col("ranges"),
+            array(struct(col("tmin").as("s"), (col("tmax") + 1).as("e"))))).as("r"))
+        .select(col("sid"), col("version"),
+          col("r.s").as("tmin"), (col("r.e") - 1).as("tmax"))
+      StatOps.changes(perRange, fromVersion, toVersion, resolution)
+        .orderBy("s").select("s", "e")
+    }, () => WindowFold.changes(ranges, fromVersion, toVersion, resolution))
   }
 
   /** GenerateCSV / multi-stream temporal align: k streams aligned on
@@ -2626,7 +2870,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     // DELETE/heal recompute input: the stream's committed points in the
     // dirtied ranges, one tbucket-pruned scan per range
     lazy val recomputed = ranges.map { case (lo, hi) =>
-      pointLog(Some(Seq(sid)), recomputeAt, lo, hi, buffered = false)._1
+      pointLog(Some(Seq(sid)), recomputeAt, lo, hi, buffered = false).frame
     }.reduce(_ unionByName _)
     val baseFresh = (foldPartials match {
         case Some(p) if partialPw == base =>
@@ -2904,17 +3148,38 @@ class Btrdb(val spark: SparkSession, val root: String,
     * bytes of the files read: the scan lists the stream's
     * `pyramid/pw=L/sbucket=S` directory, and its partition filters keep
     * the `wbucket` directories the range intersects. */
-  private def pyramidScan(sid: Long, level: Int, s: Long, e: Long): (DataFrame, Long) = {
+  private def pyramidScan(sid: Long, level: Int, s: Long, e: Long): Scan = {
     val (wlo, whi) = (s >> pyramidWBucketPw, (e - 1) >> pyramidWBucketPw)
-    val (scan, bytes) = scanDirs("pyramid",
+    val scan = scanDirs("pyramid",
       Seq(s"pyramid/pw=$level/sbucket=${sbucketOf(sid)}"),
       PyramidSchema)(within("wbucket", wlo, whi))
-    (withLegacyCcnt(scan)
+    new Scan(scan.files, withLegacyCcnt(scan.frame)
       .filter(col("sid") === sid && col("sbucket") === sbucketOf(sid) &&
         col("wbucket") >= wlo && col("wbucket") <= whi &&
-        col("wstart") >= s && col("wstart") < e),
-      bytes)
+        col("wstart") >= s && col("wstart") < e))
   }
+
+  /** Folds stream `sid`'s rollup rows for windows in [s, e) from the
+    * files of a [[pyramidScan]], decoded on the calling thread. A file
+    * without `ccnt` predates it and holds in-domain values only. */
+  private def localRollup(rollup: Scan, sid: Long, s: Long, e: Long,
+                          fold: WindowFold): Unit =
+    localParquet.foreach(rollup.files, LocalRollupColumns,
+        LocalParquet.inRange(sid, "wstart", s, e)) { b =>
+      val c = (0 until LocalRollupColumns.length).map(b.column)
+      var i = 0
+      while (i < b.numRows) {
+        val w = c(1).getLong(i)
+        if (c(0).getLong(i) == sid && w >= s && w < e) {
+          val cnt = c(2).getLong(i)
+          fold.rollup(w, cnt, if (c(3).isNullAt(i)) cnt else c(3).getLong(i),
+            c(4).getDouble(i), c(5).getDouble(i), c(6).getDouble(i),
+            if (c(7).isNullAt(i)) null
+            else c(7).getDecimal(i, 38, 0).toJavaBigDecimal.toBigIntegerExact)
+        }
+        i += 1
+      }
+    }
 
   private def sbucketOf(sid: Long): Long = math.floorMod(sid, sBuckets.toLong)
 }
@@ -2947,7 +3212,13 @@ final case class EngineInfo(
     pools: Map[String, PoolGauge] = Map.empty,
     /** Operational alarms (e.g. wbucket-geometry degeneracy) — the
       * engine still answers correctly, but an operator should act. */
-    warnings: Seq[String] = Nil)
+    warnings: Seq[String] = Nil,
+    /** Serving-path reads per kind (raw, aligned, changes, nearest). */
+    reads: Map[String, ReadCounts] = Map.empty)
+
+/** Reads of one kind answered on the driver under the small-read rule,
+  * and by a Spark plan. */
+final case class ReadCounts(driver: Long, spark: Long)
 
 final case class StreamDescInfo(
     uuid: String, sid: Long, collection: String,
@@ -3103,6 +3374,21 @@ object Btrdb {
         max("vmax").as("vmax"),
         (sum("vsc") / lit(100.0)).as("vsum"))
   }
+
+  /** The columns the driver-side decode reads from each area. */
+  private val LocalPointColumns =
+    StructType.fromDDL("sid BIGINT, time BIGINT, value DOUBLE, version BIGINT")
+  private val LocalStagedColumns = StructType.fromDDL("time BIGINT, value DOUBLE")
+  private val LocalRollupColumns = StructType.fromDDL(
+    "sid BIGINT, wstart BIGINT, cnt BIGINT, ccnt BIGINT, vmin DOUBLE, vmax DOUBLE, " +
+      "vsum DOUBLE, vsc DECIMAL(38,0)")
+
+  /** The (time, value) order of a RawValues reply, as Spark sorts it:
+    * -0.0 and 0.0 compare equal. */
+  private val TimeValueOrder: Ordering[(Long, Double)] = (a, b) =>
+    if (a._1 != b._1) java.lang.Long.compare(a._1, b._1)
+    else if (a._2 == b._2) 0
+    else java.lang.Double.compare(a._2, b._2)
 
   /** Window stats (cnt, vmin, vmean, vmax) over raw point rows. */
   private val RawStats: Seq[Column] = Seq(count(lit(1)).as("cnt"),

@@ -34,6 +34,20 @@ object StatOps {
   def cents(v: Column): Column =
     when(v.between(-CentsDomain, CentsDomain), round(v * 100, 0).cast("long"))
 
+  /** True iff [[cents]] of `v` is not NULL. */
+  def inCentsDomain(v: Double): Boolean = v >= -CentsDomain && v <= CentsDomain
+
+  /** [[cents]] of one in-domain value, computed on the driver the way
+    * Spark's `round` does: half-up on the decimal string of v×100. */
+  def centsOf(v: Double): Long = {
+    val x = v * 100
+    if (x == Math.rint(x) && math.abs(x) < TwoPow52) x.toLong
+    else java.math.BigDecimal.valueOf(x)
+      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue.toLong
+  }
+  // below 2^52 an integral double prints exactly, so it rounds to itself
+  private val TwoPow52 = 4.503599627370496e15
+
   /** Exact mean from a cents-sum and a count: both operands are exact
     * integers, so the IEEE divisions are bit-identical in any engine. */
   def meanFromCents(sumCents: Column, count: Column): Column =

@@ -22,12 +22,16 @@ import graft.engine.Btrdb
   *
   * Server-streaming RPCs chunk their value lists at [[ChunkSize]] rows
   * per response message, the reference's streaming shape — and they
-  * STREAM: the value-list RPCs pull rows through
-  * `Dataset.toLocalIterator` (one partition of driver memory at a
-  * time, ordered) and [[RpcReply.messages]] is an iterator the server
-  * drains under HTTP/2 flow control, so a RawValues over a wide range
-  * never materializes on the driver — the same producer/bounded-
-  * channel shape as the reference
+  * STREAM: RawValues, AlignedWindows and Changes take a row iterator
+  * from the engine's serving path. A read under the engine's small-read
+  * rule is answered on the calling thread with no Spark job (Changes
+  * always is: it reads in-memory commit state); a larger one pulls rows
+  * through `Dataset.toLocalIterator` (one partition of driver memory at
+  * a time, ordered), as Windows and GenerateCSV always do.
+  * [[RpcReply.messages]] is an iterator the server drains under HTTP/2
+  * flow control, so a RawValues over a wide range never materializes
+  * on the driver — the same producer/bounded-channel shape as the
+  * reference
   * (/root/reference/qtree/qtree.go:756-769,
   * grpcinterface/serve.go:147-172). One RPC is intentionally stubbed
   * with an app-level error, mirroring a documented divergence
@@ -253,8 +257,7 @@ object BtrdbWire {
         case (_, w) => r.skip(w)
       }
       val (maj, minor) = verOf(e, uuid)
-      val rows = e.rawValues(uuid, start, end, pin(vmaj))
-        .toLocalIterator().asScala.map(x => (x.getLong(0), x.getDouble(1)))
+      val rows = e.serveRawValues(uuid, start, end, pin(vmaj))
       chunked(rows, maj, minor)((w, p) => w.message(4, rawPoint(p._1, p._2)))
 
     case "AlignedWindows" =>
@@ -270,11 +273,7 @@ object BtrdbWire {
       }
       if (pw > 64 || pw < 0) return Iterator.single(badPointWidth)
       val (maj, minor) = verOf(e, uuid)
-      val rows = e.alignedWindows(uuid, start, end, pw, pin(vmaj))
-        .select("wstart", "vmin", "vmean", "vmax", "cnt")
-        .toLocalIterator().asScala
-        .map(x => (x.getLong(0), x.getDouble(1), x.getDouble(2),
-          x.getDouble(3), x.getLong(4)))
+      val rows = e.serveAlignedWindows(uuid, start, end, pw, pin(vmaj))
       chunked(rows, maj, minor)((w, p) =>
         w.message(4, statPoint(p._1, p._2, p._3, p._4, p._5)))
 
@@ -423,8 +422,7 @@ object BtrdbWire {
       }
       val (maj, minor) = verOf(e, uuid)
       val to = if (toMajor == 0L) maj else toMajor
-      val rows = e.changes(uuid, fromMajor, to, resolution)
-        .toLocalIterator().asScala.map(x => (x.getLong(0), x.getLong(1)))
+      val rows = e.serveChanges(uuid, fromMajor, to, resolution)
       chunked(rows, maj, minor) { (w, p) =>
         val cr = new PbWriter
         cr.sfixed64(1, p._1); cr.sfixed64(2, p._2)

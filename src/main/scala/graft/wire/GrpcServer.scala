@@ -26,15 +26,20 @@ import graft.engine.Btrdb
   * is OFFLOADED to a worker pool — the Netty event loop never blocks,
   * and slow queries on one HTTP/2 stream do not stall frames of
   * another on the same connection. Responses are written back on the
-  * channel's event loop. Admission control is the engine's own
-  * ([[graft.engine.Admission]] wraps every facade call), matching the
-  * reference daemon shedding on each RPC.
+  * channel's event loop. Two gates shed load: this server's ConcurrentOp
+  * permits on every RPC (below), and the engine's
+  * [[graft.engine.Admission]] pools around the work the engine does
+  * inline — writes, maintenance, Nearest, and the RawValues,
+  * AlignedWindows and Changes reads it answers on the driver. The Spark
+  * jobs of larger reads run while the reply drains, outside the engine's
+  * pools.
   *
   * Streaming RPCs stream for real: [[BtrdbWire.handle]] hands back a
-  * message ITERATOR backed by `Dataset.toLocalIterator` and the worker
-  * drains it with a bounded number of unacknowledged DATA frames —
-  * driver memory stays one-partition-sized no matter how wide the
-  * queried range, the same bounded producer/consumer shape as the
+  * message ITERATOR, over rows the engine computed on the driver for a
+  * small read, or backed by `Dataset.toLocalIterator` for a larger one,
+  * and the worker drains it with a bounded number of unacknowledged DATA
+  * frames — driver memory stays one-partition-sized no matter how wide
+  * the queried range, the same bounded producer/consumer shape as the
   * reference's channel-fed sender (/root/reference/grpcinterface/
   * serve.go:147-172). Analytics at 100 TB still belongs on the
   * SQL/DataFrame surface; this endpoint is the migration-compatible

@@ -79,6 +79,13 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(math.max(a.getDouble(4), b.getDouble(4)) == c.getDouble(4))
       }
     }
+    // the serving path's driver answers equal the DataFrames: off-grid
+    // values, pyramid-served (pw 12) and raw (pw 0 and 2, below every
+    // level), and pw 64, which collapses the range to no window
+    assert(Served.raw(db, uuid, 0, 4096) == back.toSeq)
+    for (k <- Seq(0, 2, 12))
+      assert(Served.aligned(db, uuid, 0, 4096, k, exactMean = false).size == (4096 >> k))
+    assert(Served.aligned(db, uuid, 0, 4096, 64).isEmpty)
   }
 
   test("superdense: duplicate timestamps all accepted (no VSIZE truncation)") {
@@ -89,6 +96,13 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(db.rawValues(uuid, 0, 10).count() == 10000)
     val stat = db.alignedWindows(uuid, 0, 64, 6).collect()
     assert(stat.length == 1 && stat.head.getLong(1) == 10000)
+    // duplicate timestamps with distinct values: the driver answer sorts
+    // them by value, as the DataFrame does
+    insertPoints(uuid, Seq((5L, -2.5), (5L, 3.25), (7L, 0.5), (5L, 0.0), (3L, 1.0)))
+    db.flush(uuid)
+    assert(Served.raw(db, uuid, 0, 10).size == 10005)
+    assert(Served.aligned(db, uuid, 0, 64, 6).head._5 == 10005)
+    assert(Served.aligned(db, uuid, 0, 64, 0).map(_._5) == Seq(1L, 10003L, 1L))
   }
 
   test("nearestTriple: forward inclusive, backward exclusive, out-of-range empty") {
@@ -148,6 +162,9 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the aggregate merges the buffer on both sides of the small-read rule
     assert(BothSides(spark)(db.alignedWindows(uuid, 0, 1024, 6).collect().toSeq)
       .map(_.getLong(1)) == Seq(2L))
+    assert(Served.raw(db, uuid, 0, 1000).map(_._1) == Seq(100L, 105L))
+    assert(Served.raw(db, uuid, 0, 1000, version = 1).map(_._1) == Seq(100L))
+    assert(Served.aligned(db, uuid, 0, 1024, 6).map(_._5) == Seq(2L))
     db.flush(uuid)
     assert(db.version(uuid) == (2L, 0L))
   }
@@ -182,6 +199,17 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
     // changes between v2 and v3 only covers the second insert's envelope
     val ch2 = db.changes(uuid, 2, 3, resolution = 0).collect()
     assert(ch2.length == 1 && ch2.head.getLong(0) == 500 && ch2.head.getLong(1) == 501)
+    // delete debt on the driver: pinned and latest, raw and aligned
+    assert(Served.raw(db, uuid, 0, 1000).size == 21)
+    assert(Served.raw(db, uuid, 0, 1000, version = 2).size == 20)
+    assert(Served.raw(db, uuid, 0, 1000, version = 1).size == 1000)
+    assert(Served.aligned(db, uuid, 0, 1024, 6).map(_._5).sum == 21)
+    assert(Served.aligned(db, uuid, 0, 1024, 6, version = 2).map(_._5).sum == 20)
+    // changes over the insert, the delete and the second insert: the
+    // delete range [10, 990) overlaps the first insert's, and at
+    // resolution 10 the second insert's range touches it
+    for ((from, to) <- Seq((0L, 3L), (1L, 3L), (2L, 3L), (0L, 1L)); res <- Seq(0, 4, 10, 36))
+      Served.changes(db, uuid, from, to, res)
   }
 
   test("adaptive commit ranges: distant tight clusters record separately") {
@@ -198,6 +226,11 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(ch.toSeq == Seq((0L, 16L), (192L, 208L)),
       s"expected two tight ranges, got ${ch.toSeq}")
+    // at resolution 8 both ranges snap to [0, 256); at 7 they snap to
+    // [0, 128) and [128, 256), which are adjacent and merge
+    assert(Served.changes(db, uuid, 0, 1, 8) == Seq((0L, 256L)))
+    assert(Served.changes(db, uuid, 0, 1, 7) == Seq((0L, 256L)))
+    for (res <- Seq(0, 4, 36, 63, 64)) Served.changes(db, uuid, 0, 1, res)
   }
 
   test("compact: collapses generations, applies deletes, re-enables pyramid path") {
@@ -221,6 +254,13 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
     // stat queries still correct post-compaction
     val stat = db.alignedWindows(uuid, 0, 1024, 10).collect()
     assert(stat.map(_.getLong(1)).sum == 200)
+    // on the driver: a pin below the compacted floor reads empty, and
+    // changes read the collapsed history
+    assert(Served.raw(db, uuid, 0, 1000).map(_._1) == before)
+    assert(Served.raw(db, uuid, 0, 1000, version = 2).isEmpty)
+    assert(Served.aligned(db, uuid, 0, 1024, 10, version = 1).isEmpty)
+    assert(Served.aligned(db, uuid, 0, 1024, 10).map(_._5).sum == 200)
+    for (res <- Seq(0, 36, 63, 64)) Served.changes(db, uuid, 0, 3, res)
     // crash-recovery: a stale plain commit file left by an interrupted
     // garbage collection is superseded by the compacted record, not
     // double-counted
@@ -234,6 +274,38 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(db.rawValues(uuid, 0, 1000).count() == 200) // unchanged
     assert(db.commits.filter(
       org.apache.spark.sql.functions.col("sid") === sid).count() == 1)
+  }
+
+  test("latest served reads racing insert+flush of the same stream neither fail nor double count") {
+    val uuid = "u-race"
+    db.createStream(uuid, "test/race", Map("t" -> "race"))
+    // batches of 64 points at consecutive times: each fills one pw=6
+    // window, so a window counted twice reads 128
+    val batch = 64L
+    val acked = new java.util.concurrent.atomic.AtomicLong(0L)
+    val writer = new Thread(() =>
+      for (k <- 0L until 10L) {
+        insertPoints(uuid, (0L until batch).map(i => (k * batch + i, 1.0)))
+        acked.addAndGet(batch)
+        db.flush(uuid)
+      })
+    writer.start()
+    var reads = 0
+    while (writer.isAlive) {
+      val before = acked.get
+      val times = db.serveRawValues(uuid, 0, 1L << 20).map(_._1).toSeq
+      val windows = db.serveAlignedWindows(uuid, 0, 1L << 20, 6).toSeq
+      val after = acked.get + batch // an insert in flight may be read
+      assert(times == (0L until times.size.toLong), "raw points lost or repeated")
+      assert(times.size >= before && times.size <= after)
+      assert(windows.map(_._1) == windows.indices.map(_ * batch))
+      assert(windows.forall(_._5 == batch), s"a window counted twice: $windows")
+      assert(windows.size * batch >= before && windows.size * batch <= after)
+      reads += 1
+    }
+    writer.join()
+    assert(reads > 0)
+    assert(db.serveRawValues(uuid, 0, 1L << 20).size == 10 * batch)
   }
 
   test("windows: arbitrary width with hole emission and end truncation") {
@@ -265,6 +337,9 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(p.getDouble(2) == r.getDouble(2) && p.getDouble(4) == r.getDouble(4))
       assert(math.abs(p.getDouble(3) - r.getDouble(3)) < 1e-9)
     }
+    // off-grid values on the driver, pyramid-served and raw
+    Served.aligned(db, uuid, 0, 15000, 12, exactMean = false)
+    Served.aligned(db, uuid, 0, 15000, 12, version = 1, exactMean = false)
   }
 
   test("catalog at scale: bulk create 1000 streams, lookup by tag and annotation") {
@@ -365,6 +440,10 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
     // identical to the raw computation over the same (latest) state
     val raw = db.rawValues(uuid, 0, 2048).count()
     assert(raw == 2048 + 512)
+    // on the driver: rollup rows plus the buffer's own partials
+    assert(Served.aligned(db, uuid, 0, 2048, 8).map(_._5) == Seq.fill(8)(320L))
+    assert(Served.aligned(db, uuid, 0, 2048, 6).map(_._5).sum == 2048 + 512)
+    assert(Served.raw(db, uuid, 0, 2048).size == 2048 + 512)
     db.flush(uuid)
   }
 

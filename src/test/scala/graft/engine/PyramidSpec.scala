@@ -8,6 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import scala.jdk.CollectionConverters._
 
+import graft.core.TimeConsts
+
 /** Incremental pyramid maintenance: commits must rewrite ONLY the
   * (sbucket, wbucket) rollup partitions their touched ranges dirty —
   * the engine's analog of the reference's per-child generation stamps
@@ -143,6 +145,7 @@ class PyramidSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(ch.toSeq == Seq((100L, 101L), (3L * 4096 + 50, 3L * 4096 + 51)),
       s"got ${ch.toSeq}") // NOT one [100, 12339) envelope
+    for (res <- Seq(0, 8, 12, 14, 36, 63, 64)) Served.changes(db, uuid, 0, 1, res)
   }
 
   test("randomized commits: folded pyramid equals raw recompute; changes covers every instant") {
@@ -179,6 +182,10 @@ class PyramidSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(ranges.exists { case (s, e) => t >= s && t < e },
         s"instant $t not covered by ${ranges.length} ranges")
     }
+    // the same on the driver: overlapping commits' ranges merge
+    for (from <- 0 to 4; res <- Seq(0, 4, 8, 12)) Served.changes(db, uuid, from, 5, res)
+    Served.aligned(db, uuid, 0, 4 * 4096, 8)
+    Served.aligned(db, uuid, 0, 4 * 4096, 8, version = 3)
   }
 
   test("negative times: ingest, pyramid, nearest and changes below epoch") {
@@ -197,6 +204,13 @@ class PyramidSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(BothSides(spark)(db.nearest(uuid, 0, backward = true)).contains((-1L, 1.0)))
     val ch = db.changes(uuid, 0, 1, resolution = 0).collect()
     assert(ch.length == 1 && ch.head.getLong(0) == -4096 && ch.head.getLong(1) == 4096)
+    // on the driver, across tbuckets -1 and 0
+    assert(Served.raw(db, uuid, -4096, 4096).size == 8192)
+    assert(Served.raw(db, uuid, -100, 100).head == ((-100L, 1.0)))
+    assert(Served.aligned(db, uuid, -4096, 4096, 8).size == 32)
+    assert(Served.aligned(db, uuid, -4096, 4096, 2, version = 1).size == 2048)
+    Served.changes(db, uuid, 0, 1, 0)
+    Served.changes(db, uuid, 0, 1, 36)
   }
 
   test("out-of-cents-domain values degrade vmean to the exact double mean") {
@@ -236,6 +250,13 @@ class PyramidSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(org.apache.spark.sql.functions.col("cnt") > 0)
       .head().getAs[Double]("vmean")
     assert(m3 == 9.0e16, s"decimal cents sum expected, got $m3")
+    // on the driver: values beyond the cents domain, pyramid-served and
+    // raw; the long cents sum past Long.MaxValue
+    for (v <- Seq(TimeConsts.LatestGeneration, db.version("u-dom")._1)) {
+      val w = Served.aligned(db, "u-dom", 0L, 768L, 8, v)
+      assert(w.map(_._3) == Seq(expected, m2, m3))
+    }
+    assert(Served.aligned(db, "u-dom", 0L, 768L, 4).size == 5)
     db.close()
   }
 

@@ -7,11 +7,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.wire.{BtrdbWire, PbReader, PbWriter}
+
 /** Small reads plan from state the engine already holds: building a
   * read's DataFrame runs no Spark job (no footer-schema inference, no
   * commit-log scan for delete anti-filters, no catalog lookup), and a
-  * small read runs only the one job, with one task, that answers it.
-  * Jobs and tasks are counted by a listener around the facade call,
+  * small read's DataFrame runs only the one job, with one task, that
+  * answers it. On the serving path (the wire, and `nearest`) a small
+  * read runs no job at all: the engine answers it on the calling
+  * thread. Jobs and tasks are counted by a listener around the call,
   * after a warm-up read has seeded the engine's one-time catalog and
   * commit state. */
 class ReadJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -110,7 +114,7 @@ class ReadJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     finally spark.conf.unset("spark.sql.files.openCostInBytes")
   }
 
-  test("a nearest hit on the first probe runs exactly one job") {
+  test("a nearest hit on the first probe runs no job") {
     for ((uuid, t) <- Seq("u-clean" -> 10L, "u-staged" -> 4100L)) {
       db.nearest(uuid, base, backward = false) // warm-up
       // the staged stream's probe bound comes from its in-memory
@@ -119,7 +123,93 @@ class ReadJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
         counted(db.nearestProbed(uuid, base + t, backward = false))
       assert(hit.contains((base + t, if (t < 4096) (t % 100).toDouble else 1.0)))
       assert(probes == 1)
-      assert(n == JobCount.Counts(1, 1), s"first-probe nearest on $uuid ran $n")
+      assert(n == JobCount.Counts(0, 0), s"first-probe nearest on $uuid ran $n")
     }
   }
+
+  private def framed(fields: PbWriter => Unit): Array[Byte] = {
+    val w = new PbWriter
+    fields(w)
+    val body = w.toBytes
+    java.nio.ByteBuffer.allocate(5 + body.length).put(0.toByte).putInt(body.length)
+      .put(body).array()
+  }
+
+  private def uuidField(w: PbWriter, uuid: String): Unit =
+    w.bytes(1, uuid.getBytes("UTF-8"))
+
+  /** Wire requests on each read path: RawValues of a clean, a deleted
+    * and a staged stream; AlignedWindows served from the pyramid, from
+    * the pyramid plus the write buffer, and from raw points under a
+    * delete; Changes; Nearest of a committed and of a staged point. */
+  private val wireReads: Seq[(String, String, Array[Byte])] = {
+    def raw(uuid: String, end: Long) = ("RawValues", uuid, framed { w =>
+      uuidField(w, uuid); w.sfixed64(2, base); w.sfixed64(3, base + end) })
+    def aligned(uuid: String, end: Long) = ("AlignedWindows", uuid, framed { w =>
+      uuidField(w, uuid); w.sfixed64(2, base); w.sfixed64(3, base + end); w.uint64(5, 10) })
+    def changes(uuid: String, to: Long) = ("Changes", uuid, framed { w =>
+      uuidField(w, uuid); w.uint64(3, to); w.uint64(4, 4) })
+    def nearest(uuid: String, t: Long) = ("Nearest", uuid, framed { w =>
+      uuidField(w, uuid); w.sfixed64(2, base + t) })
+    Seq(raw("u-clean", 4096), raw("u-deleted", 4096), raw("u-staged", 8192),
+      aligned("u-clean", 4096), aligned("u-staged", 8192), aligned("u-deleted", 4096),
+      changes("u-clean", 2), changes("u-deleted", 3),
+      nearest("u-clean", 10), nearest("u-staged", 4100))
+  }
+
+  private def drain(method: String, body: Array[Byte]): Seq[Array[Byte]] = {
+    val reply = BtrdbWire.handle(db, method, body)
+    assert(reply.grpcStatus == 0)
+    val msgs = reply.messages.toList
+    // field 1 of a reply is its error status
+    val r = new PbReader(msgs.head)
+    assert(!r.hasNext || r.readTag()._1 != 1, s"$method answered an error")
+    msgs
+  }
+
+  test("wire reads of a small stream run no Spark job") {
+    for ((method, uuid, body) <- wireReads) {
+      drain(method, body) // warm-up
+      val (msgs, n) = counted(drain(method, body))
+      assert(msgs.nonEmpty)
+      assert(n == JobCount.Counts(0, 0), s"$method on $uuid ran $n")
+    }
+  }
+
+  test("above openCostInBytes the wire reads run their Spark plan, byte-identically") {
+    val small = wireReads.map { case (method, _, body) => drain(method, body) }
+    spark.conf.set("spark.sql.files.openCostInBytes", "1")
+    try wireReads.zip(small).foreach { case ((method, uuid, body), local) =>
+      val (msgs, n) = counted(drain(method, body))
+      assert(msgs.map(_.toSeq) == local.map(_.toSeq), s"$method on $uuid")
+      if (method == "Changes") {
+        // Changes reads only in-memory commit state and lists no file,
+        // so it stays on the driver; its DataFrame is the reference
+        assert(n.jobs == 0)
+        val (to, ranges) = (if (uuid == "u-clean") 2L else 3L, decodeRanges(msgs))
+        assert(ranges == db.changes(uuid, 0, to, 4).collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSeq)
+      } else assert(n.jobs >= 1, s"$method on $uuid ran no job above the rule")
+    } finally spark.conf.unset("spark.sql.files.openCostInBytes")
+  }
+
+  /** The (start, end) ranges of a Changes reply (field 4 of each message). */
+  private def decodeRanges(msgs: Seq[Array[Byte]]): Seq[(Long, Long)] =
+    msgs.flatMap { m =>
+      val r = new PbReader(m)
+      val out = Seq.newBuilder[(Long, Long)]
+      while (r.hasNext) r.readTag() match {
+        case (4, _) =>
+          val cr = r.lenReader()
+          var s = 0L; var e = 0L
+          while (cr.hasNext) cr.readTag() match {
+            case (1, _) => s = cr.fixed64()
+            case (2, _) => e = cr.fixed64()
+            case (_, w) => cr.skip(w)
+          }
+          out += ((s, e))
+        case (_, w) => r.skip(w)
+      }
+      out.result()
+    }
 }

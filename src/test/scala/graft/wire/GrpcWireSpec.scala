@@ -876,4 +876,42 @@ class GrpcWireSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(done.await(60, TimeUnit.SECONDS))
     assert(status.get() == "12")
   }
+
+  // runs last: its stream would join the collection listings above
+  test("Info counts driver- and Spark-served reads per kind") {
+    val u = "66666666-2222-3333-4444-555555555555"
+    db.createStream(u, "wire/served", Map.empty)
+    db.insert(u, spark.createDataFrame((0 until 32).map(i => (i * 10L, i * 0.5)))
+      .toDF("time", "value"))
+    db.flush(u)
+    val raw = new PbWriter
+    raw.bytes(1, BtrdbWire.uuidBytes(u))
+    raw.sfixed64(2, 0L); raw.sfixed64(3, 1000L)
+    def rawCounts = db.engineInfo().reads("raw")
+    def readRaw(): Seq[Array[Byte]] = {
+      val (res, status) = call("RawValues", raw)
+      assert(status == "0" && statOf(res.head).isEmpty)
+      res
+    }
+    val c0 = rawCounts
+    val small = readRaw()
+    val c1 = rawCounts
+    assert(c1 == c0.copy(driver = c0.driver + 1), s"$c0 -> $c1")
+    // above the small-read rule the same read runs its Spark plan
+    spark.conf.set("spark.sql.files.openCostInBytes", "1")
+    val large = try readRaw() finally spark.conf.unset("spark.sql.files.openCostInBytes")
+    val c2 = rawCounts
+    assert(c2 == c1.copy(spark = c1.spark + 1), s"$c1 -> $c2")
+    assert(large.map(_.toSeq) == small.map(_.toSeq))
+    // the other kinds count too: one Nearest probe, one Changes
+    val (n0, ch0) = (db.engineInfo().reads("nearest"), db.engineInfo().reads("changes"))
+    val near = new PbWriter
+    near.bytes(1, BtrdbWire.uuidBytes(u)); near.sfixed64(2, 5L)
+    assert(statOf(call("Nearest", near)._1.head).isEmpty)
+    val ch = new PbWriter
+    ch.bytes(1, BtrdbWire.uuidBytes(u)); ch.uint64(3, 1L)
+    assert(statOf(call("Changes", ch)._1.head).isEmpty)
+    assert(db.engineInfo().reads("nearest").driver == n0.driver + 1)
+    assert(db.engineInfo().reads("changes").driver == ch0.driver + 1)
+  }
 }
