@@ -1,7 +1,9 @@
 package graft.engine
 
 import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.LongAdder
+import java.util.concurrent.locks.ReentrantLock
 
 import scala.jdk.CollectionConverters._
 
@@ -67,10 +69,11 @@ import graft.storage.Store
   *     (the CGeneration trick, SURVEY §4.1) via dynamic partition
   *     overwrite, so backfill cost is proportional to dirtied data.
   *
-  * Single-writer per engine root is assumed (the reference holds
-  * per-stream write locks; a driver-side lock is the same contract) —
-  * enforced fail-fast by an advisory heartbeat lock file, see
-  * "single-writer root lock" below.
+  * Single-writer per engine root is assumed — enforced fail-fast by an
+  * advisory heartbeat lock file, see "single-writer root lock" below.
+  * Inside the one writer, writes to a stream hold that stream's write
+  * lock (the reference's per-stream write locks) and reads take one
+  * immutable [[StreamState]] per stream.
   */
 class Btrdb(val spark: SparkSession, val root: String,
             sBuckets: Int = 64, tBucketPw: Int = 48,
@@ -422,15 +425,6 @@ class Btrdb(val spark: SparkSession, val root: String,
 
   @volatile private var catalogCache: DataFrame = null
   @volatile private var commitsCache: DataFrame = null
-  /** In-memory staged-point counts per sid (minor versions) — seeded
-    * lazily from the staging dir, maintained on insert/flush so the hot
-    * path never re-counts parquet. */
-  private val minorCounts = scala.collection.mutable.Map.empty[Long, Long]
-  /** Staged time envelope per stream, kept beside [[minorCounts]]: an
-    * over-approximation (widened on insert, dropped on flush) that
-    * bounds `nearest` probes without a job. */
-  private val stagedEnvelopes = scala.collection.mutable.Map.empty[Long, (Long, Long)]
-  @volatile private var minorSeeded = false
   /** Staging batch-id generator: ms epoch << 20 + counter — unique
     * across restarts, disjoint from Spark streaming batch ids. */
   private val batchIdGen = new java.util.concurrent.atomic.AtomicLong(
@@ -822,36 +816,39 @@ class Btrdb(val spark: SparkSession, val root: String,
     c
   }
 
-  /** In-memory per-stream commit state (major version + delete lists),
-    * seeded from the commit log once and maintained on every commit so
-    * the ingest, read and stat hot paths never re-scan commit metadata. */
-  private val majorCounts = scala.collection.mutable.Map.empty[Long, Long]
-  /** Live delete commits per stream as (version, tmin, tmax): the
-    * anti-filters every read folds in. A stream is present iff it has
-    * delete debt. Mirrors the commit reader's supersede rule: a
-    * compacted record at V drops the stream's deletes at or below V. */
-  private val deletes =
-    scala.collection.mutable.Map.empty[Long, Vector[(Long, Long, Long)]]
-  /** Touched ranges [s, e) of every live commit per stream, as
-    * (version, s, e): the input of `changes`. Superseded by a compacted
-    * record the same way as [[deletes]]. */
-  private val commitRanges =
-    scala.collection.mutable.Map.empty[Long, Vector[(Long, Long, Long)]]
-  /** Committed time envelope per stream (inserts only) — an
-    * over-approximation of where points can exist, used to bound
-    * `nearest` probes. */
-  private val envelopes = scala.collection.mutable.Map.empty[Long, (Long, Long)]
-  /** Version floor per compacted stream: history at-or-below it is
-    * collapsed — pins below the floor read as EMPTY (the documented
-    * "time travel forfeited" contract), never as delete-unaware rows. */
-  private val compactedFloor = scala.collection.mutable.Map.empty[Long, Long]
-  /** True iff EVERY insert commit of the stream carried only values on
-    * the 2-decimal cents grid — the precondition for serving SQL
-    * avg/sum from the pyramid's integer cents sums exactly (off-grid
-    * doubles would be rounded by up to 0.005/point). AND-folded over
-    * the commit log; legacy records without the flag read as false. */
-  private val gridOk = scala.collection.mutable.Map.empty[Long, Boolean]
-  @volatile private var commitStateSeeded = false
+  /** Per-stream commit state, one immutable [[StreamState]] per stream,
+    * seeded from the commit log and the write buffer once and replaced
+    * by every commit, so the ingest, read and stat hot paths never
+    * re-scan commit metadata. A read takes one value per stream and
+    * pins everything to it, with no lock. */
+  private val states = new ConcurrentHashMap[Long, StreamState]()
+  @volatile private var seeded = false
+  /** Per-stream write locks: writes to one stream are serialized, as by
+    * the reference's per-stream write mutex. Lock order: a stream's lock,
+    * then the engine monitor, never the reverse. */
+  private val writeLocks = new ConcurrentHashMap[Long, ReentrantLock]()
+
+  /** Runs `body` holding the write locks of `sids`, taken in sid order. */
+  private def writing[T](sids: Long*)(body: => T): T = {
+    val held = sids.distinct.sorted.map(writeLocks.computeIfAbsent(_, _ => new ReentrantLock()))
+    held.foreach(_.lock())
+    try body finally held.foreach(_.unlock())
+  }
+
+  private def stateOf(sid: Long): StreamState = {
+    seed()
+    states.getOrDefault(sid, StreamState.Empty)
+  }
+
+  /** Every stream's state, as one snapshot. */
+  private[engine] def snapshot(): Map[Long, StreamState] = { seed(); states.asScala.toMap }
+
+  /** Replaces stream `sid`'s state by `f` of it. */
+  private def publish(sid: Long)(f: StreamState => StreamState): Unit = {
+    seed()
+    states.compute(sid, (_, s) => f(if (s == null) StreamState.Empty else s))
+  }
+
   /** Pyramid-level non-emptiness memo: each level is probed at most once
     * per (in)validation — a stat query must never walk the filesystem.
     * Insert-path maintenance marks its levels present; the (rare)
@@ -867,105 +864,69 @@ class Btrdb(val spark: SparkSession, val root: String,
     qhistPresentMemo = None
   }
 
-  private def seedCommitState(): Unit = synchronized {
-    if (!commitStateSeeded) {
-      commits.groupBy("sid")
-        .agg(max("version").as("maj"),
-          collect_list(when(col("kind") === "delete",
-            struct("version", "tmin", "tmax"))).as("del"),
-          min(when(col("kind") === "insert", col("tmin"))).as("emin"),
-          max(when(col("kind") === "insert", col("tmax"))).as("emax"),
-          max(when(col("compacted"), col("version"))).as("floor"),
-          min(when(col("kind") === "insert",
-            when(coalesce(col("grid"), lit(false)), 1L).otherwise(0L)))
-            .as("grid"),
-          collect_list(struct(col("version"), coalesce(col("ranges"),
-            array(struct(col("tmin").as("s"), (col("tmax") + 1).as("e"))))))
-            .as("ranges"))
-        .collect().foreach { r =>
-          majorCounts(r.getLong(0)) = r.getLong(1)
-          val del = r.getSeq[org.apache.spark.sql.Row](2)
-          if (del.nonEmpty) deletes(r.getLong(0)) =
-            del.map(d => (d.getLong(0), d.getLong(1), d.getLong(2))).toVector
-          if (!r.isNullAt(3)) envelopes(r.getLong(0)) = (r.getLong(3), r.getLong(4))
-          // column 5 is the compacted-version floor — reading the
-          // envelope max (column 4) here made every FRESH engine
-          // instance on an existing root treat pins below emax as
-          // compacted-away (empty), a bug only a second-session read
-          // could observe
-          if (!r.isNullAt(5)) compactedFloor(r.getLong(0)) = r.getLong(5)
-          // column 6: 1 iff every insert commit was cents-grid exact
-          if (!r.isNullAt(6)) gridOk(r.getLong(0)) = r.getLong(6) == 1L
-          commitRanges(r.getLong(0)) = r.getSeq[Row](7).toVector.flatMap { c =>
-            c.getSeq[Row](1).map(x => (c.getLong(0), x.getLong(0), x.getLong(1))) }
+  /** Seeds every stream's state once: the [[StreamState.committed]]
+    * transition folded over the commit log, then the write buffer's
+    * staged counts (after [[recoverFlushedStaging]]). */
+  private def seed(): Unit = if (!seeded) synchronized {
+    if (!seeded) {
+      val records = commits.select("sid", "version", "kind", "tmin", "tmax",
+          "npoints", "ranges", "compacted", "batches", "grid")
+        .collect().toSeq.map { r =>
+          CommitRecord(r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3),
+            r.getLong(4), r.getLong(5),
+            if (r.isNullAt(6)) Seq((r.getLong(3), r.getLong(4) + 1))
+            else r.getSeq[Row](6).map(x => (x.getLong(0), x.getLong(1))),
+            r.getBoolean(7), if (r.isNullAt(8)) Nil else r.getSeq[Long](8),
+            // legacy records without the flag read as off-grid
+            !r.isNullAt(9) && r.getBoolean(9))
         }
-      commitStateSeeded = true
+      recoverFlushedStaging(records)
+      val staged =
+        if (!hasParquet("staging")) Array.empty[Row]
+        else stagingDf.groupBy("sid").agg(count(lit(1)), min("time"), max("time")).collect()
+      val all = staged.foldLeft(StreamState.fold(records)) { (m, r) =>
+        m.updated(r.getLong(0), m.getOrElse(r.getLong(0), StreamState.Empty)
+          .staged(r.getLong(1), r.getLong(2), r.getLong(3)))
+      }
+      states.clear()
+      states.putAll(all.asJava)
+      seeded = true
     }
   }
+
   /** The PQM write buffer, partitioned by `sid` (each stream's buffer is
     * independent, /root/reference/pqm.go:510-625) and a writer-private
     * `batch` subkey (streaming replay idempotence). Reads declare both
-    * partition columns BIGINT and drop the physical subkey.
-    *
-    * Presence is resolved from the in-memory staged counts once seeded —
-    * the emptiness walk runs ONCE per (re)seed, never per query. */
-  private def stagingDf: DataFrame = {
-    val nonEmpty =
-      if (minorSeeded) minorCounts.exists(_._2 > 0)
-      else hasParquet("staging")
-    (if (nonEmpty) readArea("staging", StagingSchema) else emptyDf(StagingSchema))
-      .select("sid", "time", "value")
-  }
-
-  private def seedMinors(): Unit = synchronized {
-    if (!minorSeeded) {
-      recoverFlushedStaging()
-      stagingDf.groupBy("sid")
-        .agg(count(lit(1)), min("time"), max("time")).collect()
-        .foreach { r =>
-          minorCounts(r.getLong(0)) = r.getLong(1)
-          stagedEnvelopes(r.getLong(0)) = (r.getLong(2), r.getLong(3))
-        }
-      minorSeeded = true
-    }
-  }
+    * partition columns BIGINT and drop the physical subkey. */
+  private def stagingDf: DataFrame =
+    readArea("staging", StagingSchema).select("sid", "time", "value")
 
   /** Flush crash recovery: each flush commit records the staging batch
     * ids it consumed; a crash between the commit and the staging delete
     * leaves those batches on disk, where a naive restart would re-flush
-    * them as duplicates. On first staging seed, drop any staged batch
-    * dir whose id appears in its stream's latest insert commit — the
+    * them as duplicates. On seeding, drop any staged batch dir whose
+    * id appears in its stream's latest insert commit — the
     * same version-match replay guard as /root/reference/pqm.go:172-179,
     * keyed by batch id instead of journal version. */
-  private def recoverFlushedStaging(): Unit = {
-    if (!exists("staging") || !exists("commits")) return
-    val consumed: Map[Long, Set[Long]] = commits
-      .filter(col("kind") === "insert")
-      .groupBy("sid")
-      .agg(max_by(coalesce(col("batches"), array()), col("version")).as("b"))
-      .collect()
-      .map(r => r.getLong(0) ->
-        r.getSeq[Long](1).toSet)
-      .toMap
-    if (consumed.forall(_._2.isEmpty)) return
+  private def recoverFlushedStaging(records: Seq[CommitRecord]): Unit = {
+    val consumed = records.filter(_.kind == "insert").groupBy(_.sid)
+      .map { case (sid, rs) => sid -> rs.maxBy(_.version).batches.toSet }
+      .filter(_._2.nonEmpty)
+    if (consumed.isEmpty || !exists("staging")) return
     store.listNames("staging")
       .filter(_.startsWith("sid="))
       .foreach { sidDir =>
-        val sid = sidDir.stripPrefix("sid=").toLong
-        val dead = consumed.getOrElse(sid, Set.empty)
+        val dead = consumed.getOrElse(sidDir.stripPrefix("sid=").toLong, Set.empty[Long])
         if (dead.nonEmpty)
           store.listNames(s"staging/$sidDir")
             .filter(_.stripPrefix("batch=").toLongOption.exists(dead.contains))
             .foreach(b => deleteDir(s"staging/$sidDir/$b"))
       }
   }
-  private def minorOf(sid: Long): Long = { seedMinors(); minorCounts.getOrElse(sid, 0L) }
 
   /** Re-seed staged counts from disk — call after an external writer
     * (e.g. StreamingIngest) appended to this root's staging area. */
-  def refreshStaging(): Unit = synchronized {
-    minorCounts.clear(); stagedEnvelopes.clear(); minorSeeded = false
-  }
+  def refreshStaging(): Unit = synchronized { seeded = false }
 
   /** Re-read the catalog from disk — call after an external process
     * rewrote it (a writer's annotation CAS / obliterate seen from a
@@ -976,11 +937,8 @@ class Btrdb(val spark: SparkSession, val root: String,
     * touched the commit log (recovery tooling, tests). */
   def refreshCommits(): Unit = synchronized {
     invalidateCommits()
-    majorCounts.clear(); deletes.clear(); envelopes.clear()
-    compactedFloor.clear(); gridOk.clear(); commitRanges.clear()
-    commitStateSeeded = false
+    seeded = false
     invalidatePyramidPresence()
-    pyramidWmCache.clear()
     wmEnabledCache = null
   }
 
@@ -1083,30 +1041,12 @@ class Btrdb(val spark: SparkSession, val root: String,
     * (/root/reference/pqm.go:337-355). */
   def version(uuid: String): (Long, Long) = versionOf(sidOf(uuid))
 
-  private def versionOf(sid: Long): (Long, Long) = (majorOf(sid), minorOf(sid))
-
-  private def majorOf(sid: Long): Long = {
-    seedCommitState()
-    majorCounts.getOrElse(sid, 0L)
+  private def versionOf(sid: Long): (Long, Long) = {
+    val s = stateOf(sid)
+    (s.major, s.minor)
   }
 
-  private def hasDeleteDebt(sid: Long): Boolean = {
-    seedCommitState()
-    synchronized(deletes.contains(sid))
-  }
-
-  /** The stream's live delete commits (see [[deletes]]). */
-  private def deletesOf(sid: Long): Vector[(Long, Long, Long)] = {
-    seedCommitState()
-    synchronized(deletes.getOrElse(sid, Vector.empty))
-  }
-
-  /** True iff the stream's committed values all lie on the cents grid
-    * (empty streams trivially do). */
-  private def gridOf(sid: Long): Boolean = {
-    seedCommitState()
-    gridOk.getOrElse(sid, true)
-  }
+  private def majorOf(sid: Long): Long = stateOf(sid).major
 
   /** Insert: validate, stage; auto-commit when the buffer crosses the
     * threshold (PQM semantics, /root/reference/pqm.go:510-625).
@@ -1124,32 +1064,30 @@ class Btrdb(val spark: SparkSession, val root: String,
     // all derive from them — the raw batch is only read once more, by
     // the point-log write itself
     val partials = batchPartials(batch).cache()
-    val st = batchStats(partials)
-    if (st.n == 0) { partials.unpersist(); return version(uuid) }
-    require(st.bad == 0,
-      s"${st.bad} points rejected: NaN/Inf value or time out of range")
-    val out =
-      if (minorOf(sid) == 0 && st.n >= bufferCommitThreshold) {
-        // large batch, empty buffer: commit directly — no staging round-trip
-        commitBatch(sid, batch, st, partials)
-        version(uuid)
-      } else {
-        // unique engine-generated batch id (disjoint from StreamingIngest's
-        // small checkpoint batchIds): flush records the ids it consumes,
-        // making an interrupted flush recoverable without duplicates
-        batch.withColumn("batch", lit(batchIdGen.incrementAndGet()))
-          .sortWithinPartitions("time")
-          .write.mode(SaveMode.Append).partitionBy("sid", "batch")
-          .parquet(path("staging"))
-        synchronized {
-          minorCounts(sid) = minorOf(sid) + st.n
-          widenStaged(sid, st.tmin, st.tmax)
+    try {
+      val st = batchStats(partials)
+      if (st.n > 0) require(st.bad == 0,
+        s"${st.bad} points rejected: NaN/Inf value or time out of range")
+      writing(sid) {
+        if (st.n > 0) {
+          if (stateOf(sid).minor == 0 && st.n >= bufferCommitThreshold)
+            // large batch, empty buffer: commit directly — no staging round-trip
+            commitBatch(sid, batch, st, partials)
+          else {
+            // unique engine-generated batch id (disjoint from StreamingIngest's
+            // small checkpoint batchIds): flush records the ids it consumes,
+            // making an interrupted flush recoverable without duplicates
+            batch.withColumn("batch", lit(batchIdGen.incrementAndGet()))
+              .sortWithinPartitions("time")
+              .write.mode(SaveMode.Append).partitionBy("sid", "batch")
+              .parquet(path("staging"))
+            publish(sid)(_.staged(st.n, st.tmin, st.tmax))
+            if (stateOf(sid).minor >= bufferCommitThreshold) flushImpl(sid)
+          }
         }
-        if (minorOf(sid) >= bufferCommitThreshold) flushImpl(sid)
-        version(uuid)
+        versionOf(sid)
       }
-    partials.unpersist()
-    out
+    } finally partials.unpersist()
   }
 
   /** Stage a multi-stream batch in ONE pass: `points` carries
@@ -1175,27 +1113,20 @@ class Btrdb(val spark: SparkSession, val root: String,
         s"$bad points rejected: NaN/Inf value or time out of range")
       val known = catalog.filter(!col("tombstoned"))
         .select("sid").collect().map(_.getLong(0)).toSet
-      val unknown = counts.map(_.getLong(0)).filterNot(known)
+      val sids = counts.map(_.getLong(0)).toSeq
+      val unknown = sids.filterNot(known)
       require(unknown.isEmpty, s"unknown sids: ${unknown.mkString(",")}")
-      counts.map(_.getLong(0)).foreach(requireNotMigratingOut(_, "insertAll"))
-      seedMinors()
-      batch.withColumn("batch", lit(batchIdGen.incrementAndGet()))
-        .sortWithinPartitions("time")
-        .write.mode(SaveMode.Append).partitionBy("sid", "batch")
-        .parquet(path("staging"))
-      synchronized {
-        counts.foreach { r =>
-          minorCounts(r.getLong(0)) =
-            minorCounts.getOrElse(r.getLong(0), 0L) + r.getLong(1)
-          widenStaged(r.getLong(0), r.getLong(3), r.getLong(4))
-        }
+      sids.foreach(requireNotMigratingOut(_, "insertAll"))
+      seed() // before the write: seeding counts the staged files
+      writing(sids: _*) {
+        batch.withColumn("batch", lit(batchIdGen.incrementAndGet()))
+          .sortWithinPartitions("time")
+          .write.mode(SaveMode.Append).partitionBy("sid", "batch")
+          .parquet(path("staging"))
+        counts.foreach(r =>
+          publish(r.getLong(0))(_.staged(r.getLong(1), r.getLong(3), r.getLong(4))))
       }
     }
-
-  private def widenStaged(sid: Long, tmin: Long, tmax: Long): Unit = synchronized {
-    stagedEnvelopes(sid) = stagedEnvelopes.get(sid).fold((tmin, tmax)) {
-      case (a, b) => (math.min(a, tmin), math.max(b, tmax)) }
-  }
 
   /** Granularity of the one-pass batch partials: the finest pyramid
     * level (so the fold needs no re-aggregation) but never coarser than
@@ -1315,8 +1246,8 @@ class Btrdb(val spark: SparkSession, val root: String,
       // and sortWithinPartitions keeps per-file row-group time stats
       // tight for pushdown
       .sortWithinPartitions("sid", "time"), SaveMode.Append)
-    appendCommit(sid, v, "insert", st.tmin, st.tmax, st.n, st.ranges,
-      consumedBatches, grid = st.offGrid == 0L, compacted = asCompacted)
+    appendCommit(CommitRecord(sid, v, "insert", st.tmin, st.tmax, st.n, st.ranges,
+      asCompacted, consumedBatches, grid = st.offGrid == 0L))
     // INSERT path: the batch's partial aggregates fold into the existing
     // rollup rows — no point-log rescan, no second batch pass (the
     // quantile histogram, when enabled, is the one extra batch pass:
@@ -1344,21 +1275,19 @@ class Btrdb(val spark: SparkSession, val root: String,
   def flush(uuid: String): (Long, Long) =
     admission.run(Admission.Write)(flushImpl(sidOf(uuid)))
 
-  private def flushImpl(sid: Long): (Long, Long) = {
-    if (minorOf(sid) == 0) return versionOf(sid)
-    val staged = stagingDf.filter(col("sid") === sid).cache()
-    val partials = batchPartials(staged).cache()
-    val st = batchStats(partials)
-    if (st.n == 0) {
-      partials.unpersist(); staged.unpersist()
-      synchronized { minorCounts(sid) = 0; stagedEnvelopes -= sid }
-      return versionOf(sid)
+  private def flushImpl(sid: Long): (Long, Long) = writing(sid) {
+    if (stateOf(sid).minor > 0) {
+      val staged = stagingDf.filter(col("sid") === sid).cache()
+      val partials = batchPartials(staged).cache()
+      val st = batchStats(partials)
+      if (st.n > 0) {
+        commitBatch(sid, staged, st, partials, consumedBatches = stagedBatches(sid))
+        deleteDir(s"staging/sid=$sid")
+      }
+      partials.unpersist()
+      staged.unpersist()
+      publish(sid)(_.flushed)
     }
-    commitBatch(sid, staged, st, partials, consumedBatches = stagedBatches(sid))
-    partials.unpersist()
-    staged.unpersist()
-    deleteDir(s"staging/sid=$sid")
-    synchronized { minorCounts(sid) = 0; stagedEnvelopes -= sid }
     versionOf(sid)
   }
 
@@ -1370,13 +1299,12 @@ class Btrdb(val spark: SparkSession, val root: String,
     * everything — the shutdown drain). Run from a scheduler or after a
     * streaming micro-batch burst; returns the flushed uuids. */
   def flushAll(maxAgeMillis: Long = 8L * 3600 * 1000): Seq[String] = {
-    seedMinors()
     val now = System.currentTimeMillis()
-    val staged = minorCounts.filter(_._2 > 0).keys.toSeq.sorted
-    val flushed = staged.filter { sid =>
+    val staged = snapshot().filter(_._2.minor > 0)
+    val flushed = staged.keys.toSeq.sorted.filter { sid =>
       val oldest: Long =
         store.oldestFileMtime(s"staging/sid=$sid").getOrElse(Long.MaxValue)
-      minorCounts(sid) >= bufferCommitThreshold ||
+      staged(sid).minor >= bufferCommitThreshold ||
         (oldest != Long.MaxValue && now - oldest >= maxAgeMillis)
     }
     flushed.foreach(sid => admission.run(Admission.Write)(flushImpl(sid)))
@@ -1407,11 +1335,13 @@ class Btrdb(val spark: SparkSession, val root: String,
   private def deleteRangeImpl(uuid: String, start: Long, end: Long): (Long, Long) = {
     val sid = sidOf(uuid)
     requireNotMigratingOut(sid, "deleteRange")
-    flushImpl(sid) // deletes apply to committed data, like the reference
-    val v = majorOf(sid) + 1
-    appendCommit(sid, v, "delete", start, end, 0, Seq((start, end)))
-    maintainPyramid(sid, Seq((start, end)), foldPartials = None, v)
-    version(uuid)
+    writing(sid) {
+      flushImpl(sid) // deletes apply to committed data, like the reference
+      val v = majorOf(sid) + 1
+      appendCommit(CommitRecord(sid, v, "delete", start, end, 0, Seq((start, end))))
+      maintainPyramid(sid, Seq((start, end)), foldPartials = None, v)
+      versionOf(sid)
+    }
   }
 
   // ---- migration replay (Federation.migrate) --------------------------
@@ -1447,16 +1377,17 @@ class Btrdb(val spark: SparkSession, val root: String,
     * Returns the number of orphan rows dropped. */
   private[engine] def dropUncommittedReplay(uuid: String): Long = {
     val sid = sidOf(uuid)
-    val maj = majorOf(sid)
-    val orphan = col("sid") === sid && col("version") > maj
-    // the latest read without the write buffer reads every written row
-    val touched = pointLog(Some(Seq(sid)), buffered = false).frame
-      .filter(orphan)
-      .groupBy(shiftright(col("time"), tBucketPw).as("tb"))
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    if (touched.nonEmpty) rewritePoints(sid % sBuckets, touched.contains, orphan)
-    touched.values.sum
+    writing(sid) {
+      val orphan = col("sid") === sid && col("version") > majorOf(sid)
+      // the latest read without the write buffer reads every written row
+      val touched = pointLog(Some(Seq(sid)), buffered = false).frame
+        .filter(orphan)
+        .groupBy(shiftright(col("time"), tBucketPw).as("tb"))
+        .agg(count(lit(1)).as("n"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      if (touched.nonEmpty) rewritePoints(sid % sBuckets, touched.contains, orphan)
+      touched.values.sum
+    }
   }
 
   /** Replay one insert generation at a PINNED version — the migration
@@ -1471,33 +1402,32 @@ class Btrdb(val spark: SparkSession, val root: String,
                                    asCompacted: Boolean = false): Unit =
     admission.run(Admission.Write) {
       val sid = sidOf(uuid)
-      require(atVersion > majorOf(sid),
-        s"replay version $atVersion not above major ${majorOf(sid)}")
-      require(minorOf(sid) == 0, "replay into a stream with staged points")
-      val batch = points.select(lit(sid).as("sid"),
-        col("time").cast("long").as("time"),
-        col("value").cast("double").as("value"),
-        col("version").cast("long").as("version"))
-      val partials = batchPartials(batch).cache()
-      val st = batchStats(partials)
-      if (st.n > 0) {
-        require(st.bad == 0,
-          s"${st.bad} replayed points invalid: NaN/Inf or time out of range")
-        commitBatch(sid, batch, st, partials, atVersion = Some(atVersion),
-          asCompacted = asCompacted)
-      } else {
-        // a zero-survivor compacted source generation: record the
-        // version so pinned reads line up (the source compactor's
-        // n == 0 convention: tmin = tmax = 0, one degenerate range);
-        // appendCommit's n == 0 short-circuit leaves the envelope
-        // untouched — nothing exists to cover
-        appendCommit(sid, atVersion, "insert", 0L, 0L, 0L, Seq((0L, 1L)),
-          grid = true, compacted = asCompacted)
-        // nothing to fold, but the watermark must advance (and heal any
-        // earlier crashed fold) or the rollup would read as stale
-        maintainPyramid(sid, Nil, foldPartials = None, atVersion)
+      writing(sid) {
+        requireReplayable(sid, atVersion)
+        val batch = points.select(lit(sid).as("sid"),
+          col("time").cast("long").as("time"),
+          col("value").cast("double").as("value"),
+          col("version").cast("long").as("version"))
+        val partials = batchPartials(batch).cache()
+        val st = batchStats(partials)
+        if (st.n > 0) {
+          require(st.bad == 0,
+            s"${st.bad} replayed points invalid: NaN/Inf or time out of range")
+          commitBatch(sid, batch, st, partials, atVersion = Some(atVersion),
+            asCompacted = asCompacted)
+        } else {
+          // a zero-survivor compacted source generation: record the
+          // version so pinned reads line up (the source compactor's
+          // n == 0 convention: tmin = tmax = 0, one degenerate range),
+          // which covers no time (see StreamState.committed)
+          appendCommit(CommitRecord(sid, atVersion, "insert", 0L, 0L, 0L, Seq((0L, 1L)),
+            asCompacted, grid = true))
+          // nothing to fold, but the watermark must advance (and heal any
+          // earlier crashed fold) or the rollup would read as stale
+          maintainPyramid(sid, Nil, foldPartials = None, atVersion)
+        }
+        partials.unpersist()
       }
-      partials.unpersist()
     }
 
   /** Replay one delete commit at a PINNED version — appends the
@@ -1508,13 +1438,18 @@ class Btrdb(val spark: SparkSession, val root: String,
                                    start: Long, end: Long): Unit =
     admission.run(Admission.Write) {
       val sid = sidOf(uuid)
-      require(atVersion > majorOf(sid),
-        s"replay version $atVersion not above major ${majorOf(sid)}")
-      require(minorOf(sid) == 0, "replay into a stream with staged points")
-      appendCommit(sid, atVersion, "delete", start, end, 0,
-        Seq((start, end)))
-      maintainPyramid(sid, Seq((start, end)), foldPartials = None, atVersion)
+      writing(sid) {
+        requireReplayable(sid, atVersion)
+        appendCommit(CommitRecord(sid, atVersion, "delete", start, end, 0, Seq((start, end))))
+        maintainPyramid(sid, Seq((start, end)), foldPartials = None, atVersion)
+      }
     }
+
+  private def requireReplayable(sid: Long, atVersion: Long): Unit = {
+    val s = stateOf(sid)
+    require(atVersion > s.major, s"replay version $atVersion not above major ${s.major}")
+    require(s.minor == 0, "replay into a stream with staged points")
+  }
 
   /** Compact one stream: materialize its latest-visible snapshot (delete
     * anti-filters applied, old generations dropped), rewrite the
@@ -1544,9 +1479,17 @@ class Btrdb(val spark: SparkSession, val root: String,
 
   private def compactImpl(uuid: String): Long = {
     val sid = sidOf(uuid)
-    flushImpl(sid)
-    val maj = majorOf(sid)
-    if (maj == 0) return 0
+    writing(sid) {
+      flushImpl(sid)
+      val s = stateOf(sid)
+      if (s.major > 0) collapse(sid, s)
+      s.major
+    }
+  }
+
+  /** Compacts stream `sid`, whose state is `s` (see [[compact]]). */
+  private def collapse(sid: Long, s: StreamState): Unit = {
+    val maj = s.major
     // Heal any crash-unfolded ranges NOW, while the per-commit records
     // they derive from still exist — the history collapse below erases
     // them, and a crashed delete-fold would otherwise survive as
@@ -1561,9 +1504,9 @@ class Btrdb(val spark: SparkSession, val root: String,
     if (missedPreCompact.nonEmpty)
       maintainPyramidInner(sid, missedPreCompact, None)
     // rows of THIS stream erased by a delete commit (merge-on-read debt)
-    val dirty = hides(Seq(sid), maj).foldLeft(lit(false))(_ || _)
+    val dirty = hides(Seq(sid), _ => s, maj).foldLeft(lit(false))(_ || _)
     val keptOwn = col("sid") === sid && !dirty
-    val env = envelopes.get(sid)
+    val env = s.envelope
     // the rewriter's one agg pass per tbucket also accumulates the
     // surviving envelope
     val kept = rewritePoints(sid % sBuckets,
@@ -1583,26 +1526,17 @@ class Btrdb(val spark: SparkSession, val root: String,
     // file move), then garbage-collect the superseded per-commit files.
     // A crash between the two leaves both on disk and the commit
     // reader's supersede rule picks the compacted one.
-    writeCommitFile(s"commit-$sid-$maj-c.json",
-      commitJson(sid, maj, "insert", tmin, tmax, n,
-        Seq((tmin, tmax + 1)), compacted = true,
-        // surviving points are a subset of what the superseded records
-        // described — carry the stream's AND-folded grid flag forward
-        grid = gridOf(sid)))
+    appendCommit(CommitRecord(sid, maj, "insert", tmin, tmax, n,
+      Seq((tmin, tmax + 1)), compacted = true,
+      // surviving points are a subset of what the superseded records
+      // described — carry the stream's AND-folded grid flag forward
+      grid = s.grid))
     gcCommitFiles(sid, maj)
     invalidateCommits()
-    synchronized { // history collapsed; debt cleared
-      deletes -= sid
-      commitRanges(sid) = commitRanges.getOrElse(sid, Vector.empty)
-        .filter(_._1 > maj) :+ ((maj, tmin, tmax + 1))
-    }
-    compactedFloor(sid) = maj
-    if (n > 0) envelopes(sid) = (tmin, tmax) else envelopes -= sid
     // crash-unfolded ranges were healed before the collapse; only the
     // surviving envelope recompute and the stamp remain
     if (n > 0) maintainPyramid(sid, Seq((tmin, tmax + 1)), foldPartials = None, maj)
     else if (pyramidLevels.nonEmpty) stampPyramidWatermark(sid, maj)
-    maj
   }
 
   /** Delete this stream's plain commit files at or below the compacted
@@ -1635,7 +1569,12 @@ class Btrdb(val spark: SparkSession, val root: String,
       .select("sid").collect().map(_.getLong(0)).toSeq.sorted
     val active = dead.filter(sid =>
       majorOf(sid) > 0 || exists(s"staging/sid=$sid"))
-    if (active.isEmpty) return Nil
+    if (active.nonEmpty) writing(active: _*)(purge(active))
+    active
+  }
+
+  /** Deletes the bytes of the obliterated streams `active`. */
+  private def purge(active: Seq[Long]): Unit = {
     val buckets = active.map(_ % sBuckets).distinct
     // tbucket-at-a-time (same bounded-working-set shape as compact):
     // untouched partitions are detected by one agg and never rewritten;
@@ -1689,15 +1628,9 @@ class Btrdb(val spark: SparkSession, val root: String,
       gcCommitFiles(sid, Long.MaxValue)
       deleteDir(s"staging/sid=$sid")
       store.delete(s"pyramid/_wm-$sid")
-      synchronized {
-        majorCounts -= sid; envelopes -= sid; deletes -= sid
-        commitRanges -= sid; minorCounts -= sid; stagedEnvelopes -= sid
-        compactedFloor -= sid; gridOk -= sid
-        pyramidWmCache -= sid
-      }
+      states.remove(sid)
     }
     invalidateCommits()
-    active
   }
 
   /** The point-log writer: Parquet partitioned by (sbucket, tbucket),
@@ -1772,20 +1705,6 @@ class Btrdb(val spark: SparkSession, val root: String,
     (cp, () => own.foreach(_.unpersist(blocking = false)))
   }
 
-  private def commitJson(sid: Long, v: Long, kind: String,
-                         tmin: Long, tmax: Long, n: Long,
-                         ranges: Seq[(Long, Long)],
-                         compacted: Boolean,
-                         batches: Seq[Long] = Nil,
-                         grid: Boolean = false): String = {
-    val rangesJson = ranges
-      .map { case (s, e) => s"""{"s":$s,"e":$e}""" }.mkString("[", ",", "]")
-    s"""{"sid":$sid,"version":$v,"kind":"$kind","tmin":$tmin,""" +
-      s""""tmax":$tmax,"npoints":$n,"ranges":$rangesJson,""" +
-      s""""compacted":$compacted,"batches":${batches.mkString("[", ",", "]")},""" +
-      s""""grid":$grid}""" + "\n"
-  }
-
   /** Staged batch ids of one stream, from the partition directory names. */
   private def stagedBatches(sid: Long): Seq[Long] =
     store.listNames(s"staging/sid=$sid")
@@ -1837,45 +1756,12 @@ class Btrdb(val spark: SparkSession, val root: String,
   /** Append one commit record: a single JSON line written by the driver
     * — no Spark job for a metadata row (the analog of the reference's
     * superblock append, blockstore.go:317-360). */
-  private def appendCommit(sid: Long, v: Long, kind: String,
-                           tmin: Long, tmax: Long, n: Long,
-                           ranges: Seq[(Long, Long)],
-                           batches: Seq[Long] = Nil,
-                           grid: Boolean = false,
-                           compacted: Boolean = false): Unit = {
-    writeCommitFile(s"commit-$sid-$v${if (compacted) "-c" else ""}.json",
-      commitJson(sid, v, kind, tmin, tmax, n, ranges, compacted = compacted,
-        batches = batches, grid = grid))
-    seedCommitState()
-    synchronized {
-      majorCounts(sid) = math.max(majorCounts.getOrElse(sid, 0L), v)
-      // a flush commit empties the write buffer in the same step as it
-      // raises the major version, so no reader sees its rows both
-      // committed and staged (the staged files are deleted later)
-      if (batches.nonEmpty) { minorCounts(sid) = 0; stagedEnvelopes -= sid }
-      if (kind == "delete")
-        deletes(sid) = deletes.getOrElse(sid, Vector.empty) :+ ((v, tmin, tmax))
-      else if (n > 0) {
-        envelopes(sid) = envelopes.get(sid) match {
-          case Some((a, b)) => (math.min(a, tmin), math.max(b, tmax))
-          case None => (tmin, tmax)
-        }
-        gridOk(sid) = gridOk.getOrElse(sid, true) && grid
-      }
-      // n == 0 insert (a replayed zero-survivor compacted generation):
-      // nothing exists to cover — envelope and grid flag stay untouched
-      // a compacted record collapses everything at or below it — pins
-      // below the floor read empty (migration replay of a compacted
-      // source record reproduces the floor at the target), and its
-      // deletes at or below it are superseded like the commit reader's
-      if (compacted) {
-        compactedFloor(sid) = v
-        deletes.get(sid).map(_.filter(_._1 > v)).foreach { kept =>
-          if (kept.isEmpty) deletes -= sid else deletes(sid) = kept }
-      }
-      commitRanges(sid) = commitRanges.getOrElse(sid, Vector.empty)
-        .filter(r => !compacted || r._1 > v) ++ ranges.map { case (s, e) => (v, s, e) }
-    }
+  private def appendCommit(r: CommitRecord): Unit = {
+    writeCommitFile(s"commit-${r.sid}-${r.version}${if (r.compacted) "-c" else ""}.json", r.json)
+    // a flush commit empties the write buffer in the same step as it
+    // raises the major version, so no reader sees its rows both
+    // committed and staged (the staged files are deleted later)
+    publish(r.sid)(s => if (r.batches.nonEmpty) s.committed(r).flushed else s.committed(r))
     invalidateCommits()
   }
 
@@ -1909,42 +1795,39 @@ class Btrdb(val spark: SparkSession, val root: String,
     * collapsed. `None` reads every stream, latest and whole-domain, from
     * the area roots (the SQL view's plan).
     *
-    * The decode on the calling thread (one stream only) applies the same
-    * rule in Scala. It takes the stream's major version, delete list and
-    * staged flag in one step and pins the committed rows to that major,
-    * so the rows of a flush that commits meanwhile are never read from
-    * both the log and the buffer. */
+    * Both the plan and the decode on the calling thread (one stream only,
+    * the same rule in Scala) read one snapshot of each stream's state and
+    * the decode pins the committed rows to its major, so the rows of a
+    * flush that commits meanwhile are never read from both the log and
+    * the buffer. */
   private def pointLog(sids: Option[Seq[Long]],
                        version: Long = TimeConsts.LatestGeneration,
                        start: Long = TimeConsts.MinimumTime,
                        end: Long = TimeConsts.MaximumTime,
                        buffered: Boolean = true): PointLog = {
-    seedCommitState(); seedMinors()
     val latest = version == TimeConsts.LatestGeneration
     sids match {
       case None =>
         require(latest && start == TimeConsts.MinimumTime &&
           end == TimeConsts.MaximumTime,
           "a read of every stream is a latest read of the whole time domain")
+        val snap = snapshot()
         val committed = antiFiltered(readOr("points", PointsSchema),
-          synchronized(deletes.keys.toSeq), version)
+          snap.filter(_._2.deletes.nonEmpty).keys.toSeq.sorted, snap, version)
           .select("sid", "time", "value", "version")
         new PointLog(Long.MaxValue,
-          if (buffered && minorCounts.exists(_._2 > 0))
+          if (buffered && snap.values.exists(_.minor > 0))
             committed.unionByName(stagingDf.withColumn("version", lit(Long.MaxValue)))
           else committed,
           _ => throw new UnsupportedOperationException("a whole-area read has no local decode"))
       case Some(all) =>
-        val (live, state) = synchronized {
-          (all.filter(sid => version >= compactedFloor.getOrElse(sid, 0L)),
-            all.map(sid => sid -> ((majorCounts.getOrElse(sid, 0L),
-              minorCounts.getOrElse(sid, 0L) > 0, deletes.getOrElse(sid, Vector.empty)))).toMap)
-        }
+        val snap = all.map(sid => sid -> stateOf(sid)).toMap
+        val live = all.filter(sid => version >= snap(sid).floor)
         val buckets = live.map(sbucketOf).distinct
         val (tlo, thi) = (start >> tBucketPw, (end - 1) >> tBucketPw)
         val scan = scanDirs("points", buckets.map(b => s"points/sbucket=$b"),
           PointsSchema)(within("tbucket", tlo, thi))
-        val staged = if (buffered && latest) live.filter(state(_)._2) else Nil
+        val staged = if (buffered && latest) live.filter(snap(_).minor > 0) else Nil
         val buffer = if (staged.isEmpty) None else Some(stagedOf(staged))
         new PointLog(scan.bytes + buffer.fold(0L)(_.bytes), {
           val committed = antiFiltered(scan.frame
@@ -1952,7 +1835,7 @@ class Btrdb(val spark: SparkSession, val root: String,
               col("tbucket") >= tlo && col("tbucket") <= thi &&
               col("sid").isin(live: _*) && col("version") <= version &&
               col("time") >= start && col("time") < end),
-            live, version, scoped = live.size > 1)
+            live, snap, version, scoped = live.size > 1)
             .select("sid", "time", "value", "version")
           buffer.fold(committed)(b => committed.unionByName(b.frame
             .select("sid", "time", "value")
@@ -1961,9 +1844,8 @@ class Btrdb(val spark: SparkSession, val root: String,
         }, f => {
           require(all.size == 1, "the local decode reads one stream")
           live.foreach { sid =>
-            val (major, _, dels) = state(sid)
-            val pin = math.min(version, major)
-            val hidden = dels.filter(_._1 <= pin)
+            val pin = math.min(version, snap(sid).major)
+            val hidden = snap(sid).deletes.filter(_._1 <= pin)
             localParquet.foreach(scan.files, LocalPointColumns,
                 LocalParquet.inRange(sid, "time", start, end)) { b =>
               val (sids, times, values, versions) =
@@ -1984,24 +1866,24 @@ class Btrdb(val spark: SparkSession, val root: String,
     }
   }
 
-  /** The one delete predicate: the rows of `sids` that their streams'
-    * delete lists hide from a read pinned at `version` — a row in the
-    * range of a delete commit at or below the pin, written below that
-    * commit — as one condition per delete commit; a row is hidden iff
-    * any holds. Each stream's rows are scoped by `sid`, unless the frame
-    * holds that one stream only (`scoped = false`). */
-  private def hides(sids: Seq[Long], version: Long,
+  /** The one delete predicate: the rows of `sids` that the delete lists
+    * of their states (`state`) hide from a read pinned at `version` — a
+    * row in the range of a delete commit at or below the pin, written
+    * below that commit — as one condition per delete commit; a row is
+    * hidden iff any holds. Each stream's rows are scoped by `sid`, unless
+    * the frame holds that one stream only (`scoped = false`). */
+  private def hides(sids: Seq[Long], state: Long => StreamState, version: Long,
                     scoped: Boolean = true): Seq[Column] =
-    sids.flatMap(sid => deletesOf(sid).filter(_._1 <= version).map {
+    sids.flatMap(sid => state(sid).deletes.filter(_._1 <= version).map {
       case (dv, lo, hi) =>
         (if (scoped) col("sid") === sid else lit(true)) &&
           col("time") >= lo && col("time") < hi && col("version") < dv
     })
 
   /** Drops the rows [[hides]] selects, one filter per delete commit. */
-  private def antiFiltered(df: DataFrame, sids: Seq[Long], version: Long,
-                           scoped: Boolean = true): DataFrame =
-    hides(sids, version, scoped).foldLeft(df)((d, hidden) => d.filter(!hidden))
+  private def antiFiltered(df: DataFrame, sids: Seq[Long], state: Long => StreamState,
+                           version: Long, scoped: Boolean = true): DataFrame =
+    hides(sids, state, version, scoped).foldLeft(df)((d, hidden) => d.filter(!hidden))
 
   /** The write buffer of `sids`, listed from their `staging/sid=S`
     * directories as one relation. */
@@ -2090,9 +1972,10 @@ class Btrdb(val spark: SparkSession, val root: String,
     // reference merges its write buffer into stat results — aggregate
     // the buffer alone and COMBINE partials (Σcnt, min, Σsum, max;
     // mean = Σ(mean·count)/Σcount, /root/reference/merger.go:126-208)
-    if (rollupServes(level.isDefined, sid, version, mergesBuffer = true)) {
+    val state = stateOf(sid)
+    if (rollupServes(level.isDefined, sid, state, version, mergesBuffer = true)) {
       val rollup = pyramidScan(sid, level.get, s, e)
-      val buffer = if (minorOf(sid) == 0) None else Some(stagedOf(Seq(sid)))
+      val buffer = if (state.minor == 0) None else Some(stagedOf(Seq(sid)))
       val total = rollup.bytes + buffer.fold(0L)(_.bytes)
       new Read(total, {
         val committed = rollup.frame
@@ -2149,9 +2032,9 @@ class Btrdb(val spark: SparkSession, val root: String,
     val s = TimeOps.alignDown(start, pw)
     val e = TimeOps.alignDown(end, pw)
     val sids = uuids.map(sidOf)
-    seedCommitState()
     val level = rollupLevel(pw)
-    val (pyrSids, rawSids) = sids.partition(rollupServes(level.isDefined, _))
+    val (pyrSids, rawSids) =
+      sids.partition(sid => rollupServes(level.isDefined, sid, stateOf(sid)))
     val parts = Seq(
       if (pyrSids.isEmpty) None else Some {
         pyramidRead(s"pyramid/pw=${level.get}")
@@ -2207,8 +2090,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     val s = TimeOps.alignDown(start, pw)
     val e = TimeOps.alignDown(end, pw)
     val sids = uuids.map(sidOf)
-    seedCommitState()
-    val (pyrSids, rawSids) = sids.partition(rollupServes(qhistHas, _))
+    val (pyrSids, rawSids) = sids.partition(sid => rollupServes(qhistHas, sid, stateOf(sid)))
     val parts = Seq(
       if (pyrSids.isEmpty) None else Some {
         readArea("qhist", QhistSchema)
@@ -2305,16 +2187,15 @@ class Btrdb(val spark: SparkSession, val root: String,
   private[graft] def pyramidPartialsFor(sids: Option[Seq[Long]],
       lo: Option[Long], hi: Option[Long], pw: Int,
       needExactSum: Boolean): Option[DataFrame] = {
-    seedCommitState(); seedMinors()
     val level = rollupLevel(pw)
     // hidden = tombstoned + migrating-in: both are excluded from the
     // point views, so the substituted frame must exclude them too
     val tomb = tombstonedSids ++ migratingInSids
-    val affected = sids.getOrElse(
-      (majorCounts.keys ++ minorCounts.keys).toSeq.distinct)
-      .filterNot(tomb.contains)
-    val clean = affected.forall(rollupServes(level.isDefined, _))
-    val exactOk = !needExactSum || affected.forall(gridOf)
+    val snap = snapshot()
+    val state = (sid: Long) => snap.getOrElse(sid, StreamState.Empty)
+    val affected = sids.getOrElse(snap.keys.toSeq).filterNot(tomb.contains)
+    val clean = affected.forall(sid => rollupServes(level.isDefined, sid, state(sid)))
+    val exactOk = !needExactSum || affected.forall(state(_).grid)
     if (level.isEmpty || !clean || !exactOk) None
     else {
       var df = pyramidRead(s"pyramid/pw=${level.get}")
@@ -2381,7 +2262,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     val bucketStart: Column => Column =
       t => if (depth <= 0) t else TimeOps.clampTime(t, c)
     val level = (if (depth > 0) rollupLevel(c) else None)
-      .filter(_ => rollupServes(true, sid, version))
+      .filter(_ => rollupServes(true, sid, stateOf(sid), version))
     val agg0 = level match {
       case Some(l) =>
         val rollup = pyramidScan(sid, l, lo, hi)
@@ -2425,13 +2306,12 @@ class Btrdb(val spark: SparkSession, val root: String,
   private def nearestProbedImpl(uuid: String, t: Long, backward: Boolean,
       version: Long): (Option[(Long, Double)], Int) = {
     val sid = sidOf(uuid)
-    seedCommitState()
+    val state = stateOf(sid)
     // probe bound = committed envelope ∪ staged envelope, both in memory
     val stagedEnv =
-      if (version == TimeConsts.LatestGeneration && minorOf(sid) > 0)
-        synchronized(stagedEnvelopes.get(sid))
+      if (version == TimeConsts.LatestGeneration && state.minor > 0) state.stagedEnvelope
       else None
-    val env = (envelopes.get(sid), stagedEnv) match {
+    val env = (state.envelope, stagedEnv) match {
       case (Some((a, b)), Some((c, d))) => Some((math.min(a, c), math.max(b, d)))
       case (x, y) => x.orElse(y)
     }
@@ -2511,7 +2391,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     changesRead(sidOf(uuid), fromVersion, toVersion, resolution).frame
 
   /** [[changes]] on the serving path: (s, e) rows folded on the calling
-    * thread from the in-memory commit ranges ([[commitRanges]]). The
+    * thread from the stream's commit ranges ([[StreamState.ranges]]). The
     * read lists no file, so the small-read rule always serves it there. */
   def serveChanges(uuid: String, fromVersion: Long, toVersion: Long,
                    resolution: Int): Iterator[(Long, Long)] = {
@@ -2522,10 +2402,9 @@ class Btrdb(val spark: SparkSession, val root: String,
 
   private def changesRead(sid: Long, fromVersion: Long, toVersion: Long,
                           resolution: Int): Read[(Long, Long)] = {
-    seedCommitState()
-    val ranges = synchronized(commitRanges.getOrElse(sid, Vector.empty))
+    val ranges = stateOf(sid).ranges
     new Read(0L, {
-      // commit metadata is small (seedCommitState collects it whole): one
+      // commit metadata is small (seeding collects it whole): one
       // partition plans the interval merge and sort with no exchange
       val perRange = commits.coalesce(1).filter(col("sid") === sid)
         .select(col("sid"), col("version"),
@@ -2731,8 +2610,6 @@ class Btrdb(val spark: SparkSession, val root: String,
   // watermarking has no `_wm` files; absence reads as current (the
   // legacy assumption), and the first post-upgrade fold starts
   // stamping.
-  private val pyramidWmCache =
-    scala.collection.mutable.Map.empty[Long, Option[Long]]
   @volatile private var wmEnabledCache: java.lang.Boolean = null
   private def wmEnabled: Boolean = {
     var e = wmEnabledCache
@@ -2745,25 +2622,35 @@ class Btrdb(val spark: SparkSession, val root: String,
     }
     e.booleanValue()
   }
-  private def pyramidWatermark(sid: Long): Option[Long] = synchronized {
-    pyramidWmCache.getOrElseUpdate(sid,
-      store.readString(s"pyramid/_wm-$sid").map(_.trim.toLong))
-  }
+  /** Stream `sid`'s watermark stamp in its state `state`, read from
+    * its file on first use and kept in the stream's state. */
+  private def pyramidWatermark(sid: Long, state: StreamState): Option[Long] =
+    state.watermark.getOrElse {
+      val wm = store.readString(s"pyramid/_wm-$sid").map(_.trim.toLong)
+      states.computeIfPresent(sid, (_, s) =>
+        if (s.watermark.isEmpty) s.copy(watermark = Some(wm)) else s)
+      wm
+    }
   /** The watermark the consistency checks compare against: the per-sid
     * stamp when present; under the enablement marker an ABSENT stamp
     * means no fold ever completed (a crashed FIRST fold reads as 0,
     * stale) — only a root no post-upgrade writer has touched (no
     * marker) keeps the legacy everything-is-current assumption. */
-  private def effectiveWatermark(sid: Long): Option[Long] =
-    pyramidWatermark(sid).orElse(if (wmEnabled) Some(0L) else None)
-  private def stampPyramidWatermark(sid: Long, v: Long): Unit = synchronized {
+  private def effectiveWatermark(sid: Long, state: StreamState): Option[Long] =
+    pyramidWatermark(sid, state).orElse(if (wmEnabled) Some(0L) else None)
+  private def stampPyramidWatermark(sid: Long, v: Long): Unit = {
     store.writeAtomic(s"pyramid/_wm-$sid", v.toString)
-    pyramidWmCache(sid) = Some(v)
+    publish(sid)(_.copy(watermark = Some(Some(v))))
   }
   /** True iff the rollup provably includes every committed generation
     * of `sid` (or the root predates watermarking). */
-  private[graft] def pyramidCurrent(sid: Long): Boolean =
-    pyramidLevels.isEmpty || effectiveWatermark(sid).forall(_ >= majorOf(sid))
+  private[graft] def pyramidCurrent(sid: Long): Boolean = pyramidCurrent(sid, stateOf(sid))
+
+  /** [[pyramidCurrent]] at the stream's state `state`; a stream with no
+    * commit is current whatever its stamp. */
+  private def pyramidCurrent(sid: Long, state: StreamState): Boolean =
+    pyramidLevels.isEmpty || state.major == 0 ||
+      effectiveWatermark(sid, state).forall(_ >= state.major)
 
   /** The deepest maintained rollup level at or below 2^pw, if it holds
     * rows. */
@@ -2772,15 +2659,16 @@ class Btrdb(val spark: SparkSession, val root: String,
 
   /** The one pyramid-serving gate: true iff a rollup table that holds
     * rows (`table`: a level from [[rollupLevel]], or the quantile
-    * histogram) answers stream `sid` at `version` exactly — a latest
+    * histogram) answers stream `sid` in state `state` at `version`
+    * exactly — a latest
     * read of a stream with no delete debt whose rollup includes every
     * commit, and an empty write buffer unless the path merges the
     * buffer itself (`mergesBuffer`). */
-  private def rollupServes(table: Boolean, sid: Long,
+  private def rollupServes(table: Boolean, sid: Long, state: StreamState,
                            version: Long = TimeConsts.LatestGeneration,
                            mergesBuffer: Boolean = false): Boolean =
-    table && version == TimeConsts.LatestGeneration && !hasDeleteDebt(sid) &&
-      pyramidCurrent(sid) && (mergesBuffer || minorOf(sid) == 0)
+    table && version == TimeConsts.LatestGeneration && state.deletes.isEmpty &&
+      pyramidCurrent(sid, state) && (mergesBuffer || state.minor == 0)
 
   /** Ranges of commits whose fold a crash discarded: version in
     * (wm, below). Empty in steady state. Bounded: past `MaxHealRanges`
@@ -2790,17 +2678,14 @@ class Btrdb(val spark: SparkSession, val root: String,
     * whole history "missed": the first post-upgrade fold then does one
     * envelope-wide rebuild instead of a per-commit range list the
     * planner chokes on). */
-  private def missedFoldRanges(sid: Long, below: Long): Seq[(Long, Long)] =
-    effectiveWatermark(sid).filter(_ < below - 1).map { wm =>
-      val rs = commits.filter(col("sid") === sid &&
-          col("version") > wm && col("version") < below)
-        .select(explode(coalesce(col("ranges"),
-          array(struct(col("tmin").as("s"), (col("tmax") + 1).as("e"))))).as("r"))
-        .select(col("r.s"), col("r.e")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+  private def missedFoldRanges(sid: Long, below: Long): Seq[(Long, Long)] = {
+    val state = stateOf(sid)
+    effectiveWatermark(sid, state).filter(_ < below - 1).map { wm =>
+      val rs = state.ranges.collect { case (v, s, e) if v > wm && v < below => (s, e) }
       if (rs.size <= Btrdb.MaxHealRanges) rs
       else Seq((rs.map(_._1).min, rs.map(_._2).max))
     }.getOrElse(Nil)
+  }
 
   /** Maintenance op: recompute any rollup ranges a crash left unfolded
     * and bring the watermark current — for a read-heavy stream that
@@ -2809,13 +2694,15 @@ class Btrdb(val spark: SparkSession, val root: String,
   def repairPyramid(uuid: String): Boolean =
     admission.run(Admission.Maintenance) {
       val sid = sidOf(uuid)
-      if (pyramidCurrent(sid)) false
-      else {
-        val maj = majorOf(sid)
-        val missed = missedFoldRanges(sid, maj + 1)
-        if (missed.nonEmpty) maintainPyramidInner(sid, missed, None)
-        stampPyramidWatermark(sid, maj)
-        true
+      writing(sid) {
+        if (pyramidCurrent(sid)) false
+        else {
+          val maj = majorOf(sid)
+          val missed = missedFoldRanges(sid, maj + 1)
+          if (missed.nonEmpty) maintainPyramidInner(sid, missed, None)
+          stampPyramidWatermark(sid, maj)
+          true
+        }
       }
     }
 
@@ -3187,21 +3074,9 @@ class Btrdb(val spark: SparkSession, val root: String,
 /** One-pass batch statistics (see Btrdb.batchStats). `offGrid` counts
   * values NOT exactly representable on the 2-decimal cents grid — a
   * single off-grid commit forfeits the stream's exact-avg/sum pyramid
-  * serving (see Btrdb.gridOf). */
+  * serving (see StreamState.grid). */
 final case class BatchStats(n: Long, bad: Long, tmin: Long, tmax: Long,
     ranges: Seq[(Long, Long)], offGrid: Long = 0L)
-
-/** One touched time range [s, e) of a commit — the exact point envelope
-  * of a cluster of adjacent commitRangePw buckets. */
-final case class CommitRange(s: Long, e: Long)
-
-/** A commit-log record (mirrors Btrdb.CommitSchema): the source of
-  * truth for versions, visibility, changed-range queries, and pyramid
-  * invalidation. `compacted = true` marks a record that supersedes the
-  * stream's history at-or-below its version. */
-final case class CommitRecord(sid: Long, version: Long, kind: String,
-    tmin: Long, tmax: Long, npoints: Long, ranges: Seq[CommitRange],
-    compacted: Boolean = false)
 
 /** Info RPC response analog (/root/reference/grpcinterface/btrdb.proto:177-186).
   * `pools` carries the admission-control occupancy gauges — the analog

@@ -973,4 +973,69 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!F.exists(Paths.get(s"$rootDir/catalog")))
     assert(db.lookupStreams("gc/").count() == 1)
   }
+
+  test("two writers inserting and flushing one stream commit every acked point exactly once") {
+    import org.apache.spark.sql.functions.col
+    val uuid = "u-two-writers"
+    db.createStream(uuid, "test/twowriters", Map("t" -> "w"))
+    val sid = db.sidOf(uuid)
+    // writer w's round k inserts 16 points at its own disjoint times,
+    // then flushes: the two writers' flushes race on one write buffer
+    val (rounds, batch) = (10, 16L)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val writers = (0 until 2).map { w =>
+      new Thread(() =>
+        try for (k <- 0 until rounds) {
+          val base = (2L * k + w) * batch
+          insertPoints(uuid, (0L until batch).map(i => (base + i, w.toDouble)))
+          db.flush(uuid)
+        } catch { case e: Throwable => failures.add(e) })
+    }
+    writers.foreach(_.start())
+    writers.foreach(_.join())
+    assert(failures.isEmpty, s"a writer failed: ${failures.peek()}")
+    val times = db.rawValues(uuid, 0, 1L << 20).collect().map(_.getLong(0)).toSeq
+    assert(times == (0L until 2L * rounds * batch), "acked points lost or repeated")
+    val versions = db.commits.filter(col("sid") === sid)
+      .select("version").collect().map(_.getLong(0)).toSeq
+    assert(versions.distinct.size == versions.size, s"a commit version repeats: $versions")
+    assert(versions.size == db.version(uuid)._1)
+  }
+
+  test("a fresh attach seeds the same state as the live handle after every kind of commit") {
+    val root = Files.createTempDirectory("seedlive").toString
+    val live = new Btrdb(spark, root, sBuckets = 2, tBucketPw = 8,
+      bufferCommitThreshold = 64, pyramidLevels = Seq(4, 8),
+      pyramidWBucketPw = 12, commitRangePw = 8)
+    val (ua, ub) = ("u-seed-a", "u-seed-b")
+    live.createStream(ua, "test/seed", Map("s" -> "a"))
+    live.createStream(ub, "test/seed", Map("s" -> "b"))
+    def put(uuid: String, ts: Seq[Long], v: Double): Unit =
+      live.insert(uuid, spark.createDataFrame(ts.map(t => (t, v))).toDF("time", "value"))
+    def same(step: String): Unit = {
+      val fresh = Btrdb.attach(spark, root, lockRoot = false)
+      try {
+        // reading the watermarks fills them into both handles' states
+        val sids = live.snapshot().keySet ++ fresh.snapshot().keySet
+        sids.foreach { sid => live.pyramidCurrent(sid); fresh.pyramidCurrent(sid) }
+        assert(fresh.snapshot() == live.snapshot(), step)
+        for (u <- Seq(ua, ub) if live.lookupStreams("test/seed")
+            .filter(org.apache.spark.sql.functions.col("uuid") === u).count() > 0;
+            t <- Seq(10L, 300L); back <- Seq(true, false))
+          assert(fresh.nearestProbed(u, t, back) == live.nearestProbed(u, t, back),
+            s"$step: nearest($t, backward = $back) of $u")
+      } finally fresh.close()
+    }
+    // the handle's first write stages through insertAll, before any read
+    live.insertAll(spark.createDataFrame((5L until 9L).map(t => (live.sidOf(ub), t, 2.0)))
+      .toDF("sid", "time", "value"))
+    put(ua, 0L until 100L, 1.0); same("insert")
+    put(ua, 200L until 210L, 0.123); same("staged insert")
+    live.flush(ua); same("flush")
+    live.deleteRange(ua, 20, 60); same("deleteRange")
+    live.compact(ua); same("compact with survivors")
+    live.deleteRange(ua, 0, 1000); live.compact(ua); same("delete-all plus compact")
+    live.obliterate(ua); live.purgeObliterated(); same("obliterate plus purge")
+    live.close()
+  }
 }
