@@ -264,10 +264,10 @@ object AdminCli {
           val geom = db.store.readString(Btrdb.GeometryFile)
             .map(_.trim).getOrElse("")
           val warns = i.warnings.map(jstr).mkString("[", ",", "]")
-          // serving-path reads of this handle, per kind: on the driver
-          // under the small-read rule, or by a Spark plan
+          // serving-path reads of this handle, per kind, and the points
+          // their rows carried
           val reads = i.reads.toSeq.sortBy(_._1).map { case (k, c) =>
-            s"""${jstr(k)}:{"driver":${c.driver},"spark":${c.spark}}"""
+            s"""${jstr(k)}:{"reads":${c.reads},"points":${c.points}}"""
           }.mkString("{", ",", "}")
           s"""{"op":"info","build":${jstr(i.build)},""" +
             s""""healthy":${i.healthy},"streams":${i.streamCount},""" +

@@ -278,6 +278,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     * be used after close; a new `Btrdb` on the same root takes over. */
   def close(): Unit = synchronized {
     if (heartbeat != null) { heartbeat.shutdownNow(); heartbeat = null }
+    orderedReader.close()
     if (lockHeld) {
       // only remove a lock we still own (a stale takeover may have
       // replaced it while we were paused)
@@ -356,70 +357,55 @@ class Btrdb(val spark: SparkSession, val root: String,
     dirName.startsWith(s"$key=") &&
       dirName.stripPrefix(s"$key=").toLongOption.exists(v => v >= lo && v <= hi)
 
-  /** The small-read rule: a per-stream read whose listed files total at
-    * most `spark.sql.files.openCostInBytes` — Spark's own cost of
-    * opening one file. The serving path ([[served]]) answers such a read
-    * on the calling thread with no Spark job; its DataFrame runs as one
-    * partition, so its aggregate and global sort plan no exchange and
-    * it runs one job with one task. Larger reads keep the parallel
-    * plan. */
-  private def small(bytes: Long): Boolean =
-    bytes <= spark.sessionState.conf.filesOpenCostInBytes
-
+  /** The small-read rule of the public DataFrame reads: a per-stream
+    * read whose listed files total at most
+    * `spark.sql.files.openCostInBytes` — Spark's own cost of opening one
+    * file — runs as one partition, so its aggregate and global sort plan
+    * no exchange and it runs one job with one task. Larger reads keep the
+    * parallel plan. The serving path ([[served]]) runs no plan at all. */
   private def fit(df: DataFrame, bytes: Long): DataFrame =
-    if (small(bytes)) df.coalesce(1) else df
+    if (bytes <= spark.sessionState.conf.filesOpenCostInBytes) df.coalesce(1) else df
 
-  /** Decoder of the files a small read keeps. */
+  /** Decoder of the files the serving path reads. */
   private val localParquet = new LocalParquet(spark)
+  /** The serving path's reader: one decode thread per session core. */
+  private[engine] val orderedReader =
+    new OrderedReader(localParquet, spark.sparkContext.defaultParallelism)
 
-  /** A per-stream read, listed but not yet run: the bytes of the files it
-    * keeps, its Spark plan over that listing (built on first use), and
-    * its answer computed on the calling thread. */
-  private final class Read[R](val bytes: Long, plan: => DataFrame, local: () => Seq[R]) {
-    lazy val frame: DataFrame = plan
-    def rows(): Seq[R] = local()
-  }
-
-  /** Reads answered per kind on the serving path: (on the driver, by a
-    * Spark plan). */
+  /** Serving-path reads per kind: (reads, points). */
   private val servedCounts: Map[String, (LongAdder, LongAdder)] =
-    Seq("raw", "aligned", "changes", "nearest")
+    Seq("raw", "aligned", "windows", "changes", "nearest")
       .map(_ -> ((new LongAdder, new LongAdder))).toMap
 
-  /** The serving path's choice for one read of stream `sid`: under the
-    * small-read rule its answer, computed on the calling thread
-    * (`Right`), else the read itself for its Spark plan (`Left`);
-    * counted under `kind`. A driver read that races a commit of the
-    * stream runs once more from fresh state: when a listed file vanished
-    * (a flush deletes the staged files it committed, after the commit),
-    * or when the major version moved while it ran, since the rollup and
-    * the write buffer may then hold the same rows. */
-  private def served[R](kind: String, sid: Long)(read: => Read[R]): Either[Read[R], Seq[R]] = {
-    def attempt(): Option[Either[Read[R], Seq[R]]] = {
-      val major = majorOf(sid)
+  /** One serving-path read of stream `sid`, counted under `kind` with the
+    * points `points` gives each row: `read` opens it on one snapshot of
+    * the stream's state, and its rows are produced on the calling thread
+    * as the reply drains, with no Spark job. A read that races a commit
+    * of the stream is opened once more from fresh state: when a listed
+    * file vanished before it was opened (a flush deletes the staged files
+    * it committed, after the commit), or when the major version moved
+    * while it opened, since the log and the write buffer may then hold
+    * the same rows. The reply carries the snapshot's (major, minor). */
+  private def served[R](kind: String, sid: Long, points: R => Long = (_: R) => 1L)(
+      read: StreamState => Rows[R]): ServedRows[R] = {
+    def attempt(): Option[ServedRows[R]] = {
+      val state = stateOf(sid)
       try {
-        val r = read
-        if (!small(r.bytes)) Some(Left(r))
-        else Some(Right(r.rows())).filter(_ => majorOf(sid) == major)
+        val rows = read(state)
+        if (majorOf(sid) == state.major) {
+          val (_, counted) = servedCounts(kind)
+          Some(new ServedRows((state.major, state.minor), rows, (r: R) => counted.add(points(r))))
+        } else { rows.close(); None }
       } catch { case e: Exception if vanished(e) => None }
     }
     val out = attempt().orElse(attempt()).getOrElse(throw new IllegalStateException(
       s"a read of stream $sid raced two commits of that stream; retry it"))
-    val (driver, plan) = servedCounts(kind)
-    (if (out.isRight) driver else plan).increment()
+    servedCounts(kind)._1.increment()
     out
   }
 
   private def vanished(e: Throwable): Boolean =
     e != null && (e.isInstanceOf[FileNotFoundException] || vanished(e.getCause))
-
-  /** The rows of a served read: the driver's answer, or the Spark plan's
-    * rows pulled one partition at a time. */
-  private def drained[R](out: Either[Read[R], Seq[R]])(fromRow: Row => R): Iterator[R] =
-    out match {
-      case Right(rows) => rows.iterator
-      case Left(read) => read.frame.toLocalIterator().asScala.map(fromRow)
-    }
 
   // ---- catalog (mprovider equivalent) --------------------------------
 
@@ -829,10 +815,26 @@ class Btrdb(val spark: SparkSession, val root: String,
   private val writeLocks = new ConcurrentHashMap[Long, ReentrantLock]()
 
   /** Runs `body` holding the write locks of `sids`, taken in sid order. */
-  private def writing[T](sids: Long*)(body: => T): T = {
-    val held = sids.distinct.sorted.map(writeLocks.computeIfAbsent(_, _ => new ReentrantLock()))
-    held.foreach(_.lock())
-    try body finally held.foreach(_.unlock())
+  private def writing[T](sids: Long*)(body: => T): T =
+    locked(sids.distinct.sorted.map(writeLocks.computeIfAbsent(_, _ => new ReentrantLock())))(body)
+
+  /** Locks of the files that writes to different streams share, taken
+    * inside the stream locks: `sbucket=S` around every rewrite of that
+    * sbucket's pyramid and qhist directories (two streams' folds rewrite
+    * the same (pw, sbucket, wbucket) directory), and one per area
+    * (`staging`, `points`) around its appends, which share the area's
+    * `_temporary` directory, and around the point-log rewrites, which
+    * replace directories that appends write into. Lock order: stream
+    * locks, then these, then the engine monitor. */
+  private val fileLocks = new ConcurrentHashMap[String, ReentrantLock]()
+
+  /** Runs `body` holding the file locks `names`, taken in name order. */
+  private def exclusive[T](names: String*)(body: => T): T =
+    locked(names.distinct.sorted.map(fileLocks.computeIfAbsent(_, _ => new ReentrantLock())))(body)
+
+  private def locked[T](locks: Seq[ReentrantLock])(body: => T): T = {
+    locks.foreach(_.lock())
+    try body finally locks.reverse.foreach(_.unlock())
   }
 
   private def stateOf(sid: Long): StreamState = {
@@ -1030,11 +1032,11 @@ class Btrdb(val spark: SparkSession, val root: String,
       pools = admission.gauges, warnings = warns, reads = readCounts)
   }
 
-  /** Reads answered so far on the serving path, per kind: on the driver
-    * or by a Spark plan (see [[served]]). Nearest counts its probes. */
+  /** Reads answered so far on the serving path, per kind, and the points
+    * their rows carried (see [[served]]). Nearest counts its probes. */
   private[graft] def readCounts: Map[String, ReadCounts] =
-    servedCounts.map { case (kind, (driver, plan)) =>
-      kind -> ReadCounts(driver.sum, plan.sum) }
+    servedCounts.map { case (kind, (reads, points)) =>
+      kind -> ReadCounts(reads.sum, points.sum) }
 
   /** (major, minor) version of a stream: major = last committed
     * generation, minor = staged (unflushed) point count
@@ -1077,10 +1079,12 @@ class Btrdb(val spark: SparkSession, val root: String,
             // unique engine-generated batch id (disjoint from StreamingIngest's
             // small checkpoint batchIds): flush records the ids it consumes,
             // making an interrupted flush recoverable without duplicates
-            batch.withColumn("batch", lit(batchIdGen.incrementAndGet()))
-              .sortWithinPartitions("time")
-              .write.mode(SaveMode.Append).partitionBy("sid", "batch")
-              .parquet(path("staging"))
+            exclusive("staging") {
+              batch.withColumn("batch", lit(batchIdGen.incrementAndGet()))
+                .sortWithinPartitions("time")
+                .write.mode(SaveMode.Append).partitionBy("sid", "batch")
+                .parquet(path("staging"))
+            }
             publish(sid)(_.staged(st.n, st.tmin, st.tmax))
             if (stateOf(sid).minor >= bufferCommitThreshold) flushImpl(sid)
           }
@@ -1119,10 +1123,12 @@ class Btrdb(val spark: SparkSession, val root: String,
       sids.foreach(requireNotMigratingOut(_, "insertAll"))
       seed() // before the write: seeding counts the staged files
       writing(sids: _*) {
-        batch.withColumn("batch", lit(batchIdGen.incrementAndGet()))
-          .sortWithinPartitions("time")
-          .write.mode(SaveMode.Append).partitionBy("sid", "batch")
-          .parquet(path("staging"))
+        exclusive("staging") {
+          batch.withColumn("batch", lit(batchIdGen.incrementAndGet()))
+            .sortWithinPartitions("time")
+            .write.mode(SaveMode.Append).partitionBy("sid", "batch")
+            .parquet(path("staging"))
+        }
         counts.foreach(r =>
           publish(r.getLong(0))(_.staged(r.getLong(1), r.getLong(3), r.getLong(4))))
       }
@@ -1581,6 +1587,19 @@ class Btrdb(val spark: SparkSession, val root: String,
     // a crash mid-stream leaves already-purged partitions purged and
     // the rest pending — re-running purge is idempotent
     buckets.foreach(rewritePoints(_, _ => true, col("sid").isin(active: _*)))
+    exclusive(buckets.map(b => s"sbucket=$b"): _*)(purgeRollups(active, buckets))
+    active.foreach { sid =>
+      gcCommitFiles(sid, Long.MaxValue)
+      deleteDir(s"staging/sid=$sid")
+      store.delete(s"pyramid/_wm-$sid")
+      states.remove(sid)
+    }
+    invalidateCommits()
+  }
+
+  /** Deletes the rollup and histogram rows of the streams `active`, in
+    * their sbuckets `buckets`. */
+  private def purgeRollups(active: Seq[Long], buckets: Seq[Long]): Unit = {
     if (hasParquet("pyramid")) {
       // rollup rows are ~data/2^minLevel (≥2^30 at production geometry):
       // a whole touched-sbucket slice is metadata-scale, so the simple
@@ -1624,13 +1643,6 @@ class Btrdb(val spark: SparkSession, val root: String,
         deleteDir(s"qhist/sbucket=$sb/wbucket=$wb") }
       releaseQ()
     }
-    active.foreach { sid =>
-      gcCommitFiles(sid, Long.MaxValue)
-      deleteDir(s"staging/sid=$sid")
-      store.delete(s"pyramid/_wm-$sid")
-      states.remove(sid)
-    }
-    invalidateCommits()
   }
 
   /** The point-log writer: Parquet partitioned by (sbucket, tbucket),
@@ -1640,11 +1652,13 @@ class Btrdb(val spark: SparkSession, val root: String,
     * B/point on the time column at 120 Hz cadence (CompressionBench);
     * Spark's vectorized reader decodes v2 natively. */
   private def writePoints(rows: DataFrame, mode: SaveMode): Unit =
-    rows.write.mode(mode)
-      .option("compression", "zstd")
-      .option("parquet.writer.version", "v2")
-      .partitionBy("sbucket", "tbucket")
-      .parquet(path("points"))
+    exclusive("points") {
+      rows.write.mode(mode)
+        .option("compression", "zstd")
+        .option("parquet.writer.version", "v2")
+        .partitionBy("sbucket", "tbucket")
+        .parquet(path("points"))
+    }
 
   /** The tbucket rewriter: removes the rows `drop` selects from the
     * point-log directories `points/sbucket=sb/tbucket=T` whose T passes
@@ -1661,7 +1675,7 @@ class Btrdb(val spark: SparkSession, val root: String,
                             stats: Column*): Seq[Row] =
     store.listNames(s"points/sbucket=$sb")
       .flatMap(_.stripPrefix("tbucket=").toLongOption).sorted
-      .filter(tbuckets).map { tb =>
+      .filter(tbuckets).map { tb => exclusive("points") {
         val dir = s"points/sbucket=$sb/tbucket=$tb"
         val part = readArea(dir, PointsSchema)
         val r = part.agg(count(lit(1)).as("total"),
@@ -1679,7 +1693,7 @@ class Btrdb(val spark: SparkSession, val root: String,
           release()
         }
         r
-      }
+      }}
 
   private def deleteDir(part: String): Unit = store.deleteRecursive(part)
 
@@ -1774,12 +1788,9 @@ class Btrdb(val spark: SparkSession, val root: String,
     pointLog(Some(Seq(sidOf(uuid))), version, start, end, buffered = false).frame
 
   /** A listed read of the point log (see [[pointLog]]): the bytes of the
-    * files it keeps, its plan over that listing (built on first use),
-    * and its visible (time, value) rows decoded on the calling thread. */
-  private final class PointLog(val bytes: Long, plan: => DataFrame,
-                               decode: ((Long, Double) => Unit) => Unit) {
+    * files it keeps and its plan over that listing (built on first use). */
+  private final class PointLog(val bytes: Long, plan: => DataFrame) {
     lazy val frame: DataFrame = plan
-    def foreach(f: (Long, Double) => Unit): Unit = decode(f)
   }
 
   /** The point-log reader, and the one visibility rule every read of
@@ -1793,13 +1804,8 @@ class Btrdb(val spark: SparkSession, val root: String,
     * kept bytes for the caller's [[fit]]; a pin below a compacted
     * stream's floor reads it as empty, since its history and deletes are
     * collapsed. `None` reads every stream, latest and whole-domain, from
-    * the area roots (the SQL view's plan).
-    *
-    * Both the plan and the decode on the calling thread (one stream only,
-    * the same rule in Scala) read one snapshot of each stream's state and
-    * the decode pins the committed rows to its major, so the rows of a
-    * flush that commits meanwhile are never read from both the log and
-    * the buffer. */
+    * the area roots (the SQL view's plan). The serving path's
+    * [[pointRuns]] keeps the same rows. */
   private def pointLog(sids: Option[Seq[Long]],
                        version: Long = TimeConsts.LatestGeneration,
                        start: Long = TimeConsts.MinimumTime,
@@ -1818,8 +1824,7 @@ class Btrdb(val spark: SparkSession, val root: String,
         new PointLog(Long.MaxValue,
           if (buffered && snap.values.exists(_.minor > 0))
             committed.unionByName(stagingDf.withColumn("version", lit(Long.MaxValue)))
-          else committed,
-          _ => throw new UnsupportedOperationException("a whole-area read has no local decode"))
+          else committed)
       case Some(all) =>
         val snap = all.map(sid => sid -> stateOf(sid)).toMap
         val live = all.filter(sid => version >= snap(sid).floor)
@@ -1841,29 +1846,30 @@ class Btrdb(val spark: SparkSession, val root: String,
             .select("sid", "time", "value")
             .filter(col("time") >= start && col("time") < end)
             .withColumn("version", lit(Long.MaxValue))))
-        }, f => {
-          require(all.size == 1, "the local decode reads one stream")
-          live.foreach { sid =>
-            val pin = math.min(version, snap(sid).major)
-            val hidden = snap(sid).deletes.filter(_._1 <= pin)
-            localParquet.foreach(scan.files, LocalPointColumns,
-                LocalParquet.inRange(sid, "time", start, end)) { b =>
-              val (sids, times, values, versions) =
-                (b.column(0), b.column(1), b.column(2), b.column(3))
-              var i = 0
-              while (i < b.numRows) {
-                val t = times.getLong(i)
-                val v = versions.getLong(i)
-                if (sids.getLong(i) == sid && t >= start && t < end && v <= pin &&
-                    !hidden.exists { case (dv, lo, hi) => t >= lo && t < hi && v < dv })
-                  f(t, values.getDouble(i))
-                i += 1
-              }
-            }
-          }
-          buffer.foreach(localStaged(_, start, end)(f))
         })
     }
+  }
+
+  /** Stream `sid`'s visible points in [start, end) at `version`, as the
+    * serving path reads them at its state `state`: the kept rows of
+    * [[pointLog]]'s listing, with the committed rows pinned to the
+    * state's major, so the rows of a flush that commits meanwhile are
+    * never read from both the log and the buffer, merged in (time, value)
+    * order by the [[OrderedReader]]. */
+  private def pointRuns(sid: Long, state: StreamState, version: Long,
+                        start: Long, end: Long): OrderedReader#Points = {
+    val live = version >= state.floor
+    val scan =
+      if (!live) new Scan(Nil, emptyDf(PointsSchema))
+      else scanDirs("points", Seq(s"points/sbucket=${sbucketOf(sid)}"), PointsSchema)(
+        within("tbucket", start >> tBucketPw, (end - 1) >> tBucketPw))
+    val buffer =
+      if (live && version == TimeConsts.LatestGeneration && state.minor > 0)
+        stagedOf(Seq(sid)).files
+      else Nil
+    val pin = math.min(version, state.major)
+    orderedReader.points(scan.files,
+      Kept(sid, start, end, pin, state.deletes.filter(_._1 <= pin)), buffer)
   }
 
   /** The one delete predicate: the rows of `sids` that the delete lists
@@ -1890,21 +1896,6 @@ class Btrdb(val spark: SparkSession, val root: String,
   private def stagedOf(sids: Seq[Long]): Scan =
     scanDirs("staging", sids.map(sid => s"staging/sid=$sid"), StagingSchema)(_ => true)
 
-  /** Calls `f` with the (time, value) rows in [start, end) of a listed
-    * write buffer, decoded on the calling thread. */
-  private def localStaged(buffer: Scan, start: Long, end: Long)(
-      f: (Long, Double) => Unit): Unit =
-    localParquet.foreach(buffer.files, LocalStagedColumns,
-        LocalParquet.inRange("time", start, end)) { b =>
-      val (times, values) = (b.column(0), b.column(1))
-      var i = 0
-      while (i < b.numRows) {
-        val t = times.getLong(i)
-        if (t >= start && t < end) f(t, values.getDouble(i))
-        i += 1
-      }
-    }
-
   /** One stream's visible points under the small-read rule. */
   private def readable(sid: Long, version: Long,
                        start: Long, end: Long): DataFrame = {
@@ -1917,53 +1908,22 @@ class Btrdb(val spark: SparkSession, val root: String,
   /** RawValues: time-ordered scan of [start, end) at a version. */
   def rawValues(uuid: String, start: Long, end: Long,
                 version: Long = TimeConsts.LatestGeneration): DataFrame =
-    rawRead(sidOf(uuid), version, start, end).frame
+    readable(sidOf(uuid), version, start, end).select("time", "value").orderBy("time", "value")
 
-  /** [[rawValues]] on the serving path: (time, value) rows, answered on
-    * the calling thread under the small-read rule (see [[served]]). */
+  /** [[rawValues]] on the serving path: its (time, value) rows, merged on
+    * the calling thread as they are pulled (see [[served]]). */
   def serveRawValues(uuid: String, start: Long, end: Long,
-                     version: Long = TimeConsts.LatestGeneration): Iterator[(Long, Double)] = {
+                     version: Long = TimeConsts.LatestGeneration): ServedRows[(Long, Double)] = {
     val sid = sidOf(uuid)
-    drained(admission.run(Admission.PointOp)(
-      served("raw", sid)(rawRead(sid, version, start, end))))(r => (r.getLong(0), r.getDouble(1)))
-  }
-
-  private def rawRead(sid: Long, version: Long, start: Long,
-                      end: Long): Read[(Long, Double)] = {
-    val log = pointLog(Some(Seq(sid)), version, start, end)
-    new Read(log.bytes,
-      fit(log.frame, log.bytes).select("time", "value").orderBy("time", "value"),
-      () => {
-        val rows = Array.newBuilder[(Long, Double)]
-        log.foreach((t, v) => rows += ((t, v)))
-        // files hold time-sorted runs, which this merge sort exploits
-        val sorted = rows.result()
-        java.util.Arrays.sort(sorted, TimeValueOrder)
-        sorted.toSeq
-      })
+    admission.run(Admission.PointOp)(served[(Long, Double)]("raw", sid)(
+      pointRuns(sid, _, version, start, end).pairs))
   }
 
   /** AlignedWindows at 2^pw; uses the rollup pyramid when the query is
     * at-or-above a maintained level and pinned to the committed state. */
   def alignedWindows(uuid: String, start: Long, end: Long, pw: Int,
-                     version: Long = TimeConsts.LatestGeneration): DataFrame =
-    alignedRead(sidOf(uuid), start, end, pw, version).frame
-
-  /** [[alignedWindows]] on the serving path: (wstart, vmin, vmean, vmax,
-    * cnt) rows, answered on the calling thread under the small-read rule
-    * (see [[served]]). */
-  def serveAlignedWindows(uuid: String, start: Long, end: Long, pw: Int,
-                          version: Long = TimeConsts.LatestGeneration)
-      : Iterator[(Long, Double, Double, Double, Long)] = {
+                     version: Long = TimeConsts.LatestGeneration): DataFrame = {
     val sid = sidOf(uuid)
-    drained(admission.run(Admission.PointOp)(
-      served("aligned", sid)(alignedRead(sid, start, end, pw, version))))(r =>
-      (r.getAs[Long]("wstart"), r.getAs[Double]("vmin"), r.getAs[Double]("vmean"),
-        r.getAs[Double]("vmax"), r.getAs[Long]("cnt")))
-  }
-
-  private def alignedRead(sid: Long, start: Long, end: Long, pw: Int, version: Long)
-      : Read[(Long, Double, Double, Double, Long)] = {
     val s = TimeOps.alignDown(start, pw)
     val e = TimeOps.alignDown(end, pw)
     val level = rollupLevel(pw)
@@ -1977,46 +1937,57 @@ class Btrdb(val spark: SparkSession, val root: String,
       val rollup = pyramidScan(sid, level.get, s, e)
       val buffer = if (state.minor == 0) None else Some(stagedOf(Seq(sid)))
       val total = rollup.bytes + buffer.fold(0L)(_.bytes)
-      new Read(total, {
-        val committed = rollup.frame
-          .select(TimeOps.clampTime(col("wstart"), pw).as("wstart"),
-            col("cnt"), col("ccnt"), col("vmin"), col("vsc"), col("vsum"),
-            col("vmax"))
-        val partials = buffer.fold(fit(committed, rollup.bytes)) { staging =>
-          // the buffer's own aggregate sits below the union, so a small
-          // read coalesces its scan too
-          val staged = fit(staging.frame.select("sid", "time", "value"), total)
-            .filter(col("time") >= s && col("time") < e)
-            .groupBy(TimeOps.clampTime(col("time"), pw).as("wstart"))
-            .agg(count(lit(1)).as("cnt"),
-              count(StatOps.cents(col("value"))).as("ccnt"),
-              min("value").as("vmin"),
-              sum(StatOps.centsSum(col("value"))).as("vsc"),
-              sum("value").as("vsum"), max("value").as("vmax"))
-          fit(committed.unionByName(staged), total)
-        }
-        partials.groupBy("wstart")
-          .agg(RollupStats.head, RollupStats.tail: _*)
-          .orderBy("wstart")
-      }, () => {
-        val fold = new WindowFold(pw)
-        localRollup(rollup, sid, s, e, fold)
-        buffer.foreach(localStaged(_, s, e)(fold.point))
-        fold.rows
-      })
-    } else {
-      val log = pointLog(Some(Seq(sid)), version, s, e)
-      new Read(log.bytes,
-        fit(log.frame, log.bytes)
+      val committed = rollup.frame
+        .select(TimeOps.clampTime(col("wstart"), pw).as("wstart"),
+          col("cnt"), col("ccnt"), col("vmin"), col("vsc"), col("vsum"),
+          col("vmax"))
+      val partials = buffer.fold(fit(committed, rollup.bytes)) { staging =>
+        // the buffer's own aggregate sits below the union, so a small
+        // read coalesces its scan too
+        val staged = fit(staging.frame.select("sid", "time", "value"), total)
+          .filter(col("time") >= s && col("time") < e)
           .groupBy(TimeOps.clampTime(col("time"), pw).as("wstart"))
-          .agg(RawStats.head, RawStats.tail: _*)
-          .orderBy("wstart"),
-        () => {
-          val fold = new WindowFold(pw)
-          log.foreach(fold.point)
-          fold.rows
-        })
-    }
+          .agg(count(lit(1)).as("cnt"),
+            count(StatOps.cents(col("value"))).as("ccnt"),
+            min("value").as("vmin"),
+            sum(StatOps.centsSum(col("value"))).as("vsc"),
+            sum("value").as("vsum"), max("value").as("vmax"))
+        fit(committed.unionByName(staged), total)
+      }
+      partials.groupBy("wstart")
+        .agg(RollupStats.head, RollupStats.tail: _*)
+        .orderBy("wstart")
+    } else
+      readable(sid, version, s, e)
+        .groupBy(TimeOps.clampTime(col("time"), pw).as("wstart"))
+        .agg(RawStats.head, RawStats.tail: _*)
+        .orderBy("wstart")
+  }
+
+  /** [[alignedWindows]] on the serving path: its (wstart, vmin, vmean,
+    * vmax, cnt) rows, folded on the calling thread — from the rollup rows
+    * and the write buffer where the pyramid serves, else from the merged
+    * points, each window as soon as the points pass it (see [[served]]). */
+  def serveAlignedWindows(uuid: String, start: Long, end: Long, pw: Int,
+                          version: Long = TimeConsts.LatestGeneration)
+      : ServedRows[(Long, Double, Double, Double, Long)] = {
+    val sid = sidOf(uuid)
+    val s = TimeOps.alignDown(start, pw)
+    val e = TimeOps.alignDown(end, pw)
+    val level = rollupLevel(pw)
+    admission.run(Admission.PointOp)(served[WindowFold.Row]("aligned", sid, _._5) { state =>
+      val fold = WindowFold.aligned(pw)
+      if (rollupServes(level.isDefined, sid, state, version, mergesBuffer = true)) {
+        localRollup(pyramidScan(sid, level.get, s, e), sid, s, e, fold)
+        if (state.minor > 0) {
+          // the write buffer's points, with no committed file
+          val staged = orderedReader.points(Nil, Kept(sid, s, e, state.major, Nil),
+            stagedOf(Seq(sid)).files)
+          while (staged.advance()) fold.point(staged.time, staged.value)
+        }
+        Rows.of(fold.rows.iterator)
+      } else fold.ordered(pointRuns(sid, state, version, s, e))
+    })
   }
 
   /** AlignedWindows across MANY streams in one scan — the bulk shape a
@@ -2285,6 +2256,37 @@ class Btrdb(val spark: SparkSession, val root: String,
       .orderBy("i")
   }
 
+  /** [[windows]] (without the strict final window) on the serving path:
+    * its (wstart, vmin, vmean, vmax, cnt) rows, folded on the calling
+    * thread from the rollup rows where the pyramid serves, else from the
+    * merged points, each window as soon as the points pass it; empty
+    * windows are emitted with zeros as the reply reaches them (see
+    * [[served]]). */
+  def serveWindows(uuid: String, start: Long, end: Long, width: Long,
+                   version: Long = TimeConsts.LatestGeneration, depth: Int = 0)
+      : ServedRows[(Long, Double, Double, Double, Long)] = {
+    val sid = sidOf(uuid)
+    val e = TimeOps.truncateEnd(start, end, width)
+    val c = if (depth <= 0) 0 else StatOps.depthBucketPw(depth)
+    val u = 1L << c
+    val n = (e - start) / width
+    // the same depth-capped scan bounds as [[windows]]
+    val (lo, hi) =
+      if (depth <= 0) (start, e)
+      else (TimeOps.alignDown(start, c) + u, TimeOps.alignDown(e - 1, c) + u)
+    val level = if (depth > 0) rollupLevel(c) else None
+    admission.run(Admission.PointOp)(served[WindowFold.Row]("windows", sid, _._5) { state =>
+      val fold = WindowFold.windows(start, width, if (depth <= 0) 0 else c)
+      val folded = level.filter(_ => rollupServes(true, sid, state, version)) match {
+        case Some(l) =>
+          localRollup(pyramidScan(sid, l, lo, hi), sid, lo, hi, fold)
+          Rows.of(fold.rows.iterator)
+        case None => fold.ordered(pointRuns(sid, state, version, lo, hi))
+      }
+      WindowFold.filled(folded, n, start, width)
+    })
+  }
+
   /** Nearest: forward inclusive / backward exclusive
     * (/root/reference/qtree/qtree.go:24-26). Probes geometrically
     * widening time windows outward from `t`, bounded by the stream's
@@ -2321,11 +2323,16 @@ class Btrdb(val spark: SparkSession, val root: String,
         var probes = 0
         def probe(lo: Long, hi: Long): Option[(Long, Double)] = {
           probes += 1
-          served("nearest", sid)(nearestRead(sid, version, lo, hi, backward)) match {
-            case Right(hit) => hit.headOption
-            case Left(read) =>
-              read.frame.collect().headOption.map(r => (r.getLong(0), r.getDouble(1)))
-          }
+          served[(Long, Double)]("nearest", sid) { state =>
+            val points = pointRuns(sid, state, version, lo, hi)
+            var hit = Option.empty[(Long, Double)]
+            // the first point in (time, value) order, or the last one
+            // backward
+            while ((hit.isEmpty || backward) && points.advance())
+              hit = Some((points.time, points.value))
+            points.close()
+            Rows.of(hit.iterator)
+          }.nextOption()
         }
         var res: Option[(Long, Double)] = None
         var width = 1L << math.min(tBucketPw, 60)
@@ -2356,26 +2363,6 @@ class Btrdb(val spark: SparkSession, val root: String,
     }
   }
 
-  /** One nearest probe: the first point of [lo, hi) in (time, value)
-    * order, or the last one `backward`. */
-  private def nearestRead(sid: Long, version: Long, lo: Long, hi: Long,
-                          backward: Boolean): Read[(Long, Double)] = {
-    val log = pointLog(Some(Seq(sid)), version, lo, hi)
-    val df = fit(log.frame, log.bytes)
-    new Read(log.bytes,
-      (if (backward) df.orderBy(col("time").desc, col("value").desc)
-       else df.orderBy(col("time").asc, col("value").asc))
-        .select("time", "value").limit(1),
-      () => {
-        var best: (Long, Double) = null
-        log.foreach { (t, v) =>
-          val c = if (best == null) 0 else TimeValueOrder.compare((t, v), best)
-          if (best == null || (if (backward) c > 0 else c < 0)) best = (t, v)
-        }
-        Option(best).toSeq
-      })
-  }
-
   /** Changes(fromV, toV, resolution): per-commit TOUCHED RANGES (not the
     * commit envelope — a backfill hitting two distant instants yields
     * two ranges, the reference's tree-diff fidelity,
@@ -2387,34 +2374,28 @@ class Btrdb(val spark: SparkSession, val root: String,
     * own record. Each range's bounds are always the exact point
     * envelope of its cluster. */
   def changes(uuid: String, fromVersion: Long, toVersion: Long,
-              resolution: Int): DataFrame =
-    changesRead(sidOf(uuid), fromVersion, toVersion, resolution).frame
-
-  /** [[changes]] on the serving path: (s, e) rows folded on the calling
-    * thread from the stream's commit ranges ([[StreamState.ranges]]). The
-    * read lists no file, so the small-read rule always serves it there. */
-  def serveChanges(uuid: String, fromVersion: Long, toVersion: Long,
-                   resolution: Int): Iterator[(Long, Long)] = {
+              resolution: Int): DataFrame = {
     val sid = sidOf(uuid)
-    drained(admission.run(Admission.PointOp)(served("changes", sid)(
-      changesRead(sid, fromVersion, toVersion, resolution))))(r => (r.getLong(0), r.getLong(1)))
+    // commit metadata is small (seeding collects it whole): one
+    // partition plans the interval merge and sort with no exchange
+    val perRange = commits.coalesce(1).filter(col("sid") === sid)
+      .select(col("sid"), col("version"),
+        explode(coalesce(col("ranges"),
+          array(struct(col("tmin").as("s"), (col("tmax") + 1).as("e"))))).as("r"))
+      .select(col("sid"), col("version"),
+        col("r.s").as("tmin"), (col("r.e") - 1).as("tmax"))
+    StatOps.changes(perRange, fromVersion, toVersion, resolution)
+      .orderBy("s").select("s", "e")
   }
 
-  private def changesRead(sid: Long, fromVersion: Long, toVersion: Long,
-                          resolution: Int): Read[(Long, Long)] = {
-    val ranges = stateOf(sid).ranges
-    new Read(0L, {
-      // commit metadata is small (seeding collects it whole): one
-      // partition plans the interval merge and sort with no exchange
-      val perRange = commits.coalesce(1).filter(col("sid") === sid)
-        .select(col("sid"), col("version"),
-          explode(coalesce(col("ranges"),
-            array(struct(col("tmin").as("s"), (col("tmax") + 1).as("e"))))).as("r"))
-        .select(col("sid"), col("version"),
-          col("r.s").as("tmin"), (col("r.e") - 1).as("tmax"))
-      StatOps.changes(perRange, fromVersion, toVersion, resolution)
-        .orderBy("s").select("s", "e")
-    }, () => WindowFold.changes(ranges, fromVersion, toVersion, resolution))
+  /** [[changes]] on the serving path: (s, e) rows folded on the calling
+    * thread from the stream's commit ranges ([[StreamState.ranges]]); the
+    * read lists no file. */
+  def serveChanges(uuid: String, fromVersion: Long, toVersion: Long,
+                   resolution: Int): ServedRows[(Long, Long)] = {
+    val sid = sidOf(uuid)
+    admission.run(Admission.PointOp)(served[(Long, Long)]("changes", sid, _ => 0L)(state =>
+      Rows.of(WindowFold.changes(state.ranges, fromVersion, toVersion, resolution).iterator)))
   }
 
   /** GenerateCSV / multi-stream temporal align: k streams aligned on
@@ -2728,8 +2709,15 @@ class Btrdb(val spark: SparkSession, val root: String,
                                    foldPartials: Option[DataFrame],
                                    recomputeAt: Long =
                                      TimeConsts.LatestGeneration,
-                                   foldQhist: Option[DataFrame] = None): Unit = {
-    if (pyramidLevels.isEmpty || touched.isEmpty) return
+                                   foldQhist: Option[DataFrame] = None): Unit =
+    if (pyramidLevels.nonEmpty && touched.nonEmpty)
+      exclusive(s"sbucket=${sid % sBuckets}")(
+        foldPyramid(sid, touched, foldPartials, recomputeAt, foldQhist))
+
+  /** [[maintainPyramidInner]] under its sbucket's lock. */
+  private def foldPyramid(sid: Long, touched: Seq[(Long, Long)],
+                          foldPartials: Option[DataFrame], recomputeAt: Long,
+                          foldQhist: Option[DataFrame]): Unit = {
     ensurePyramidLayout()
     val sorted = pyramidLevels.sorted
     val base = sorted.head
@@ -3088,12 +3076,28 @@ final case class EngineInfo(
     /** Operational alarms (e.g. wbucket-geometry degeneracy) — the
       * engine still answers correctly, but an operator should act. */
     warnings: Seq[String] = Nil,
-    /** Serving-path reads per kind (raw, aligned, changes, nearest). */
+    /** Serving-path reads per kind (raw, aligned, windows, changes,
+      * nearest). */
     reads: Map[String, ReadCounts] = Map.empty)
 
-/** Reads of one kind answered on the driver under the small-read rule,
-  * and by a Spark plan. */
-final case class ReadCounts(driver: Long, spark: Long)
+/** Serving-path reads of one kind, and the points their rows carried: a
+  * RawValues or Nearest row is one point, a window its count, a Changes
+  * range none. */
+final case class ReadCounts(reads: Long, points: Long)
+
+/** A serving-path reply: its rows, produced on the driver as they are
+  * pulled, and the (major, minor) version of the stream state it read.
+  * `close` releases a reply that is left undrained. */
+final class ServedRows[R] private[engine] (val version: (Long, Long), rows: Rows[R],
+    count: R => Unit) extends scala.collection.AbstractIterator[R] with AutoCloseable {
+  def hasNext: Boolean = rows.hasNext
+  def next(): R = {
+    val r = rows.next()
+    count(r)
+    r
+  }
+  def close(): Unit = rows.close()
+}
 
 final case class StreamDescInfo(
     uuid: String, sid: Long, collection: String,
@@ -3250,20 +3254,10 @@ object Btrdb {
         (sum("vsc") / lit(100.0)).as("vsum"))
   }
 
-  /** The columns the driver-side decode reads from each area. */
-  private val LocalPointColumns =
-    StructType.fromDDL("sid BIGINT, time BIGINT, value DOUBLE, version BIGINT")
-  private val LocalStagedColumns = StructType.fromDDL("time BIGINT, value DOUBLE")
+  /** The columns the driver-side decode reads from the rollup. */
   private val LocalRollupColumns = StructType.fromDDL(
     "sid BIGINT, wstart BIGINT, cnt BIGINT, ccnt BIGINT, vmin DOUBLE, vmax DOUBLE, " +
       "vsum DOUBLE, vsc DECIMAL(38,0)")
-
-  /** The (time, value) order of a RawValues reply, as Spark sorts it:
-    * -0.0 and 0.0 compare equal. */
-  private val TimeValueOrder: Ordering[(Long, Double)] = (a, b) =>
-    if (a._1 != b._1) java.lang.Long.compare(a._1, b._1)
-    else if (a._2 == b._2) 0
-    else java.lang.Double.compare(a._2, b._2)
 
   /** Window stats (cnt, vmin, vmean, vmax) over raw point rows. */
   private val RawStats: Seq[Column] = Seq(count(lit(1)).as("cnt"),

@@ -22,16 +22,17 @@ import graft.engine.Btrdb
   *
   * Server-streaming RPCs chunk their value lists at [[ChunkSize]] rows
   * per response message, the reference's streaming shape — and they
-  * STREAM: RawValues, AlignedWindows and Changes take a row iterator
-  * from the engine's serving path. A read under the engine's small-read
-  * rule is answered on the calling thread with no Spark job (Changes
-  * always is: it reads in-memory commit state); a larger one pulls rows
-  * through `Dataset.toLocalIterator` (one partition of driver memory at
-  * a time, ordered), as Windows and GenerateCSV always do.
-  * [[RpcReply.messages]] is an iterator the server drains under HTTP/2
-  * flow control, so a RawValues over a wide range never materializes
-  * on the driver — the same producer/bounded-channel shape as the
-  * reference
+  * STREAM: RawValues, AlignedWindows, Windows and Changes take a row
+  * iterator from the engine's serving path, which answers every such
+  * read on the driver with no Spark job, merging the stream's
+  * time-sorted runs as the rows are pulled (Changes reads in-memory
+  * commit state); a latest read's reply carries the (major, minor) of
+  * the state it read. Only GenerateCSV pulls rows through
+  * `Dataset.toLocalIterator` (one partition of driver memory at a time,
+  * ordered). [[RpcReply.messages]] is an iterator the server drains
+  * under HTTP/2 flow control, so a RawValues over a wide range never
+  * materializes on the driver — the same producer/bounded-channel shape
+  * as the reference
   * (/root/reference/qtree/qtree.go:756-769,
   * grpcinterface/serve.go:147-172). One RPC is intentionally stubbed
   * with an app-level error, mirroring a documented divergence
@@ -177,8 +178,9 @@ object BtrdbWire {
   // ---- dispatch -------------------------------------------------------
 
   /** One RPC's reply: the encoded response messages (an ITERATOR — the
-    * server drains it incrementally under flow control; pulling may run
-    * Spark work) and the gRPC status for the trailers. */
+    * server drains it incrementally under flow control; pulling merges
+    * a served read's rows, or runs GenerateCSV's Spark work) and the gRPC
+    * status for the trailers. */
   final case class RpcReply(messages: Iterator[Array[Byte]], grpcStatus: Int)
 
   /** Every method of the public service
@@ -195,7 +197,7 @@ object BtrdbWire {
     * prefix from `framedBody`, decode, run the engine, return the
     * reply. Neither this call nor the returned iterator ever throws —
     * failures INCLUDING a malformed/compressed request frame and a
-    * Spark job failing MID-STREAM become a response message carrying
+    * read failing MID-STREAM become a response message carrying
     * `stat` (a throw would be swallowed by the worker pool and the
     * client's RPC would hang to its deadline). */
   def handle(e: Btrdb, method: String,
@@ -204,8 +206,9 @@ object BtrdbWire {
     else RpcReply(guarded(dispatch(e, method, firstMessage(framedBody))), 0)
 
   /** Wrap a lazily-built message iterator so that any failure — during
-    * construction (decode, eager engine calls) or mid-drain (a Spark
-    * job under `toLocalIterator`) — surfaces as one final stat-carrying
+    * construction (decode, eager engine calls) or mid-drain (a served
+    * read's decode, a Spark job under GenerateCSV's `toLocalIterator`) —
+    * surfaces as one final stat-carrying
     * message instead of a throw. */
   private def guarded(make: => Iterator[Array[Byte]]): Iterator[Array[Byte]] =
     new Iterator[Array[Byte]] {
@@ -256,9 +259,9 @@ object BtrdbWire {
         case (4, _) => vmaj = r.varint()
         case (_, w) => r.skip(w)
       }
-      val (maj, minor) = verOf(e, uuid)
+      val pinned = if (vmaj == 0L) None else Some(verOf(e, uuid))
       val rows = e.serveRawValues(uuid, start, end, pin(vmaj))
-      chunked(rows, maj, minor)((w, p) => w.message(4, rawPoint(p._1, p._2)))
+      chunked(rows, pinned)((w, p) => w.message(4, rawPoint(p._1, p._2)))
 
     case "AlignedWindows" =>
       var uuid = ""; var start = 0L; var end = 0L; var vmaj = 0L; var pw = 0
@@ -272,9 +275,9 @@ object BtrdbWire {
         case (_, w) => r.skip(w)
       }
       if (pw > 64 || pw < 0) return Iterator.single(badPointWidth)
-      val (maj, minor) = verOf(e, uuid)
+      val pinned = if (vmaj == 0L) None else Some(verOf(e, uuid))
       val rows = e.serveAlignedWindows(uuid, start, end, pw, pin(vmaj))
-      chunked(rows, maj, minor)((w, p) =>
+      chunked(rows, pinned)((w, p) =>
         w.message(4, statPoint(p._1, p._2, p._3, p._4, p._5)))
 
     case "Windows" =>
@@ -290,13 +293,9 @@ object BtrdbWire {
         case (6, _) => depth = r.varint().toInt
         case (_, w) => r.skip(w)
       }
-      val (maj, minor) = verOf(e, uuid)
-      val rows = e.windows(uuid, start, end, width, pin(vmaj), depth)
-        .select("wstart", "vmin", "vmean", "vmax", "cnt")
-        .toLocalIterator().asScala
-        .map(x => (x.getLong(0), x.getDouble(1), x.getDouble(2),
-          x.getDouble(3), x.getLong(4)))
-      chunked(rows, maj, minor)((w, p) =>
+      val pinned = if (vmaj == 0L) None else Some(verOf(e, uuid))
+      val rows = e.serveWindows(uuid, start, end, width, pin(vmaj), depth)
+      chunked(rows, pinned)((w, p) =>
         w.message(4, statPoint(p._1, p._2, p._3, p._4, p._5)))
 
     case "StreamInfo" =>
@@ -423,7 +422,7 @@ object BtrdbWire {
       val (maj, minor) = verOf(e, uuid)
       val to = if (toMajor == 0L) maj else toMajor
       val rows = e.serveChanges(uuid, fromMajor, to, resolution)
-      chunked(rows, maj, minor) { (w, p) =>
+      chunked(rows, Some((maj, minor))) { (w, p) =>
         val cr = new PbWriter
         cr.sfixed64(1, p._1); cr.sfixed64(2, p._2)
         w.message(4, cr)
@@ -532,12 +531,14 @@ object BtrdbWire {
     uuid
   }
 
-  /** Lazily frame a row iterator into ChunkSize-row response messages —
-    * pulling a chunk pulls at most one Spark partition past it (the
-    * `toLocalIterator` contract), so driver memory is bounded by one
-    * partition + one encoded chunk regardless of result size. */
-  private def chunked[T](rows: Iterator[T], maj: Long, minor: Long)
+  /** Lazily frame a served read's rows into ChunkSize-row response
+    * messages — pulling a chunk merges only its rows, so driver memory is
+    * bounded by the read's decode-ahead + one encoded chunk regardless of
+    * result size. Each message carries `version`, or for a latest read
+    * (None) the (major, minor) of the state the read saw. */
+  private def chunked[T](rows: graft.engine.ServedRows[T], version: Option[(Long, Long)])
       (emit: (PbWriter, T) => Unit): Iterator[Array[Byte]] = {
+    val (maj, minor) = version.getOrElse(rows.version)
     if (!rows.hasNext)
       return Iterator.single(withVersion(new PbWriter, maj, minor).toBytes)
     rows.grouped(ChunkSize).map { group =>

@@ -29,19 +29,19 @@ import graft.engine.Btrdb
   * channel's event loop. Two gates shed load: this server's ConcurrentOp
   * permits on every RPC (below), and the engine's
   * [[graft.engine.Admission]] pools around the work the engine does
-  * inline — writes, maintenance, Nearest, and the RawValues,
-  * AlignedWindows and Changes reads it answers on the driver. The Spark
-  * jobs of larger reads run while the reply drains, outside the engine's
-  * pools.
+  * inline — writes, maintenance, and the opening of every RawValues,
+  * AlignedWindows, Windows, Changes and Nearest read, which it answers
+  * on the driver with no Spark job. A read's rows are merged while the
+  * reply drains, outside the engine's pools.
   *
   * Streaming RPCs stream for real: [[BtrdbWire.handle]] hands back a
-  * message ITERATOR, over rows the engine computed on the driver for a
-  * small read, or backed by `Dataset.toLocalIterator` for a larger one,
+  * message ITERATOR, over rows the engine merges on the driver as they
+  * are pulled (GenerateCSV's are backed by `Dataset.toLocalIterator`),
   * and the worker drains it with a bounded number of unacknowledged DATA
-  * frames — driver memory stays one-partition-sized no matter how wide
-  * the queried range, the same bounded producer/consumer shape as the
-  * reference's channel-fed sender (/root/reference/grpcinterface/
-  * serve.go:147-172). Analytics at 100 TB still belongs on the
+  * frames — driver memory stays bounded by the read's decode-ahead no
+  * matter how wide the queried range, the same bounded producer/consumer
+  * shape as the reference's channel-fed sender
+  * (/root/reference/grpcinterface/serve.go:147-172). Analytics at 100 TB still belongs on the
   * SQL/DataFrame surface; this endpoint is the migration-compatible
   * wire.
   */

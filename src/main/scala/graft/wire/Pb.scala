@@ -24,22 +24,29 @@ object Pb {
   val WireFixed32 = 5
 }
 
-/** Append-only protobuf message writer. */
+/** Append-only protobuf message writer over one growable array (a
+  * RawValues reply encodes a message per point, so no per-byte lock). */
 final class PbWriter {
-  private val out = new java.io.ByteArrayOutputStream(256)
+  private var buf = new Array[Byte](32)
+  private var len = 0
 
-  def toBytes: Array[Byte] = out.toByteArray
+  def toBytes: Array[Byte] = java.util.Arrays.copyOf(buf, len)
 
+  private def room(k: Int): Unit =
+    if (len + k > buf.length)
+      buf = java.util.Arrays.copyOf(buf, math.max(buf.length * 2, len + k))
   private def varint(v0: Long): Unit = {
+    room(10)
     var v = v0
-    while ((v & ~0x7fL) != 0) { out.write(((v & 0x7fL) | 0x80L).toInt); v >>>= 7 }
-    out.write(v.toInt)
+    while ((v & ~0x7fL) != 0) { buf(len) = ((v & 0x7fL) | 0x80L).toByte; len += 1; v >>>= 7 }
+    buf(len) = v.toByte; len += 1
   }
   private def tag(field: Int, wire: Int): Unit =
     varint((field.toLong << 3) | wire)
   private def fixed(v: Long): Unit = {
+    room(8)
     var i = 0
-    while (i < 8) { out.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 }
+    while (i < 8) { buf(len) = ((v >>> (8 * i)) & 0xff).toByte; len += 1; i += 1 }
   }
 
   def uint64(field: Int, v: Long): Unit =
@@ -54,19 +61,24 @@ final class PbWriter {
     if (bits != 0L) { tag(field, Pb.WireFixed64); fixed(bits) }
   }
   def bytes(field: Int, b: Array[Byte]): Unit =
-    if (b.nonEmpty) rawBytes(field, b)
+    if (b.nonEmpty) rawBytes(field, b, b.length)
   def string(field: Int, s: String): Unit =
-    if (s.nonEmpty) rawBytes(field, s.getBytes(UTF_8))
+    if (s.nonEmpty) bytes(field, s.getBytes(UTF_8))
   /** Repeated-string ELEMENT — always emitted, even when empty: an
     * omitted element would silently shift the list (proto3 default-
     * omission applies to singular fields, never repeated elements). */
-  def stringElem(field: Int, s: String): Unit =
-    rawBytes(field, s.getBytes(UTF_8))
+  def stringElem(field: Int, s: String): Unit = {
+    val b = s.getBytes(UTF_8)
+    rawBytes(field, b, b.length)
+  }
   /** Embedded message — ALWAYS emitted (message-field presence is the
     * caller's decision; an empty message is meaningful in proto3). */
-  def message(field: Int, m: PbWriter): Unit = rawBytes(field, m.toBytes)
-  private def rawBytes(field: Int, b: Array[Byte]): Unit = {
-    tag(field, Pb.WireLenDelim); varint(b.length); out.write(b, 0, b.length)
+  def message(field: Int, m: PbWriter): Unit = rawBytes(field, m.buf, m.len)
+  private def rawBytes(field: Int, b: Array[Byte], n: Int): Unit = {
+    tag(field, Pb.WireLenDelim); varint(n)
+    room(n)
+    System.arraycopy(b, 0, buf, len, n)
+    len += n
   }
 }
 

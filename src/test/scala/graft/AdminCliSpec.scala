@@ -68,7 +68,7 @@ class AdminCliSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(info.contains(""""op":"info"""") &&
       info.contains(""""streams":4""") &&
       info.contains(""""geometry":"sb=4 tb=44 pl=20,30 wb=54 ql=-"""") &&
-      info.contains(""""reads":{"aligned":{"driver":0,"spark":0},""") &&
+      info.contains(""""reads":{"aligned":{"reads":0,"points":0},""") &&
       info.contains(""""ops/a""""), info)
     val si = run("stream", root, uuid)
     assert(si.contains(s""""uuid":"$uuid"""") &&

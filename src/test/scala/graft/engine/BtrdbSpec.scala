@@ -276,16 +276,56 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
       org.apache.spark.sql.functions.col("sid") === sid).count() == 1)
   }
 
-  test("latest served reads racing insert+flush of the same stream neither fail nor double count") {
-    val uuid = "u-race"
-    db.createStream(uuid, "test/race", Map("t" -> "race"))
-    // batches of 64 points at consecutive times: each fills one pw=6
-    // window, so a window counted twice reads 128
-    val batch = 64L
-    val acked = new java.util.concurrent.atomic.AtomicLong(0L)
+  /** A wire RawValues reply of `uuid` over [start, end): its (major,
+    * minor) version and its points. */
+  private def wireRaw(uuid: String, start: Long, end: Long): ((Long, Long), Seq[(Long, Double)]) = {
+    val w = new graft.wire.PbWriter
+    w.bytes(1, uuid.getBytes("UTF-8")); w.sfixed64(2, start); w.sfixed64(3, end)
+    val body = w.toBytes
+    val framed = java.nio.ByteBuffer.allocate(5 + body.length).put(0.toByte)
+      .putInt(body.length).put(body).array()
+    val reply = graft.wire.BtrdbWire.handle(db, "RawValues", framed)
+    val versions = Set.newBuilder[(Long, Long)]
+    val points = Seq.newBuilder[(Long, Double)]
+    reply.messages.foreach { m =>
+      val r = new graft.wire.PbReader(m)
+      var (maj, minor) = (0L, 0L)
+      while (r.hasNext) r.readTag() match {
+        case (1, _) => fail(s"RawValues of $uuid answered an error")
+        case (2, _) => maj = r.varint()
+        case (3, _) => minor = r.varint()
+        case (4, _) =>
+          val p = r.lenReader()
+          var (t, v) = (0L, 0.0)
+          while (p.hasNext) p.readTag() match {
+            case (1, _) => t = p.fixed64()
+            case (2, _) => v = p.double()
+            case (_, x) => p.skip(x)
+          }
+          points += ((t, v))
+        case (_, x) => r.skip(x)
+      }
+      versions += ((maj, minor))
+    }
+    val vs = versions.result()
+    assert(vs.size == 1, s"one reply, several versions: $vs")
+    (vs.head, points.result())
+  }
+
+  /** Latest served reads of `uuid` racing a writer that runs 10 rounds of
+    * a 16-point insert at the next free times plus a flush. The stream's
+    * `prefix` points fill [0, prefix) densely and were committed before
+    * (its major is the number of those commits). Every read must see
+    * contiguous points and 64-point pyramid windows (a window counted
+    * twice reads more), and every wire RawValues reply must carry exactly
+    * the points acked at the version it reports. */
+  private def raceReads(uuid: String, prefix: Long): Unit = {
+    val batch = 16L
+    val (major0, _) = db.version(uuid)
+    val acked = new java.util.concurrent.atomic.AtomicLong(prefix)
     val writer = new Thread(() =>
       for (k <- 0L until 10L) {
-        insertPoints(uuid, (0L until batch).map(i => (k * batch + i, 1.0)))
+        insertPoints(uuid, (0L until batch).map(i => (prefix + k * batch + i, 1.0)))
         acked.addAndGet(batch)
         db.flush(uuid)
       })
@@ -295,17 +335,131 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
       val before = acked.get
       val times = db.serveRawValues(uuid, 0, 1L << 20).map(_._1).toSeq
       val windows = db.serveAlignedWindows(uuid, 0, 1L << 20, 6).toSeq
+      val ((maj, minor), wire) = wireRaw(uuid, 0, 1L << 20)
       val after = acked.get + batch // an insert in flight may be read
       assert(times == (0L until times.size.toLong), "raw points lost or repeated")
       assert(times.size >= before && times.size <= after)
-      assert(windows.map(_._1) == windows.indices.map(_ * batch))
-      assert(windows.forall(_._5 == batch), s"a window counted twice: $windows")
-      assert(windows.size * batch >= before && windows.size * batch <= after)
+      assert(windows.map(_._1) == windows.indices.map(_ * 64L))
+      assert(windows.isEmpty || windows.init.forall(_._5 == 64) && windows.last._5 <= 64,
+        s"a window counted twice: $windows")
+      assert(windows.map(_._5).sum >= before && windows.map(_._5).sum <= after)
+      assert(wire.size == prefix + batch * (maj - major0) + minor,
+        s"a reply at ($maj, $minor) carried ${wire.size} points")
+      assert(wire.map(_._1) == (0L until wire.size.toLong))
       reads += 1
     }
     writer.join()
     assert(reads > 0)
-    assert(db.serveRawValues(uuid, 0, 1L << 20).size == 10 * batch)
+    assert(db.serveRawValues(uuid, 0, 1L << 20).size == prefix + 10 * batch)
+  }
+
+  test("latest served reads racing insert+flush of the same stream neither fail nor double count") {
+    val uuid = "u-race"
+    db.createStream(uuid, "test/race", Map("t" -> "race"))
+    raceReads(uuid, prefix = 0L)
+    // the same race on a stream whose reads merge at least 8 runs: 8
+    // earlier commits, each of every 8th time of [0, 1024)
+    val runs = "u-race-runs"
+    db.createStream(runs, "test/race", Map("t" -> "runs"))
+    for (j <- 0L until 8L) {
+      insertPoints(runs, (j until 1024L by 8L).map(t => (t, 1.0)))
+      db.flush(runs)
+    }
+    db.orderedReader.peakRuns.set(0L)
+    db.serveRawValues(runs, 0, 1L << 20).size
+    assert(db.orderedReader.peakRuns.get >= 8)
+    raceReads(runs, prefix = 1024L)
+  }
+
+  test("served reads merge overlapping, out-of-order and duplicate runs as the DataFrames order them") {
+    val uuid = "u-merge"
+    db.createStream(uuid, "test/merge", Map("t" -> "merge"))
+    def commit(pts: Seq[(Long, Double)]): Unit = { insertPoints(uuid, pts); db.flush(uuid) }
+    commit((1000L until 2000L).map(t => (t, (t % 7).toDouble)))
+    // a backfill, sent in descending time order
+    commit((0L until 1000L).reverse.map(t => (t, (t % 9).toDouble)))
+    // duplicate times: distinct values, then values equal to commit 1's
+    commit((500L until 1500L by 2L).map(t => (t, t % 5 + 0.5)))
+    commit((1001L until 1999L by 3L).map(t => (t, (t % 7).toDouble)))
+    // four interleaved commits, each shuffled
+    val rnd = new scala.util.Random(seed + 7)
+    for (j <- 0L until 4L)
+      commit(rnd.shuffle((j until 2000L by 4L).map(t => (t, j * 0.25))))
+    // and a staged run with duplicates of its own
+    insertPoints(uuid, (1990L until 2010L).flatMap(t => Seq((t, 3.0), (t, -1.0))))
+    db.orderedReader.peakRuns.set(0L)
+    val raw = Served.raw(db, uuid, 0, 3000)
+    assert(db.orderedReader.peakRuns.get >= 8)
+    assert(raw.size == 1000 + 1000 + 500 + 333 + 2000 + 40)
+    assert(wireRaw(uuid, 0, 3000)._2 == raw)
+    Served.raw(db, uuid, 250, 1750)
+    Served.raw(db, uuid, 0, 3000, version = 5)
+    for (width <- Seq(7L, 100L, 1000L); depth <- Seq(0, 9))
+      Served.windows(db, uuid, 3, 2995, width, depth = depth)
+    Served.windows(db, uuid, 0, 3000, 100, version = 3)
+    Served.aligned(db, uuid, 0, 3000, 4)
+    db.flush(uuid) // later tests count the streams with a write buffer
+  }
+
+  test("a served read holds at most runs x read-ahead decoded rows") {
+    val root = Files.createTempDirectory("readahead").toString
+    val bounded = new Btrdb(spark, root, sBuckets = 4, tBucketPw = 52,
+      bufferCommitThreshold = 4096, pyramidLevels = Seq(6, 10))
+    val uuid = "u-read-ahead"
+    bounded.createStream(uuid, "test/readahead", Map("t" -> "ra"))
+    val chunk = OrderedReader.ReadAhead.toLong * LocalParquet.BatchRows
+    val n = 10 * chunk + 12345
+    // one insert past the commit threshold commits straight from the
+    // time-ordered frame: time-ordered files
+    bounded.insert(uuid, spark.range(n).selectExpr("id as time", "cast(id % 100 as double) as value"))
+    val reader = bounded.orderedReader
+    reader.peakHeld.set(0L); reader.peakRuns.set(0L)
+    var count = 0L
+    var last = -1L
+    bounded.serveRawValues(uuid, 0, n).foreach { case (t, _) =>
+      assert(t == last + 1); last = t; count += 1 }
+    assert(count == n)
+    assert(reader.peakRuns.get >= 2)
+    assert(reader.peakHeld.get <= reader.peakRuns.get * chunk,
+      s"held ${reader.peakHeld.get} rows over ${reader.peakRuns.get} runs")
+    assert(reader.peakHeld.get < n)
+    bounded.close()
+  }
+
+  test("commits of two streams in one sbucket race neither each other nor the pyramid") {
+    import org.apache.spark.sql.functions.col
+    val root = Files.createTempDirectory("onesbucket").toString
+    val one = new Btrdb(spark, root, sBuckets = 1, tBucketPw = 52,
+      bufferCommitThreshold = 1 << 20, pyramidLevels = Seq(6, 10))
+    val uuids = Seq("u-sb-a", "u-sb-b")
+    uuids.foreach(u => one.createStream(u, "test/sbucket", Map("s" -> u)))
+    val (rounds, batch) = (10, 16L)
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val writers = uuids.zipWithIndex.map { case (u, w) =>
+      new Thread(() =>
+        try for (k <- 0L until rounds.toLong) {
+          one.insert(u, spark.createDataFrame(
+            (0L until batch).map(i => (k * batch + i, w + i * 0.25))).toDF("time", "value"))
+          one.flush(u)
+        } catch { case e: Throwable => failures.add(e) })
+    }
+    writers.foreach(_.start())
+    writers.foreach(_.join())
+    assert(failures.isEmpty, s"a writer failed: ${failures.peek()}")
+    for (u <- uuids) {
+      val times = one.rawValues(u, 0, 1L << 20).collect().map(_.getLong(0)).toSeq
+      assert(times == (0L until rounds * batch), s"acked points of $u lost or repeated")
+      val major = one.version(u)._1
+      // the pyramid's windows against their recompute from raw points (a
+      // pinned read never takes the pyramid)
+      def stats(df: org.apache.spark.sql.DataFrame) =
+        df.select(col("wstart"), col("cnt"), col("vmin"), col("vmean"), col("vmax"))
+          .collect().toSeq
+      val pyramid = one.alignedWindows(u, 0, 1L << 20, 6)
+      assert(pyramid.queryExecution.executedPlan.toString.contains("/pyramid"))
+      assert(stats(pyramid) == stats(one.alignedWindows(u, 0, 1L << 20, 6, version = major)), u)
+    }
+    one.close()
   }
 
   test("windows: arbitrary width with hole emission and end truncation") {
@@ -319,6 +473,8 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(w(0).getLong(2) == 2 && w(0).getDouble(4) == 2.0) // cnt, mean
     assert(w(1).getLong(2) == 0 && w(1).getDouble(3) == 0.0) // hole: zeros
     assert(w(2).getLong(2) == 1 && w(2).getDouble(5) == 5.0)
+    // on the serving path too, hole included
+    assert(Served.windows(db, uuid, 0, 350, 100)(1) == ((100L, 0.0, 0.0, 0.0, 0L)))
   }
 
   test("pyramid: aligned windows served from rollups match raw computation") {
@@ -393,6 +549,10 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(a.getDouble(3) == r.getDouble(3) &&
         a.getDouble(4) == r.getDouble(4) && a.getDouble(5) == r.getDouble(5))
     }
+    // the serving path folds the same rollup rows and raw points
+    Served.windows(db, uuid, 0, 4000, 1000, depth = 9)
+    Served.windows(db, uuid, 0, 4000, 1000, version = vmaj, depth = 9)
+    Served.windows(db, uuid, 0, 4000, 1000)
   }
 
   test("time-range reads prune tbucket partitions (scan cost ∝ range, not table)") {

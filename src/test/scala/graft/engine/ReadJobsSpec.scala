@@ -7,18 +7,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.TimeConsts
 import graft.wire.{BtrdbWire, PbReader, PbWriter}
 
 /** Small reads plan from state the engine already holds: building a
   * read's DataFrame runs no Spark job (no footer-schema inference, no
   * commit-log scan for delete anti-filters, no catalog lookup), and a
   * small read's DataFrame runs only the one job, with one task, that
-  * answers it. On the serving path (the wire, and `nearest`) a small
-  * read runs no job at all: the engine answers it on the calling
-  * thread. Jobs and tasks are counted by a listener around the call,
+  * answers it. On the serving path (the wire, and `nearest`) a read of
+  * any size runs no job at all: the engine answers it on the driver.
+  * Jobs and tasks are counted by a listener around the call,
   * after a warm-up read has seeded the engine's one-time catalog and
   * commit state. */
 class ReadJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
+  import ReadJobsSpec.WireRead
 
   private var spark: SparkSession = _
   private var db: Btrdb = _
@@ -141,18 +143,39 @@ class ReadJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Wire requests on each read path: RawValues of a clean, a deleted
     * and a staged stream; AlignedWindows served from the pyramid, from
     * the pyramid plus the write buffer, and from raw points under a
-    * delete; Changes; Nearest of a committed and of a staged point. */
-  private val wireReads: Seq[(String, String, Array[Byte])] = {
-    def raw(uuid: String, end: Long) = ("RawValues", uuid, framed { w =>
-      uuidField(w, uuid); w.sfixed64(2, base); w.sfixed64(3, base + end) })
-    def aligned(uuid: String, end: Long) = ("AlignedWindows", uuid, framed { w =>
-      uuidField(w, uuid); w.sfixed64(2, base); w.sfixed64(3, base + end); w.uint64(5, 10) })
-    def changes(uuid: String, to: Long) = ("Changes", uuid, framed { w =>
-      uuidField(w, uuid); w.uint64(3, to); w.uint64(4, 4) })
-    def nearest(uuid: String, t: Long) = ("Nearest", uuid, framed { w =>
-      uuidField(w, uuid); w.sfixed64(2, base + t) })
+    * delete; Windows over raw points, from the pyramid (depth > 0), under
+    * a delete, of a staged stream and pinned to a version; Changes;
+    * Nearest of a committed and of a staged point. */
+  private val wireReads: Seq[WireRead] = {
+    def rows(df: => DataFrame, cols: String*): () => Seq[Product] = () =>
+      df.select(cols.head, cols.tail: _*).collect().toSeq.map(r =>
+        if (cols.size == 2) (r.get(0), r.get(1))
+        else (r.get(0), r.get(1), r.get(2), r.get(3), r.get(4)))
+    val stats = Seq("wstart", "vmin", "vmean", "vmax", "cnt")
+    def raw(uuid: String, end: Long) = WireRead("RawValues", uuid, framed { w =>
+      uuidField(w, uuid); w.sfixed64(2, base); w.sfixed64(3, base + end) },
+      rows(db.rawValues(uuid, base, base + end), "time", "value"))
+    def aligned(uuid: String, end: Long) = WireRead("AlignedWindows", uuid, framed { w =>
+      uuidField(w, uuid); w.sfixed64(2, base); w.sfixed64(3, base + end); w.uint64(5, 10) },
+      rows(db.alignedWindows(uuid, base, base + end, 10), stats: _*))
+    def windows(uuid: String, end: Long, depth: Int = 0, version: Long = 0L) =
+      WireRead("Windows", uuid, framed { w =>
+        uuidField(w, uuid); w.sfixed64(2, base); w.sfixed64(3, base + end)
+        if (version > 0) w.uint64(4, version)
+        w.uint64(5, 1000); if (depth > 0) w.uint64(6, depth.toLong) },
+        rows(db.windows(uuid, base, base + end, 1000,
+          if (version > 0) version else TimeConsts.LatestGeneration, depth), stats: _*))
+    def changes(uuid: String, to: Long) = WireRead("Changes", uuid, framed { w =>
+      uuidField(w, uuid); w.uint64(3, to); w.uint64(4, 4) },
+      rows(db.changes(uuid, 0, to, 4), "s", "e"))
+    def nearest(uuid: String, t: Long) = WireRead("Nearest", uuid, framed { w =>
+      uuidField(w, uuid); w.sfixed64(2, base + t) },
+      () => rows(db.rawValues(uuid, base + t, base + 8192), "time", "value")().take(1))
     Seq(raw("u-clean", 4096), raw("u-deleted", 4096), raw("u-staged", 8192),
       aligned("u-clean", 4096), aligned("u-staged", 8192), aligned("u-deleted", 4096),
+      windows("u-clean", 4096), windows("u-clean", 4096, depth = 9),
+      windows("u-deleted", 4096), windows("u-staged", 8192),
+      windows("u-clean", 4096, version = 1),
       changes("u-clean", 2), changes("u-deleted", 3),
       nearest("u-clean", 10), nearest("u-staged", 4100))
   }
@@ -168,7 +191,7 @@ class ReadJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("wire reads of a small stream run no Spark job") {
-    for ((method, uuid, body) <- wireReads) {
+    for (WireRead(method, uuid, body, _) <- wireReads) {
       drain(method, body) // warm-up
       val (msgs, n) = counted(drain(method, body))
       assert(msgs.nonEmpty)
@@ -176,40 +199,70 @@ class ReadJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("above openCostInBytes the wire reads run their Spark plan, byte-identically") {
-    val small = wireReads.map { case (method, _, body) => drain(method, body) }
+  test("above openCostInBytes the wire reads run no job and equal the DataFrames") {
+    val small = wireReads.map(r => drain(r.method, r.body))
+    // the pyramid serves the depth-capped Windows of the clean stream
+    assert(pyramidServed(db.windows("u-clean", base, base + 4096, 1000, depth = 9)))
     spark.conf.set("spark.sql.files.openCostInBytes", "1")
-    try wireReads.zip(small).foreach { case ((method, uuid, body), local) =>
+    try wireReads.zip(small).foreach { case (WireRead(method, uuid, body, reference), local) =>
       val (msgs, n) = counted(drain(method, body))
+      assert(n.jobs == 0, s"$method on $uuid ran $n above the rule")
       assert(msgs.map(_.toSeq) == local.map(_.toSeq), s"$method on $uuid")
-      if (method == "Changes") {
-        // Changes reads only in-memory commit state and lists no file,
-        // so it stays on the driver; its DataFrame is the reference
-        assert(n.jobs == 0)
-        val (to, ranges) = (if (uuid == "u-clean") 2L else 3L, decodeRanges(msgs))
-        assert(ranges == db.changes(uuid, 0, to, 4).collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSeq)
-      } else assert(n.jobs >= 1, s"$method on $uuid ran no job above the rule")
+      assert(decodeRows(method, msgs) == reference(), s"$method on $uuid")
     } finally spark.conf.unset("spark.sql.files.openCostInBytes")
   }
 
-  /** The (start, end) ranges of a Changes reply (field 4 of each message). */
-  private def decodeRanges(msgs: Seq[Array[Byte]]): Seq[(Long, Long)] =
+  /** The rows of a reply (field 4 of each message): (time, value) points,
+    * (start, end) ranges, or (wstart, vmin, vmean, vmax, cnt) windows. */
+  private def decodeRows(method: String, msgs: Seq[Array[Byte]]): Seq[Product] =
+    method match {
+      case "Changes" => field4(msgs) { r =>
+        var s = 0L; var e = 0L
+        while (r.hasNext) r.readTag() match {
+          case (1, _) => s = r.fixed64()
+          case (2, _) => e = r.fixed64()
+          case (_, w) => r.skip(w)
+        }
+        (s, e)
+      }
+      case "RawValues" | "Nearest" => field4(msgs) { r =>
+        var t = 0L; var v = 0.0
+        while (r.hasNext) r.readTag() match {
+          case (1, _) => t = r.fixed64()
+          case (2, _) => v = r.double()
+          case (_, w) => r.skip(w)
+        }
+        (t, v)
+      }
+      case _ => field4(msgs) { r =>
+        var t = 0L; var lo = 0.0; var mean = 0.0; var hi = 0.0; var cnt = 0L
+        while (r.hasNext) r.readTag() match {
+          case (1, _) => t = r.fixed64()
+          case (2, _) => lo = r.double()
+          case (3, _) => mean = r.double()
+          case (4, _) => hi = r.double()
+          case (5, _) => cnt = r.fixed64()
+          case (_, w) => r.skip(w)
+        }
+        (t, lo, mean, hi, cnt)
+      }
+    }
+
+  private def field4(msgs: Seq[Array[Byte]])(row: PbReader => Product): Seq[Product] =
     msgs.flatMap { m =>
       val r = new PbReader(m)
-      val out = Seq.newBuilder[(Long, Long)]
+      val out = Seq.newBuilder[Product]
       while (r.hasNext) r.readTag() match {
-        case (4, _) =>
-          val cr = r.lenReader()
-          var s = 0L; var e = 0L
-          while (cr.hasNext) cr.readTag() match {
-            case (1, _) => s = cr.fixed64()
-            case (2, _) => e = cr.fixed64()
-            case (_, w) => cr.skip(w)
-          }
-          out += ((s, e))
+        case (4, _) => out += row(r.lenReader())
         case (_, w) => r.skip(w)
       }
       out.result()
     }
+}
+
+object ReadJobsSpec {
+  /** One wire read: its method, stream, framed request, and its answer
+    * from the public DataFrame (or, for Nearest, from rawValues). */
+  private final case class WireRead(method: String, uuid: String, body: Array[Byte],
+                                    reference: () => Seq[Product])
 }

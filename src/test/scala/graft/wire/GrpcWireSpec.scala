@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.engine.Btrdb
+import graft.engine.{Btrdb, ReadCounts}
 
 /** End-to-end BTrDB-wire shim test: a REAL HTTP/2 client (Netty frame
   * codec, nothing shared with the server beyond the [[Pb]] codec the
@@ -878,7 +878,7 @@ class GrpcWireSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   // runs last: its stream would join the collection listings above
-  test("Info counts driver- and Spark-served reads per kind") {
+  test("Info counts serving-path reads and their points per kind") {
     val u = "66666666-2222-3333-4444-555555555555"
     db.createStream(u, "wire/served", Map.empty)
     db.insert(u, spark.createDataFrame((0 until 32).map(i => (i * 10L, i * 0.5)))
@@ -896,13 +896,21 @@ class GrpcWireSpec extends AnyFunSuite with BeforeAndAfterAll {
     val c0 = rawCounts
     val small = readRaw()
     val c1 = rawCounts
-    assert(c1 == c0.copy(driver = c0.driver + 1), s"$c0 -> $c1")
-    // above the small-read rule the same read runs its Spark plan
+    assert(c1 == ReadCounts(c0.reads + 1, c0.points + 32), s"$c0 -> $c1")
+    // above the small-read rule the same read is served the same way
     spark.conf.set("spark.sql.files.openCostInBytes", "1")
     val large = try readRaw() finally spark.conf.unset("spark.sql.files.openCostInBytes")
     val c2 = rawCounts
-    assert(c2 == c1.copy(spark = c1.spark + 1), s"$c1 -> $c2")
+    assert(c2 == ReadCounts(c1.reads + 1, c1.points + 32), s"$c1 -> $c2")
     assert(large.map(_.toSeq) == small.map(_.toSeq))
+    // Windows counts the points its windows summarise: 3 windows of 100
+    // ns hold 30 points
+    val w0 = db.engineInfo().reads("windows")
+    val win = new PbWriter
+    win.bytes(1, BtrdbWire.uuidBytes(u))
+    win.sfixed64(2, 0L); win.sfixed64(3, 300L); win.uint64(5, 100L)
+    assert(statOf(call("Windows", win)._1.head).isEmpty)
+    assert(db.engineInfo().reads("windows") == ReadCounts(w0.reads + 1, w0.points + 30))
     // the other kinds count too: one Nearest probe, one Changes
     val (n0, ch0) = (db.engineInfo().reads("nearest"), db.engineInfo().reads("changes"))
     val near = new PbWriter
@@ -911,7 +919,7 @@ class GrpcWireSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ch = new PbWriter
     ch.bytes(1, BtrdbWire.uuidBytes(u)); ch.uint64(3, 1L)
     assert(statOf(call("Changes", ch)._1.head).isEmpty)
-    assert(db.engineInfo().reads("nearest").driver == n0.driver + 1)
-    assert(db.engineInfo().reads("changes").driver == ch0.driver + 1)
+    assert(db.engineInfo().reads("nearest") == ReadCounts(n0.reads + 1, n0.points + 1))
+    assert(db.engineInfo().reads("changes") == ch0.copy(reads = ch0.reads + 1))
   }
 }
