@@ -20,8 +20,10 @@ final class ResourceExhaustedException(pool: String)
   * pool defaults /root/reference/internal/rez/defaults.go:3-12).
   *
   * Spark-native scope, deliberately narrower than the reference's: a
-  * pool here bounds CONCURRENT DRIVER-SIDE ENGINE OPERATIONS (writes,
-  * maintenance, point lookups — each runs Spark jobs inline). Execution
+  * pool here bounds CONCURRENT DRIVER-SIDE ENGINE OPERATIONS: writes and
+  * maintenance, which run Spark jobs inline, and the opening of every
+  * serving-path read, which runs none (its rows are merged on the driver
+  * as the reply drains, outside the pool). Execution
   * of the lazy query DataFrames the engine hands out is governed by
   * Spark's own scheduler (FAIR pools / max concurrent tasks), which is
   * the cluster-side analog of the reference's ConcurrentOp pool — this

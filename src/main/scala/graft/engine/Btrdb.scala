@@ -76,15 +76,15 @@ import graft.storage.Store
   * immutable [[StreamState]] per stream.
   */
 class Btrdb(val spark: SparkSession, val root: String,
-            sBuckets: Int = 64, tBucketPw: Int = 48,
+            private[engine] val sBuckets: Int = 64, tBucketPw: Int = 48,
             bufferCommitThreshold: Long = 32768L,
-            pyramidLevels: Seq[Int] = Seq(30, 36, 42, 48),
-            pyramidWBucketPw: Int = 54,
+            private[engine] val pyramidLevels: Seq[Int] = Seq(30, 36, 42, 48),
+            private[engine] val pyramidWBucketPw: Int = 54,
             commitRangePw: Int = 36,
-            quantileLevel: Option[Int] = None,
+            private[engine] val quantileLevel: Option[Int] = None,
             lockRoot: Boolean = true,
             lockStaleMillis: Long = 120000L,
-            admission: Admission = Admission.default) {
+            private[engine] val admission: Admission = Admission.default) extends Pyramid {
   import Btrdb._
 
   require(pyramidLevels.isEmpty || pyramidWBucketPw >= pyramidLevels.max,
@@ -103,8 +103,8 @@ class Btrdb(val spark: SparkSession, val root: String,
     * which resolves paths through the SAME FileSystem. */
   val store = new Store(root, spark.sessionState.newHadoopConf())
 
-  private def path(part: String) = s"$root/$part"
-  private def exists(part: String) = store.exists(part)
+  private[engine] def path(part: String) = s"$root/$part"
+  private[engine] def exists(part: String) = store.exists(part)
 
   // ---- persisted layout geometry --------------------------------------
   //
@@ -296,7 +296,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     * flushed: only _SUCCESS and empty partition dirs remain) counts as
     * empty. Driver-side short-circuiting
     * walk; these are metadata-scale directories at any data volume. */
-  private def hasParquet(part: String): Boolean =
+  private[engine] def hasParquet(part: String): Boolean =
     store.containsFile(part, ".parquet")
 
   private def emptyDf(schema: String): DataFrame =
@@ -309,7 +309,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     * Inferring the schema from footers would cost a Spark job per read.
     * Partition columns of a directory read below the area root are
     * absent from its files and read as null. */
-  private def readArea(part: String, schema: String): DataFrame =
+  private[engine] def readArea(part: String, schema: String): DataFrame =
     spark.read.schema(schema).parquet(path(part))
 
   private def readOr(part: String, schema: String): DataFrame =
@@ -320,7 +320,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     * own directory name passes the request's partition filters, their
     * bytes, and the area's relation over the whole listing, built on
     * first use. */
-  private final class Scan(val files: Seq[FileStatus], relation: => DataFrame) {
+  private[engine] final class Scan(val files: Seq[FileStatus], relation: => DataFrame) {
     val bytes: Long = files.iterator.map(_.getLen).sum
     lazy val frame: DataFrame = relation
   }
@@ -333,7 +333,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     * partition columns come from the paths below `base`, the same
     * relation `spark.read.parquet` builds. Absent directories read
     * empty. */
-  private def scanDirs(base: String, dirs: Seq[String], schema: String)(
+  private[engine] def scanDirs(base: String, dirs: Seq[String], schema: String)(
       keep: String => Boolean): Scan = {
     val present = dirs.filter(exists)
     if (present.isEmpty) new Scan(Nil, emptyDf(schema))
@@ -353,7 +353,7 @@ class Btrdb(val spark: SparkSession, val root: String,
 
   /** Keeps the partition directories `key=N` with N in [lo, hi]; signed
     * names such as `tbucket=-3` included. */
-  private def within(key: String, lo: Long, hi: Long)(dirName: String): Boolean =
+  private[engine] def within(key: String, lo: Long, hi: Long)(dirName: String): Boolean =
     dirName.startsWith(s"$key=") &&
       dirName.stripPrefix(s"$key=").toLongOption.exists(v => v >= lo && v <= hi)
 
@@ -367,7 +367,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     if (bytes <= spark.sessionState.conf.filesOpenCostInBytes) df.coalesce(1) else df
 
   /** Decoder of the files the serving path reads. */
-  private val localParquet = new LocalParquet(spark)
+  private[engine] val localParquet = new LocalParquet(spark)
   /** The serving path's reader: one decode thread per session core. */
   private[engine] val orderedReader =
     new OrderedReader(localParquet, spark.sparkContext.defaultParallelism)
@@ -807,7 +807,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     * by every commit, so the ingest, read and stat hot paths never
     * re-scan commit metadata. A read takes one value per stream and
     * pins everything to it, with no lock. */
-  private val states = new ConcurrentHashMap[Long, StreamState]()
+  private[engine] val states = new ConcurrentHashMap[Long, StreamState]()
   @volatile private var seeded = false
   /** Per-stream write locks: writes to one stream are serialized, as by
     * the reference's per-stream write mutex. Lock order: a stream's lock,
@@ -815,7 +815,7 @@ class Btrdb(val spark: SparkSession, val root: String,
   private val writeLocks = new ConcurrentHashMap[Long, ReentrantLock]()
 
   /** Runs `body` holding the write locks of `sids`, taken in sid order. */
-  private def writing[T](sids: Long*)(body: => T): T =
+  private[engine] def writing[T](sids: Long*)(body: => T): T =
     locked(sids.distinct.sorted.map(writeLocks.computeIfAbsent(_, _ => new ReentrantLock())))(body)
 
   /** Locks of the files that writes to different streams share, taken
@@ -829,7 +829,7 @@ class Btrdb(val spark: SparkSession, val root: String,
   private val fileLocks = new ConcurrentHashMap[String, ReentrantLock]()
 
   /** Runs `body` holding the file locks `names`, taken in name order. */
-  private def exclusive[T](names: String*)(body: => T): T =
+  private[engine] def exclusive[T](names: String*)(body: => T): T =
     locked(names.distinct.sorted.map(fileLocks.computeIfAbsent(_, _ => new ReentrantLock())))(body)
 
   private def locked[T](locks: Seq[ReentrantLock])(body: => T): T = {
@@ -837,7 +837,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     try body finally locks.reverse.foreach(_.unlock())
   }
 
-  private def stateOf(sid: Long): StreamState = {
+  private[engine] def stateOf(sid: Long): StreamState = {
     seed()
     states.getOrDefault(sid, StreamState.Empty)
   }
@@ -846,24 +846,9 @@ class Btrdb(val spark: SparkSession, val root: String,
   private[engine] def snapshot(): Map[Long, StreamState] = { seed(); states.asScala.toMap }
 
   /** Replaces stream `sid`'s state by `f` of it. */
-  private def publish(sid: Long)(f: StreamState => StreamState): Unit = {
+  private[engine] def publish(sid: Long)(f: StreamState => StreamState): Unit = {
     seed()
     states.compute(sid, (_, s) => f(if (s == null) StreamState.Empty else s))
-  }
-
-  /** Pyramid-level non-emptiness memo: each level is probed at most once
-    * per (in)validation — a stat query must never walk the filesystem.
-    * Insert-path maintenance marks its levels present; the (rare)
-    * delete/compact/purge paths invalidate, and the next query re-probes
-    * lazily (one listing per level). */
-  private val pyramidPresent = scala.collection.mutable.Map.empty[Int, Boolean]
-
-  private def pyramidHas(level: Int): Boolean = synchronized {
-    pyramidPresent.getOrElseUpdate(level, hasParquet(s"pyramid/pw=$level"))
-  }
-  private def invalidatePyramidPresence(): Unit = synchronized {
-    pyramidPresent.clear()
-    qhistPresentMemo = None
   }
 
   /** Seeds every stream's state once: the [[StreamState.committed]]
@@ -940,8 +925,7 @@ class Btrdb(val spark: SparkSession, val root: String,
   def refreshCommits(): Unit = synchronized {
     invalidateCommits()
     seeded = false
-    invalidatePyramidPresence()
-    wmEnabledCache = null
+    refreshRollups()
   }
 
   /** StreamInfo: descriptor + (major, minor) version
@@ -963,73 +947,14 @@ class Btrdb(val spark: SparkSession, val root: String,
     * unconditionally true and the member list is empty — the analog of a
     * 1-node healthy cluster. `pointCount` totals committed insert
     * generations (deletes are anti-filters, not decrements). */
-  // wbucket-geometry alarms raised at fold time: PERSISTED as one
-  // `_`-prefixed marker file per degenerate rollup dir (Spark's reader
-  // ignores underscore paths, same convention as the watermark marker)
-  // so a console `attach` in another process sees them via
-  // engineInfo(); stderr once per dir per handle. Bounded: one marker
-  // per degenerate partition dir, and a degenerate geometry
-  // concentrates rollup in FEW dirs by definition. A later fold that
-  // finds the dir back under the bound clears its marker.
-  private val wbucketAlarmsSeen =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def alarmMarker(dir: String): String =
-    s"${Btrdb.WBucketAlarmDir}/${dir.stripPrefix("pyramid/")
-      .replace('/', '-')}"
-  /** The pw this root SHOULD have been created with, computed from the
-    * degenerate dir's observed bytes: each decrement of
-    * pyramidWBucketPw halves a wbucket's time-span — and, at the
-    * density that filled this dir, its bytes — so shrinking by
-    * ceil(log2(bytes / bound)) puts the dir back under the bound.
-    * Floored at max(pyramidLevels): a wbucket narrower than the
-    * coarsest level can't hold even one of its windows (the geometry
-    * require at construction). The fold already knows the dir's bytes
-    * and the root's geometry, so the operator gets a NUMBER to feed
-    * `stamp-geometry`/root re-creation, not just a knob name. */
-  private def suggestedWBucketPw(bytes: Long): Int = {
-    val floor = if (pyramidLevels.nonEmpty) pyramidLevels.max else 0
-    val halvings = math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(
-      (bytes - 1) / Btrdb.wbucketAlarmBytes))
-    math.max(floor, pyramidWBucketPw - halvings)
-  }
-
-  private def recordWBucketAlarm(dir: String, bytes: Long): Unit = {
-    val pw = suggestedWBucketPw(bytes)
-    store.writeAtomic(alarmMarker(dir), s"$bytes $dir $pw")
-    if (wbucketAlarmsSeen.add(dir))
-      System.err.println(s"[graft] engine root $root: rollup partition " +
-        s"$dir holds $bytes bytes (> ${Btrdb.wbucketAlarmBytes}): " +
-        "pyramidWBucketPw is too wide for this stream's density, so " +
-        "every commit rewrites this whole dir (O(total rollup), not " +
-        s"O(batch)) — recreate the root with pyramidWBucketPw=$pw " +
-        "(computed from this dir's density; see Btrdb.wbucketAlarmBytes)")
-  }
-  private def clearWBucketAlarm(dir: String): Unit =
-    if (wbucketAlarmsSeen.remove(dir) || exists(alarmMarker(dir)))
-      store.delete(alarmMarker(dir))
-
   def engineInfo(): EngineInfo = {
     val live = catalog.filter(!col("tombstoned")).count()
     val pts = commits.filter(col("kind") === "insert")
       .agg(coalesce(sum("npoints"), lit(0L))).head().getLong(0)
-    val warns =
-      if (!exists(Btrdb.WBucketAlarmDir)) Nil
-      else store.listNames(Btrdb.WBucketAlarmDir).sorted.map { name =>
-        val body = store.readString(s"${Btrdb.WBucketAlarmDir}/$name")
-          .map(_.trim).getOrElse("?")
-        body.split(" ", 3) match {
-          case Array(b, d, pw) =>
-            s"wbucket-degenerate: $d ${b}B > ${Btrdb.wbucketAlarmBytes}B " +
-              s"(suggest pyramidWBucketPw=$pw)"
-          case Array(b, d) => // pre-round-18 marker without a suggestion
-            s"wbucket-degenerate: $d ${b}B > ${Btrdb.wbucketAlarmBytes}B"
-          case _ => s"wbucket-degenerate: $body"
-        }
-      }
     EngineInfo(majorVersion = 4, minorVersion = 15,
       build = "graft-spark (btrdb-surface 4.15)", healthy = true,
       streamCount = live, pointCount = pts,
-      pools = admission.gauges, warnings = warns, reads = readCounts)
+      pools = admission.gauges, warnings = wbucketWarnings, reads = readCounts)
   }
 
   /** Reads answered so far on the serving path, per kind, and the points
@@ -1048,7 +973,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     (s.major, s.minor)
   }
 
-  private def majorOf(sid: Long): Long = stateOf(sid).major
+  private[engine] def majorOf(sid: Long): Long = stateOf(sid).major
 
   /** Insert: validate, stage; auto-commit when the buffer crosses the
     * threshold (PQM semantics, /root/reference/pqm.go:510-625).
@@ -1076,15 +1001,7 @@ class Btrdb(val spark: SparkSession, val root: String,
             // large batch, empty buffer: commit directly — no staging round-trip
             commitBatch(sid, batch, st, partials)
           else {
-            // unique engine-generated batch id (disjoint from StreamingIngest's
-            // small checkpoint batchIds): flush records the ids it consumes,
-            // making an interrupted flush recoverable without duplicates
-            exclusive("staging") {
-              batch.withColumn("batch", lit(batchIdGen.incrementAndGet()))
-                .sortWithinPartitions("time")
-                .write.mode(SaveMode.Append).partitionBy("sid", "batch")
-                .parquet(path("staging"))
-            }
+            stage(batch)
             publish(sid)(_.staged(st.n, st.tmin, st.tmax))
             if (stateOf(sid).minor >= bufferCommitThreshold) flushImpl(sid)
           }
@@ -1123,21 +1040,30 @@ class Btrdb(val spark: SparkSession, val root: String,
       sids.foreach(requireNotMigratingOut(_, "insertAll"))
       seed() // before the write: seeding counts the staged files
       writing(sids: _*) {
-        exclusive("staging") {
-          batch.withColumn("batch", lit(batchIdGen.incrementAndGet()))
-            .sortWithinPartitions("time")
-            .write.mode(SaveMode.Append).partitionBy("sid", "batch")
-            .parquet(path("staging"))
-        }
+        stage(batch)
         counts.foreach(r =>
           publish(r.getLong(0))(_.staged(r.getLong(1), r.getLong(3), r.getLong(4))))
       }
     }
 
+  /** Appends `batch` (sid, time, value) to the write buffer under a
+    * unique engine-generated batch id (disjoint from StreamingIngest's
+    * small checkpoint batchIds): flush records the ids it consumes, making
+    * an interrupted flush recoverable without duplicates. Each file is
+    * time-sorted: the sort leads with the partition columns, as the
+    * planned write requires, or the write would replace it by its own. */
+  private def stage(batch: DataFrame): Unit =
+    exclusive("staging") {
+      batch.withColumn("batch", lit(batchIdGen.incrementAndGet()))
+        .sortWithinPartitions("sid", "batch", "time")
+        .write.mode(SaveMode.Append).partitionBy("sid", "batch")
+        .parquet(path("staging"))
+    }
+
   /** Granularity of the one-pass batch partials: the finest pyramid
     * level (so the fold needs no re-aggregation) but never coarser than
     * the commit-range clustering width. */
-  private val partialPw: Int =
+  private[engine] val partialPw: Int =
     math.min(pyramidLevels.sorted.headOption.getOrElse(commitRangePw),
       commitRangePw)
 
@@ -1242,16 +1168,13 @@ class Btrdb(val spark: SparkSession, val root: String,
     // version stamps (they are ≤ v and carried in the batch) and lands
     // as a compacted record, reproducing the source's collapsed floor.
     val v = atVersion.getOrElse(majorOf(sid) + 1)
+    // no repartition: a full shuffle per ingest batch is the wrong trade
+    // at scale — file count is bounded by input partitions × touched
+    // tbuckets per batch (time-contiguous batches touch few)
     writePoints((if (batch.columns.contains("version")) batch
      else batch.withColumn("version", lit(v)))
       .withColumn("sbucket", pmod(col("sid"), lit(sBuckets)))
-      .withColumn("tbucket", shiftright(col("time"), tBucketPw))
-      // no repartition: a full shuffle per ingest batch is the wrong
-      // trade at scale — file count is bounded by input partitions ×
-      // touched tbuckets per batch (time-contiguous batches touch few),
-      // and sortWithinPartitions keeps per-file row-group time stats
-      // tight for pushdown
-      .sortWithinPartitions("sid", "time"), SaveMode.Append)
+      .withColumn("tbucket", shiftright(col("time"), tBucketPw)), SaveMode.Append)
     appendCommit(CommitRecord(sid, v, "insert", st.tmin, st.tmax, st.n, st.ranges,
       asCompacted, consumedBatches, grid = st.offGrid == 0L))
     // INSERT path: the batch's partial aggregates fold into the existing
@@ -1506,9 +1429,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     // with the rollup already consistent (the watermark, stamped only
     // at the very end, keeps reads on merge-on-read until then), and a
     // crash during this heal resumes with the records intact.
-    val missedPreCompact = missedFoldRanges(sid, maj + 1)
-    if (missedPreCompact.nonEmpty)
-      maintainPyramidInner(sid, missedPreCompact, None)
+    maintainPyramidInner(sid, missedFoldRanges(sid, maj + 1), None)
     // rows of THIS stream erased by a delete commit (merge-on-read debt)
     val dirty = hides(Seq(sid), _ => s, maj).foldLeft(lit(false))(_ || _)
     val keptOwn = col("sid") === sid && !dirty
@@ -1597,63 +1518,19 @@ class Btrdb(val spark: SparkSession, val root: String,
     invalidateCommits()
   }
 
-  /** Deletes the rollup and histogram rows of the streams `active`, in
-    * their sbuckets `buckets`. */
-  private def purgeRollups(active: Seq[Long], buckets: Seq[Long]): Unit = {
-    if (hasParquet("pyramid")) {
-      // rollup rows are ~data/2^minLevel (≥2^30 at production geometry):
-      // a whole touched-sbucket slice is metadata-scale, so the simple
-      // one-pass rewrite is fine where it was not for the point log
-      val (pyrDf, releasePyr) = checkpointReleasable(
-        pyramidRead("pyramid").filter(col("sbucket").isin(buckets: _*)))
-      val keptP = pyrDf.filter(!col("sid").isin(active: _*))
-      keptP.repartition(col("pw"), col("sbucket"), col("wbucket"))
-        .sortWithinPartitions("sid", "wstart")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("pw", "sbucket", "wbucket")
-        .parquet(path("pyramid"))
-      def parts(df: DataFrame) = df
-        .select(col("pw").cast("long"), col("sbucket").cast("long"),
-          col("wbucket").cast("long"))
-        .distinct().collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      parts(pyrDf).diff(parts(keptP)).foreach { case (pw, sb, wb) =>
-        deleteDir(s"pyramid/pw=$pw/sbucket=$sb/wbucket=$wb") }
-      releasePyr()
-      invalidatePyramidPresence()
-    }
-    if (hasParquet("qhist")) {
-      // the quantile histogram holds the stream's VALUE DISTRIBUTION —
-      // obliterate's removal contract covers it exactly like the point
-      // log and the stat rollup
-      ensureQhistLayout()
-      val (qDf, releaseQ) = checkpointReleasable(
-        readArea("qhist", QhistSchema).filter(col("sbucket").isin(buckets: _*)))
-      val keptQ = qDf.filter(!col("sid").isin(active: _*))
-      keptQ.repartition(col("sbucket"), col("wbucket"))
-        .sortWithinPartitions("sid", "wstart", "c")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("sbucket", "wbucket")
-        .parquet(path("qhist"))
-      def qparts(df: DataFrame) = df
-        .select(col("sbucket").cast("long"), col("wbucket").cast("long"))
-        .distinct().collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      qparts(qDf).diff(qparts(keptQ)).foreach { case (sb, wb) =>
-        deleteDir(s"qhist/sbucket=$sb/wbucket=$wb") }
-      releaseQ()
-    }
-  }
-
   /** The point-log writer: Parquet partitioned by (sbucket, tbucket),
     * zstd over v2 data pages — the columnar analog of the reference's
     * delta-delta+varint encoder (FAST'16): v2's DELTA_BINARY_PACKED
     * int64 encoding is the delta-delta itself, measured 3.76 -> ~1.0
     * B/point on the time column at 120 Hz cadence (CompressionBench);
-    * Spark's vectorized reader decodes v2 natively. */
+    * Spark's vectorized reader decodes v2 natively. Each file is sorted by
+    * (sid, time), which keeps its row-group time stats tight for pushdown
+    * and lets the serving path stream it: the sort leads with the
+    * partition columns, as the planned write requires, or the write would
+    * replace it by its own. */
   private def writePoints(rows: DataFrame, mode: SaveMode): Unit =
     exclusive("points") {
-      rows.write.mode(mode)
+      rows.sortWithinPartitions("sbucket", "tbucket", "sid", "time").write.mode(mode)
         .option("compression", "zstd")
         .option("parquet.writer.version", "v2")
         .partitionBy("sbucket", "tbucket")
@@ -1688,14 +1565,13 @@ class Btrdb(val spark: SparkSession, val root: String,
             part.filter(!drop)
               .withColumn("sbucket", lit(sb))
               .withColumn("tbucket", lit(tb)))
-          writePoints(kept.repartition(col("sbucket"), col("tbucket"))
-            .sortWithinPartitions("sid", "time"), SaveMode.Overwrite)
+          writePoints(kept.repartition(col("sbucket"), col("tbucket")), SaveMode.Overwrite)
           release()
         }
         r
       }}
 
-  private def deleteDir(part: String): Unit = store.deleteRecursive(part)
+  private[engine] def deleteDir(part: String): Unit = store.deleteRecursive(part)
 
   /** Eager local checkpoint with a RELEASABLE handle. The checkpoint
     * materializes `df` and BREAKS LINEAGE, so a following overwrite of
@@ -1789,7 +1665,7 @@ class Btrdb(val spark: SparkSession, val root: String,
 
   /** A listed read of the point log (see [[pointLog]]): the bytes of the
     * files it keeps and its plan over that listing (built on first use). */
-  private final class PointLog(val bytes: Long, plan: => DataFrame) {
+  private[engine] final class PointLog(val bytes: Long, plan: => DataFrame) {
     lazy val frame: DataFrame = plan
   }
 
@@ -1806,7 +1682,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     * collapsed. `None` reads every stream, latest and whole-domain, from
     * the area roots (the SQL view's plan). The serving path's
     * [[pointRuns]] keeps the same rows. */
-  private def pointLog(sids: Option[Seq[Long]],
+  private[engine] def pointLog(sids: Option[Seq[Long]],
                        version: Long = TimeConsts.LatestGeneration,
                        start: Long = TimeConsts.MinimumTime,
                        end: Long = TimeConsts.MaximumTime,
@@ -2008,12 +1884,7 @@ class Btrdb(val spark: SparkSession, val root: String,
       sids.partition(sid => rollupServes(level.isDefined, sid, stateOf(sid)))
     val parts = Seq(
       if (pyrSids.isEmpty) None else Some {
-        pyramidRead(s"pyramid/pw=${level.get}")
-          .filter(col("sid").isin(pyrSids: _*) &&
-            col("sbucket").isin(pyrSids.map(_ % sBuckets).distinct: _*) &&
-            col("wbucket") >= (s >> pyramidWBucketPw) &&
-            col("wbucket") <= ((e - 1) >> pyramidWBucketPw) &&
-            col("wstart") >= s && col("wstart") < e)
+        rollupRows(pyramidRead(s"pyramid/pw=${level.get}"), pyrSids, s, e)
           .groupBy(col("sid"), TimeOps.clampTime(col("wstart"), pw).as("wstart"))
           .agg(RollupStats.head, RollupStats.tail: _*)
       },
@@ -2064,12 +1935,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     val (pyrSids, rawSids) = sids.partition(sid => rollupServes(qhistHas, sid, stateOf(sid)))
     val parts = Seq(
       if (pyrSids.isEmpty) None else Some {
-        readArea("qhist", QhistSchema)
-          .filter(col("sid").isin(pyrSids: _*) &&
-            col("sbucket").isin(pyrSids.map(_ % sBuckets).distinct: _*) &&
-            col("wbucket") >= (s >> pyramidWBucketPw) &&
-            col("wbucket") <= ((e - 1) >> pyramidWBucketPw) &&
-            col("wstart") >= s && col("wstart") < e)
+        rollupRows(readArea("qhist", QhistSchema), pyrSids, s, e)
           .groupBy(col("sid"), TimeOps.clampTime(col("wstart"), pw).as("wstart"),
             col("c"))
           .agg(sum("cnt").as("hc"))
@@ -2085,6 +1951,16 @@ class Btrdb(val spark: SparkSession, val root: String,
       }).flatten
     parts.reduce(_ unionByName _)
   }
+
+  /** The rows of a rollup table `rollup` of the streams `sids` for
+    * windows in [s, e), its partition filters keeping their sbuckets and
+    * the wbuckets the range intersects. */
+  private def rollupRows(rollup: DataFrame, sids: Seq[Long], s: Long, e: Long): DataFrame =
+    rollup.filter(col("sid").isin(sids: _*) &&
+      col("sbucket").isin(sids.map(_ % sBuckets).distinct: _*) &&
+      col("wbucket") >= (s >> pyramidWBucketPw) &&
+      col("wbucket") <= ((e - 1) >> pyramidWBucketPw) &&
+      col("wstart") >= s && col("wstart") < e)
 
   /** Single-stream [[quantileWindowsBulk]]. */
   def quantileWindows(uuid: String, start: Long, end: Long,
@@ -2210,7 +2086,7 @@ class Btrdb(val spark: SparkSession, val root: String,
               strictFinalWindow: Boolean = false): DataFrame = {
     val e = TimeOps.truncateEnd(start, end, width)
     val sid = sidOf(uuid)
-    val c = if (depth <= 0) 0 else StatOps.depthBucketPw(depth)
+    val (c, lo, hi) = depthScan(start, e, depth)
     val u = 1L << c
     val n0 = (e - start) / width
     val n =
@@ -2225,11 +2101,6 @@ class Btrdb(val spark: SparkSession, val root: String,
           }))
         n0 - 1
       else n0
-    // depth-capped scan bounds: skip the dropped straddler bucket and
-    // keep the last contributing bucket's tail past `e`
-    val (lo, hi) =
-      if (depth <= 0) (start, e)
-      else (TimeOps.alignDown(start, c) + u, TimeOps.alignDown(e - 1, c) + u)
     val bucketStart: Column => Column =
       t => if (depth <= 0) t else TimeOps.clampTime(t, c)
     val level = (if (depth > 0) rollupLevel(c) else None)
@@ -2256,6 +2127,17 @@ class Btrdb(val spark: SparkSession, val root: String,
       .orderBy("i")
   }
 
+  /** The depth-capped scan of a Windows read of [start, e): the
+    * attribution bucket width 2^c (0 at depth 0) and the scan bounds,
+    * which skip the dropped straddler bucket and keep the last
+    * contributing bucket's tail past `e`. */
+  private def depthScan(start: Long, e: Long, depth: Int): (Int, Long, Long) =
+    if (depth <= 0) (0, start, e)
+    else {
+      val c = StatOps.depthBucketPw(depth)
+      (c, TimeOps.alignDown(start, c) + (1L << c), TimeOps.alignDown(e - 1, c) + (1L << c))
+    }
+
   /** [[windows]] (without the strict final window) on the serving path:
     * its (wstart, vmin, vmean, vmax, cnt) rows, folded on the calling
     * thread from the rollup rows where the pyramid serves, else from the
@@ -2267,16 +2149,11 @@ class Btrdb(val spark: SparkSession, val root: String,
       : ServedRows[(Long, Double, Double, Double, Long)] = {
     val sid = sidOf(uuid)
     val e = TimeOps.truncateEnd(start, end, width)
-    val c = if (depth <= 0) 0 else StatOps.depthBucketPw(depth)
-    val u = 1L << c
+    val (c, lo, hi) = depthScan(start, e, depth)
     val n = (e - start) / width
-    // the same depth-capped scan bounds as [[windows]]
-    val (lo, hi) =
-      if (depth <= 0) (start, e)
-      else (TimeOps.alignDown(start, c) + u, TimeOps.alignDown(e - 1, c) + u)
     val level = if (depth > 0) rollupLevel(c) else None
     admission.run(Admission.PointOp)(served[WindowFold.Row]("windows", sid, _._5) { state =>
-      val fold = WindowFold.windows(start, width, if (depth <= 0) 0 else c)
+      val fold = WindowFold.windows(start, width, c)
       val folded = level.filter(_ => rollupServes(true, sid, state, version)) match {
         case Some(l) =>
           localRollup(pyramidScan(sid, l, lo, hi), sid, lo, hi, fold)
@@ -2560,503 +2437,7 @@ class Btrdb(val spark: SparkSession, val root: String,
       .write.mode(SaveMode.Overwrite).option("header", "true").csv(outPath)
   }
 
-  // ---- stat pyramid maintenance --------------------------------------
-
-  /** Recompute exactly the rollup buckets the commit touched — the
-    * distributed CGeneration trick
-    * (/root/reference/internal/bstore/blocktypes.go:111, maintained in
-    * /root/reference/internal/bstore/linker.go:51-141). Each pyramid
-    * level is partitioned by (sbucket, wbucket = wstart >>
-    * pyramidWBucketPw); a maintenance pass rewrites ONLY the partitions
-    * intersecting the commit's touched ranges, via dynamic partition
-    * overwrite — ingest cost is proportional to dirtied data, never to
-    * total rollup size. Crash window: the pyramid is a derived cache;
-    * a write interrupted mid-overwrite leaves dirtied partitions stale,
-    * and single-writer recovery is to re-run the maintenance for the
-    * last commit's ranges (idempotent — it recomputes from the point
-    * log). */
-  // ---- pyramid fold watermark ----------------------------------------
-  // The commit protocol is points → commit record → pyramid fold; a
-  // crash between the record and the fold leaves the rollup silently
-  // MISSING that commit's contribution — a stat query would then
-  // under-count with no signal. The watermark closes that window: the
-  // fold stamps `pyramid/_wm-<sid>` (atomic rename) with the commit
-  // version it completed, readers treat wm < major as "pyramid not
-  // current" (bail to merge-on-read, exactly like delete debt), and
-  // the writer SELF-HEALS on its next fold — commits above the
-  // watermark recompute their ranges from the point log (idempotent)
-  // before the new batch folds. Steady state costs one tiny file
-  // write per commit and zero extra jobs (the gap query runs only
-  // when the watermark is actually behind). A root written before
-  // watermarking has no `_wm` files; absence reads as current (the
-  // legacy assumption), and the first post-upgrade fold starts
-  // stamping.
-  @volatile private var wmEnabledCache: java.lang.Boolean = null
-  private def wmEnabled: Boolean = {
-    var e = wmEnabledCache
-    if (e == null) synchronized {
-      e = wmEnabledCache
-      if (e == null) {
-        e = java.lang.Boolean.valueOf(exists(WmEnabledMarker))
-        wmEnabledCache = e
-      }
-    }
-    e.booleanValue()
-  }
-  /** Stream `sid`'s watermark stamp in its state `state`, read from
-    * its file on first use and kept in the stream's state. */
-  private def pyramidWatermark(sid: Long, state: StreamState): Option[Long] =
-    state.watermark.getOrElse {
-      val wm = store.readString(s"pyramid/_wm-$sid").map(_.trim.toLong)
-      states.computeIfPresent(sid, (_, s) =>
-        if (s.watermark.isEmpty) s.copy(watermark = Some(wm)) else s)
-      wm
-    }
-  /** The watermark the consistency checks compare against: the per-sid
-    * stamp when present; under the enablement marker an ABSENT stamp
-    * means no fold ever completed (a crashed FIRST fold reads as 0,
-    * stale) — only a root no post-upgrade writer has touched (no
-    * marker) keeps the legacy everything-is-current assumption. */
-  private def effectiveWatermark(sid: Long, state: StreamState): Option[Long] =
-    pyramidWatermark(sid, state).orElse(if (wmEnabled) Some(0L) else None)
-  private def stampPyramidWatermark(sid: Long, v: Long): Unit = {
-    store.writeAtomic(s"pyramid/_wm-$sid", v.toString)
-    publish(sid)(_.copy(watermark = Some(Some(v))))
-  }
-  /** True iff the rollup provably includes every committed generation
-    * of `sid` (or the root predates watermarking). */
-  private[graft] def pyramidCurrent(sid: Long): Boolean = pyramidCurrent(sid, stateOf(sid))
-
-  /** [[pyramidCurrent]] at the stream's state `state`; a stream with no
-    * commit is current whatever its stamp. */
-  private def pyramidCurrent(sid: Long, state: StreamState): Boolean =
-    pyramidLevels.isEmpty || state.major == 0 ||
-      effectiveWatermark(sid, state).forall(_ >= state.major)
-
-  /** The deepest maintained rollup level at or below 2^pw, if it holds
-    * rows. */
-  private def rollupLevel(pw: Int): Option[Int] =
-    pyramidLevels.filter(_ <= pw).sorted.lastOption.filter(pyramidHas)
-
-  /** The one pyramid-serving gate: true iff a rollup table that holds
-    * rows (`table`: a level from [[rollupLevel]], or the quantile
-    * histogram) answers stream `sid` in state `state` at `version`
-    * exactly — a latest
-    * read of a stream with no delete debt whose rollup includes every
-    * commit, and an empty write buffer unless the path merges the
-    * buffer itself (`mergesBuffer`). */
-  private def rollupServes(table: Boolean, sid: Long, state: StreamState,
-                           version: Long = TimeConsts.LatestGeneration,
-                           mergesBuffer: Boolean = false): Boolean =
-    table && version == TimeConsts.LatestGeneration && state.deletes.isEmpty &&
-      pyramidCurrent(sid, state) && (mergesBuffer || state.minor == 0)
-
-  /** Ranges of commits whose fold a crash discarded: version in
-    * (wm, below). Empty in steady state. Bounded: past `MaxHealRanges`
-    * the ranges coalesce to their overall envelope — one recompute of
-    * everything beats a thousands-way DataFrame union (the
-    * legacy-root-upgrade case, where effective watermark 0 makes the
-    * whole history "missed": the first post-upgrade fold then does one
-    * envelope-wide rebuild instead of a per-commit range list the
-    * planner chokes on). */
-  private def missedFoldRanges(sid: Long, below: Long): Seq[(Long, Long)] = {
-    val state = stateOf(sid)
-    effectiveWatermark(sid, state).filter(_ < below - 1).map { wm =>
-      val rs = state.ranges.collect { case (v, s, e) if v > wm && v < below => (s, e) }
-      if (rs.size <= Btrdb.MaxHealRanges) rs
-      else Seq((rs.map(_._1).min, rs.map(_._2).max))
-    }.getOrElse(Nil)
-  }
-
-  /** Maintenance op: recompute any rollup ranges a crash left unfolded
-    * and bring the watermark current — for a read-heavy stream that
-    * sees no new commits (the write path self-heals on its next fold).
-    * Returns true iff a repair ran. */
-  def repairPyramid(uuid: String): Boolean =
-    admission.run(Admission.Maintenance) {
-      val sid = sidOf(uuid)
-      writing(sid) {
-        if (pyramidCurrent(sid)) false
-        else {
-          val maj = majorOf(sid)
-          val missed = missedFoldRanges(sid, maj + 1)
-          if (missed.nonEmpty) maintainPyramidInner(sid, missed, None)
-          stampPyramidWatermark(sid, maj)
-          true
-        }
-      }
-    }
-
-  private def maintainPyramid(sid: Long, touched: Seq[(Long, Long)],
-                              foldPartials: Option[DataFrame],
-                              commitVersion: Long,
-                              foldQhist: Option[DataFrame] = None): Unit = {
-    // self-heal BEFORE the new fold: recompute (idempotent) the ranges
-    // of commits between the watermark and this one, so a crashed
-    // earlier fold can never be masked by this commit's stamp. The
-    // recompute PINS at commitVersion - 1: this commit's own rows are
-    // already in the point log, and an unpinned recompute would bake
-    // them into any overlapping window — the additive fold below would
-    // then count them a second time.
-    val missed = missedFoldRanges(sid, commitVersion)
-    if (missed.nonEmpty)
-      maintainPyramidInner(sid, missed, None, recomputeAt = commitVersion - 1)
-    maintainPyramidInner(sid, touched, foldPartials, foldQhist = foldQhist)
-    if (pyramidLevels.nonEmpty) stampPyramidWatermark(sid, commitVersion)
-  }
-
-  private def maintainPyramidInner(sid: Long, touched: Seq[(Long, Long)],
-                                   foldPartials: Option[DataFrame],
-                                   recomputeAt: Long =
-                                     TimeConsts.LatestGeneration,
-                                   foldQhist: Option[DataFrame] = None): Unit =
-    if (pyramidLevels.nonEmpty && touched.nonEmpty)
-      exclusive(s"sbucket=${sid % sBuckets}")(
-        foldPyramid(sid, touched, foldPartials, recomputeAt, foldQhist))
-
-  /** [[maintainPyramidInner]] under its sbucket's lock. */
-  private def foldPyramid(sid: Long, touched: Seq[(Long, Long)],
-                          foldPartials: Option[DataFrame], recomputeAt: Long,
-                          foldQhist: Option[DataFrame]): Unit = {
-    ensurePyramidLayout()
-    val sorted = pyramidLevels.sorted
-    val base = sorted.head
-    val coarsest = sorted.last
-    // align ranges to the coarsest level and coalesce (driver-side, ≤64)
-    val w = 1L << coarsest
-    val aligned = touched.map { case (s, e) =>
-      (TimeOps.alignDown(s, coarsest), TimeOps.alignDown(e - 1, coarsest) + w)
-    }.sortBy(_._1)
-    val ranges = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    aligned.foreach { case (s, e) =>
-      if (ranges.nonEmpty && s <= ranges.last._2)
-        ranges(ranges.size - 1) = (ranges.last._1, math.max(ranges.last._2, e))
-      else ranges += ((s, e))
-    }
-    val sb = sid % sBuckets
-    // Finest-level partials. INSERT path: the batch's one-pass partials
-    // FOLD into the existing rollup rows (count/min/max/sum compose over
-    // multisets) — the reference's SetChild recompute on relink
-    // (/root/reference/qtree/qtree.go:436-468), with zero point-log
-    // rescan and zero extra batch passes. DELETE/compact path: recompute
-    // the dirtied ranges from the (anti-filtered) point log, one
-    // tbucket-pruned scan per range.
-    val fold = foldPartials.isDefined
-    // DELETE/heal recompute input: the stream's committed points in the
-    // dirtied ranges, one tbucket-pruned scan per range
-    lazy val recomputed = ranges.map { case (lo, hi) =>
-      pointLog(Some(Seq(sid)), recomputeAt, lo, hi, buffered = false).frame
-    }.reduce(_ unionByName _)
-    val baseFresh = (foldPartials match {
-        case Some(p) if partialPw == base =>
-          p.select(col("wstart"), col("cnt"), col("ccnt"), col("vmin"),
-            col("vmax"), col("vsum"), col("vsc"))
-        case Some(p) =>
-          p.groupBy(TimeOps.clampTime(col("wstart"), base).as("wstart"))
-            .agg(RollupMerge.head, RollupMerge.tail: _*)
-        case None =>
-          recomputed
-            .groupBy(TimeOps.clampTime(col("time"), base).as("wstart"))
-            .agg(count(lit(1)).as("cnt"),
-              count(StatOps.cents(col("value"))).as("ccnt"),
-              min("value").as("vmin"),
-              max("value").as("vmax"), sum("value").as("vsum"),
-              sum(StatOps.centsSum(col("value"))).as("vsc"))
-      })
-      .withColumn("sid", lit(sid))
-      .cache()
-    val inRange = (c: Column) =>
-      ranges.map { case (lo, hi) => c >= lo && c < hi }.reduce(_ || _)
-    val wbuckets: Seq[Long] = ranges.toSeq.flatMap { case (lo, hi) =>
-      (lo >> pyramidWBucketPw) to ((hi - 1) >> pyramidWBucketPw) }.distinct
-    // ALL levels live in ONE table partitioned by (pw, sbucket, wbucket):
-    // the whole maintenance pass is a single checkpoint and a single
-    // dynamic-overwrite write, not one pair of jobs per level. Coarser
-    // levels roll up from the finer fresh rows lazily — everything
-    // materializes inside the one checkpoint job.
-    val cols =
-      Seq("sid", "wstart", "cnt", "ccnt", "vmin", "vmax", "vsum", "vsc")
-    val freshByLevel = sorted.tail.scanLeft(base -> baseFresh) {
-      case ((_, finer), pw) =>
-        pw -> finer
-          .groupBy(TimeOps.clampTime(col("wstart"), pw).as("wstart"))
-          .agg(RollupMerge.head, RollupMerge.tail: _*)
-          .withColumn("sid", lit(sid))
-    }
-    val freshAll = freshByLevel.map { case (pw, df) =>
-      df.select(cols.map(col): _*).withColumn("pw", lit(pw)) }
-      .reduce(_ unionByName _)
-    val pcols = Seq("pw") ++ cols
-    // rows already in the dirtied partitions — partition filters prune
-    // everything else from the read
-    val existing =
-      if (!hasParquet("pyramid")) freshAll.select(pcols.map(col): _*).limit(0)
-      else pyramidRead("pyramid")
-        .filter(col("pw").isin(sorted: _*) && col("sbucket") === sb &&
-          col("wbucket").isin(wbuckets: _*))
-        .select(pcols.map(col): _*)
-    val (merged, release) = checkpointReleasable(
-      (if (fold)
-        // fold: existing rows (all streams, incl. this one's) combine
-        // with the fresh partials per (pw, sid, wstart); untouched rows
-        // pass through as single-row groups
-        existing.unionByName(freshAll.select(pcols.map(col): _*))
-          .groupBy("pw", "sid", "wstart")
-          .agg(RollupMerge.head, RollupMerge.tail: _*)
-          .select(pcols.map(col): _*)
-      else
-        // recompute: this stream's in-range rows are REPLACED by fresh
-        existing.filter(!(col("sid") === sid && inRange(col("wstart"))))
-          .unionByName(freshAll.select(pcols.map(col): _*)))
-      .withColumn("sbucket", lit(sb))
-      .withColumn("wbucket", shiftright(col("wstart"), pyramidWBucketPw)))
-      // eager materialization — the write below replaces partitions the
-      // `existing` branch reads from
-    merged
-      // hash-repartition on the partition keys: one task owns each
-      // dirtied (pw, sbucket, wbucket) → one file per partition dir
-      .repartition(col("pw"), col("sbucket"), col("wbucket"))
-      .sortWithinPartitions("sid", "wstart")
-      .write.mode(SaveMode.Overwrite) // dynamic: only written partitions
-      .partitionBy("pw", "sbucket", "wbucket")
-      .parquet(path("pyramid"))
-    if (!fold) {
-      // a dirtied partition whose merged content is EMPTY (e.g. a
-      // delete drained the whole bucket) is absent from the write —
-      // dynamic overwrite leaves its old file — so clear it explicitly
-      // (inserts can never drain a partition; skip the extra job)
-      val present = merged.select("pw", "wbucket").distinct().collect()
-        .map(r => (r.getInt(0), r.getLong(1))).toSet
-      for (pw <- sorted; wb <- wbuckets if !present((pw, wb)))
-        deleteDir(s"pyramid/pw=$pw/sbucket=$sb/wbucket=$wb")
-      // deletes can drain a level entirely — drop the presence memo and
-      // let the next stat query re-probe (one listing per level)
-      invalidatePyramidPresence()
-    } else synchronized {
-      // the fold path wrote ≥1 fresh row into every level
-      sorted.foreach(pyramidPresent(_) = true)
-    }
-    // ---- wbucket-geometry degeneracy alarm -----------------------------
-    // Fold cost is proportional to the BYTES in the rewritten partition
-    // dirs, so a dense stream under a too-wide pyramidWBucketPw bends
-    // steady commit cost from O(batch) to O(total rollup) — nothing
-    // about any single fold is WRONG, which is why this surfaces as an
-    // operator alarm (handle state + stderr, once per dir) rather than
-    // an error. Driver-side listing of only the just-written dirs:
-    // metadata-scale, no extra Spark job on the commit path.
-    if (Btrdb.wbucketAlarmBytes > 0) {
-      lazy val alarmsDirExists = exists(Btrdb.WBucketAlarmDir)
-      for (pw <- sorted; wb <- wbuckets) {
-        val dir = s"pyramid/pw=$pw/sbucket=$sb/wbucket=$wb"
-        val bytes = store.dirBytes(dir)
-        if (bytes > Btrdb.wbucketAlarmBytes) recordWBucketAlarm(dir, bytes)
-        else if (alarmsDirExists) clearWBucketAlarm(dir)
-      }
-    }
-    release()
-    baseFresh.unpersist()
-
-    // ---- quantile histogram rollup (opt-in) ----------------------------
-    // Per-window VALUE HISTOGRAMS at 2^quantileLevel: (sid, wstart, c,
-    // cnt) with c the exact cents integer (NULL marks off-grid values —
-    // a window holding any serves NULL quantiles rather than wrong
-    // ones). Counts compose additively per (sid, wstart, c), so the
-    // INSERT path folds the batch's histogram partials with zero
-    // point-log rescan (the one extra cost is a second aggregation pass
-    // over the batch at commit time); DELETE/heal recompute the dirtied
-    // ranges from the (anti-filtered, version-pinned) point log exactly
-    // like the stat path. Same crash-safety: covered by the shared
-    // pyramid watermark stamped after this call.
-    quantileLevel.foreach { q =>
-      ensureQhistLayout()
-      val qcols = Seq("sid", "wstart", "c", "cnt")
-      val qFresh = (foldQhist match {
-          case Some(p) => p
-          case None =>
-            recomputed
-              .groupBy(TimeOps.clampTime(col("time"), q).as("wstart"),
-                StatOps.cents(col("value")).as("c"))
-              .agg(count(lit(1)).as("cnt"))
-        })
-        .withColumn("sid", lit(sid))
-        .select(qcols.map(col): _*)
-      val qExisting =
-        if (!hasParquet("qhist")) qFresh.limit(0)
-        else readArea("qhist", QhistSchema)
-          .filter(col("sbucket") === sb && col("wbucket").isin(wbuckets: _*))
-          .select(qcols.map(col): _*)
-      val qFold = foldQhist.isDefined
-      val (qMerged, qRelease) = checkpointReleasable(
-        (if (qFold)
-          // fold: batch partials combine with existing histogram rows
-          qExisting.unionByName(qFresh)
-            .groupBy("sid", "wstart", "c")
-            .agg(sum("cnt").as("cnt"))
-            .select(qcols.map(col): _*)
-        else
-          // recompute: this stream's in-range rows are REPLACED
-          qExisting.filter(!(col("sid") === sid && inRange(col("wstart"))))
-            .unionByName(qFresh))
-        .withColumn("sbucket", lit(sb))
-        .withColumn("wbucket", shiftright(col("wstart"), pyramidWBucketPw)))
-      qMerged
-        .repartition(col("sbucket"), col("wbucket"))
-        .sortWithinPartitions("sid", "wstart", "c")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("sbucket", "wbucket")
-        .parquet(path("qhist"))
-      if (!qFold) {
-        val qPresent = qMerged.select("wbucket").distinct().collect()
-          .map(_.getLong(0)).toSet
-        for (wb <- wbuckets if !qPresent(wb))
-          deleteDir(s"qhist/sbucket=$sb/wbucket=$wb")
-      }
-      // the qhist table shares the wbucket geometry and the whole-dir
-      // rewrite shape, so it degenerates exactly like the stat rollup
-      // (worse, even: histogram rows scale with value cardinality) —
-      // same alarm, same markers
-      if (Btrdb.wbucketAlarmBytes > 0) {
-        lazy val alarmsDirExists = exists(Btrdb.WBucketAlarmDir)
-        for (wb <- wbuckets) {
-          val dir = s"qhist/sbucket=$sb/wbucket=$wb"
-          val bytes = store.dirBytes(dir)
-          if (bytes > Btrdb.wbucketAlarmBytes) recordWBucketAlarm(dir, bytes)
-          else if (alarmsDirExists) clearWBucketAlarm(dir)
-        }
-      }
-      synchronized { qhistPresentMemo = Some(true) }
-      qRelease()
-    }
-  }
-
-  /** Presence memo for the quantile histogram table — quantile queries
-    * must not issue a filesystem listing per call (the zero-listings
-    * hot-path contract). */
-  private var qhistPresentMemo: Option[Boolean] = None
-  private def qhistHas: Boolean = synchronized {
-    qhistPresentMemo.getOrElse {
-      val p = hasParquet("qhist"); qhistPresentMemo = Some(p); p
-    }
-  }
-
-  /** Rollup layout generation stamped at `pyramid/_layout` (underscore
-    * prefix — invisible to parquet listings): "2" = ccnt column present
-    * and vsc physically DECIMAL(38,0). A pyramid without the stamp may
-    * hold pre-ccnt files (vsc INT64, no ccnt), and appending
-    * current-layout files to it would create a MIXED table whose
-    * single-footer schema inference either fails the INT64→DECIMAL
-    * conversion or silently drops ccnt (re-enabling the null-skipped
-    * cents-mean bug ccnt exists to prevent). */
-  private val PyramidLayoutVersion = "2"
-
-  /** Called before ANY pyramid write: an unstamped existing table is
-    * rewritten whole in the current layout first (read → normalize
-    * ccnt/vsc → full overwrite — the pyramid is data/2^level, so this
-    * one-time migration is cheap relative to the point log), then the
-    * stamp is written. A mixed-generation rollup table can therefore
-    * never exist: legacy files are gone before the first new file
-    * lands. Pure-legacy roots opened READ-ONLY never migrate — the
-    * normalizing [[pyramidRead]] is sufficient for them. */
-  private def ensurePyramidLayout(): Unit = {
-    if (store.readString("pyramid/_layout").contains(PyramidLayoutVersion))
-      return
-    if (hasParquet("pyramid")) {
-      val cols = Seq("pw", "sid", "wstart", "cnt", "ccnt",
-        "vmin", "vmax", "vsum", "vsc", "sbucket", "wbucket")
-      val (snap, release) = checkpointReleasable(
-        pyramidRead("pyramid").select(cols.map(col): _*))
-      snap
-        .repartition(col("pw"), col("sbucket"), col("wbucket"))
-        .sortWithinPartitions("sid", "wstart")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("pw", "sbucket", "wbucket")
-        .parquet(path("pyramid"))
-      release()
-    }
-    store.writeAtomic("pyramid/_layout", PyramidLayoutVersion)
-  }
-
-  /** Quantile-histogram layout generation, stamped at `qhist/_layout`
-    * (underscore prefix — invisible to parquet listings) — the same
-    * mixed-generation guard the stat pyramid carries
-    * ([[ensurePyramidLayout]]). "1" = the original (sid, wstart, c,
-    * cnt) + sbucket/wbucket layout. Any future histogram schema change
-    * MUST bump this and add its normalize-and-rewrite migration in
-    * [[ensureQhistLayout]] BEFORE changing the write path, so
-    * current-layout files never land beside legacy ones (single-footer
-    * schema inference cannot represent a mixed table — the exact
-    * failure ensurePyramidLayout exists to prevent). */
-  private val QhistLayoutVersion = "1"
-
-  /** Called before ANY qhist write. "1" is the first generation, so an
-    * unstamped existing table IS generation 1 and migration is the
-    * stamp alone; a table stamped with a DIFFERENT generation (a root
-    * written by newer code) fails loudly rather than letting this
-    * build append its layout into it. */
-  private def ensureQhistLayout(): Unit = {
-    store.readString("qhist/_layout") match {
-      case Some(v) if v.trim == QhistLayoutVersion => ()
-      case Some(v) => throw new IllegalStateException(
-        s"qhist at ${path("qhist")} has layout generation '${v.trim}'; " +
-          s"this build writes generation '$QhistLayoutVersion' — " +
-          "refusing to mix layouts in one table")
-      case None => store.writeAtomic("qhist/_layout", QhistLayoutVersion)
-    }
-  }
-
-  /** Pyramid reader (declared [[Btrdb.PyramidSchema]]) normalizing
-    * rollup rows written before the `ccnt` column existed: absent (or
-    * per-file null) ccnt reads as cnt, which is correct for legacy rows
-    * — the pre-ccnt build rejected any value without a representable
-    * cents integer with a loud cast error, so a legacy bucket can only
-    * hold in-domain values. Their INT64 `vsc` is widened to the declared
-    * DECIMAL(38,0) by the Parquet reader. [[ensurePyramidLayout]] still
-    * migrates an unstamped table wholesale before the first
-    * current-layout write. */
-  private def pyramidRead(sub: String): DataFrame =
-    withLegacyCcnt(readArea(sub, PyramidSchema))
-
-  private def withLegacyCcnt(rollup: DataFrame): DataFrame =
-    rollup.withColumn("ccnt", coalesce(col("ccnt"), col("cnt")))
-
-  /** One stream's rollup rows at `level` for windows in [s, e), and the
-    * bytes of the files read: the scan lists the stream's
-    * `pyramid/pw=L/sbucket=S` directory, and its partition filters keep
-    * the `wbucket` directories the range intersects. */
-  private def pyramidScan(sid: Long, level: Int, s: Long, e: Long): Scan = {
-    val (wlo, whi) = (s >> pyramidWBucketPw, (e - 1) >> pyramidWBucketPw)
-    val scan = scanDirs("pyramid",
-      Seq(s"pyramid/pw=$level/sbucket=${sbucketOf(sid)}"),
-      PyramidSchema)(within("wbucket", wlo, whi))
-    new Scan(scan.files, withLegacyCcnt(scan.frame)
-      .filter(col("sid") === sid && col("sbucket") === sbucketOf(sid) &&
-        col("wbucket") >= wlo && col("wbucket") <= whi &&
-        col("wstart") >= s && col("wstart") < e))
-  }
-
-  /** Folds stream `sid`'s rollup rows for windows in [s, e) from the
-    * files of a [[pyramidScan]], decoded on the calling thread. A file
-    * without `ccnt` predates it and holds in-domain values only. */
-  private def localRollup(rollup: Scan, sid: Long, s: Long, e: Long,
-                          fold: WindowFold): Unit =
-    localParquet.foreach(rollup.files, LocalRollupColumns,
-        LocalParquet.inRange(sid, "wstart", s, e)) { b =>
-      val c = (0 until LocalRollupColumns.length).map(b.column)
-      var i = 0
-      while (i < b.numRows) {
-        val w = c(1).getLong(i)
-        if (c(0).getLong(i) == sid && w >= s && w < e) {
-          val cnt = c(2).getLong(i)
-          fold.rollup(w, cnt, if (c(3).isNullAt(i)) cnt else c(3).getLong(i),
-            c(4).getDouble(i), c(5).getDouble(i), c(6).getDouble(i),
-            if (c(7).isNullAt(i)) null
-            else c(7).getDecimal(i, 38, 0).toJavaBigDecimal.toBigIntegerExact)
-        }
-        i += 1
-      }
-    }
-
-  private def sbucketOf(sid: Long): Long = math.floorMod(sid, sBuckets.toLong)
+  private[engine] def sbucketOf(sid: Long): Long = math.floorMod(sid, sBuckets.toLong)
 }
 
 /** One-pass batch statistics (see Btrdb.batchStats). `offGrid` counts
@@ -3254,11 +2635,6 @@ object Btrdb {
         (sum("vsc") / lit(100.0)).as("vsum"))
   }
 
-  /** The columns the driver-side decode reads from the rollup. */
-  private val LocalRollupColumns = StructType.fromDDL(
-    "sid BIGINT, wstart BIGINT, cnt BIGINT, ccnt BIGINT, vmin DOUBLE, vmax DOUBLE, " +
-      "vsum DOUBLE, vsc DECIMAL(38,0)")
-
   /** Window stats (cnt, vmin, vmean, vmax) over raw point rows. */
   private val RawStats: Seq[Column] = Seq(count(lit(1)).as("cnt"),
     min("value").as("vmin"), StatOps.rawMean(col("value")).as("vmean"),
@@ -3267,10 +2643,6 @@ object Btrdb {
   private val RollupStats: Seq[Column] = Seq(sum("cnt").as("cnt"),
     min("vmin").as("vmin"), StatOps.rollupMean.as("vmean"),
     max("vmax").as("vmax"))
-  /** Rollup rows merged into coarser or combined rollup rows. */
-  private val RollupMerge: Seq[Column] = Seq(sum("cnt").as("cnt"),
-    sum("ccnt").as("ccnt"), min("vmin").as("vmin"), max("vmax").as("vmax"),
-    sum("vsum").as("vsum"), sum("vsc").as("vsc"))
 
   /** Above this stream count, multiAlign/generateCsv switch from the
     * k−1-join chain to the single-shuffle union+pivot plan. */

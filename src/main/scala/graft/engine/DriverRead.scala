@@ -150,7 +150,7 @@ private[engine] final class OrderedReader(parquet: LocalParquet, threads: Int) {
   /** Decoded rows the open reads hold now; the most they held at once,
     * and the most runs one read merged, since the last reset (tests read
     * both). */
-  private val held = new AtomicLong
+  private[engine] val held = new AtomicLong
   private[engine] val peakHeld = new AtomicLong
   private[engine] val peakRuns = new AtomicLong
 

@@ -61,18 +61,19 @@ final class Store(rootUri: String, conf: Configuration) {
 
   /** True iff the subtree holds at least one file with `suffix` — an
     * existing-but-drained directory must read as empty. Short-circuits
-    * on the first hit. */
+    * on the first hit. Hidden names (`_` or `.` first, as Spark's reader
+    * skips them: markers, `_temporary`, `.spark-staging-*`, temp files
+    * of an atomic write) are not walked, and an entry another writer
+    * removes during the walk reads as absent: a recursive `listFiles`
+    * loads each entry's permissions as it goes and fails on one that
+    * vanished since its directory was listed. */
   def containsFile(part: String, suffix: String): Boolean = {
     listingOps.incrementAndGet()
-    val p = resolve(part)
-    if (!fs.exists(p)) false
-    else {
-      val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext)
-        found = it.next().getPath.getName.endsWith(suffix)
-      found
-    }
+    def holds(p: Path): Boolean =
+      (try fs.listStatus(p).toSeq catch { case _: java.io.FileNotFoundException => Nil })
+        .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+        .exists(f => if (f.isDirectory) holds(f.getPath) else f.getPath.getName.endsWith(suffix))
+    holds(resolve(part))
   }
 
   /** Oldest file modification time (ms) under a subtree, if any file. */

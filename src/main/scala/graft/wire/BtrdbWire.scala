@@ -179,9 +179,12 @@ object BtrdbWire {
 
   /** One RPC's reply: the encoded response messages (an ITERATOR — the
     * server drains it incrementally under flow control; pulling merges
-    * a served read's rows, or runs GenerateCSV's Spark work) and the gRPC
-    * status for the trailers. */
-  final case class RpcReply(messages: Iterator[Array[Byte]], grpcStatus: Int)
+    * a served read's rows, or runs GenerateCSV's Spark work), the gRPC
+    * status for the trailers, and `close`, which releases what an
+    * undrained reply holds (a served read's open files and decoded rows)
+    * — the server calls it once the drain ends, drained or not. */
+  final case class RpcReply(messages: Iterator[Array[Byte]], grpcStatus: Int,
+                            close: () => Unit = () => ())
 
   /** Every method of the public service
     * (/root/reference/grpcinterface/btrdb.proto:6-23). Anything else on
@@ -203,15 +206,18 @@ object BtrdbWire {
   def handle(e: Btrdb, method: String,
              framedBody: Array[Byte]): RpcReply =
     if (!Methods.contains(method)) RpcReply(Iterator.empty, 12)
-    else RpcReply(guarded(dispatch(e, method, firstMessage(framedBody))), 0)
+    else {
+      val messages = guarded(dispatch(e, method, firstMessage(framedBody)))
+      RpcReply(messages, 0, () => messages.close())
+    }
 
   /** Wrap a lazily-built message iterator so that any failure — during
     * construction (decode, eager engine calls) or mid-drain (a served
     * read's decode, a Spark job under GenerateCSV's `toLocalIterator`) —
     * surfaces as one final stat-carrying
     * message instead of a throw. */
-  private def guarded(make: => Iterator[Array[Byte]]): Iterator[Array[Byte]] =
-    new Iterator[Array[Byte]] {
+  private def guarded(make: => Iterator[Array[Byte]]): Iterator[Array[Byte]] with AutoCloseable =
+    new Iterator[Array[Byte]] with AutoCloseable {
       private var pendingError: Array[Byte] = _
       private var finished = false
       private val it: Iterator[Array[Byte]] =
@@ -232,6 +238,10 @@ object BtrdbWire {
           catch {
             case t: Throwable => finished = true; errorResponse(t)
           }
+      def close(): Unit = it match {
+        case c: AutoCloseable => c.close()
+        case _ => ()
+      }
     }
 
   /** Extract the first gRPC-framed message (clients of unary and
@@ -535,16 +545,22 @@ object BtrdbWire {
     * messages — pulling a chunk merges only its rows, so driver memory is
     * bounded by the read's decode-ahead + one encoded chunk regardless of
     * result size. Each message carries `version`, or for a latest read
-    * (None) the (major, minor) of the state the read saw. */
+    * (None) the (major, minor) of the state the read saw. Closing the
+    * messages closes the read. */
   private def chunked[T](rows: graft.engine.ServedRows[T], version: Option[(Long, Long)])
       (emit: (PbWriter, T) => Unit): Iterator[Array[Byte]] = {
     val (maj, minor) = version.getOrElse(rows.version)
     if (!rows.hasNext)
       return Iterator.single(withVersion(new PbWriter, maj, minor).toBytes)
-    rows.grouped(ChunkSize).map { group =>
+    val chunks = rows.grouped(ChunkSize).map { group =>
       val w = withVersion(new PbWriter, maj, minor)
       group.foreach(emit(w, _))
       w.toBytes
+    }
+    new Iterator[Array[Byte]] with AutoCloseable {
+      def hasNext: Boolean = chunks.hasNext
+      def next(): Array[Byte] = chunks.next()
+      def close(): Unit = rows.close()
     }
   }
 

@@ -22,7 +22,8 @@ import graft.engine.Btrdb
   * `grpc-status` trailers. Messages are encoded/decoded by the
   * hand-rolled [[Pb]] codec — no protobuf runtime ships with Spark.
   *
-  * Engine calls run Spark jobs (milliseconds to seconds), so dispatch
+  * Engine calls take milliseconds to seconds (writes and GenerateCSV run
+  * Spark jobs; a read merges its rows while its reply drains), so dispatch
   * is OFFLOADED to a worker pool — the Netty event loop never blocks,
   * and slow queries on one HTTP/2 stream do not stall frames of
   * another on the same connection. Responses are written back on the
@@ -56,10 +57,10 @@ final class GrpcServer(engine: Btrdb, port: Int,
   // The reference's rez.ConcurrentOp gate, applied to EVERY RPC before
   // any engine work (serve.go acquires it first in every handler; rez
   // defaults: 200 permits, queue 100): this is the actual concurrency
-  // bound for the thread-per-RPC pool below — read RPCs run their
-  // Spark jobs lazily during the drain, outside the engine's
-  // write/maintenance Admission pools, so without this gate N stalled
-  // streaming clients would pin N threads and N in-flight partitions.
+  // bound for the thread-per-RPC pool below — read RPCs merge their
+  // rows lazily during the drain, outside the engine's Admission pools,
+  // so without this gate N stalled streaming clients would pin N threads
+  // and N reads' decoded rows.
   // Beyond permits + queue, shed with bte 426 like the reference.
   private val rpcPermits =
     new java.util.concurrent.Semaphore(concurrentOps, true)
@@ -186,14 +187,17 @@ final class GrpcServer(engine: Btrdb, port: Int,
           } catch {
             case _: Throwable => BtrdbWire.RpcReply(Iterator.empty, 2)
           } // UNKNOWN
-        // Incremental drain WITH BACKPRESSURE: pulling the iterator may
-        // run a Spark partition; each message is written from this
+        // Incremental drain WITH BACKPRESSURE: pulling the iterator
+        // merges a served read's next rows (GenerateCSV's pulls a Spark
+        // partition); each message is written from this
         // worker (Netty marshals cross-thread writes onto the event
         // loop in order) and at most MaxInFlight data frames are
         // unacknowledged — a write future completes only once the
         // HTTP/2 flow controller has actually flushed the frame, so a
-        // slow or stalled client suspends the Spark pull instead of
-        // queueing the whole result in driver memory.
+        // slow or stalled client suspends the pull instead of queueing
+        // the whole result in driver memory. A drain that stops early (a
+        // reset stream, a dead connection) closes the reply, releasing
+        // the read's open files and decoded rows at once.
         val ch = ctx.channel()
         val headers = new DefaultHttp2Headers()
         headers.status("200")
@@ -228,7 +232,7 @@ final class GrpcServer(engine: Btrdb, port: Int,
           ctx.writeAndFlush(
             new DefaultHttp2HeadersFrame(trailers, true).stream(stream))
           ()
-        } finally if (admitted) rpcPermits.release()
+        } finally try reply.close() finally if (admitted) rpcPermits.release()
       }
       ()
     }

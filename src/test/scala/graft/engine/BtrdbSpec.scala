@@ -1198,4 +1198,43 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
     live.obliterate(ua); live.purgeObliterated(); same("obliterate plus purge")
     live.close()
   }
+
+  test("every point-log and write-buffer file is sorted by (sid, time)") {
+    import scala.jdk.CollectionConverters._
+    val root = Files.createTempDirectory("sorted").toString
+    val e = new Btrdb(spark, root, sBuckets = 2, tBucketPw = 10,
+      bufferCommitThreshold = 1 << 20, pyramidLevels = Seq(6))
+    val us = Seq("u-sort-a", "u-sort-b", "u-sort-c")
+    us.foreach(u => e.createStream(u, "test/sorted", Map("s" -> u)))
+    val sids = us.map(e.sidOf)
+    /** Each parquet file under `area`, its rows in file order. */
+    def files(area: String, cols: String*): Seq[(String, Seq[Seq[Long]])] = {
+      val s = Files.walk(java.nio.file.Paths.get(root, area))
+      try s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList.map { f =>
+        f.toString -> spark.read.parquet(f.toString).select(cols.head, cols.tail: _*)
+          .collect().toSeq.map(r => cols.indices.map(r.getLong))
+      } finally s.close()
+    }
+    def sorted(rows: Seq[Seq[Long]]): Boolean =
+      rows.sliding(2).forall {
+        case Seq(x, y) => x.zip(y).find { case (a, b) => a != b }.forall { case (a, b) => a < b }
+        case _ => true
+      }
+    // every stream's points in one frame, in descending time order
+    e.insertAll(spark.createDataFrame(
+      for (t <- 2999L to 0L by -3; sid <- sids) yield (sid, t, t * 0.5))
+      .toDF("sid", "time", "value"))
+    // a backfill below the staged range, also descending
+    e.insert(us.head, spark.createDataFrame((999L to 500L by -7).map(t => (t - 2000, 1.0)))
+      .toDF("time", "value"))
+    files("staging", "time").foreach { case (f, rows) =>
+      assert(sorted(rows), s"staged file $f is not time-sorted") }
+    assert(e.flushAll(0).toSet == us.toSet) // several staged batches per stream
+    e.deleteRange(us(1), 100, 700)
+    e.compact(us(1)) // the point-log rewriter
+    val points = files("points", "sid", "time")
+    assert(points.map(_._2.size).sum == 3 * 1000 + 72 - 200)
+    points.foreach { case (f, rows) => assert(sorted(rows), s"point file $f is not sorted") }
+    e.close()
+  }
 }

@@ -692,6 +692,89 @@ class PyramidSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(w.getAs[Long]("cnt") == 256L && w.getAs[Double]("p50") == 2.0)
     db.close()
   }
+  /** The on-disk rollup and histogram rows of each of `uuids` (with its
+    * sid) equal their recompute from the stream's committed points, and
+    * the stat answers the pyramid serves equal the raw ones. */
+  private def rollupsExact(db: Btrdb, step: String, uuids: Seq[(String, Long)]): Unit = {
+    import org.apache.spark.sql.functions._
+    import graft.core.TimeOps
+    import graft.operators.StatOps
+    val pyr = spark.read.schema(Btrdb.PyramidSchema).parquet(s"${db.root}/pyramid")
+    val qh = spark.read.schema(Btrdb.QhistSchema).parquet(s"${db.root}/qhist")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    uuids.foreach { case (u, sid) =>
+      val pts = db.pointsAt(u)
+      Seq(4, 8).foreach { pw =>
+        val want = rows(pts.groupBy(TimeOps.clampTime(col("time"), pw).as("wstart"))
+          .agg(count(lit(1)), count(StatOps.cents(col("value"))), min("value"),
+            max("value"), sum(StatOps.centsSum(col("value"))).cast("decimal(38,0)")))
+        val got = rows(pyr.filter(col("pw") === pw && col("sid") === sid)
+          .select("wstart", "cnt", "ccnt", "vmin", "vmax", "vsc"))
+        assert(got == want, s"$step: pyramid pw=$pw of $u")
+      }
+      val want = rows(pts.groupBy(TimeOps.clampTime(col("time"), 4).as("wstart"),
+        StatOps.cents(col("value")).as("c")).agg(count(lit(1))))
+      assert(rows(qh.filter(col("sid") === sid).select("wstart", "c", "cnt")) == want,
+        s"$step: histogram of $u")
+      val maj = db.version(u)._1
+      val served = db.alignedWindows(u, 0, 4 * 4096, 8).collect()
+      val raw = db.alignedWindows(u, 0, 4 * 4096, 8, version = maj).collect()
+      assert(served.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(4))).toSeq ==
+        raw.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(4))).toSeq,
+        s"$step: served windows of $u")
+      val hist = pts.groupBy(lit(sid).as("sid"),
+        TimeOps.clampTime(col("time"), 8).as("wstart"),
+        StatOps.cents(col("value")).as("c")).agg(count(lit(1)).as("hc"))
+      assert(db.quantileWindowsBulk(Seq(u), 0, 4 * 4096, 8).collect().toSeq ==
+        Btrdb.quantileFinish(hist).collect().toSeq, s"$step: quantiles of $u")
+    }
+  }
+
+  test("one sbucket, two streams: every rollup rewrite keeps each survivor's rollups exact") {
+    val dir = Files.createTempDirectory("pyrnet").toString
+    def open() = new Btrdb(spark, dir, sBuckets = 1, tBucketPw = 12,
+      bufferCommitThreshold = 1024, pyramidLevels = Seq(4, 8),
+      pyramidWBucketPw = 12, commitRangePw = 8, quantileLevel = Some(4))
+    val db = open()
+    Seq("u-net-a", "u-net-b").foreach(u => db.createStream(u, "pyr/net", Map("s" -> u)))
+    val streams = Seq("u-net-a", "u-net-b").map(u => u -> db.sidOf(u))
+    def pts(from: Long, n: Int, step: Long, k: Int) =
+      (0 until n).map(i => (from + i * step, ((i * k) % 23) * 0.25))
+    // an insert that commits at once folds its partials
+    insertPts(db, "u-net-a", pts(0, 2048, 7, 3))
+    insertPts(db, "u-net-b", pts(5, 1500, 9, 5))
+    rollupsExact(db, "insert fold", streams)
+    // staged batches fold at the flush
+    insertPts(db, "u-net-a", pts(3, 300, 31, 7))
+    insertPts(db, "u-net-a", pts(11, 200, 13, 2))
+    db.flush("u-net-a")
+    rollupsExact(db, "staged flush", streams)
+    db.deleteRange("u-net-a", 2000, 9000)
+    rollupsExact(db, "deleteRange", streams)
+    db.compact("u-net-a")
+    rollupsExact(db, "compact", streams)
+    // a fold lost to a crash: the rollups go back to before the commit
+    val root = Paths.get(dir)
+    Seq("pyramid", "qhist").foreach(a => copyTree(root.resolve(a), root.resolve(s"$a-snap")))
+    insertPts(db, "u-net-b", pts(100, 1100, 11, 4))
+    db.close()
+    Seq("pyramid", "qhist").foreach { a =>
+      rmTree(root.resolve(a)); copyTree(root.resolve(s"$a-snap"), root.resolve(a))
+    }
+    val db2 = open()
+    assert(db2.repairPyramid("u-net-b"))
+    rollupsExact(db2, "repairPyramid", streams)
+    db2.obliterate("u-net-a")
+    assert(db2.purgeObliterated() == Seq(streams.head._2))
+    rollupsExact(db2, "purge", streams.tail)
+    Seq("pyramid", "qhist").foreach { a =>
+      assert(spark.read.parquet(s"$dir/$a")
+        .filter(org.apache.spark.sql.functions.col("sid") === streams.head._2).count() == 0,
+        s"purged stream left rows in $a")
+    }
+    db2.close()
+  }
+
   test("qhist layout stamp: legacy roots stamp on first write, foreign generations refuse") {
     import org.apache.spark.sql.functions.col
     val db = mkQDb()

@@ -9,6 +9,9 @@ import graft.core.TimeConsts
   * must have been counted as one serving-path read of its kind, so the
   * check compares the driver's merge and fold with Spark's plan. */
 object Served {
+  /** Decoded rows the engine's open serving-path reads hold now. */
+  def heldRows(db: Btrdb): Long = db.orderedReader.held.get
+
   private def onDriver[T](db: Btrdb, kind: String)(read: => T): T = {
     val before = db.readCounts(kind)
     val out = read

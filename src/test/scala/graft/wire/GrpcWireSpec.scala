@@ -746,6 +746,12 @@ class GrpcWireSpec extends AnyFunSuite with BeforeAndAfterAll {
     // connection keeps serving RPCs
     val (ires, istatus) = call("Info", new PbWriter)
     assert(istatus == "0" && statOf(ires.head).isEmpty)
+    // the worker closes the abandoned reply: the read's decoded rows
+    // are released at once, not when the garbage collector finds them
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (graft.engine.Served.heldRows(db) > 0 && System.nanoTime() < deadline)
+      Thread.sleep(20)
+    assert(graft.engine.Served.heldRows(db) == 0, "the reset read still holds decoded rows")
   }
 
   test("two-stream aligned CSV merges on time with empty cell groups (csv.go:101-107)") {
