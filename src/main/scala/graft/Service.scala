@@ -72,17 +72,20 @@ object Service {
       .getOrCreate()
   }
 
-  /** Cheap fingerprint of a root's externally-visible state: catalog
-    * pointer, commit-log listing, staging listing. Three filesystem
-    * metadata calls — safe at any polling cadence. The state itself
-    * (small string collections) is compared, not a hash of it: a
-    * hash collision between successive states would silently skip a
-    * refresh until the NEXT mutation — an indefinitely stale view
-    * with no signal. */
-  private def epochOf(e: Btrdb): (Option[String], Seq[String], Seq[String]) =
-    (e.store.readString("catalog_CURRENT"),
+  /** Cheap fingerprint of a root's externally-visible state: the live
+    * catalog directory (named by its pointer) and its listing — a stream
+    * creation appends there without moving the pointer — plus the
+    * commit-log and staging listings. Four filesystem metadata calls —
+    * safe at any polling cadence. The state itself (small string
+    * collections) is compared, not a hash of it: a hash collision
+    * between successive states would silently skip a refresh until the
+    * NEXT mutation — an indefinitely stale view with no signal. */
+  private def epochOf(e: Btrdb): Seq[Seq[String]] = {
+    val catalog = e.catalogDir
+    Seq(catalog +: e.store.listNames(catalog).sorted,
       e.store.listNames("commits").sorted,
       e.store.listNames("staging").sorted)
+  }
 
   /** Keep the registered views tracking the writers: registered temp
     * views capture their parquet file lists and merge topology at

@@ -84,7 +84,8 @@ class Btrdb(val spark: SparkSession, val root: String,
             private[engine] val quantileLevel: Option[Int] = None,
             lockRoot: Boolean = true,
             lockStaleMillis: Long = 120000L,
-            private[engine] val admission: Admission = Admission.default) extends Pyramid {
+            private[engine] val admission: Admission = Admission.default)
+    extends MetaProvider with Pyramid {
   import Btrdb._
 
   require(pyramidLevels.isEmpty || pyramidWBucketPw >= pyramidLevels.max,
@@ -178,7 +179,7 @@ class Btrdb(val spark: SparkSession, val root: String,
   @volatile private var lockEvicted = false
   private var heartbeat: java.util.concurrent.ScheduledExecutorService = null
 
-  private def requireWriterLive(): Unit =
+  private[engine] def requireWriterLive(): Unit =
     if (lockEvicted) throw new IllegalStateException(
       s"engine root $root: this writer's lock was evicted (the process " +
         "paused past the staleness window and another claimant took " +
@@ -287,7 +288,6 @@ class Btrdb(val spark: SparkSession, val root: String,
         store.delete(LockFile)
       lockHeld = false
     }
-    invalidateCatalog()
     invalidateCommits()
   }
 
@@ -312,7 +312,7 @@ class Btrdb(val spark: SparkSession, val root: String,
   private[engine] def readArea(part: String, schema: String): DataFrame =
     spark.read.schema(schema).parquet(path(part))
 
-  private def readOr(part: String, schema: String): DataFrame =
+  private[engine] def readOr(part: String, schema: String): DataFrame =
     if (exists(part)) readArea(part, schema)
     else emptyDf(schema)
 
@@ -407,358 +407,15 @@ class Btrdb(val spark: SparkSession, val root: String,
   private def vanished(e: Throwable): Boolean =
     e != null && (e.isInstanceOf[FileNotFoundException] || vanished(e.getCause))
 
-  // ---- catalog (mprovider equivalent) --------------------------------
-
-  @volatile private var catalogCache: DataFrame = null
   @volatile private var commitsCache: DataFrame = null
   /** Staging batch-id generator: ms epoch << 20 + counter — unique
     * across restarts, disjoint from Spark streaming batch ids. */
   private val batchIdGen = new java.util.concurrent.atomic.AtomicLong(
     System.currentTimeMillis() << 20)
 
-  private def invalidateCatalog(): Unit = synchronized {
-    if (catalogCache != null) catalogCache.unpersist()
-    catalogCache = null
-    sidCache.clear()
-    tombstonedSidsCache = null
-    migratingInSidsCache = null
-    migratingOutSidsCache = null
-  }
-
-  /** sids of tombstoned (obliterated-but-not-yet-purged) streams —
-    * excluded from the SQL views and the pyramid substitution, which
-    * span every stream and so cannot rely on per-uuid lookups failing. */
-  @volatile private var tombstonedSidsCache: Set[Long] = null
-  private def tombstonedSids: Set[Long] = {
-    var t = tombstonedSidsCache
-    if (t == null) synchronized {
-      t = tombstonedSidsCache
-      if (t == null) {
-        t = catalog.filter(col("tombstoned")).select("sid")
-          .collect().map(_.getLong(0)).toSet
-        tombstonedSidsCache = t
-      }
-    }
-    t
-  }
-
-  /** sids of streams being migrated INTO this root
-    * ([[Federation.migrate]]): live in the catalog — their replay goes
-    * through the normal uuid API — but excluded from the SQL views and
-    * the pyramid substitution until the cutover clears the
-    * [[Btrdb.MigratingInAnnotation]] marker, so a federated read can
-    * never count a stream at both its old and new home. */
-  @volatile private var migratingInSidsCache: Set[Long] = null
-  private[engine] def migratingInSids: Set[Long] = {
-    var m = migratingInSidsCache
-    if (m == null) synchronized {
-      m = migratingInSidsCache
-      if (m == null) {
-        m = catalog.filter(!col("tombstoned") &&
-            map_contains_key(col("annotations"),
-              Btrdb.MigratingInAnnotation))
-          .select("sid").collect().map(_.getLong(0)).toSet
-        migratingInSidsCache = m
-      }
-    }
-    m
-  }
-  /** sids of streams being migrated OUT of this root — the write
-    * fence [[Federation.migrate]] raises before replaying: a write
-    * that lands at the source after the parity digest would be
-    * silently discarded at cutover (the tombstone hides commits that
-    * were never replayed to the target), so inserts and deletes are
-    * rejected outright while the marker is up. Durable (a catalog
-    * annotation) so the fence survives a crash mid-migration; flushes
-    * of ALREADY-staged data stay allowed — migrate drains them before
-    * the replay, and with inserts fenced no new staging can appear. */
-  @volatile private var migratingOutSidsCache: Set[Long] = null
-  private[engine] def migratingOutSids: Set[Long] = {
-    var m = migratingOutSidsCache
-    if (m == null) synchronized {
-      m = migratingOutSidsCache
-      if (m == null) {
-        m = catalog.filter(!col("tombstoned") &&
-            map_contains_key(col("annotations"),
-              Btrdb.MigratingOutAnnotation))
-          .select("sid").collect().map(_.getLong(0)).toSet
-        migratingOutSidsCache = m
-      }
-    }
-    m
-  }
-
-  private def requireNotMigratingOut(sid: Long, op: String): Unit =
-    require(!migratingOutSids.contains(sid),
-      s"$op rejected: stream sid=$sid is migrating out of this root " +
-        "(writes after the migration's parity digest would be lost at cutover)")
-
-  /** Raise the migrating-out fence (idempotent). */
-  private[engine] def beginMigrationOut(uuid: String): Unit = {
-    val (desc, _, _) = streamInfo(uuid)
-    if (!desc.annotations.contains(Btrdb.MigratingOutAnnotation))
-      updateAnnotations(uuid, desc.annotationVersion,
-        Map(Btrdb.MigratingOutAnnotation -> Some("1")))
-  }
-
-  /** Clear the migrating-out fence (idempotent) — the abort path of a
-    * failed migration; the success path obliterates the stream, which
-    * removes the fence with it. */
-  private[engine] def endMigrationOut(uuid: String): Unit = {
-    val (desc, _, _) = streamInfo(uuid)
-    if (desc.annotations.contains(Btrdb.MigratingOutAnnotation))
-      updateAnnotations(uuid, desc.annotationVersion,
-        Map(Btrdb.MigratingOutAnnotation -> None))
-  }
-
   private def invalidateCommits(): Unit = synchronized {
     if (commitsCache != null) commitsCache.unpersist()
     commitsCache = null
-  }
-
-  /** The live catalog directory. Whole-catalog rewrites (annotation
-    * CAS, obliterate) go to a NEW `catalog_v/<n>` directory and then
-    * atomically swing the `catalog_CURRENT` pointer file — a crash at
-    * any instant leaves either the old or the new catalog fully intact,
-    * never a half-written table (the tmp-then-overwrite pattern this
-    * replaces had a destroy-then-rebuild window). Appends (stream
-    * creation) land inside the current directory, which parquet commits
-    * via its own task-temp rename. */
-  private def catalogDir: String =
-    store.readString("catalog_CURRENT") match {
-      case Some(v) => s"catalog_v/${v.trim}"
-      case None => "catalog" // pre-first-rewrite layout
-    }
-
-  def catalog: DataFrame = {
-    var c = catalogCache
-    if (c == null) synchronized {
-      c = catalogCache
-      if (c == null) {
-        c = readOr(catalogDir, CatalogSchema).cache()
-        c.count()
-        catalogCache = c
-      }
-    }
-    c
-  }
-
-  /** CreateStream: uuid and (collection, tags) must be unique among live
-    * streams; tombstoned uuids may never be reused
-    * (/root/reference/internal/mprovider/metaprovider.go:288-320). */
-  def createStream(uuid: String, collection: String,
-                   tags: Map[String, String],
-                   annotations: Map[String, String] = Map.empty): Long = {
-    val cat = catalog.cache()
-    // uniqueness of (collection, tags) uses the canonical sorted tag
-    // string, as Spark has no MapType equality (reference
-    // /root/reference/internal/mprovider/metaprovider.go:27)
-    val canonical = tags.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",")
-    val canonCol = expr(
-      "array_join(transform(array_sort(map_entries(tags)), e -> concat(e.key, '=', e.value)), ',')")
-    val clash = cat.filter(col("uuid") === uuid ||
-      (!col("tombstoned") && col("collection") === collection &&
-        canonCol === canonical)).count()
-    require(clash == 0, s"stream exists or uuid tombstoned: $uuid")
-    validateMetadata(collection, tags, annotations)
-    val sid = cat.agg(coalesce(max("sid"), lit(-1L))).head().getLong(0) + 1
-    val row = spark.createDataFrame(Seq(
-      (uuid, sid, collection, tags, annotations, 0L, false)))
-      .toDF("uuid", "sid", "collection", "tags", "annotations",
-        "annotationVersion", "tombstoned")
-    row.write.mode(SaveMode.Append).parquet(path(catalogDir))
-    cat.unpersist()
-    invalidateCatalog()
-    sid
-  }
-
-  /** Bulk stream creation — one catalog write for N streams (the
-    * per-stream path costs a Spark job each; catalogs are created in
-    * bulk at 10k-stream scale, mp_test.go:285). Same uniqueness rules. */
-  def createStreams(streams: Seq[(String, String, Map[String, String])]): Seq[Long] = {
-    val cat = catalog
-    val canon = (t: Map[String, String]) =>
-      t.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",")
-    val existingUuids = cat.select("uuid").collect().map(_.getString(0)).toSet
-    val existingKeys = cat.filter(!col("tombstoned"))
-      .select("collection", "tags").collect()
-      .map(r => (r.getString(0),
-        canon(r.getAs[scala.collection.Map[String, String]]("tags").toMap))).toSet
-    val dupIn = streams.groupBy(s => (s._2, canon(s._3))).exists(_._2.size > 1)
-    require(!dupIn, "duplicate (collection, tags) within batch")
-    // two batch rows with the same uuid would get distinct sids, silently
-    // breaking uuid uniqueness (/root/reference/internal/mprovider/
-    // metaprovider.go:288-320) and making sidOf(uuid) nondeterministic
-    require(streams.map(_._1).distinct.size == streams.size,
-      "duplicate uuid within batch")
-    streams.foreach { case (u, c, t) =>
-      require(!existingUuids.contains(u), s"uuid exists/tombstoned: $u")
-      require(!existingKeys.contains((c, canon(t))), s"(collection, tags) exists: $c")
-      validateMetadata(c, t, Map.empty)
-    }
-    val sid0 = cat.agg(coalesce(max("sid"), lit(-1L))).head().getLong(0) + 1
-    val rows = streams.zipWithIndex.map { case ((u, c, t), i) =>
-      (u, sid0 + i, c, t, Map.empty[String, String], 0L, false)
-    }
-    spark.createDataFrame(rows)
-      .toDF("uuid", "sid", "collection", "tags", "annotations",
-        "annotationVersion", "tombstoned")
-      .write.mode(SaveMode.Append).parquet(path(catalogDir))
-    invalidateCatalog()
-    rows.map(_._2)
-  }
-
-  /** LookupStreams: tag/annotation predicates; None ⇒ key must exist
-    * (/root/reference/internal/mprovider/lookup.go:209-292). */
-  def lookupStreams(collectionPrefix: String,
-                    tags: Map[String, Option[String]] = Map.empty,
-                    annotations: Map[String, Option[String]] = Map.empty): DataFrame = {
-    val base = tags.foldLeft(
-      catalog.filter(!col("tombstoned") &&
-        col("collection").startsWith(collectionPrefix))) {
-      case (df, (k, Some(v))) => df.filter(col("tags")(k) === v)
-      case (df, (k, None))    => df.filter(col("tags")(k).isNotNull)
-    }
-    annotations.foldLeft(base) {
-      case (df, (k, Some(v))) => df.filter(col("annotations")(k) === v)
-      case (df, (k, None))    => df.filter(col("annotations")(k).isNotNull)
-    }
-  }
-
-  /** ListCollections with prefix + cursor + limit (≤10k,
-    * /root/reference/internal/mprovider/metaprovider.go:423-451). */
-  def listCollections(prefix: String, startingFrom: String = "",
-                      limit: Int = 10000): DataFrame =
-    catalog.filter(!col("tombstoned") && col("collection").startsWith(prefix) &&
-        col("collection") >= startingFrom)
-      .select("collection").distinct()
-      .orderBy("collection").limit(math.min(limit, 10000))
-
-  /** GetKeyUsage: streams-per-tag-key and per-annotation-key counts. */
-  def keyUsage(collectionPrefix: String): DataFrame = {
-    val live = catalog.filter(!col("tombstoned") &&
-      col("collection").startsWith(collectionPrefix))
-    live.select(explode(map_keys(col("tags"))).as("key"), lit("tag").as("kind"))
-      .unionByName(live.select(explode(map_keys(col("annotations"))).as("key"),
-        lit("annotation").as("kind")))
-      .groupBy("kind", "key").agg(count(lit(1)).as("cnt"))
-  }
-
-  /** SetStreamAnnotations, set-only convenience form. */
-  def setAnnotations(uuid: String, expectedVersion: Long,
-                     updates: Map[String, String]): Unit =
-    updateAnnotations(uuid, expectedVersion,
-      updates.map { case (k, v) => k -> Some(v) })
-
-  /** SetStreamAnnotations with the reference's full change semantics:
-    * CAS on annotationVersion; a `None` value REMOVES the key (the
-    * `map[string]*string` nil-value convention,
-    * /root/reference/internal/mprovider/metaprovider.go:98,142-208). */
-  def updateAnnotations(uuid: String, expectedVersion: Long,
-                        changes: Map[String, Option[String]]): Unit = {
-    val updated = collectCatalog().map { c =>
-      if (c._1 == uuid) {
-        require(c._6 == expectedVersion,
-          s"annotation CAS failed: expected $expectedVersion got ${c._6}")
-        changes.foreach { case (k, v) =>
-          require(Btrdb.validAnnKey(k), s"invalid annotation key: '$k'")
-          v.foreach(value => require(value.length < Btrdb.MaxAnnValLength,
-            s"annotation value too long: '$k'"))
-        }
-        val anns = (c._5 ++ changes.collect { case (k, Some(v)) => k -> v }) --
-          changes.collect { case (k, None) => k }
-        require(anns.size <= Btrdb.MaximumAnnotations, "annotation limit")
-        c.copy(_5 = anns, _6 = c._6 + 1)
-      } else c
-    }
-    overwriteCatalog(updated)
-  }
-
-  /** Obliterate: tombstone the stream; its sid never reappears in reads
-    * (/root/reference/quasar.go:572-593). Data is left for compaction. */
-  def obliterate(uuid: String): Unit =
-    overwriteCatalog(collectCatalog().map(c =>
-      if (c._1 == uuid) c.copy(_7 = true) else c))
-
-  private def collectCatalog(): Array[(String, Long, String,
-      Map[String, String], Map[String, String], Long, Boolean)] =
-    catalog.collect().map { r => // catalog is small by construction
-      (r.getAs[String]("uuid"), r.getAs[Long]("sid"), r.getAs[String]("collection"),
-        r.getAs[scala.collection.Map[String, String]]("tags").toMap,
-        r.getAs[scala.collection.Map[String, String]]("annotations").toMap,
-        r.getAs[Long]("annotationVersion"), r.getAs[Boolean]("tombstoned"))
-    }
-
-  /** Crash-safe whole-catalog rewrite: write the next `catalog_v/<n>`
-    * directory in full, then atomically move a pointer file onto
-    * `catalog_CURRENT`. Readers resolve through the pointer, so they
-    * see the old catalog until the instant of the (atomic) move and the
-    * new one after — no window where the catalog is missing or partial.
-    * The superseded directory is removed after the swing; a crash
-    * between move and cleanup leaves only an orphan directory. */
-  private def overwriteCatalog(rows: Array[(String, Long, String,
-      Map[String, String], Map[String, String], Long, Boolean)]): Unit = {
-    requireWriterLive()
-    val df = spark.createDataFrame(rows.toSeq)
-      .toDF("uuid", "sid", "collection", "tags", "annotations",
-        "annotationVersion", "tombstoned")
-    val oldDir = catalogDir
-    val next = oldDir match {
-      case "catalog" => 1L
-      case d => d.stripPrefix("catalog_v/").toLong + 1
-    }
-    df.write.mode(SaveMode.Overwrite).parquet(path(s"catalog_v/$next"))
-    store.writeAtomic("catalog_CURRENT", next.toString)
-    // Superseded generations are RETAINED (bounded) rather than deleted
-    // on the spot: a registered SQL view captures its parquet file list
-    // at registration, so deleting the just-replaced directory turns
-    // every live catalog view into FILE_NOT_EXIST on the next metadata
-    // mutation — the long-running daemon's catalog surface must degrade
-    // to STALE, never to broken. A view more than
-    // [[Btrdb.RetainedCatalogGenerations]] swings stale needs a
-    // re-registration, the same contract compaction already imposes on
-    // pinned point readers.
-    val floor = next - Btrdb.RetainedCatalogGenerations
-    if (floor > 0) deleteDir("catalog") // pre-versioning layout
-    store.listNames("catalog_v")
-      .flatMap(_.toLongOption).filter(_ <= floor)
-      .foreach(n => deleteDir(s"catalog_v/$n"))
-    invalidateCatalog()
-  }
-
-  /** Full metadata validation — the reference's limits table
-    * (/root/reference/internal/mprovider/metaprovider.go:18-47): key
-    * regex ^[a-z][a-z0-9_.]*$ with length < 64; tag values non-empty,
-    * NUL-free, < 256; annotation values < 256 (may be empty); collection
-    * non-empty, NUL-free, < 256; ≤32 tags, ≤64 annotations. */
-  private def validateMetadata(collection: String, tags: Map[String, String],
-                               annotations: Map[String, String]): Unit = {
-    import Btrdb._
-    require(collection.nonEmpty && collection.length < MaxCollectionLength &&
-      !collection.contains('\u0000'), s"invalid collection: '$collection'")
-    require(tags.size <= MaximumTags, "tag limit")
-    require(annotations.size <= MaximumAnnotations, "annotation limit")
-    tags.foreach { case (k, v) =>
-      require(validTagKey(k), s"invalid tag key: '$k'")
-      require(v.nonEmpty && v.length < MaxTagValLength && !v.contains('\u0000'),
-        s"invalid tag value for '$k'")
-    }
-    annotations.foreach { case (k, v) =>
-      require(validAnnKey(k), s"invalid annotation key: '$k'")
-      require(v.length < MaxAnnValLength, s"annotation value too long: '$k'")
-    }
-  }
-
-  private val sidCache = scala.collection.mutable.Map.empty[String, Long]
-
-  /** Internal stream id of a live uuid (stable for the stream's life).
-    * Memoized — the uuid→sid hop fronts every engine call and must not
-    * cost a catalog job each time; the cache clears with the catalog
-    * (obliterate tombstones invalidate it). */
-  def sidOf(uuid: String): Long = synchronized {
-    sidCache.getOrElseUpdate(uuid,
-      catalog.filter(col("uuid") === uuid && !col("tombstoned"))
-        .select("sid").head().getLong(0))
   }
 
   // ---- versioned storage ---------------------------------------------
@@ -824,7 +481,8 @@ class Btrdb(val spark: SparkSession, val root: String,
     * the same (pw, sbucket, wbucket) directory), and one per area
     * (`staging`, `points`) around its appends, which share the area's
     * `_temporary` directory, and around the point-log rewrites, which
-    * replace directories that appends write into. Lock order: stream
+    * replace directories that appends write into; `catalog` around every
+    * catalog load and write ([[MetaProvider]]). Lock order: stream
     * locks, then these, then the engine monitor. */
   private val fileLocks = new ConcurrentHashMap[String, ReentrantLock]()
 
@@ -915,11 +573,6 @@ class Btrdb(val spark: SparkSession, val root: String,
     * (e.g. StreamingIngest) appended to this root's staging area. */
   def refreshStaging(): Unit = synchronized { seeded = false }
 
-  /** Re-read the catalog from disk — call after an external process
-    * rewrote it (a writer's annotation CAS / obliterate seen from a
-    * read-only attach). */
-  def refreshCatalog(): Unit = synchronized { invalidateCatalog() }
-
   /** Re-read commit metadata from disk — call after an external process
     * touched the commit log (recovery tooling, tests). */
   def refreshCommits(): Unit = synchronized {
@@ -931,13 +584,8 @@ class Btrdb(val spark: SparkSession, val root: String,
   /** StreamInfo: descriptor + (major, minor) version
     * (/root/reference/grpcinterface/serve.go StreamInfo RPC). */
   def streamInfo(uuid: String): (StreamDescInfo, Long, Long) = {
-    val r = catalog.filter(col("uuid") === uuid && !col("tombstoned")).head()
     val (maj, minor) = version(uuid)
-    (StreamDescInfo(
-      r.getAs[String]("uuid"), r.getAs[Long]("sid"), r.getAs[String]("collection"),
-      r.getAs[scala.collection.Map[String, String]]("tags").toMap,
-      r.getAs[scala.collection.Map[String, String]]("annotations").toMap,
-      r.getAs[Long]("annotationVersion")), maj, minor)
+    (liveStream(uuid).info, maj, minor)
   }
 
   /** Info RPC analog (/root/reference/grpcinterface/btrdb.proto:18 +
@@ -948,7 +596,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     * 1-node healthy cluster. `pointCount` totals committed insert
     * generations (deletes are anti-filters, not decrements). */
   def engineInfo(): EngineInfo = {
-    val live = catalog.filter(!col("tombstoned")).count()
+    val live = catalogSnapshot.live.size.toLong
     val pts = commits.filter(col("kind") === "insert")
       .agg(coalesce(sum("npoints"), lit(0L))).head().getLong(0)
     EngineInfo(majorVersion = 4, minorVersion = 15,
@@ -1032,10 +680,8 @@ class Btrdb(val spark: SparkSession, val root: String,
       val bad = counts.map(_.getLong(2)).sum
       require(bad == 0,
         s"$bad points rejected: NaN/Inf value or time out of range")
-      val known = catalog.filter(!col("tombstoned"))
-        .select("sid").collect().map(_.getLong(0)).toSet
       val sids = counts.map(_.getLong(0)).toSeq
-      val unknown = sids.filterNot(known)
+      val unknown = sids.filterNot(catalogSnapshot.isLive)
       require(unknown.isEmpty, s"unknown sids: ${unknown.mkString(",")}")
       sids.foreach(requireNotMigratingOut(_, "insertAll"))
       seed() // before the write: seeding counts the staged files
@@ -1240,20 +886,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     // the scanner is also the natural cadence for bounding the commit
     // directory — roll per-commit files into one archive once they pile up
     archiveCommitLog()
-    uuidsOf(flushed)
-  }
-
-  /** The uuids of `sids`, from the uuid→sid memo ([[sidOf]]); only the
-    * streams this handle never looked up (staged by insertAll or
-    * StreamingIngest) cost a catalog query, one for all of them. */
-  private def uuidsOf(sids: Seq[Long]): Seq[String] = {
-    val known = synchronized(sidCache.map(_.swap).toMap)
-    val missing = sids.filterNot(known.contains)
-    val found =
-      if (missing.isEmpty) Map.empty[Long, String]
-      else catalog.filter(col("sid").isin(missing: _*)).select("sid", "uuid")
-        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    sids.map(sid => known.getOrElse(sid, found(sid)))
+    flushed.map(catalogSnapshot.uuidOf)
   }
 
   /** DeleteRange [start, end): pure commit-log operation — readers apply
@@ -1492,8 +1125,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     admission.run(Admission.Maintenance)(purgeObliteratedImpl())
 
   private def purgeObliteratedImpl(): Seq[Long] = {
-    val dead = catalog.filter(col("tombstoned"))
-      .select("sid").collect().map(_.getLong(0)).toSeq.sorted
+    val dead = catalogSnapshot.tombstoned.toSeq.sorted
     val active = dead.filter(sid =>
       majorOf(sid) > 0 || exists(s"staging/sid=$sid"))
     if (active.nonEmpty) writing(active: _*)(purge(active))
@@ -1978,7 +1610,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     * `<prefix>_points` SQL view [[registerViews]] creates. */
   def pointsView(): DataFrame = {
     val all = pointLog(None).frame.select("sid", "time", "value")
-    val hidden = tombstonedSids ++ migratingInSids
+    val hidden = catalogSnapshot.hidden
     if (hidden.isEmpty) all
     else all.filter(!col("sid").isin(hidden.toSeq: _*))
   }
@@ -2037,7 +1669,7 @@ class Btrdb(val spark: SparkSession, val root: String,
     val level = rollupLevel(pw)
     // hidden = tombstoned + migrating-in: both are excluded from the
     // point views, so the substituted frame must exclude them too
-    val tomb = tombstonedSids ++ migratingInSids
+    val tomb = catalogSnapshot.hidden
     val snap = snapshot()
     val state = (sid: Long) => snap.getOrElse(sid, StreamState.Empty)
     val affected = sids.getOrElse(snap.keys.toSeq).filterNot(tomb.contains)
@@ -2653,31 +2285,16 @@ object Btrdb {
     * SQL views and the pyramid substitution until cutover clears it. */
   val MigratingInAnnotation = "graft.migrating_in"
   /** Source-side write fence of [[Federation.migrate]] (see
-    * [[Btrdb.migratingOutSids]]). */
+    * [[Btrdb.beginMigrationOut]]). */
   val MigratingOutAnnotation = "graft.migrating_out"
 
   /** Superseded catalog generations kept on disk after a rewrite so
-    * registered views (whose parquet file lists are captured at
-    * registration) keep reading a CONSISTENT older catalog instead of
-    * failing on deleted files. Catalog directories are metadata-sized;
+    * another process that resolved the pointer before the swing keeps
+    * reading a CONSISTENT older catalog instead of failing on deleted
+    * files. Catalog directories are metadata-sized;
     * 64 generations is hours of headroom at any realistic annotation
     * cadence. */
   val RetainedCatalogGenerations = 64L
-
-  /** Metadata limits, mirrored from
-    * /root/reference/internal/mprovider/metaprovider.go:18-28. */
-  val MaximumTags = 32
-  val MaximumAnnotations = 64
-  val MaxTagKeyLength = 64
-  val MaxTagValLength = 256
-  val MaxAnnKeyLength = 64
-  val MaxAnnValLength = 256
-  val MaxCollectionLength = 256
-  private val KeyRegex = "^[a-z][a-z0-9_.]*$".r
-  def validTagKey(k: String): Boolean =
-    k.nonEmpty && k.length < MaxTagKeyLength && KeyRegex.matches(k)
-  def validAnnKey(k: String): Boolean =
-    k.nonEmpty && k.length < MaxAnnKeyLength && KeyRegex.matches(k)
 
   val CatalogSchema =
     "uuid STRING, sid BIGINT, collection STRING, tags MAP<STRING,STRING>, " +

@@ -122,18 +122,14 @@ object Federation {
     * a crash between tombstone and marker-clear resumes at step 6. */
   def migrate(uuid: String, from: Btrdb, to: Btrdb): MigrationReport = {
     val marker = Btrdb.MigratingInAnnotation
-    val toLive = to.catalog
-      .filter(col("uuid") === uuid && !col("tombstoned")).collect()
-    val fromLive = from.catalog
-      .filter(col("uuid") === uuid && !col("tombstoned")).count() > 0
+    val toLive = to.catalogSnapshot.live.get(uuid)
+    val fromLive = from.catalogSnapshot.live.contains(uuid)
 
     if (!fromLive) {
       // resume after a crash between tombstone and marker-clear: the
       // replay completed (the tombstone is written strictly after the
       // parity check), only the reveal remains
-      require(toLive.nonEmpty && toLive.head
-          .getAs[scala.collection.Map[String, String]]("annotations")
-          .contains(marker),
+      require(toLive.exists(_.annotations.contains(marker)),
         s"stream not live at the source and not mid-migration at the target: $uuid")
       val (desc, maj, _) = to.streamInfo(uuid)
       to.updateAnnotations(uuid, desc.annotationVersion, Map(marker -> None))
@@ -153,9 +149,7 @@ object Federation {
         to.createStream(uuid, desc.collection, desc.tags,
           desc.annotations + (marker -> "1") - Btrdb.MigratingOutAnnotation)
       } else {
-        require(toLive.head
-            .getAs[scala.collection.Map[String, String]]("annotations")
-            .contains(marker),
+        require(toLive.exists(_.annotations.contains(marker)),
           s"target already holds a live '$uuid' that is not migrating in")
       }
       val toSid = to.sidOf(uuid)

@@ -204,10 +204,15 @@ private[engine] trait Pyramid { self: Btrdb =>
       val sb = sbucketOf(sid)
       val fold = foldPartials.isDefined
       // DELETE/heal recompute input: the stream's committed points in the
-      // dirtied ranges, one tbucket-pruned scan per range
-      lazy val recomputed = ranges.map { case (lo, hi) =>
-        pointLog(Some(Seq(sid)), recomputeAt, lo, hi, buffered = false).frame
-      }.reduce(_ unionByName _)
+      // dirtied ranges, one tbucket-pruned scan per range, read once and
+      // kept while both tables recompute from it
+      val shared = !fold && quantileLevel.isDefined && foldQhist.isEmpty
+      lazy val recomputed = {
+        val pts = ranges.map { case (lo, hi) =>
+          pointLog(Some(Seq(sid)), recomputeAt, lo, hi, buffered = false).frame
+        }.reduce(_ unionByName _)
+        if (shared) pts.cache() else pts
+      }
       val baseFresh = (foldPartials match {
           case Some(p) if partialPw == base =>
             p.select(col("wstart"), col("cnt"), col("ccnt"), col("vmin"),
@@ -246,19 +251,21 @@ private[engine] trait Pyramid { self: Btrdb =>
             .agg(RollupMerge.head, RollupMerge.tail: _*)
             .withColumn("sid", lit(sid))
       }.map { case (pw, df) => df.withColumn("pw", lit(pw)) }.reduce(_ unionByName _)
-      try rewrite(StatRollup, dirtied && col("pw").isin(sorted: _*),
-        for (pw <- sorted; wb <- wbuckets) yield s"pyramid/pw=$pw/sbucket=$sb/wbucket=$wb",
-        keep, Some(fresh), fold)
-      finally baseFresh.unpersist()
-      quantileLevel.foreach { q =>
-        ensureQhistLayout()
-        val hist = foldQhist.getOrElse(recomputed
-          .groupBy(TimeOps.clampTime(col("time"), q).as("wstart"),
-            StatOps.cents(col("value")).as("c"))
-          .agg(count(lit(1)).as("cnt")))
-        rewrite(HistRollup, dirtied, wbuckets.map(wb => s"qhist/sbucket=$sb/wbucket=$wb"),
-          keep, Some(hist.withColumn("sid", lit(sid))), fold)
-      }
+      try {
+        try rewrite(StatRollup, dirtied && col("pw").isin(sorted: _*),
+          for (pw <- sorted; wb <- wbuckets) yield s"pyramid/pw=$pw/sbucket=$sb/wbucket=$wb",
+          keep, Some(fresh), fold)
+        finally baseFresh.unpersist()
+        quantileLevel.foreach { q =>
+          ensureQhistLayout()
+          val hist = foldQhist.getOrElse(recomputed
+            .groupBy(TimeOps.clampTime(col("time"), q).as("wstart"),
+              StatOps.cents(col("value")).as("c"))
+            .agg(count(lit(1)).as("cnt")))
+          rewrite(HistRollup, dirtied, wbuckets.map(wb => s"qhist/sbucket=$sb/wbucket=$wb"),
+            keep, Some(hist.withColumn("sid", lit(sid))), fold)
+        }
+      } finally if (shared) recomputed.unpersist()
     }
 
   /** Deletes the rollup and histogram rows of the streams `active`, in
@@ -268,7 +275,7 @@ private[engine] trait Pyramid { self: Btrdb =>
     * is metadata-scale, so one rewrite per table suffices. */
   protected def purgeRollups(active: Seq[Long], buckets: Seq[Long]): Unit =
     for (t <- Seq(StatRollup, HistRollup) if hasParquet(t.area)) {
-      if (t eq HistRollup) ensureQhistLayout()
+      if (t eq StatRollup) ensurePyramidLayout() else ensureQhistLayout()
       rewrite(t, col("sbucket").isin(buckets: _*), partitionDirs(t, buckets),
         !col("sid").isin(active: _*), None, merge = false)
     }

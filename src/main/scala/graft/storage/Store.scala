@@ -1,9 +1,11 @@
 package graft.storage
 
+import java.io.IOException
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileAlreadyExistsException, FileContext, FileStatus, FileSystem,
+  Options, Path}
 
 /** Driver-side metadata I/O for an engine root, on the Hadoop
   * `FileSystem` API — the same abstraction Spark's own readers and
@@ -59,50 +61,39 @@ final class Store(rootUri: String, conf: Configuration) {
     else fs.listStatus(p).toSeq.map(_.getPath.getName)
   }
 
-  /** True iff the subtree holds at least one file with `suffix` — an
-    * existing-but-drained directory must read as empty. Short-circuits
-    * on the first hit. Hidden names (`_` or `.` first, as Spark's reader
-    * skips them: markers, `_temporary`, `.spark-staging-*`, temp files
-    * of an atomic write) are not walked, and an entry another writer
-    * removes during the walk reads as absent: a recursive `listFiles`
-    * loads each entry's permissions as it goes and fails on one that
-    * vanished since its directory was listed. */
-  def containsFile(part: String, suffix: String): Boolean = {
+  /** The files under `part` (the file itself if it is one), listed
+    * lazily with `listStatus`, one directory at a time. Hidden names (`_`
+    * or `.` first, as Spark's reader skips them: markers, `_temporary`,
+    * `.spark-staging-*`, temp files of an atomic write) are not walked,
+    * and an entry another writer removes during the walk reads as
+    * absent: a recursive `listFiles` loads each entry's permissions as it
+    * goes and fails on one that vanished since its directory was listed,
+    * and the local file system reports a directory that vanished while it
+    * was listed as an access error. */
+  private def files(part: String): Iterator[FileStatus] = {
     listingOps.incrementAndGet()
-    def holds(p: Path): Boolean =
-      (try fs.listStatus(p).toSeq catch { case _: java.io.FileNotFoundException => Nil })
+    def under(p: Path): Iterator[FileStatus] =
+      (try fs.listStatus(p).iterator catch { case e: IOException =>
+        if (fs.exists(p)) throw e else Iterator.empty })
         .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
-        .exists(f => if (f.isDirectory) holds(f.getPath) else f.getPath.getName.endsWith(suffix))
-    holds(resolve(part))
+        .flatMap(f => if (f.isDirectory) under(f.getPath) else Iterator.single(f))
+    under(resolve(part))
   }
 
+  /** True iff the subtree holds at least one file with `suffix` — an
+    * existing-but-drained directory must read as empty. Short-circuits
+    * on the first hit. */
+  def containsFile(part: String, suffix: String): Boolean =
+    files(part).exists(_.getPath.getName.endsWith(suffix))
+
   /** Oldest file modification time (ms) under a subtree, if any file. */
-  def oldestFileMtime(part: String): Option[Long] = {
-    listingOps.incrementAndGet()
-    val p = resolve(part)
-    if (!fs.exists(p)) None
-    else {
-      val it = fs.listFiles(p, true)
-      var oldest = Long.MaxValue
-      while (it.hasNext) oldest = math.min(oldest, it.next().getModificationTime)
-      if (oldest == Long.MaxValue) None else Some(oldest)
-    }
-  }
+  def oldestFileMtime(part: String): Option[Long] =
+    files(part).map(_.getModificationTime).minOption
 
   /** Total bytes of the files under `part` (recursive) — 0 when the
     * directory is absent. Driver-side metadata listing; callers use it
     * on partition dirs they just wrote, which are metadata-scale. */
-  def dirBytes(part: String): Long = {
-    listingOps.incrementAndGet()
-    val p = resolve(part)
-    if (!fs.exists(p)) 0L
-    else {
-      val it = fs.listFiles(p, true)
-      var bytes = 0L
-      while (it.hasNext) bytes += it.next().getLen
-      bytes
-    }
-  }
+  def dirBytes(part: String): Long = files(part).map(_.getLen).sum
 
   def deleteRecursive(part: String): Unit = {
     val p = resolve(part)

@@ -71,7 +71,7 @@ object BtrdbWire {
   private def errorResponse(e: Throwable): Array[Byte] = {
     val code = e match {
       case _: graft.engine.ResourceExhaustedException => 426
-      case _: java.util.NoSuchElementException => 404 // head() on no stream
+      case _: java.util.NoSuchElementException => 404 // no live stream of that uuid
       case _: IllegalArgumentException => 421
       case _ => 416
     }
@@ -383,13 +383,7 @@ object BtrdbWire {
         kovMap(anns.result()))
       val rows = (if (isPrefix) base
         else base.filter(col("collection") === collection)).collect()
-      val descs = rows.map { x =>
-        graft.engine.StreamDescInfo(x.getAs[String]("uuid"),
-          x.getAs[Long]("sid"), x.getAs[String]("collection"),
-          x.getAs[scala.collection.Map[String, String]]("tags").toMap,
-          x.getAs[scala.collection.Map[String, String]]("annotations").toMap,
-          x.getAs[Long]("annotationVersion"))
-      }
+      val descs = rows.map(graft.engine.CatalogRow.of(_).info)
       if (descs.isEmpty) Iterator.single(new PbWriter().toBytes)
       else descs.iterator.grouped(ChunkSize).map { group =>
         val w = new PbWriter

@@ -183,6 +183,15 @@ class ServiceSpec extends AnyFunSuite with BeforeAndAfterAll {
       // an "external" mutation: a new stream, a commit, an obliterate —
       // the captured views can't see any of it until the poller fires
       db.createStream("svc-fresh", "svc/fresh", Map("k" -> "f"))
+      // a creation alone appends into the live catalog directory without
+      // moving its pointer; the poller must still see it
+      val created = System.currentTimeMillis() + 10000
+      var cc = c0
+      while (cc != c0 + 1 && System.currentTimeMillis() < created) {
+        Thread.sleep(200)
+        cc = count("SELECT count(*) AS n FROM svc_catalog")
+      }
+      assert(cc == c0 + 1, s"catalog view never saw a create with no commit: $cc vs ${c0 + 1}")
       db.insert("svc-fresh", spark.createDataFrame(
         (0 until 64).map(i => (100000L + i, 1.0))).toDF("time", "value"))
       db.flush("svc-fresh")

@@ -263,21 +263,27 @@ class PyramidSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("an unstamped pre-ccnt rollup migrates whole before new writes can mix layouts") {
     import org.apache.spark.sql.functions.col
     val db = mkDb()
-    val uuid = "u-legacy"
+    val (uuid, gone) = ("u-legacy", "u-legacy-gone")
     db.createStream(uuid, "pyr/legacy", Map("t" -> "l"))
+    db.createStream(gone, "pyr/legacy", Map("t" -> "g"))
     insertPts(db, uuid, (0L until 4096L).map(t => (t, 2.0)))
     db.flush(uuid)
+    insertPts(db, gone, (0L until 1024L).map(t => (t, 3.0)))
+    db.flush(gone)
     // simulate a root written before the ccnt/decimal layout existed:
     // rewrite the rollup with vsc as INT64 and no ccnt column, and
     // remove the layout stamp
     val pyr = Paths.get(s"${db.root}/pyramid".stripPrefix("file:"))
-    val legacy = spark.read.parquet(pyr.toString)
-      .drop("ccnt").withColumn("vsc", col("vsc").cast("long"))
-      .localCheckpoint()
-    rmTree(pyr)
-    legacy.write.partitionBy("pw", "sbucket", "wbucket")
-      .parquet(pyr.toString)
-    assert(!Files.exists(pyr.resolve("_layout")))
+    def legacyize(): Unit = {
+      val legacy = spark.read.parquet(pyr.toString)
+        .drop("ccnt").withColumn("vsc", col("vsc").cast("long"))
+        .localCheckpoint()
+      rmTree(pyr)
+      legacy.write.partitionBy("pw", "sbucket", "wbucket")
+        .parquet(pyr.toString)
+      assert(!Files.exists(pyr.resolve("_layout")))
+    }
+    legacyize()
     // a post-ccnt ingest FOLDS into the legacy table: without the
     // migration this appends DECIMAL/ccnt files next to INT64 files —
     // unreadable or silently ccnt-dropping depending on which footer
@@ -308,6 +314,28 @@ class PyramidSpec extends AnyFunSuite with BeforeAndAfterAll {
     val w2 = db.alignedWindows(uuid, 512L, 528L, 4)
       .filter(col("cnt") > 0).head()
     assert(w2.getAs[Long]("cnt") == 16L && w2.getAs[Double]("vmean") == 2.0)
+    // a purge is a rollup write too: on an unstamped legacy table it
+    // migrates the whole table before dropping the obliterated stream's
+    // rows, so the survivor's sbucket is not left in the old layout
+    // (the off-grid value goes first: the legacy layout cannot hold it)
+    db.deleteRange(uuid, 100L, 101L)
+    db.compact(uuid)
+    legacyize()
+    val goneSid = db.sidOf(gone)
+    db.obliterate(gone)
+    assert(db.purgeObliterated() == Seq(goneSid))
+    assert(Files.exists(pyr.resolve("_layout")), "a purge must stamp the migrated layout")
+    val purged = spark.read.parquet(pyr.toString)
+    assert(purged.schema("vsc").dataType == org.apache.spark.sql.types.DecimalType(38, 0))
+    assert(purged.filter(col("ccnt").isNull).count() == 0, "every row carries ccnt")
+    assert(purged.filter(col("sid") === goneSid).count() == 0)
+    val maj = db.version(uuid)._1
+    val served = db.alignedWindows(uuid, 0L, 4096L, 8)
+    val scans = graft.plans.PlanChecks.scanRootPaths(served)
+    assert(scans.nonEmpty && scans.forall(_.contains("/pyramid")), "the survivor is pyramid-served")
+    def stats(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))).toSeq
+    assert(stats(served) == stats(db.alignedWindows(uuid, 0L, 4096L, 8, version = maj)))
     db.close()
   }
 
@@ -622,6 +650,24 @@ class PyramidSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!rows(0).isNullAt(2) && rows(0).getAs[Double]("p50") == 3.5)
     assert(rows(1).getAs[Long]("cnt") == 1L && rows(1).isNullAt(2) &&
       rows(1).isNullAt(3), "off-grid window serves NULL quantiles")
+    db.close()
+  }
+
+  test("quantile rollup: a delete reads its dirtied point-log range once for both tables") {
+    // windows of 2^8 ns hold 256 points each, so the rollup rows a
+    // rewrite reads are few beside the 4096 points of the dirtied range
+    val db = new Btrdb(spark, Files.createTempDirectory("qonce").toString, sBuckets = 4,
+      tBucketPw = 12, bufferCommitThreshold = 1 << 20, pyramidLevels = Seq(8, 12),
+      pyramidWBucketPw = 12, commitRangePw = 8, quantileLevel = Some(8))
+    val uuid = "u-qonce"
+    db.createStream(uuid, "pyr/qonce", Map("t" -> "q"))
+    insertPts(db, uuid, (0L until 4096L).map(t => (t, (t % 2).toDouble)))
+    db.flush(uuid)
+    val (_, records) = org.apache.spark.JobCount.recordsRead(spark.sparkContext)(
+      db.deleteRange(uuid, 1000L, 1100L))
+    assert(records >= 4096L && records < 4096L * 3 / 2,
+      s"the recompute read $records records; the dirtied range holds 4096 points")
+    assert(db.quantileWindows(uuid, 0L, 4096L, 12).head().getAs[Long]("cnt") == 3996L)
     db.close()
   }
 

@@ -70,6 +70,29 @@ class StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!st.containsFile("d", ".parquet"))
   }
 
+  test("a walk racing nested creates and deletes reads vanished entries as absent") {
+    val st = freshStore()
+    st.writeAtomic("w/keep/f.parquet", "k")
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val churn = new Thread(() =>
+      try (0 until 300).foreach { i =>
+        (0 until 4).foreach(j => st.writeAtomic(s"w/sid=$i/batch=$j/part-$j.parquet", "x" * j))
+        st.deleteRecursive(s"w/sid=$i")
+      } catch { case e: Throwable => failure.set(e) })
+    churn.start()
+    var walks = 0
+    try while (churn.isAlive) {
+      assert(st.containsFile("w", ".parquet"))
+      assert(st.oldestFileMtime("w").nonEmpty)
+      assert(st.dirBytes("w") >= 1L)
+      walks += 1
+    } finally churn.join()
+    assert(failure.get == null, s"the churn thread failed: ${failure.get}")
+    assert(walks > 0)
+    assert(st.dirBytes("w") == 1L && st.dirBytes("absent") == 0L)
+    assert(st.oldestFileMtime("absent").isEmpty)
+  }
+
   test("full engine cycle on an explicit file:-scheme root") {
     val dir = Files.createTempDirectory("storecycle").toString
     val root = s"file:$dir"
