@@ -5,8 +5,6 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.LongAdder
 import java.util.concurrent.locks.ReentrantLock
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex}
@@ -32,10 +30,14 @@ import graft.storage.Store
   *   points/    committed point log, partitioned by sbucket = sid % SBuckets
   *              and tbucket = time >> TBucketPw; carries a `version` column
   *   commits/   commit log, one driver-written JSON line per commit:
-  *              (sid, version, kind insert|delete, tmin, tmax, npoints,
-  *              ranges[{s,e}...]) — the source of truth for visibility,
-  *              version counters, changed-range queries, and rollup
-  *              invalidation; touched `ranges` carry tree-diff fidelity
+  *              (sid, version, kind insert|delete|purge, tmin, tmax,
+  *              npoints, ranges[{s,e}...], compacted, batches, grid) —
+  *              the source of truth for visibility, version counters,
+  *              changed-range queries, and rollup invalidation; touched
+  *              `ranges` carry tree-diff fidelity. Loose
+  *              `commit-<sid>-<v>[-c].json` files roll into closed
+  *              `archive-N.json` segments; the log is loaded once into
+  *              the per-stream states ([[CommitLog]])
   *   staging/sid=S/batch=B/  unflushed inserts (the PQM write buffer,
   *              /root/reference/pqm.go:29-35) — merged on latest reads;
   *              per-stream partitions flush independently, per-batch
@@ -85,7 +87,7 @@ class Btrdb(val spark: SparkSession, val root: String,
             lockRoot: Boolean = true,
             lockStaleMillis: Long = 120000L,
             private[engine] val admission: Admission = Admission.default)
-    extends MetaProvider with Pyramid {
+    extends MetaProvider with Pyramid with CommitLog {
   import Btrdb._
 
   require(pyramidLevels.isEmpty || pyramidWBucketPw >= pyramidLevels.max,
@@ -174,7 +176,7 @@ class Btrdb(val spark: SparkSession, val root: String,
   // claimant took the lock over). An evicted handle must not keep
   // mutating: the new owner may already be writing, and two concurrent
   // writers on one root is the exact state the lock exists to prevent.
-  // Mutations funnel through writeCommitFile/overwriteCatalog, both of
+  // Mutations funnel through appendCommit/rewriteCatalog, both of
   // which check this and throw.
   @volatile private var lockEvicted = false
   private var heartbeat: java.util.concurrent.ScheduledExecutorService = null
@@ -288,7 +290,6 @@ class Btrdb(val spark: SparkSession, val root: String,
         store.delete(LockFile)
       lockHeld = false
     }
-    invalidateCommits()
   }
 
   /** True iff the directory holds at least one parquet data file — an
@@ -407,65 +408,11 @@ class Btrdb(val spark: SparkSession, val root: String,
   private def vanished(e: Throwable): Boolean =
     e != null && (e.isInstanceOf[FileNotFoundException] || vanished(e.getCause))
 
-  @volatile private var commitsCache: DataFrame = null
   /** Staging batch-id generator: ms epoch << 20 + counter — unique
     * across restarts, disjoint from Spark streaming batch ids. */
   private val batchIdGen = new java.util.concurrent.atomic.AtomicLong(
     System.currentTimeMillis() << 20)
 
-  private def invalidateCommits(): Unit = synchronized {
-    if (commitsCache != null) commitsCache.unpersist()
-    commitsCache = null
-  }
-
-  // ---- versioned storage ---------------------------------------------
-
-  /** The commit log as a DataFrame. Stored as JSON lines — one small
-    * file per commit, written by the driver with NO Spark job (a commit
-    * is one metadata row; a distributed write for it is pure scheduler
-    * overhead, and the reference's per-commit superblock write is the
-    * same O(1) metadata append). Parsed with an explicit schema so all
-    * int64 ns values round-trip exactly. */
-  def commits: DataFrame = {
-    var c = commitsCache
-    if (c == null) synchronized {
-      c = commitsCache
-      if (c == null) {
-        val raw = (if (exists("commits"))
-            spark.read.schema(
-              org.apache.spark.sql.types.StructType.fromDDL(CommitSchema))
-              .json(path("commits"))
-          else emptyDf(CommitSchema))
-          .withColumn("compacted", coalesce(col("compacted"), lit(false)))
-          // a crash between an archive write and the per-file deletes
-          // leaves records present in BOTH — identical lines, deduped
-          .distinct()
-        // supersede rule: a compacted record at version V replaces every
-        // plain record of its stream at version ≤ V (and any older
-        // compacted record) — this is what makes compact() crash-safe:
-        // leftovers from an interrupted garbage collection are ignored,
-        // never double-counted
-        val cv = raw.filter(col("compacted"))
-          .groupBy("sid").agg(max("version").as("_cv"))
-        c = raw.join(cv, Seq("sid"), "left_outer")
-          .filter(col("_cv").isNull || col("version") > col("_cv") ||
-            (col("compacted") && col("version") === col("_cv")))
-          .drop("_cv")
-          .cache()
-        c.count()
-        commitsCache = c
-      }
-    }
-    c
-  }
-
-  /** Per-stream commit state, one immutable [[StreamState]] per stream,
-    * seeded from the commit log and the write buffer once and replaced
-    * by every commit, so the ingest, read and stat hot paths never
-    * re-scan commit metadata. A read takes one value per stream and
-    * pins everything to it, with no lock. */
-  private[engine] val states = new ConcurrentHashMap[Long, StreamState]()
-  @volatile private var seeded = false
   /** Per-stream write locks: writes to one stream are serialized, as by
     * the reference's per-stream write mutex. Lock order: a stream's lock,
     * then the engine monitor, never the reverse. */
@@ -495,91 +442,12 @@ class Btrdb(val spark: SparkSession, val root: String,
     try body finally locks.reverse.foreach(_.unlock())
   }
 
-  private[engine] def stateOf(sid: Long): StreamState = {
-    seed()
-    states.getOrDefault(sid, StreamState.Empty)
-  }
-
-  /** Every stream's state, as one snapshot. */
-  private[engine] def snapshot(): Map[Long, StreamState] = { seed(); states.asScala.toMap }
-
-  /** Replaces stream `sid`'s state by `f` of it. */
-  private[engine] def publish(sid: Long)(f: StreamState => StreamState): Unit = {
-    seed()
-    states.compute(sid, (_, s) => f(if (s == null) StreamState.Empty else s))
-  }
-
-  /** Seeds every stream's state once: the [[StreamState.committed]]
-    * transition folded over the commit log, then the write buffer's
-    * staged counts (after [[recoverFlushedStaging]]). */
-  private def seed(): Unit = if (!seeded) synchronized {
-    if (!seeded) {
-      val records = commits.select("sid", "version", "kind", "tmin", "tmax",
-          "npoints", "ranges", "compacted", "batches", "grid")
-        .collect().toSeq.map { r =>
-          CommitRecord(r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3),
-            r.getLong(4), r.getLong(5),
-            if (r.isNullAt(6)) Seq((r.getLong(3), r.getLong(4) + 1))
-            else r.getSeq[Row](6).map(x => (x.getLong(0), x.getLong(1))),
-            r.getBoolean(7), if (r.isNullAt(8)) Nil else r.getSeq[Long](8),
-            // legacy records without the flag read as off-grid
-            !r.isNullAt(9) && r.getBoolean(9))
-        }
-      recoverFlushedStaging(records)
-      val staged =
-        if (!hasParquet("staging")) Array.empty[Row]
-        else stagingDf.groupBy("sid").agg(count(lit(1)), min("time"), max("time")).collect()
-      val all = staged.foldLeft(StreamState.fold(records)) { (m, r) =>
-        m.updated(r.getLong(0), m.getOrElse(r.getLong(0), StreamState.Empty)
-          .staged(r.getLong(1), r.getLong(2), r.getLong(3)))
-      }
-      states.clear()
-      states.putAll(all.asJava)
-      seeded = true
-    }
-  }
-
   /** The PQM write buffer, partitioned by `sid` (each stream's buffer is
     * independent, /root/reference/pqm.go:510-625) and a writer-private
     * `batch` subkey (streaming replay idempotence). Reads declare both
     * partition columns BIGINT and drop the physical subkey. */
-  private def stagingDf: DataFrame =
+  private[engine] def stagingDf: DataFrame =
     readArea("staging", StagingSchema).select("sid", "time", "value")
-
-  /** Flush crash recovery: each flush commit records the staging batch
-    * ids it consumed; a crash between the commit and the staging delete
-    * leaves those batches on disk, where a naive restart would re-flush
-    * them as duplicates. On seeding, drop any staged batch dir whose
-    * id appears in its stream's latest insert commit — the
-    * same version-match replay guard as /root/reference/pqm.go:172-179,
-    * keyed by batch id instead of journal version. */
-  private def recoverFlushedStaging(records: Seq[CommitRecord]): Unit = {
-    val consumed = records.filter(_.kind == "insert").groupBy(_.sid)
-      .map { case (sid, rs) => sid -> rs.maxBy(_.version).batches.toSet }
-      .filter(_._2.nonEmpty)
-    if (consumed.isEmpty || !exists("staging")) return
-    store.listNames("staging")
-      .filter(_.startsWith("sid="))
-      .foreach { sidDir =>
-        val dead = consumed.getOrElse(sidDir.stripPrefix("sid=").toLong, Set.empty[Long])
-        if (dead.nonEmpty)
-          store.listNames(s"staging/$sidDir")
-            .filter(_.stripPrefix("batch=").toLongOption.exists(dead.contains))
-            .foreach(b => deleteDir(s"staging/$sidDir/$b"))
-      }
-  }
-
-  /** Re-seed staged counts from disk — call after an external writer
-    * (e.g. StreamingIngest) appended to this root's staging area. */
-  def refreshStaging(): Unit = synchronized { seeded = false }
-
-  /** Re-read commit metadata from disk — call after an external process
-    * touched the commit log (recovery tooling, tests). */
-  def refreshCommits(): Unit = synchronized {
-    invalidateCommits()
-    seeded = false
-    refreshRollups()
-  }
 
   /** StreamInfo: descriptor + (major, minor) version
     * (/root/reference/grpcinterface/serve.go StreamInfo RPC). */
@@ -597,8 +465,8 @@ class Btrdb(val spark: SparkSession, val root: String,
     * generations (deletes are anti-filters, not decrements). */
   def engineInfo(): EngineInfo = {
     val live = catalogSnapshot.live.size.toLong
-    val pts = commits.filter(col("kind") === "insert")
-      .agg(coalesce(sum("npoints"), lit(0L))).head().getLong(0)
+    val pts = snapshot().valuesIterator.flatMap(_.records)
+      .filter(_.kind == "insert").map(_.npoints).sum
     EngineInfo(majorVersion = 4, minorVersion = 15,
       build = "graft-spark (btrdb-surface 4.15)", healthy = true,
       streamCount = live, pointCount = pts,
@@ -1092,26 +960,10 @@ class Btrdb(val spark: SparkSession, val root: String,
       // described — carry the stream's AND-folded grid flag forward
       grid = s.grid))
     gcCommitFiles(sid, maj)
-    invalidateCommits()
     // crash-unfolded ranges were healed before the collapse; only the
     // surviving envelope recompute and the stamp remain
     if (n > 0) maintainPyramid(sid, Seq((tmin, tmax + 1)), foldPartials = None, maj)
     else if (pyramidLevels.nonEmpty) stampPyramidWatermark(sid, maj)
-  }
-
-  /** Delete this stream's plain commit files at or below the compacted
-    * version, plus older compacted records — pure garbage collection:
-    * the reader's supersede rule already ignores them. */
-  private def gcCommitFiles(sid: Long, compactedVersion: Long): Unit = {
-    val plain = s"commit-$sid-(\\d+)\\.json".r
-    val compactRe = s"commit-$sid-(\\d+)-c\\.json".r
-    store.listNames("commits").foreach {
-      case name @ plain(v) if v.toLong <= compactedVersion =>
-        store.delete(s"commits/$name")
-      case name @ compactRe(v) if v.toLong < compactedVersion =>
-        store.delete(s"commits/$name")
-      case _ => ()
-    }
   }
 
   /** Reclaim storage for obliterated streams: their tombstones hide them
@@ -1126,8 +978,10 @@ class Btrdb(val spark: SparkSession, val root: String,
 
   private def purgeObliteratedImpl(): Seq[Long] = {
     val dead = catalogSnapshot.tombstoned.toSeq.sorted
-    val active = dead.filter(sid =>
-      majorOf(sid) > 0 || exists(s"staging/sid=$sid"))
+    // one listing of the write buffer, however many streams were ever
+    // obliterated: a purged stream's tombstone stays
+    val staged = if (dead.isEmpty) Set.empty[String] else store.listNames("staging").toSet
+    val active = dead.filter(sid => majorOf(sid) > 0 || staged(s"sid=$sid"))
     if (active.nonEmpty) writing(active: _*)(purge(active))
     active
   }
@@ -1141,13 +995,15 @@ class Btrdb(val spark: SparkSession, val root: String,
     // the rest pending — re-running purge is idempotent
     buckets.foreach(rewritePoints(_, _ => true, col("sid").isin(active: _*)))
     exclusive(buckets.map(b => s"sbucket=$b"): _*)(purgeRollups(active, buckets))
+    // a purge record per stream, after its bytes and loose commit files
+    // are gone, empties its state: its records in closed archive
+    // segments then stay superseded, and a re-run finds nothing to purge
     active.foreach { sid =>
       gcCommitFiles(sid, Long.MaxValue)
       deleteDir(s"staging/sid=$sid")
       store.delete(s"pyramid/_wm-$sid")
-      states.remove(sid)
+      appendCommit(CommitRecord(sid, majorOf(sid) + 1, "purge", 0L, 0L, 0L, Nil))
     }
-    invalidateCommits()
   }
 
   /** The point-log writer: Parquet partitioned by (sbucket, tbucket),
@@ -1231,61 +1087,6 @@ class Btrdb(val spark: SparkSession, val root: String,
   private def stagedBatches(sid: Long): Seq[Long] =
     store.listNames(s"staging/sid=$sid")
       .flatMap(_.stripPrefix("batch=").toLongOption)
-
-  /** Write one commit file; the store's atomic publish (rename on HDFS/
-    * local, single PUT on object stores) is the visibility point. */
-  private def writeCommitFile(name: String, json: String): Unit = {
-    requireWriterLive()
-    store.writeAtomic(s"commits/$name", json)
-  }
-
-  /** Roll loose per-commit files into a CLOSED archive segment when the
-    * commit directory holds more than `maxFiles` of them — over an
-    * engine root's lifetime the log would otherwise accumulate one tiny
-    * file per commit (millions of files to list and open at 100 TB
-    * scale; the reference's analog is the superblock chain packed
-    * inside its block store). Returns true iff a segment was written.
-    *
-    * Segments are IMMUTABLE once closed: each pass streams ONLY the
-    * current loose files into the next `archive-N.json` and never reads
-    * or rewrites a previous segment — driver memory is one copy buffer
-    * and lifetime archive I/O is linear in the log, where a
-    * fold-everything design re-writes the whole history every pass
-    * (O(n²) bytes) and must hold it in driver memory. The commit reader
-    * merges all segments + loose files (and dedups identical lines), so
-    * the only crash window — between the atomic segment publish and the
-    * per-file deletes — duplicates records harmlessly; compact()'s
-    * stale records inside closed segments stay ignored by the
-    * supersede rule. */
-  def archiveCommitLog(maxFiles: Int = 1024): Boolean =
-    admission.run(Admission.Maintenance) {
-      val names = store.listNames("commits").filter(_.endsWith(".json"))
-      val loose = names.filterNot(_.startsWith("archive-"))
-      if (loose.size <= maxFiles) false
-      else {
-        val seq = names.filter(_.startsWith("archive-"))
-          .flatMap(_.stripPrefix("archive-").stripSuffix(".json").toLongOption)
-          .maxOption.getOrElse(0L) + 1
-        store.writeAtomicStream(s"commits/archive-$seq.json") { out =>
-          loose.sorted.foreach(n => store.copyTo(s"commits/$n", out))
-        }
-        loose.foreach(n => store.delete(s"commits/$n"))
-        invalidateCommits()
-        true
-      }
-    }
-
-  /** Append one commit record: a single JSON line written by the driver
-    * — no Spark job for a metadata row (the analog of the reference's
-    * superblock append, blockstore.go:317-360). */
-  private def appendCommit(r: CommitRecord): Unit = {
-    writeCommitFile(s"commit-${r.sid}-${r.version}${if (r.compacted) "-c" else ""}.json", r.json)
-    // a flush commit empties the write buffer in the same step as it
-    // raises the major version, so no reader sees its rows both
-    // committed and staged (the staged files are deleted later)
-    publish(r.sid)(s => if (r.batches.nonEmpty) s.committed(r).flushed else s.committed(r))
-    invalidateCommits()
-  }
 
   /** Snapshot of one stream's committed points at `version`: version pin
     * + delete anti-filters, both from the in-memory commit state — the
@@ -1885,14 +1686,11 @@ class Btrdb(val spark: SparkSession, val root: String,
   def changes(uuid: String, fromVersion: Long, toVersion: Long,
               resolution: Int): DataFrame = {
     val sid = sidOf(uuid)
-    // commit metadata is small (seeding collects it whole): one
-    // partition plans the interval merge and sort with no exchange
-    val perRange = commits.coalesce(1).filter(col("sid") === sid)
-      .select(col("sid"), col("version"),
-        explode(coalesce(col("ranges"),
-          array(struct(col("tmin").as("s"), (col("tmax") + 1).as("e"))))).as("r"))
-      .select(col("sid"), col("version"),
-        col("r.s").as("tmin"), (col("r.e") - 1).as("tmax"))
+    // the stream's commit ranges are in memory: one partition plans the
+    // interval merge and sort with no exchange
+    val perRange = spark.createDataFrame(
+        stateOf(sid).ranges.map { case (v, s, e) => (sid, v, s, e - 1) })
+      .toDF("sid", "version", "tmin", "tmax").coalesce(1)
     StatOps.changes(perRange, fromVersion, toVersion, resolution)
       .orderBy("s").select("s", "e")
   }

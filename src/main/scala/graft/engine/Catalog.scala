@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** One stream descriptor, a row of the catalog table in its column order
   * ([[Btrdb.CatalogSchema]]). */
@@ -208,9 +209,7 @@ private[engine] trait MetaProvider { self: Btrdb =>
 
   /** The stream descriptors, one row per stream with its `tombstoned`
     * flag, as a local relation over the current catalog. */
-  def catalog: DataFrame =
-    spark.createDataFrame(catalogSnapshot.rows.map(_.toRow).asJava,
-      StructType.fromDDL(CatalogSchema))
+  def catalog: DataFrame = local(CatalogSchema, catalogSnapshot.rows.map(_.toRow))
 
   /** CreateStream: uuid and (collection, tags) must be unique among live
     * streams; tombstoned uuids may never be reused
@@ -256,23 +255,33 @@ private[engine] trait MetaProvider { self: Btrdb =>
   }
 
   /** ListCollections with prefix + cursor + limit (≤10k, reference
-    * `internal/mprovider/metaprovider.go:423-451`). */
+    * `internal/mprovider/metaprovider.go:423-451`): the distinct live
+    * collections from `startingFrom` on, in Spark's string order. */
   def listCollections(prefix: String, startingFrom: String = "",
-                      limit: Int = 10000): DataFrame =
-    catalog.filter(!col("tombstoned") && col("collection").startsWith(prefix) &&
-        col("collection") >= startingFrom)
-      .select("collection").distinct()
-      .orderBy("collection").limit(math.min(limit, 10000))
+                      limit: Int = 10000): DataFrame = {
+    val from = UTF8String.fromString(startingFrom)
+    local("collection STRING", liveIn(prefix).map(_.collection).distinct
+      .map(UTF8String.fromString).filter(_.compareTo(from) >= 0).sorted
+      .take(math.min(limit, 10000)).map(c => Row(c.toString)))
+  }
 
   /** GetKeyUsage: streams-per-tag-key and per-annotation-key counts. */
   def keyUsage(collectionPrefix: String): DataFrame = {
-    val live = catalog.filter(!col("tombstoned") &&
-      col("collection").startsWith(collectionPrefix))
-    live.select(explode(map_keys(col("tags"))).as("key"), lit("tag").as("kind"))
-      .unionByName(live.select(explode(map_keys(col("annotations"))).as("key"),
-        lit("annotation").as("kind")))
-      .groupBy("kind", "key").agg(count(lit(1)).as("cnt"))
+    val live = liveIn(collectionPrefix)
+    local("kind STRING NOT NULL, key STRING NOT NULL, cnt BIGINT NOT NULL",
+      Seq("tag" -> live.flatMap(_.tags.keys), "annotation" -> live.flatMap(_.annotations.keys))
+        .flatMap { case (kind, keys) =>
+          keys.groupMapReduce(identity)(_ => 1L)(_ + _).toSeq.sorted
+            .map { case (k, n) => Row(kind, k, n) } })
   }
+
+  /** The live streams whose collection starts with `prefix`. */
+  private def liveIn(prefix: String): Vector[CatalogRow] =
+    catalogSnapshot.rows.filter(r => !r.tombstoned && r.collection.startsWith(prefix))
+
+  /** `rows` of the DDL `schema` as a local relation, built with no Spark job. */
+  private[engine] def local(schema: String, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, StructType.fromDDL(schema))
 
   /** SetStreamAnnotations, set-only convenience form. */
   def setAnnotations(uuid: String, expectedVersion: Long,

@@ -75,6 +75,11 @@ object Federation {
   final case class MigrationReport(uuid: String, fromSid: Long,
       toSid: Long, major: Long, npoints: Long)
 
+  /** The replay list of [[migrate]]: stream `sid`'s live commit records
+    * at `from` above version `after`, in version order, with no Spark job. */
+  private[engine] def replayList(from: Btrdb, sid: Long, after: Long): Seq[CommitRecord] =
+    from.stateOf(sid).records.filter(_.version > after)
+
   /** Move one stream between federation roots — the resharding tool an
     * [[ownerOf]] `n` change requires (the reference's analog is a MASH
     * ring transition, /root/reference/internal/configprovider/
@@ -159,23 +164,15 @@ object Federation {
       // target's major are dropped before the resume re-appends them
       to.dropUncommittedReplay(uuid)
 
-      // the source's EFFECTIVE commit log (compaction supersede
-      // applied), replayed in version order; resume skips what the
-      // target already committed
-      val doneTo = to.version(uuid)._1
-      val recs = from.commits
-        .filter(col("sid") === fromSid)
-        .select("version", "kind", "tmin", "tmax", "compacted")
-        .collect().sortBy(_.getLong(0))
-      recs.filter(_.getLong(0) > doneTo).foreach { r =>
-        val v = r.getLong(0)
-        r.getString(1) match {
+      // resume skips what the target already committed
+      replayList(from, fromSid, to.version(uuid)._1).foreach { r =>
+        r.kind match {
           case "insert" =>
-            to.replayInsert(uuid, v,
-              from.generationRows(uuid, v, upTo = r.getBoolean(4)),
-              asCompacted = r.getBoolean(4))
+            to.replayInsert(uuid, r.version,
+              from.generationRows(uuid, r.version, upTo = r.compacted),
+              asCompacted = r.compacted)
           case "delete" =>
-            to.replayDelete(uuid, v, r.getLong(2), r.getLong(3))
+            to.replayDelete(uuid, r.version, r.tmin, r.tmax)
           case k => throw new IllegalStateException(s"unknown commit kind: $k")
         }
       }

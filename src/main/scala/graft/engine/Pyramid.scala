@@ -34,7 +34,7 @@ private[engine] trait Pyramid { self: Btrdb =>
   protected def qhistHas: Boolean = has("qhist")
 
   /** Drops the memos of the rollup tables' state on disk. */
-  protected def refreshRollups(): Unit = synchronized {
+  private[engine] def refreshRollups(): Unit = synchronized {
     present.clear()
     wmEnabledMemo = None
   }

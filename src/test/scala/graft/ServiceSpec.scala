@@ -192,19 +192,24 @@ class ServiceSpec extends AnyFunSuite with BeforeAndAfterAll {
         cc = count("SELECT count(*) AS n FROM svc_catalog")
       }
       assert(cc == c0 + 1, s"catalog view never saw a create with no commit: $cc vs ${c0 + 1}")
+      // the commits view is a snapshot taken at registration
+      val fresh = s"SELECT count(*) AS n FROM svc_commits WHERE sid = ${db.sidOf("svc-fresh")}"
+      assert(count(fresh) == 0)
       db.insert("svc-fresh", spark.createDataFrame(
         (0 until 64).map(i => (100000L + i, 1.0))).toDF("time", "value"))
       db.flush("svc-fresh")
       val deadline = System.currentTimeMillis() + 20000
-      var (n1, c1) = (n0, c0)
-      while ((n1 != n0 + 64 || c1 != c0 + 1) &&
+      var (n1, c1, k1) = (n0, c0, 0L)
+      while ((n1 != n0 + 64 || c1 != c0 + 1 || k1 != 1) &&
           System.currentTimeMillis() < deadline) {
         Thread.sleep(200)
         n1 = count("SELECT count(*) AS n FROM svc_points")
         c1 = count("SELECT count(*) AS n FROM svc_catalog")
+        k1 = count(fresh)
       }
       assert(n1 == n0 + 64, s"points view never refreshed: $n1 vs ${n0 + 64}")
       assert(c1 == c0 + 1, s"catalog view never refreshed: $c1 vs ${c0 + 1}")
+      assert(k1 == 1, s"commits view never saw the new commit: $k1 records")
       // catalog REWRITE (obliterate) — the retention fix keeps the old
       // generation readable until the poller re-registers
       db.obliterate("svc-fresh")

@@ -772,29 +772,77 @@ class BtrdbSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("purgeObliterated reclaims data but keeps the tombstone") {
-    val ua = "u-purge-a"; val ub = "u-purge-b"
-    db.createStream(ua, "test/purge", Map("s" -> "a"))
-    db.createStream(ub, "test/purge", Map("s" -> "b"))
-    val sidA = db.sidOf(ua)
-    insertPoints(ua, (0L until 300L).map(t => (t, 1.0)))
-    db.flush(ua)
-    insertPoints(ub, (0L until 200L).map(t => (t, 2.0)))
-    db.flush(ub)
-    db.obliterate(ua)
-    val purged = db.purgeObliterated()
-    assert(purged.contains(sidA))
-    // survivor intact (points + pyramid-served stats)
-    assert(db.rawValues(ub, 0, 1000).count() == 200)
-    assert(db.alignedWindows(ub, 0, 256, 8).head().getLong(1) == 200)
-    // purged stream's commits and points are gone
-    assert(db.commits.filter(
-      org.apache.spark.sql.functions.col("sid") === sidA).count() == 0)
-    // uuid stays reserved forever
-    intercept[IllegalArgumentException] {
-      db.createStream(ua, "test/purge2", Map("s" -> "x"))
-    }
-    // second purge is a no-op
-    assert(db.purgeObliterated().isEmpty)
+    import org.apache.spark.sql.functions.col
+    // a root of its own: the point count below covers these streams only
+    val root = Files.createTempDirectory("purgespec").toString
+    val pdb = new Btrdb(spark, root, sBuckets = 4, tBucketPw = 52,
+      bufferCommitThreshold = 1 << 20, pyramidLevels = Seq(6, 10))
+    try {
+      val ua = "u-purge-a"; val ub = "u-purge-b"
+      pdb.createStream(ua, "test/purge", Map("s" -> "a"))
+      pdb.createStream(ub, "test/purge", Map("s" -> "b"))
+      val sidA = pdb.sidOf(ua)
+      def put(u: String, pts: Seq[(Long, Double)]): Unit =
+        pdb.insert(u, spark.createDataFrame(pts).toDF("time", "value"))
+      put(ua, (0L until 300L).map(t => (t, 1.0)))
+      pdb.flush(ua)
+      put(ub, (0L until 200L).map(t => (t, 2.0)))
+      pdb.flush(ub)
+      // the purged stream's records stay in this closed archive segment
+      assert(pdb.archiveCommitLog(maxFiles = 1))
+      pdb.obliterate(ua)
+      assert(pdb.purgeObliterated() == Seq(sidA))
+      // survivor intact (points + pyramid-served stats)
+      assert(pdb.rawValues(ub, 0, 1000).count() == 200)
+      assert(pdb.alignedWindows(ub, 0, 256, 8).head().getLong(1) == 200)
+      // purged stream's commits and points are gone, and stay gone for a
+      // reload of the log and for a fresh attach; a second purge is a no-op
+      def gone(e: Btrdb, step: String): Unit = {
+        assert(e.commits.filter(col("sid") === sidA).count() == 0, step)
+        assert(e.engineInfo().pointCount == 200, step)
+        assert(e.purgeObliterated().isEmpty, step)
+      }
+      gone(pdb, "after the purge")
+      pdb.refreshCommits()
+      gone(pdb, "after refreshCommits")
+      val fresh = Btrdb.attach(spark, root, lockRoot = false)
+      try gone(fresh, "after an attach") finally fresh.close()
+      // uuid stays reserved forever
+      intercept[IllegalArgumentException] {
+        pdb.createStream(ua, "test/purge2", Map("s" -> "x"))
+      }
+    } finally pdb.close()
+  }
+
+  test("the commit log answers from the stream states: engineInfo, a reseed and migrate's replay list") {
+    import org.apache.spark.sql.functions.col
+    val root = Files.createTempDirectory("commitlogjobs").toString
+    val e = new Btrdb(spark, root, sBuckets = 4, tBucketPw = 52,
+      bufferCommitThreshold = 1 << 20, pyramidLevels = Seq(6, 10))
+    try {
+      val uuid = "u-log-jobs"
+      e.createStream(uuid, "test/logjobs", Map("s" -> "a"))
+      val sid = e.sidOf(uuid)
+      def put(ts: Seq[Long]): Unit = {
+        e.insert(uuid, spark.createDataFrame(ts.map(t => (t, 1.0))).toDF("time", "value"))
+        e.flush(uuid)
+      }
+      def jobs[T](body: => T): Int = org.apache.spark.JobCount(spark.sparkContext)(body)._2.jobs
+      put(0L until 100L)
+      e.deleteRange(uuid, 10, 20)
+      e.engineInfo()
+      assert(jobs(e.engineInfo()) == 0, "engineInfo, warm")
+      put(100L until 150L)
+      assert(jobs(e.engineInfo()) == 0, "engineInfo right after a commit")
+      assert(e.engineInfo().pointCount == 150)
+      e.refreshCommits()
+      assert(jobs(e.stateOf(sid)) == 1, "a reseed with an empty write buffer reads the log once")
+      val expected = e.commits.filter(col("sid") === sid).collect().map(CommitRecord.of).toSeq
+      assert(expected.map(r => (r.version, r.kind)) == Seq((1L, "insert"), (2L, "delete"), (3L, "insert")))
+      val (replay, counts) = org.apache.spark.JobCount(spark.sparkContext)(
+        Federation.replayList(e, sid, after = 1L))
+      assert(counts.jobs == 0 && replay == expected.drop(1), s"$replay vs $expected")
+    } finally e.close()
   }
 
   test("compact is tbucket-incremental: only delete-debt partitions rewrite") {

@@ -133,4 +133,26 @@ class CatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
         plans.asScala.mkString("\n"))
     } finally db.close()
   }
+
+  test("listCollections and keyUsage answer from the loaded catalog with no Spark job") {
+    val db = mkDb()
+    try {
+      db.createStream("u-cat-1", "plant/a", Map("phase" -> "L1", "kind" -> "voltage"))
+      db.createStream("u-cat-2", "plant/a", Map("phase" -> "L2"))
+      db.createStream("u-cat-3", "plant/b", Map("phase" -> "L1"))
+      db.createStream("u-cat-4", "plant/c", Map("phase" -> "L1"), Map("owner" -> "x"))
+      db.obliterate("u-cat-4")
+      val (cols, colJobs) = JobCount(spark.sparkContext)(db.listCollections("plant/").collect())
+      assert(colJobs.jobs == 0, "listCollections")
+      assert(cols.map(_.getString(0)).toSeq == Seq("plant/a", "plant/b"))
+      assert(db.listCollections("plant/", startingFrom = "plant/b").collect().map(_.getString(0))
+        .toSeq == Seq("plant/b"))
+      assert(db.listCollections("plant/", limit = 1).collect().map(_.getString(0)).toSeq ==
+        Seq("plant/a"))
+      val (usage, usageJobs) = JobCount(spark.sparkContext)(db.keyUsage("plant/").collect())
+      assert(usageJobs.jobs == 0, "keyUsage")
+      assert(usage.map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap ==
+        Map(("tag", "phase") -> 3L, ("tag", "kind") -> 1L))
+    } finally db.close()
+  }
 }

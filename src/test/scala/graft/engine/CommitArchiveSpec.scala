@@ -64,8 +64,11 @@ class CommitArchiveSpec extends AnyFunSuite with BeforeAndAfterAll {
     // must dedup away in the reader
     val archived = db.store.readString("commits/archive-1.json").get
     val firstLine = archived.linesIterator.next() + "\n"
+    val records = db.commits.count()
     db.store.writeAtomic("commits/leftover-0.json", firstLine)
-    // force a reload of the cached commit state
+    // reload the commit log: the leftover line is read twice, kept once
+    db.refreshCommits()
+    assert(db.commits.count() == records)
     insert(uuid, Seq((100L, 1.0)))
     db.flush(uuid)
     assert(db.rawValues(uuid, 0, 64).collect()

@@ -54,9 +54,9 @@ class StreamStateSpec extends AnyFunSuite {
     }
   }
 
-  /** The commit reader's supersede rule (`Btrdb.commits`): a compacted
-    * record at V replaces every plain record of its stream at or below V
-    * and any older compacted record. */
+  /** The reference model of the supersede rule: a compacted record at V
+    * replaces every plain record of its stream at or below V and any
+    * older compacted record. */
   private def kept(log: Seq[CommitRecord]): Seq[CommitRecord] = {
     val cv = log.filter(_.compacted).groupBy(_.sid).map { case (sid, rs) => sid -> rs.map(_.version).max }
     log.filter(r => cv.get(r.sid).forall(v => r.version > v || (r.compacted && r.version == v)))
@@ -81,25 +81,41 @@ class StreamStateSpec extends AnyFunSuite {
     assert(superseded.get > 100, "too few histories hold a superseded record")
   }
 
+  test("the records a fold holds are the records the supersede rule keeps") {
+    val prop = Prop.forAll(logs) { log =>
+      val held = StreamState.fold(log).values.flatMap(_.records).toSeq
+      val sorted = (rs: Seq[CommitRecord]) => rs.sortBy(r => (r.sid, r.version, r.compacted))
+      sorted(held) == sorted(kept(log))
+    }
+    val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(500)
+      .withInitialSeed(Seed(20261020L)), prop)
+    assert(result.passed, Pretty.pretty(result))
+  }
+
+  /** Every field of a state, the derived deletes and ranges included. */
+  private def fields(s: StreamState) = (s.major, s.minor, s.stagedEnvelope, s.deletes,
+    s.ranges, s.envelope, s.floor, s.grid, s.watermark)
+
   test("a compacted record resets deletes, ranges, envelope and grid flag to its own") {
     val live = StreamState.fold(Seq(
       CommitRecord(7, 1, "insert", 0, 99, 100, Seq((0L, 100L)), batches = Seq(11L), grid = false),
       CommitRecord(7, 2, "delete", 10, 20, 0, Seq((10L, 20L))),
       CommitRecord(7, 3, "insert", 500, 599, 100, Seq((500L, 600L)), grid = true)))(7L)
-    assert(live == StreamState(major = 3, deletes = Vector((2L, 10L, 20L)),
-      ranges = Vector((1L, 0L, 100L), (2L, 10L, 20L), (3L, 500L, 600L)),
-      envelope = Some((0L, 599L)), grid = false))
+    assert(fields(live) == ((3L, 0L, None, Vector((2L, 10L, 20L)),
+      Vector((1L, 0L, 100L), (2L, 10L, 20L), (3L, 500L, 600L)), Some((0L, 599L)), 0L, false, None)))
     val survivors = live.committed(
       CommitRecord(7, 3, "insert", 0, 599, 190, Seq((0L, 600L)), compacted = true, grid = false))
-    assert(survivors == StreamState(major = 3, ranges = Vector((3L, 0L, 600L)),
-      envelope = Some((0L, 599L)), floor = 3, grid = false))
+    assert(fields(survivors) == ((3L, 0L, None, Vector(), Vector((3L, 0L, 600L)),
+      Some((0L, 599L)), 3L, false, None)))
     // every point deleted: a zero-point compacted record covers no time
     val empty = survivors
       .committed(CommitRecord(7, 4, "delete", 0, 1000, 0, Seq((0L, 1000L))))
       .committed(CommitRecord(7, 4, "insert", 0, 0, 0, Seq((0L, 1L)), compacted = true, grid = false))
-    assert(empty == StreamState(major = 4, ranges = Vector((4L, 0L, 1L)), floor = 4, grid = false))
+    assert(fields(empty) == ((4L, 0L, None, Vector(), Vector((4L, 0L, 1L)), None, 4L, false, None)))
     // a plain record at or below the major is already folded in
     assert(empty.committed(CommitRecord(7, 2, "delete", 10, 20, 0, Seq((10L, 20L)))) == empty)
+    // a purge record empties the state
+    assert(live.committed(CommitRecord(7, 4, "purge", 0, 0, 0, Nil)) == StreamState.Empty)
   }
 
   test("staging widens the staged envelope, and a flush empties it") {
